@@ -53,28 +53,32 @@ class FileSlicePartition(InputPartition):
     files: list
 
 
-# per-file scheduling/open overhead used when bin-packing small files —
-# Spark's spark.sql.files.openCostInBytes default, same rationale: a
-# 40 KB file costs far more than 40 KB of scan time to open and schedule
-_OPEN_COST_BYTES = 4 * 1024 * 1024
+# A task reads its files one after another, so a bin holds at most this
+# many: enough to spread a Python task's fixed start-up cost, few enough
+# that a 5,000-file trigger still makes 40 tasks when the cluster has more
+# slots than the planning host has cores. Four times the 32 files a
+# 128 MB bin held under Spark's 4 MB openCostInBytes padding; a chosen
+# bound, not one measured against remote-read latency.
+_MAX_FILES_PER_TASK = 128
 
 
 def _pack_file_slices(files: list, max_bytes: int):
-    """Bin-pack (path, ts) entries into partitions of ≤ maxSplitBytes —
-    the FileSourceScanExec small-file coalescing recipe
-    (sql/execution/DataSourceScanExec.scala, FilePartition.scala) applied
-    to the Python-source path: 1,000 tiny files must not become 1,000
-    Python task launches. maxSplitBytes = min(maxBytesPerPartition,
-    max(openCost, totalPadded/driver-cores)) keeps small batches
-    parallel while capping partition width; each file costs
-    max(size, openCost) so open overhead is what actually packs.
+    """Plan (path, ts) entries as one read task per core: each task here
+    is a Python worker with a fixed start-up cost that dwarfs a small
+    file's read, so a small-file trigger runs as one wave of tasks.
+    Bins = max(cores, ceil(bytes / max_bytes), ceil(files /
+    _MAX_FILES_PER_TASK)), at most one per file; files go largest-first
+    into the lightest bin, and a new bin opens only when that would pass
+    ``max_bytes`` or every bin is full. "Cores" is ``os.cpu_count()`` of
+    the planning process (Spark runs stream planning where no
+    SparkContext can be asked for slots): it follows the driver's cores
+    and ignores the executor count, which only the files bound covers.
 
     Returns None when any size is unavailable: caller falls back to one
     file per task, the always-correct layout. Sizes come through the same
-    pyarrow.fs dispatch as the reads, so object-store files bin-pack too
-    (one HEAD per file — the same listing cost the reference's
-    FileStatus-based packing pays)."""
-    import os as _os
+    pyarrow.fs dispatch as the reads (one HEAD per object-store file)."""
+    import heapq
+    import math
 
     from spark_streaming_sql_s3_connector_spark.sources.file_read import (
         _file_size,
@@ -85,26 +89,25 @@ def _pack_file_slices(files: list, max_bytes: int):
     for path, ts in files:
         try:
             fs, local = resolve_read_path(path)
-            size = _file_size(fs, local)
+            sized.append((_file_size(fs, local), path, ts))
         except (OSError, ValueError):  # missing file / unresolvable URI
             return None
-        sized.append((path, ts, max(size, _OPEN_COST_BYTES)))
-    total = sum(s for _, _, s in sized)
-    par = max(1, _os.cpu_count() or 8)
-    max_split = min(max_bytes, max(_OPEN_COST_BYTES, total // par + 1))
-    # first-fit decreasing: large files first so bins fill tightly
-    sized.sort(key=lambda t: -t[2])
-    bins: list[list] = []
-    bin_cost: list[int] = []
-    for path, ts, cost in sized:
-        for i in range(len(bins)):
-            if bin_cost[i] + cost <= max_split:
-                bins[i].append((path, ts))
-                bin_cost[i] += cost
-                break
+    total = sum(size for size, _, _ in sized)
+    cores = os.cpu_count() or 1
+    by_files = math.ceil(len(sized) / _MAX_FILES_PER_TASK)
+    n = min(len(sized), max(cores, math.ceil(total / max_bytes), by_files))
+    bins: list[list] = [[] for _ in range(n)]
+    heap = [(0, 0, i) for i in range(n)]  # (bytes, files, bin) with room left
+    sized.sort(key=lambda t: -t[0])
+    for size, path, ts in sized:
+        if heap and (heap[0][1] == 0 or heap[0][0] + size <= max_bytes):
+            load, count, i = heapq.heappop(heap)
         else:
-            bins.append([(path, ts)])
-            bin_cost.append(cost)
+            load, count, i = 0, 0, len(bins)
+            bins.append([])
+        bins[i].append((path, ts))
+        if count + 1 < _MAX_FILES_PER_TASK:
+            heapq.heappush(heap, (load + size, count + 1, i))
     return bins
 
 
@@ -224,12 +227,6 @@ class S3ConnectorStreamReader(DataSourceStreamReader):
         if not entries:
             return [FileSlicePartition(files=[])]
         files = [(e.path, e.timestamp) for e in entries]
-        # bin-pack small files (Spark's openCost/maxPartitionBytes
-        # recipe): a 5000-tiny-file trigger becomes ~cores partitions of
-        # batched reads instead of 5000 Python task launches, while big
-        # files still land one-per-task via the maxSplitBytes cap. If
-        # sizes aren't stat-able (remote store), keep one file per task —
-        # embarrassingly parallel at any cluster size.
         packed = _pack_file_slices(files, self._options.max_bytes_per_partition)
         if packed is None:
             return [FileSlicePartition(files=[f]) for f in files]

@@ -17,8 +17,12 @@ fast path of the Python Data Source API):
 - Hive-style partition-column reconstruction from the file path relative
   to ``basePath`` (S3ConnectorSourceItSuite.scala:224-255).
 
-Scale note: one task per file (or per parquet row-group span) keeps reads
-embarrassingly parallel; no driver bottleneck beyond the file list itself.
+Scale note: a task reads a list of files, one after another. The driver
+plans one read task per driver core, more only when bytes exceed
+``maxBytesPerPartition`` or a task would read more than
+``datasource._MAX_FILES_PER_TASK`` files (batch reads also give each row
+group of a multi-group parquet file its own task), because every Python
+task pays a fixed worker start-up cost.
 """
 
 from __future__ import annotations

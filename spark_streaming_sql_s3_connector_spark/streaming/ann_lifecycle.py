@@ -161,10 +161,13 @@ def _write_drift_state(
     # Materialize the d-row frames first so every v_dir read completes
     # before any delete; fresh versions (the common path, incl. the
     # benched forced refresh) skip the extra tiny jobs.
+    pinned = []
     if _read_pointer(sub_root) == version:
         baseline = baseline.localCheckpoint(eager=True)
+        pinned.append(baseline)
         if window is not None:
             window = window.localCheckpoint(eager=True)
+            pinned.append(window)
 
     def _write(df: DataFrame, name: str):
         return lambda: df.select(*_MOMENT_COLS).coalesce(1).write.mode(
@@ -178,8 +181,14 @@ def _write_drift_state(
     writes = [_write(baseline, _BASELINE)]
     if window is not None:
         writes.append(_write(window, _WINDOW))
-    run_concurrently(*writes)
-    _write_pointer(sub_root, version)
+    try:
+        run_concurrently(*writes)
+        _write_pointer(sub_root, version)
+    finally:
+        # DataFrame.unpersist() does not reach a local checkpoint's
+        # blocks: release the checkpointed RDD itself
+        for df in pinned:
+            df._jdf.queryExecution().analyzed().rdd().unpersist(False)
     for v in state_io.list_versions(sub_root):
         if v != version:
             state_io.remove_tree(os.path.join(sub_root, f"v={v}"))

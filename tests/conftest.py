@@ -3,11 +3,15 @@ import sys
 
 import pytest
 
-REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+TESTS_DIR = os.path.dirname(os.path.abspath(__file__))
+REPO_ROOT = os.path.dirname(TESTS_DIR)
 sys.path.insert(0, REPO_ROOT)
 # Python data source workers are separate processes: they import the package
-# by name, so the repo root must be on their PYTHONPATH too.
-os.environ["PYTHONPATH"] = REPO_ROOT + os.pathsep + os.environ.get("PYTHONPATH", "")
+# by name, so the repo root must be on their PYTHONPATH too (and this
+# directory, for the worker daemon module set below).
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    [REPO_ROOT, TESTS_DIR, os.environ.get("PYTHONPATH", "")]
+)
 
 
 @pytest.fixture(scope="session")
@@ -28,11 +32,15 @@ def spark():
         # pure dispatch overhead — the suite outgrew the driver's
         # pytest budget (VERIFY_r14 tests_ok:false, tail cut at ~65%).
         # 4 shuffle partitions + AQE off measured ~2x on the full
-        # suite with zero behavior change (tests that EXERCISE AQE,
-        # e.g. the skew-join split, scope it back on themselves).
+        # suite with zero behavior change. A test that depends on AQE
+        # must set spark.sql.adaptive.enabled=true itself and restore
+        # it afterwards, as the skew-join test in test_joins does.
         .config("spark.sql.shuffle.partitions", "4")
         .config("spark.sql.adaptive.enabled", "false")
         .config("spark.ui.enabled", "false")
+        # workers import pyspark from the installed package, not from
+        # pyspark.zip: see s3conn_worker_daemon for the per-task cost
+        .config("spark.python.daemon.module", "s3conn_worker_daemon")
         .config("spark.sql.session.timeZone", "UTC")
         .getOrCreate()
     )

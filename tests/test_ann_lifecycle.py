@@ -151,10 +151,14 @@ def test_lifecycle_refreshes_on_drift_and_converges(spark, tmp_path):
         for r in ann_index_topk(spark, _index_dir(root), q, k=10, n_probe=3).collect()
     )
     replay = _new_rows(n=40, start=1000 + 8 * 100, seed=8)
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    pinned_before = persistent().size()
     process_ann_lifecycle_batch(
         _df(spark, replay), 8, root, threshold=0.5, check_every=4
     )
     assert _read_pointer(os.path.join(root, "drift_state")) == 8
+    # the replayed commit's checkpointed baseline/window are released
+    assert persistent().size() == pinned_before
     after = sorted(
         tuple(r)
         for r in ann_index_topk(spark, _index_dir(root), q, k=10, n_probe=3).collect()

@@ -1,11 +1,13 @@
-"""Small-file bin-packing in the connector's partition planning: many
-tiny files must coalesce into few partitions (Spark's openCost /
-maxPartitionBytes recipe applied to the Python-source path), while big
+"""Small-file partition planning in the connector: many tiny files
+coalesce into one read task per core (each Python task has a fixed
+start-up cost), bytes beyond maxBytesPerPartition or files beyond
+_MAX_FILES_PER_TASK per core open more tasks, big
 files keep one task each and remote/un-stat-able paths fall back to
 one-file-per-task."""
 
 from __future__ import annotations
 
+import math
 import os
 
 import pyarrow as pa
@@ -13,24 +15,58 @@ import pyarrow.parquet as pq
 import pytest
 
 from spark_streaming_sql_s3_connector_spark.sources.datasource import (
-    _OPEN_COST_BYTES,
+    _MAX_FILES_PER_TASK,
     _pack_file_slices,
 )
 
 
-def test_pack_small_files_coalesces(tmp_path):
+@pytest.fixture()
+def four_cores(monkeypatch):
+    monkeypatch.setattr(os, "cpu_count", lambda: 4)
+
+
+def _tiny_files(tmp_path, n):
     files = []
-    for i in range(100):
-        p = tmp_path / f"f{i}.bin"
-        p.write_bytes(b"x" * 1000)  # 1 KB each, padded to openCost
+    for i in range(n):
+        p = tmp_path / f"t{i}.bin"
+        p.write_bytes(b"x" * 1000)
         files.append((str(p), i))
-    bins = _pack_file_slices(files, 128 * 1024 * 1024)
-    assert bins is not None
-    # every file lands exactly once
-    out = sorted(f for b in bins for f in b)
-    assert out == sorted(files)
-    # coalesced: far fewer partitions than files, but still parallel
-    assert 1 < len(bins) < 100
+    return files
+
+
+def test_pack_small_files_coalesces(tmp_path, four_cores):
+    for n_files, n_bins in [
+        (500, 4),  # one bin per core
+        (3, 3),  # never more bins than files
+        (1000, 8),  # past cores x _MAX_FILES_PER_TASK files, bins grow
+    ]:
+        (tmp_path / str(n_files)).mkdir()
+        files = _tiny_files(tmp_path / str(n_files), n_files)
+        bins = _pack_file_slices(files, 128 * 1024 * 1024)
+        assert bins is not None
+        # every file lands exactly once, in balanced bins
+        assert sorted(f for b in bins for f in b) == sorted(files)
+        assert len(bins) == n_bins
+        sizes = [len(b) for b in bins]
+        assert max(sizes) - min(sizes) <= 1
+        assert max(sizes) <= _MAX_FILES_PER_TASK
+
+
+def test_pack_splits_by_bytes_past_the_cap(tmp_path, four_cores):
+    cap = 64 * 1024
+    files = []
+    for i, size in enumerate([100 * 1024] + [(3 + k % 20) * 1024 for k in range(200)]):
+        p = tmp_path / f"m{i}.bin"
+        p.write_bytes(b"x" * size)
+        files.append((str(p), i))
+    total = sum(os.path.getsize(p) for p, _ in files)
+    assert total > 4 * cap
+    bins = _pack_file_slices(files, cap)
+    assert len(bins) >= math.ceil(total / cap)
+    assert sorted(f for b in bins for f in b) == sorted(files)
+    for b in bins:
+        if sum(os.path.getsize(p) for p, _ in b) > cap:
+            assert len(b) == 1 and os.path.getsize(b[0][0]) > cap
 
 
 def test_pack_respects_max_bytes(tmp_path):
@@ -93,14 +129,12 @@ def test_streaming_many_small_files_few_partitions(spark, tmp_path):
         query.stop()
 
 
-def test_batch_reader_packs_small_files(tmp_path):
+def test_batch_reader_packs_small_files(tmp_path, four_cores):
     from spark_streaming_sql_s3_connector_spark.sources.datasource import (
         S3ConnectorBatchReader,
     )
     from pyspark.sql.types import LongType, StructField, StructType
 
-    # enough files that bytesPerCore (total/cores) exceeds one padded
-    # file and coalescing beats per-file tasks even on a wide machine
     paths = []
     for i in range(128):
         p = str(tmp_path / f"b{i}.parquet")
@@ -116,7 +150,7 @@ def test_batch_reader_packs_small_files(tmp_path):
         },
     )
     parts = reader.partitions()
-    assert 1 <= len(parts) < 128
+    assert len(parts) == 4  # one read task per core
     all_files = sorted(f[0] for part in parts for f in part.files)
     assert all_files == sorted(paths)
     # rows survive the packed read
@@ -124,9 +158,9 @@ def test_batch_reader_packs_small_files(tmp_path):
     assert n == 128
 
 
-def test_streaming_planner_packs(tmp_path):
+def test_streaming_planner_packs(tmp_path, four_cores):
     """Planner-level check: the streaming reader's partitions() output
-    for 64 queued tiny files is bin-packed."""
+    for 64 queued tiny files is one partition per core."""
     import time
 
     from spark_streaming_sql_s3_connector_spark.queueing.local import LocalFileQueueClient
@@ -160,6 +194,6 @@ def test_streaming_planner_packs(tmp_path):
         parts = reader.partitions(start, end)
         n_files = sum(len(p.files) for p in parts)
         assert n_files == 64
-        assert len(parts) < 64  # packed
+        assert len(parts) == 4  # one read task per core
     finally:
         reader.stop()
