@@ -6265,8 +6265,8 @@ def _ensure_incremental_curation(spark, sf: str) -> str:
         process_curation_batch_incremental,
         read_frozen_thresholds,
     )
-    from spark_streaming_sql_s3_connector_spark.streaming.packing_state import (
-        _read_pointer as _pack_ptr,
+    from spark_streaming_sql_s3_connector_spark.streaming.state_io import (
+        read_pointer as _pack_ptr,
     )
 
     pdir = _incremental_curation_dir_for(sf)

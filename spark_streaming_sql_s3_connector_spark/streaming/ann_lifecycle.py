@@ -86,13 +86,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_streaming_sql_s3_connector_spark.streaming import stage_timings, state_io
+from spark_streaming_sql_s3_connector_spark.streaming.delta_plane import (
+    SIDECAR,
+    DeltaPlane,
+    union_all,
+)
 from spark_streaming_sql_s3_connector_spark.streaming.stage_timings import (
     StageClock,
     span as _span,
 )
-from spark_streaming_sql_s3_connector_spark.streaming.rollup import (
-    _read_pointer,
-    _write_pointer,
+from spark_streaming_sql_s3_connector_spark.streaming.state_io import (
+    read_pointer as _read_pointer,
 )
 
 _INDEX = "index"
@@ -183,7 +187,7 @@ def _write_drift_state(
         writes.append(_write(window, _WINDOW))
     try:
         run_concurrently(*writes)
-        _write_pointer(sub_root, version)
+        state_io.write_pointer(sub_root, version)
     finally:
         # DataFrame.unpersist() does not reach a local checkpoint's
         # blocks: release the checkpointed RDD itself
@@ -214,68 +218,25 @@ def _read_drift_state(
 
 
 _BOOTSTRAP_LABEL = "batch=bootstrap"
-_VEC_SCHEMA_FILE = "_schema.json"
-
-
-def _vectors_schema_path(root: str) -> str:
-    return os.path.join(_vectors_dir(root), _VEC_SCHEMA_FILE)
-
-
-def _write_vectors_schema_once(root: str, schema) -> None:
-    """Persist the landed (id, vec) schema beside the plane so a
-    zero-row trigger dir (or the fold of one) never hits parquet schema
-    inference — exclusive create, an existing file wins."""
-    import json
-
-    state_io.write_text_atomic(
-        _vectors_schema_path(root), json.dumps(schema.jsonValue()), overwrite=False
-    )
-
-
-def _vectors_reader(spark: SparkSession, root: str):
-    import json
-
-    from pyspark.sql.types import StructType
-
-    try:
-        raw = state_io.read_text(_vectors_schema_path(root))
-    except FileNotFoundError:
-        return spark.read  # pre-r12 state: inference (never-empty dirs)
-    return spark.read.schema(StructType.fromJson(json.loads(raw)))
-
-
-def _live_vector_paths(root: str, exclude_batch: Optional[int] = None) -> list[str]:
-    """The plane's live dirs: folded base (if any), else the bootstrap
-    landing, plus integer deltas above the fold horizon — the same
-    pointer-liveness rule every other plane uses. ``exclude_batch``
-    drops the in-flight trigger's dir (refresh reads committed data
-    only)."""
-    return [p for p, _ in _ordered_vector_paths(root, exclude_batch)]
-
-
-def _ordered_vector_paths(
-    root: str, exclude_batch: Optional[int] = None
-) -> list[tuple[str, int]]:
-    """Live vector dirs WITH their landing order — the rank delete
-    markers kill by: bootstrap is −1 (older than every marker), a
-    folded base ranks as the fold horizon (every row in it landed at or
-    below it, every live marker strictly above — the screens' exact
-    argument), a delta is its batch id."""
-    vdir = _vectors_dir(root)
-    ptr = state_io.read_pointer(vdir)
-    out: list[tuple[str, int]] = []
-    if ptr is not None:
-        out.append((os.path.join(vdir, "base", f"v={ptr}"), int(ptr)))
-    elif state_io.is_dir(os.path.join(vdir, _BOOTSTRAP_LABEL)):
-        out.append((os.path.join(vdir, _BOOTSTRAP_LABEL), -1))
-    for b in state_io.list_batch_ids(vdir):
-        if (ptr is None or b > ptr) and b != exclude_batch:
-            out.append((os.path.join(vdir, f"batch={b}"), b))
-    return out
-
-
 _VEC_DELETED = "_deleted"
 _VEC_MARKER_SCHEMA = "_id bigint, t bigint"
+
+
+def _vectors_plane(root: str) -> DeltaPlane:
+    """The landed raw vectors: one dir per trigger directly under
+    ``vectors/``, the bootstrap landing as the seed (rank −1 — older
+    than every marker — until the first fold), delete markers under
+    ``vectors/_deleted``, and the (id, vec) schema persisted beside the
+    plane so a zero-row trigger dir never hits schema inference."""
+    vdir = _vectors_dir(root)
+    return DeltaPlane(
+        vdir,
+        deltas="",
+        markers=os.path.join(vdir, _VEC_DELETED),
+        schema=SIDECAR,
+        marker_schema=_VEC_MARKER_SCHEMA,
+        seed=_BOOTSTRAP_LABEL,
+    )
 
 
 def delete_vectors_from_lifecycle(
@@ -309,37 +270,8 @@ def delete_vectors_from_lifecycle(
         .withColumn("t", F.lit(int(batch_id)).cast("bigint"))
         .coalesce(1)
         .write.mode("overwrite")
-        .parquet(os.path.join(_vectors_dir(root), _VEC_DELETED, f"batch={batch_id}"))
+        .parquet(_vectors_plane(root).marker_path(batch_id))
     )
-
-
-def _vector_marker_ids(root: str) -> list[int]:
-    return state_io.list_batch_ids(os.path.join(_vectors_dir(root), _VEC_DELETED))
-
-
-def _live_vector_markers(spark: SparkSession, root: str) -> Optional[DataFrame]:
-    """Un-applied delete markers (``_id | t``): dirs strictly above the
-    fold pointer (at/below it they were applied physically by the fold
-    and GC'd — a replayed folded dir is filtered here). None when the
-    lifecycle has never deleted."""
-    ids = _vector_marker_ids(root)
-    if not ids:
-        return None
-    ptr = state_io.read_pointer(_vectors_dir(root))
-    live = [t for t in ids if ptr is None or t > ptr]
-    if not live:
-        return None
-    vdir = _vectors_dir(root)
-    frames = [
-        spark.read.schema(_VEC_MARKER_SCHEMA).parquet(
-            os.path.join(vdir, _VEC_DELETED, f"batch={t}")
-        )
-        for t in live
-    ]
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
-    return out
 
 
 def _apply_vector_markers(
@@ -369,8 +301,8 @@ def fold_landed_vectors(
 ) -> Optional[int]:
     """Fold the landed raw-vector dirs (bootstrap + integer deltas with
     id <= ``upto_batch``; None = all) into ``vectors/base/v=<n>`` behind
-    an atomically-flipped pointer, then GC the folded dirs — the rollup
-    fold discipline applied to the lifecycle's retrain corpus, which
+    an atomically-flipped pointer, then GC the folded dirs — the
+    `delta_plane` fold applied to the lifecycle's retrain corpus, which
     otherwise accumulates one dir per trigger forever. Returns the new
     fold horizon (−1 for a bootstrap-only fold: batch ids start at 0,
     so the sentinel keeps every future delta live), or None when
@@ -395,69 +327,45 @@ def fold_landed_vectors(
 
     if retain_fraction is not None and not 0 < retain_fraction <= 1:
         raise ValueError("retain_fraction must be in (0, 1]")
-    vdir = _vectors_dir(root)
-    ptr = state_io.read_pointer(vdir)
-    ids = state_io.list_batch_ids(vdir)
-    pending = [
-        b
-        for b in ids
-        if (ptr is None or b > ptr) and (upto_batch is None or b <= upto_batch)
-    ]
-    has_bootstrap = ptr is None and state_io.is_dir(
-        os.path.join(vdir, _BOOTSTRAP_LABEL)
-    )
-    if not pending and not has_bootstrap:
-        return None
-    reader = _vectors_reader(spark, root)
-    ordered: list[tuple[int, DataFrame]] = []
-    if ptr is not None:
-        ordered.append((int(ptr), reader.parquet(os.path.join(vdir, "base", f"v={ptr}"))))
-    elif has_bootstrap:
-        ordered.append((-1, reader.parquet(os.path.join(vdir, _BOOTSTRAP_LABEL))))
-    ordered.extend(
-        (b, reader.parquet(os.path.join(vdir, f"batch={b}"))) for b in pending
-    )
-    new_v = max(pending) if pending else -1
-    # apply delete markers PHYSICALLY (order rule: a marker t kills rows
-    # landed strictly before t; the folded base ranks as new_v, which
-    # keeps any marker above the new horizon exact at read time)
-    marks = _live_vector_markers(spark, root)
-    if marks is not None or (retain_fraction is not None and retain_fraction < 1):
-        id_col = load_index_meta(_index_dir(root))["id_col"]
-    frames = _apply_vector_markers(ordered, marks, id_col) if marks is not None else [
-        f for _, f in ordered
-    ]
-    df = frames[0]
-    for f in frames[1:]:
-        df = df.unionByName(f)
-    if retain_fraction is not None and retain_fraction < 1:
-        df = df.where(
-            F.pmod(F.xxhash64(F.col(id_col).cast("string")), F.lit(1_000_000))
-            < F.lit(int(retain_fraction * 1_000_000))
+    plane = _vectors_plane(root)
+    retain = retain_fraction is not None and retain_fraction < 1
+
+    def write(path, live, markers):
+        # apply delete markers PHYSICALLY (order rule: a marker t kills
+        # rows landed strictly before t; the folded base ranks as the
+        # new horizon, which keeps any marker above it exact at read)
+        marks = plane.marker_frame(spark, markers)
+        id_col = (
+            load_index_meta(_index_dir(root))["id_col"]
+            if marks is not None or retain
+            else None
         )
-    # fold many per-trigger dribbles into cluster-parallel files: the
-    # fold is exactly the file-count compactor, so don't carry the
-    # input's one-file-per-trigger layout into the base
-    df = df.repartition(max(1, spark.sparkContext.defaultParallelism))
-    df.write.mode("overwrite").parquet(os.path.join(vdir, "base", f"v={new_v}"))
-    state_io.write_pointer(vdir, new_v)
-    if has_bootstrap:
-        state_io.remove_tree(os.path.join(vdir, _BOOTSTRAP_LABEL))
-    for b in ids:
-        if b <= new_v:
-            state_io.remove_tree(os.path.join(vdir, f"batch={b}"))
-    # markers at/below the new horizon are applied in the base — GC;
-    # markers above it stay live and keep filtering at read
-    for t in _vector_marker_ids(root):
-        if t <= new_v:
-            state_io.remove_tree(os.path.join(vdir, _VEC_DELETED, f"batch={t}"))
-    if ptr is not None and ptr != new_v:
-        state_io.remove_tree(os.path.join(vdir, "base", f"v={ptr}"))
+        df = union_all(
+            _apply_vector_markers(plane.frames(spark, live), marks, id_col)
+        )
+        if retain:
+            df = df.where(
+                F.pmod(F.xxhash64(F.col(id_col).cast("string")), F.lit(1_000_000))
+                < F.lit(int(retain_fraction * 1_000_000))
+            )
+        # fold many per-trigger dribbles into cluster-parallel files: the
+        # fold is exactly the file-count compactor, so don't carry the
+        # input's one-file-per-trigger layout into the base
+        df.repartition(max(1, spark.sparkContext.defaultParallelism)).write.mode(
+            "overwrite"
+        ).parquet(path)
+
+    new_v = plane.fold(
+        write, below=None if upto_batch is None else upto_batch + 1
+    )
+    if new_v is None:
+        return None
     # record the base size for the cadence gate (footer-only count of
     # the just-written base — no data read)
-    base_rows = reader.parquet(os.path.join(vdir, "base", f"v={new_v}")).count()
+    base_rows = plane.reader(spark).parquet(plane.base_path(new_v)).count()
     state_io.write_text_atomic(
-        os.path.join(vdir, _FOLD_META), json.dumps({"base_rows": int(base_rows)})
+        os.path.join(plane.root, _FOLD_META),
+        json.dumps({"base_rows": int(base_rows)}),
     )
     return new_v
 
@@ -485,32 +393,24 @@ def fold_landed_vectors_if_due(
     amortized O(1) per landed row per doubling. The decision costs one
     footer-only count over the PENDING dirs (bounded by the cadence
     window), never the base."""
-    vdir = _vectors_dir(root)
-    ptr = state_io.read_pointer(vdir)
-    if ptr is None:
+    plane = _vectors_plane(root)
+    if plane.pointer() is None:
         return fold_landed_vectors(spark, root, upto_batch=upto_batch)
-    pending = [
-        b
-        for b in state_io.list_batch_ids(vdir)
-        if b > ptr and (upto_batch is None or b <= upto_batch)
-    ]
+    below = None if upto_batch is None else upto_batch + 1
+    pending = [p for _, p in plane.pending(below)]
     if not pending:
         return None
     if len(pending) < max_deltas:
         try:
             base_rows = int(
-                json.loads(state_io.read_text(os.path.join(vdir, _FOLD_META)))[
+                json.loads(state_io.read_text(os.path.join(plane.root, _FOLD_META)))[
                     "base_rows"
                 ]
             )
         except (FileNotFoundError, KeyError, ValueError):
             base_rows = None  # pre-gate state: fold once to learn the size
         if base_rows is not None and base_rows > 0:
-            pending_rows = (
-                _vectors_reader(spark, root)
-                .parquet(*[os.path.join(vdir, f"batch={b}") for b in pending])
-                .count()
-            )
+            pending_rows = plane.reader(spark).parquet(*pending).count()
             if pending_rows < growth_fraction * base_rows:
                 return None
     return fold_landed_vectors(spark, root, upto_batch=upto_batch)
@@ -539,10 +439,9 @@ def bootstrap_ann_lifecycle(
     )
 
     landed = corpus.select(F.col(id_col), F.col(vec_col))
-    _write_vectors_schema_once(root, landed.schema)
-    landed.write.mode("overwrite").parquet(
-        os.path.join(_vectors_dir(root), _BOOTSTRAP_LABEL)
-    )
+    plane = _vectors_plane(root)
+    plane.write_schema_once(landed.schema)
+    landed.write.mode("overwrite").parquet(plane.seed)
     meta = build_ann_index(
         corpus, vec_col, id_col, _index_dir(root),
         n_centroids=n_centroids, m_subspaces=m_subspaces,
@@ -561,25 +460,20 @@ def read_landed_vectors(
     (:func:`delete_vectors_from_lifecycle` — so a retrain never
     resurrects a deleted id). Explicit live-path reads: a stale dir
     below the fold horizon is never opened, not merely filtered."""
-    ordered = _ordered_vector_paths(root, exclude_batch)
-    if not ordered:
+    plane = _vectors_plane(root)
+    skip = None if exclude_batch is None else plane.delta_path(exclude_batch)
+    live = [(rank, p) for rank, p in plane.live() if p != skip]
+    if not live:
         raise FileNotFoundError(f"no landed vectors under {root}")
-    reader = _vectors_reader(spark, root)
-    marks = _live_vector_markers(spark, root)
+    marks = plane.marker_frame(spark, plane.live_markers())
     if marks is None:
-        return reader.parquet(*[p for p, _ in ordered])
+        return plane.reader(spark).parquet(*[p for _, p in live])
     from spark_streaming_sql_s3_connector_spark.operators.ann_index import (
         load_index_meta,
     )
 
     id_col = load_index_meta(_index_dir(root))["id_col"]
-    frames = _apply_vector_markers(
-        [(b, reader.parquet(p)) for p, b in ordered], marks, id_col
-    )
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
-    return out
+    return union_all(_apply_vector_markers(plane.frames(spark, live), marks, id_col))
 
 
 def _subtract_moments(live: DataFrame, snap: Optional[DataFrame]) -> DataFrame:
@@ -809,9 +703,10 @@ def process_ann_lifecycle_batch(
     clock = StageClock()
     meta = load_index_meta(_index_dir(root))
     with _span(clock, "landing_write"):
-        land_dir = os.path.join(_vectors_dir(root), f"batch={batch_id}")
+        vectors = _vectors_plane(root)
+        land_dir = vectors.delta_path(batch_id)
         landing = batch.select(F.col(meta["id_col"]), F.col(meta["vec_col"]))
-        _write_vectors_schema_once(root, landing.schema)
+        vectors.write_schema_once(landing.schema)
         landing.write.mode("overwrite").parquet(land_dir)
         landed = spark.read.schema(
             batch.select(meta["id_col"], meta["vec_col"]).schema

@@ -58,6 +58,10 @@ from spark_streaming_sql_s3_connector_spark.streaming import (
 from spark_streaming_sql_s3_connector_spark.streaming.concurrency import (
     run_concurrently,
 )
+from spark_streaming_sql_s3_connector_spark.streaming.delta_plane import (
+    SIDECAR,
+    DeltaPlane,
+)
 
 
 def _timings_dir(pipeline_dir: str) -> str:
@@ -147,8 +151,15 @@ def _exact_index(pipeline_dir: str) -> str:
     return os.path.join(pipeline_dir, "exact_index")
 
 
+def _concat_plane(root: str) -> DeltaPlane:
+    """An append-only output plane (the (id, lang) ``_meta`` rows):
+    deltas directly under ``root``, schema persisted once so zero-row
+    batches never hit inference."""
+    return DeltaPlane(root, deltas="", schema=SIDECAR)
+
+
 def _meta_dir(pipeline_dir: str, batch_id: int) -> str:
-    return os.path.join(pipeline_dir, "_meta", f"batch={batch_id}")
+    return _concat_plane(os.path.join(pipeline_dir, "_meta")).delta_path(batch_id)
 
 
 def _profile_dir(pipeline_dir: str) -> str:
@@ -217,7 +228,9 @@ def process_curation_batch(
         # (doc_id, lang) side table for the finalization gate
         with _span(clock, "meta"):
             meta = batch.select(F.col(id_col), F.col(lang_col))
-            _write_plane_schema_once(os.path.join(pipeline_dir, "_meta"), meta.schema)
+            _concat_plane(os.path.join(pipeline_dir, "_meta")).write_schema_once(
+                meta.schema
+            )
             meta.write.mode("overwrite").parquet(_meta_dir(pipeline_dir, batch_id))
         if monitor:
             from spark_streaming_sql_s3_connector_spark.streaming.drift import (
@@ -389,12 +402,7 @@ def compact_curation_state(spark: SparkSession, pipeline_dir: str) -> None:
 
 
 def _newest_delta(index_dir: str):
-    from spark_streaming_sql_s3_connector_spark.streaming.exact_dedup import (
-        _delta_ids,
-    )
-
-    ids = _delta_ids(index_dir)
-    return max(ids) if ids else None
+    return max(exact_dedup._plane(index_dir).delta_ids(), default=None)
 
 
 def finalize_curation(
@@ -619,45 +627,11 @@ def freeze_quality_thresholds(
     return thr
 
 
-# --- append-only per-batch output planes ((id, lang) ``_meta`` side
-# rows; the gated rows ride the pack manifest since r14): the _PACK
-# concat-fold discipline, so a long-running pipeline's dir count and
-# reader listing cost stay bounded instead of growing one directory per
-# trigger forever. Rows never change in a fold — pure file-count
-# hygiene behind an atomic pointer; the schema persists once at first
-# write so zero-row batches (and the fold itself) never hit parquet
-# schema inference.
-
-
-# atomic `_latest` pointer: state_io is the one shared implementation
-# (object-store capable since r12)
-_read_plane_ptr = state_io.read_pointer
-_write_plane_ptr = state_io.write_pointer
-
-
-def _plane_delta_ids(root: str) -> list:
-    return state_io.list_batch_ids(root)
-
-
-def _plane_schema_path(root: str) -> str:
-    return os.path.join(root, "_schema.json")
-
-
-def _write_plane_schema_once(root: str, schema) -> None:
-    # exclusive create: an existing schema wins (replay/restart convergent)
-    state_io.write_text_atomic(
-        _plane_schema_path(root), json.dumps(schema.jsonValue()), overwrite=False
-    )
-
-
-def _plane_reader(spark: SparkSession, root: str):
-    from pyspark.sql.types import StructType
-
-    try:
-        raw = state_io.read_text(_plane_schema_path(root))
-    except FileNotFoundError:
-        return spark.read
-    return spark.read.schema(StructType.fromJson(json.loads(raw)))
+# --- the append-only (id, lang) ``_meta`` output plane (the gated rows
+# ride the pack manifest since r14): folded by concatenation, so a
+# long-running pipeline's dir count and reader listing cost stay bounded
+# instead of growing one directory per trigger forever. Rows never
+# change in a fold — pure file-count hygiene behind an atomic pointer.
 
 
 def _read_concat_plane(spark: SparkSession, root: str) -> DataFrame:
@@ -666,52 +640,11 @@ def _read_concat_plane(spark: SparkSession, root: str) -> DataFrame:
     a zero-row dir reads empty; without one (a pre-r11 state) the
     inference spans the union of paths, so a _SUCCESS-only dir beside
     populated ones still reads (the old root-read behavior)."""
-    reader = _plane_reader(spark, root)
-    ptr = _read_plane_ptr(root)
-    paths = []
-    if ptr is not None:
-        paths.append(os.path.join(root, "base", f"v={ptr}"))
-    paths.extend(
-        os.path.join(root, f"batch={b}")
-        for b in _plane_delta_ids(root)
-        if ptr is None or b > ptr
-    )
-    if not paths:
+    plane = _concat_plane(root)
+    live = plane.live()
+    if not live:
         raise FileNotFoundError(f"no state under {root}")
-    return reader.parquet(*paths)
-
-
-def _compact_concat_plane(
-    spark: SparkSession, root: str, upto_batch: Optional[int] = None
-) -> None:
-    """Fold delta dirs STRICTLY below ``upto_batch`` (all, when None —
-    safe only with no stream writing) into ``base/v=<n>`` and GC them.
-    Concatenation only: a replayed folded batch rewrites a delta at or
-    below the pointer, which readers ignore — and its rows already sit
-    in the base verbatim, so the state converges (the _PACK
-    argument)."""
-    ptr = _read_plane_ptr(root)
-    ids = [
-        b
-        for b in _plane_delta_ids(root)
-        if (ptr is None or b > ptr) and (upto_batch is None or b < upto_batch)
-    ]
-    if not ids:
-        return
-    reader = _plane_reader(spark, root)
-    paths = []
-    if ptr is not None:
-        paths.append(os.path.join(root, "base", f"v={ptr}"))
-    paths.extend(os.path.join(root, f"batch={b}") for b in ids)
-    allf = reader.parquet(*paths)
-    new_v = max(ids)
-    allf.write.mode("overwrite").parquet(os.path.join(root, "base", f"v={new_v}"))
-    _write_plane_ptr(root, new_v)
-    for b in _plane_delta_ids(root):
-        if b <= new_v:
-            state_io.remove_tree(os.path.join(root, f"batch={b}"))
-    if ptr is not None:
-        state_io.remove_tree(os.path.join(root, "base", f"v={ptr}"))
+    return plane.reader(spark).parquet(*[p for _, p in live])
 
 
 def compact_curation_outputs(
@@ -723,8 +656,16 @@ def compact_curation_outputs(
     manifest since r14, whose own compactor `compact_pack_state` folds
     them on the vacuum cadence.) Piggybacked on the same maintenance
     cadence as `vacuum()` in `process_curation_batch_incremental`."""
-    _compact_concat_plane(
-        spark, os.path.join(pipeline_dir, "_meta"), upto_batch
+    # concatenation only: a replayed folded batch rewrites a delta at
+    # or below the pointer, which readers ignore — and its rows already
+    # sit in the base verbatim, so the state converges
+    plane = _concat_plane(os.path.join(pipeline_dir, "_meta"))
+    plane.fold(
+        lambda path, live, _: plane.reader(spark)
+        .parquet(*[p for _, p in live])
+        .write.mode("overwrite")
+        .parquet(path),
+        upto_batch,
     )
 
 

@@ -46,58 +46,51 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from spark_streaming_sql_s3_connector_spark.streaming import state_io
-
 from spark_streaming_sql_s3_connector_spark.operators.dedup import (
     _minhash_sig_udf,
     bucket_pairs,
+)
+from spark_streaming_sql_s3_connector_spark.streaming.delta_plane import (
+    DeltaPlane,
+    union_all,
+)
+from spark_streaming_sql_s3_connector_spark.streaming.exact_dedup import (
+    _MARKER_SCHEMA,
+    _apply_screen_markers,
+    _screen_frames,
 )
 
 _N_SHARDS = 64
 
 
+def _plane(index_dir: str) -> DeltaPlane:
+    """The band index: ``_bands`` deltas plus the forget markers it
+    shares with the key screens (`exact_dedup.delete_docs_from_screen`)."""
+    return DeltaPlane(
+        index_dir,
+        deltas="_bands",
+        markers=os.path.join(index_dir, "_deleted"),
+        marker_schema=_MARKER_SCHEMA,
+    )
+
+
 def _bands_dir(index_dir: str, batch_id: int) -> str:
-    return os.path.join(index_dir, "_bands", f"batch={batch_id}")
+    return _plane(index_dir).delta_path(batch_id)
 
 
 def _matches_dir(index_dir: str, batch_id: int) -> str:
     return os.path.join(index_dir, "_matches", f"batch={batch_id}")
 
 
-_read_pointer = state_io.read_pointer
-_write_pointer = state_io.write_pointer
-
-
 def _band_delta_ids(index_dir: str) -> list[int]:
-    return state_io.list_batch_ids(os.path.join(index_dir, "_bands"))
+    return _plane(index_dir).delta_ids()
 
 
 def _index_frames(spark: SparkSession, index_dir: str, before_batch: Optional[int] = None) -> list[DataFrame]:
-    """Base (if compacted) + band deltas; ``before_batch`` excludes the
-    in-flight batch's own (possibly half-written) delta. Forget markers
-    (`exact_dedup.delete_docs_from_screen` — the band index shares its
-    ``_deleted``/pointer layout) anti-join out the deleted docs' band
-    rows with the same dir-granular insert-order semantics."""
-    from spark_streaming_sql_s3_connector_spark.streaming.exact_dedup import (
-        _apply_screen_markers,
-        _live_screen_markers,
-    )
-
-    ptr = _read_pointer(index_dir)
-    tagged: list[tuple[int, DataFrame]] = []
-    if ptr is not None:
-        tagged.append(
-            (int(ptr), spark.read.parquet(os.path.join(index_dir, "base", f"v={ptr}")))
-        )
-    for i in _band_delta_ids(index_dir):
-        if ptr is not None and i <= ptr:
-            continue
-        if before_batch is not None and i >= before_batch:
-            continue
-        tagged.append((i, spark.read.parquet(_bands_dir(index_dir, i))))
-    return _apply_screen_markers(
-        tagged, _live_screen_markers(spark, index_dir, before_batch)
-    )
+    """Base (if compacted) + band deltas below ``before_batch``, with
+    the forget markers applied (dir-granular insert order — the key
+    screens' rule, `exact_dedup._screen_frames`)."""
+    return _screen_frames(spark, _plane(index_dir), before_batch)
 
 
 def _compute_bands(batch: DataFrame, text_col: str, id_col: str, num_perm: int, bands: int, shingle_k: int) -> DataFrame:
@@ -134,9 +127,7 @@ def process_batch(
         # batch × history: shard-pruned index scan, broadcast batch side
         frames = _index_frames(batch.sparkSession, index_dir, before_batch=batch_id)
         if frames:
-            hist = frames[0]
-            for fr in frames[1:]:
-                hist = hist.unionByName(fr)
+            hist = union_all(frames)
             shards = [r["_shard"] for r in new_bands.select("_shard").distinct().collect()]
             hist = hist.where(F.col("_shard").isin(shards))
             nb = new_bands.select(
@@ -218,9 +209,8 @@ def compact_index(
 ) -> Optional[int]:
     """Fold band deltas into a versioned, shard-partitioned base (sorted
     within shards so row-group stats tighten) and flip the pointer —
-    identical crash-safety argument to ``rollup.compact_rollup``. Live
-    forget markers fold physically (``_index_frames`` already applies
-    them), their dirs GC, and the pointer advances over marker-only
+    the `delta_plane` write → flip → GC contract. Live forget markers
+    fold physically (``_apply_screen_markers``), their dirs GC, and the pointer advances over marker-only
     windows — the `exact_dedup.compact_index` delete discipline.
 
     ``upto_batch``: fold only deltas/markers with id STRICTLY below it
@@ -235,57 +225,28 @@ def compact_index(
     base back, so the state would become unreadable — the
     `compact_ann_index` all-tombstoned discipline. Drop the state dir
     and rebuild instead."""
-    from spark_streaming_sql_s3_connector_spark.streaming.exact_dedup import (
-        _deleted_dir,
-        _marker_ids,
-    )
+    plane = _plane(index_dir)
 
-    ids = _band_delta_ids(index_dir)
-    ptr = _read_pointer(index_dir)
-    pending = [
-        i
-        for i in ids
-        if (ptr is None or i > ptr) and (upto_batch is None or i < upto_batch)
-    ]
-    mpending = [
-        t
-        for t in _marker_ids(index_dir)
-        if (ptr is None or t > ptr) and (upto_batch is None or t < upto_batch)
-    ]
-    if not pending and not mpending:
-        return None
-    frames = _index_frames(spark, index_dir, before_batch=upto_batch)
-    if not frames:
-        return None  # marker-only activity on an empty index
-    new_v = max(pending + mpending)
-    df = frames[0]
-    for fr in frames[1:]:
-        df = df.unionByName(fr)
-    if df.isEmpty():
-        raise ValueError(
-            f"refusing to compact MinHash band index {index_dir}: the fold "
-            "would write an empty base (every indexed doc has been "
-            "forgotten), which schema inference cannot read back — drop "
-            "the state directory and rebuild instead"
+    def write(path, live, markers):
+        df = union_all(
+            _apply_screen_markers(
+                plane.frames(spark, live), plane.marker_frame(spark, markers)
+            )
         )
-    (
-        df.dropDuplicates(["band_idx", "band_hash", "_id"])
-        .repartition("_shard")
-        .sortWithinPartitions("band_idx", "band_hash")
-        .write.mode("overwrite")
-        .partitionBy("_shard")
-        .parquet(os.path.join(index_dir, "base", f"v={new_v}"))
-    )
-    _write_pointer(index_dir, new_v)
-    # <= new_v covers exactly the folded window plus any pre-pointer
-    # stragglers a crashed earlier GC left behind; dirs above the
-    # horizon stay live
-    for i in ids:
-        if i <= new_v:
-            state_io.remove_tree(_bands_dir(index_dir, i))
-    for t in _marker_ids(index_dir):
-        if t <= new_v:
-            state_io.remove_tree(_deleted_dir(index_dir, t))
-    if ptr is not None:
-        state_io.remove_tree(os.path.join(index_dir, "base", f"v={ptr}"))
-    return new_v
+        if df.isEmpty():
+            raise ValueError(
+                f"refusing to compact MinHash band index {index_dir}: the fold "
+                "would write an empty base (every indexed doc has been "
+                "forgotten), which schema inference cannot read back — drop "
+                "the state directory and rebuild instead"
+            )
+        (
+            df.dropDuplicates(["band_idx", "band_hash", "_id"])
+            .repartition("_shard")
+            .sortWithinPartitions("band_idx", "band_hash")
+            .write.mode("overwrite")
+            .partitionBy("_shard")
+            .parquet(path)
+        )
+
+    return plane.fold(write, upto_batch)

@@ -21,7 +21,6 @@ itself never re-scans.
 
 from __future__ import annotations
 
-import os
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -31,13 +30,7 @@ from spark_streaming_sql_s3_connector_spark.operators.drift import (
     _NULL_TOKEN,
     drift_from_counts,
 )
-from spark_streaming_sql_s3_connector_spark.streaming import state_io
-from spark_streaming_sql_s3_connector_spark.streaming.rollup import (
-    _delta_dir,
-    _delta_ids,
-    _read_pointer,
-    _write_pointer,
-)
+from spark_streaming_sql_s3_connector_spark.streaming.delta_plane import DeltaPlane
 
 
 def count_batch(batch: DataFrame, batch_id: int, sink_dir: str, col: str) -> None:
@@ -49,7 +42,7 @@ def count_batch(batch: DataFrame, batch_id: int, sink_dir: str, col: str) -> Non
         batch.groupBy(b.alias("bucket"))
         .agg(F.count(F.lit(1)).alias("n"))
         .write.mode("overwrite")
-        .parquet(_delta_dir(sink_dir, batch_id))
+        .parquet(DeltaPlane(sink_dir).delta_path(batch_id))
     )
 
 
@@ -80,18 +73,14 @@ def streaming_category_counts(
 
 def read_category_counts(spark: SparkSession, sink_dir: str) -> DataFrame:
     """The merged live counts: base (if compacted) + un-folded deltas."""
-    ptr = _read_pointer(sink_dir)
-    frames = []
-    if ptr is not None:
-        frames.append(spark.read.parquet(os.path.join(sink_dir, "base", f"v={ptr}")))
-    for bid in _delta_ids(sink_dir):
-        if ptr is None or bid > ptr:
-            frames.append(spark.read.parquet(_delta_dir(sink_dir, bid)))
-    if not frames:
+    plane = DeltaPlane(sink_dir)
+    live = plane.live()
+    if not live:
         raise FileNotFoundError(f"no drift-count state under {sink_dir}")
-    allc = frames[0]
-    for f in frames[1:]:
-        allc = allc.unionByName(f)
+    return _merge_counts(plane.read(spark, live))
+
+
+def _merge_counts(allc: DataFrame) -> DataFrame:
     return allc.groupBy("bucket").agg(F.sum("n").alias("n"))
 
 
@@ -112,27 +101,16 @@ def read_drift(
 
 
 def compact_drift_counts(spark: SparkSession, sink_dir: str) -> Optional[int]:
-    """Fold base + committed deltas into one base version and flip the
-    pointer; dead dirs GC. Crash-safe at every step (rollup discipline).
-    Returns the new pointer, or None when nothing to fold."""
-    ptr = _read_pointer(sink_dir)
-    ids = [i for i in _delta_ids(sink_dir) if ptr is None or i > ptr]
-    if not ids:
-        return None
-    new_ptr = max(ids)
-    folded = read_category_counts(spark, sink_dir)
-    folded.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(sink_dir, "base", f"v={new_ptr}")
+    """Fold base + committed deltas into one base version (the
+    `delta_plane` write → flip → GC contract). Returns the new pointer,
+    or None when nothing to fold."""
+    plane = DeltaPlane(sink_dir)
+    return plane.fold(
+        lambda path, live, _: _merge_counts(plane.read(spark, live))
+        .coalesce(1)
+        .write.mode("overwrite")
+        .parquet(path)
     )
-    _write_pointer(sink_dir, new_ptr)
-    for bid in _delta_ids(sink_dir):
-        if bid <= new_ptr:
-            state_io.remove_tree(_delta_dir(sink_dir, bid))
-    base_root = os.path.join(sink_dir, "base")
-    for v in state_io.list_versions(base_root):
-        if v != new_ptr:
-            state_io.remove_tree(os.path.join(base_root, f"v={v}"))
-    return new_ptr
 
 
 # ------------------------------------------------- embedding modality (r9)
@@ -151,7 +129,7 @@ def embedding_moment_batch(
 
     embedding_moments(batch, vec_col).coalesce(1).write.mode(
         "overwrite"
-    ).parquet(_delta_dir(sink_dir, batch_id))
+    ).parquet(DeltaPlane(sink_dir).delta_path(batch_id))
 
 
 def streaming_embedding_moments(
@@ -187,18 +165,14 @@ def read_embedding_moments(spark: SparkSession, sink_dir: str) -> DataFrame:
     deltas, summed — decimal addition is exact and order-free, so this
     equals the batch moments over the union of admitted rows (the law
     the tests pin)."""
-    ptr = _read_pointer(sink_dir)
-    frames = []
-    if ptr is not None:
-        frames.append(spark.read.parquet(os.path.join(sink_dir, "base", f"v={ptr}")))
-    for bid in _delta_ids(sink_dir):
-        if ptr is None or bid > ptr:
-            frames.append(spark.read.parquet(_delta_dir(sink_dir, bid)))
-    if not frames:
+    plane = DeltaPlane(sink_dir)
+    live = plane.live()
+    if not live:
         raise FileNotFoundError(f"no embedding-moment state under {sink_dir}")
-    allm = frames[0]
-    for f in frames[1:]:
-        allm = allm.unionByName(f)
+    return _merge_moments(plane.read(spark, live))
+
+
+def _merge_moments(allm: DataFrame) -> DataFrame:
     return allm.groupBy("dim").agg(
         F.sum("n").alias("n"), F.sum("s").alias("s"), F.sum("ss").alias("ss")
     )
@@ -237,24 +211,13 @@ def read_embedding_drift(
 def compact_embedding_moments(
     spark: SparkSession, sink_dir: str
 ) -> Optional[int]:
-    """Fold base + committed deltas into one d-row base version (rollup
-    discipline: atomic pointer flip, dead dirs GC, crash-safe at every
-    step). Returns the new pointer, or None when nothing to fold."""
-    ptr = _read_pointer(sink_dir)
-    ids = [i for i in _delta_ids(sink_dir) if ptr is None or i > ptr]
-    if not ids:
-        return None
-    new_ptr = max(ids)
-    folded = read_embedding_moments(spark, sink_dir)
-    folded.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(sink_dir, "base", f"v={new_ptr}")
+    """Fold base + committed deltas into one d-row base version (the
+    `delta_plane` write → flip → GC contract). Returns the new pointer,
+    or None when nothing to fold."""
+    plane = DeltaPlane(sink_dir)
+    return plane.fold(
+        lambda path, live, _: _merge_moments(plane.read(spark, live))
+        .coalesce(1)
+        .write.mode("overwrite")
+        .parquet(path)
     )
-    _write_pointer(sink_dir, new_ptr)
-    for bid in _delta_ids(sink_dir):
-        if bid <= new_ptr:
-            state_io.remove_tree(_delta_dir(sink_dir, bid))
-    base_root = os.path.join(sink_dir, "base")
-    for v in state_io.list_versions(base_root):
-        if v != new_ptr:
-            state_io.remove_tree(os.path.join(base_root, f"v={v}"))
-    return new_ptr

@@ -70,6 +70,10 @@ from spark_streaming_sql_s3_connector_spark.streaming import state_io
 from spark_streaming_sql_s3_connector_spark.streaming.concurrency import (
     run_concurrently,
 )
+from spark_streaming_sql_s3_connector_spark.streaming.delta_plane import (
+    DeltaPlane,
+    union_all,
+)
 
 from spark_streaming_sql_s3_connector_spark.operators.bloom import (
     BloomFilter,
@@ -82,8 +86,19 @@ _N_SHARDS = 64
 _BLOOM_SEED = 0x5eed
 
 
+def _plane(index_dir: str) -> DeltaPlane:
+    """The key index: ``_new`` deltas, ``_deleted`` forget markers."""
+    return DeltaPlane(
+        index_dir,
+        deltas="_new",
+        markers=os.path.join(index_dir, "_deleted"),
+        schema=_INDEX_SCHEMA,
+        marker_schema=_MARKER_SCHEMA,
+    )
+
+
 def _new_dir(index_dir: str, batch_id: int) -> str:
-    return os.path.join(index_dir, "_new", f"batch={batch_id}")
+    return _plane(index_dir).delta_path(batch_id)
 
 
 def _dups_dir(index_dir: str, batch_id: int) -> str:
@@ -100,27 +115,11 @@ def _shard_bitmap_path(index_dir: str, shard: int) -> str:
     return os.path.join(index_dir, "_bloom", f"shard={shard}.bin")
 
 
-_read_pointer = state_io.read_pointer
-_write_pointer = state_io.write_pointer
-
-
-def _delta_ids(index_dir: str) -> list[int]:
-    return state_io.list_batch_ids(os.path.join(index_dir, "_new"))
-
-
 # explicit schema: a batch with zero new keys writes a delta dir holding
 # only _SUCCESS, and schema INFERENCE on such a dir throws — a fixed
 # schema reads it as an empty frame instead
 _INDEX_SCHEMA = "_id bigint, key string, _shard int"
 _MARKER_SCHEMA = "_id bigint, t bigint"
-
-
-def _deleted_dir(index_dir: str, batch_id: int) -> str:
-    return os.path.join(index_dir, "_deleted", f"batch={batch_id}")
-
-
-def _marker_ids(index_dir: str) -> list[int]:
-    return state_io.list_batch_ids(os.path.join(index_dir, "_deleted"))
 
 
 def delete_docs_from_screen(
@@ -157,39 +156,8 @@ def delete_docs_from_screen(
         .withColumn("t", F.lit(int(batch_id)).cast("bigint"))
         .coalesce(1)
         .write.mode("overwrite")
-        .parquet(_deleted_dir(index_dir, batch_id))
+        .parquet(_plane(index_dir).marker_path(batch_id))
     )
-
-
-def _live_screen_markers(
-    spark: SparkSession, index_dir: str, before_batch: Optional[int] = None
-) -> Optional[DataFrame]:
-    """Un-applied forget markers (``_id | t``): marker dirs strictly
-    above the base pointer (dirs at/below it were applied physically by
-    compaction and GC'd — a replayed folded dir is filtered here, the
-    ANN-tombstone liveness rule). ``before_batch`` excludes markers the
-    in-flight batch could not have seen on its original run, keeping
-    replay deterministic. None when the index has never forgotten."""
-    ids = _marker_ids(index_dir)
-    if not ids:
-        return None
-    ptr = _read_pointer(index_dir)
-    horizon = -1 if ptr is None else int(ptr)
-    live = [
-        t
-        for t in ids
-        if t > horizon and (before_batch is None or t < before_batch)
-    ]
-    if not live:
-        return None
-    frames = [
-        spark.read.schema(_MARKER_SCHEMA).parquet(_deleted_dir(index_dir, t))
-        for t in live
-    ]
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
-    return out
 
 
 def _apply_screen_markers(
@@ -210,39 +178,23 @@ def _apply_screen_markers(
     return out
 
 
-def _tagged_frames(
-    spark: SparkSession, index_dir: str, before_batch: Optional[int] = None
-) -> tuple[list[tuple[int, DataFrame]], Optional[DataFrame]]:
-    """(insert-batch-tagged UNFILTERED index frames, live markers) —
-    the raw parts `_index_frames` composes; compaction also needs them
-    separately to find which shards a fold's markers actually dirty."""
-    ptr = _read_pointer(index_dir)
-    tagged: list[tuple[int, DataFrame]] = []
-    if ptr is not None:
-        tagged.append(
-            (
-                int(ptr),
-                spark.read.schema(_INDEX_SCHEMA).parquet(
-                    os.path.join(index_dir, "base", f"v={ptr}")
-                ),
-            )
-        )
-    for i in _delta_ids(index_dir):
-        if ptr is not None and i <= ptr:
-            continue
-        if before_batch is not None and i >= before_batch:
-            continue
-        tagged.append(
-            (i, spark.read.schema(_INDEX_SCHEMA).parquet(_new_dir(index_dir, i)))
-        )
-    return tagged, _live_screen_markers(spark, index_dir, before_batch)
+def _screen_frames(
+    spark: SparkSession, plane: DeltaPlane, before_batch: Optional[int] = None
+) -> list[DataFrame]:
+    """A screening plane's live index frames with its forget markers
+    applied. ``before_batch`` excludes the in-flight batch's own
+    (possibly half-written) delta and the markers its original run
+    could not have seen, keeping replay deterministic."""
+    return _apply_screen_markers(
+        plane.frames(spark, plane.live(before_batch)),
+        plane.marker_frame(spark, plane.live_markers(before_batch)),
+    )
 
 
 def _index_frames(
     spark: SparkSession, index_dir: str, before_batch: Optional[int] = None
 ) -> list[DataFrame]:
-    tagged, marks = _tagged_frames(spark, index_dir, before_batch)
-    return _apply_screen_markers(tagged, marks)
+    return _screen_frames(spark, _plane(index_dir), before_batch)
 
 
 def _shard_params(expected_total_items: int, fpp: float) -> tuple[int, int]:
@@ -513,11 +465,10 @@ def _apply_shard_bits(
     if rebuild_shards:
         frames = _index_frames(spark, index_dir)
         if frames:
-            allkeys = frames[0]
-            for fr in frames[1:]:
-                allkeys = allkeys.unionByName(fr)
             rebuilt = _shard_bits(
-                allkeys.where(F.col("_shard").isin(rebuild_shards)), sm_bits, sk
+                union_all(frames).where(F.col("_shard").isin(rebuild_shards)),
+                sm_bits,
+                sk,
             )
     zeros = np.zeros(n_bytes, dtype=np.uint8)
     for s in sorted(set(batch_bits) | set(rebuilt)):
@@ -577,17 +528,14 @@ def flush_bitmap_updates(spark: SparkSession, deferred: list) -> None:
                 d.sm_bits, d.sk,
             )
             return
-        tagged = None
-        for i, d in enumerate(deferred):
-            t = (
-                d.keyed.where(F.col("key").isNotNull())
-                .select(
-                    F.lit(i).alias("_plane"),
-                    *_hash_pair("key", _BLOOM_SEED),
-                    F.col("_shard"),
-                )
+        tagged = union_all([
+            d.keyed.where(F.col("key").isNotNull()).select(
+                F.lit(i).alias("_plane"),
+                *_hash_pair("key", _BLOOM_SEED),
+                F.col("_shard"),
             )
-            tagged = t if tagged is None else tagged.unionByName(t)
+            for i, d in enumerate(deferred)
+        ])
         geoms = {i: (d.sm_bits, d.sk) for i, d in enumerate(deferred)}
         n_parts = min(
             _N_SHARDS, max(1, spark.sparkContext.defaultParallelism)
@@ -724,9 +672,7 @@ def process_batch(
     try:
         frames = _index_frames(spark, index_dir, before_batch=batch_id)
         if frames:
-            hist = frames[0]
-            for fr in frames[1:]:
-                hist = hist.unionByName(fr)
+            hist = union_all(frames)
             # ONE shard-list collect per screen (was two: the probe's
             # internal distinct + a cand distinct): the batch's full
             # shard set prunes history just as correctly — a history
@@ -864,10 +810,7 @@ def read_unique_ids(spark: SparkSession, index_dir: str) -> DataFrame:
     frames = _index_frames(spark, index_dir)
     if not frames:
         raise FileNotFoundError(f"no exact-dedup index under {index_dir}")
-    df = frames[0]
-    for fr in frames[1:]:
-        df = df.unionByName(fr)
-    return df.select(F.col("_id").alias("doc_id"), "key")
+    return union_all(frames).select(F.col("_id").alias("doc_id"), "key")
 
 
 def read_dup_ids(spark: SparkSession, index_dir: str) -> DataFrame:
@@ -880,9 +823,9 @@ def read_dup_ids(spark: SparkSession, index_dir: str) -> DataFrame:
 def compact_index(
     spark: SparkSession, index_dir: str, upto_batch: Optional[int] = None
 ) -> Optional[int]:
-    """Fold _new deltas into a versioned shard-partitioned base behind an
-    atomically-flipped pointer — same crash-safety argument as
-    ``rollup.compact_rollup`` / ``dedup_index.compact_index``.
+    """Fold _new deltas into a versioned shard-partitioned base (the
+    `delta_plane` write → flip → GC contract; the dirty-shard bitmap
+    rebuild below runs between the flip and GC).
 
     ``upto_batch``: fold only deltas with id STRICTLY below it. Pass the
     stream's last committed batch id + 1 (or the checkpoint's pending
@@ -895,7 +838,7 @@ def compact_index(
     folds; that is safe only when no batch is awaiting replay.
 
     Forget markers (:func:`delete_docs_from_screen`) in the fold window
-    are applied PHYSICALLY — ``_index_frames`` already anti-joins them
+    are applied PHYSICALLY — ``_apply_screen_markers`` anti-joins them
     with insert-order semantics, so the folded base simply lacks the
     forgotten rows — and their dirs GC'd; the pointer advances over
     marker-only windows too (marker liveness keys off it). Markers at
@@ -914,75 +857,54 @@ def compact_index(
     next batch's updater rebuilds it with the live geometry (the
     existing self-heal path). Either way correctness never moves; only
     the acceleration is restored."""
-    ids = _delta_ids(index_dir)
-    ptr = _read_pointer(index_dir)
-    pending = [
-        i
-        for i in ids
-        if (ptr is None or i > ptr)
-        and (upto_batch is None or i < upto_batch)
-    ]
-    mpending = [
-        t
-        for t in _marker_ids(index_dir)
-        if (ptr is None or t > ptr)
-        and (upto_batch is None or t < upto_batch)
-    ]
-    if not pending and not mpending:
-        return None
-    tagged, marks = _tagged_frames(spark, index_dir, before_batch=upto_batch)
-    frames = _apply_screen_markers(tagged, marks)
-    if not frames:
-        # marker-only activity on an index with no base and no data
-        # deltas: nothing to apply the markers to — leave them live
-        return None
+    plane = _plane(index_dir)
     dirty_shards: list[int] = []
-    if marks is not None:
-        # shards that lose at least one row to an applied marker, by the
-        # same insert-order rule the fold applies (marker t kills rows
-        # inserted strictly before t)
-        killed = None
-        for b, f in tagged:
-            m = marks.where(F.col("t") > F.lit(int(b))).select("_id")
-            hit = f.join(F.broadcast(m), "_id", "left_semi").select("_shard")
-            killed = hit if killed is None else killed.unionByName(hit)
-        dirty_shards = sorted(
-            r["_shard"] for r in killed.distinct().collect() if r["_shard"] is not None
+
+    def write(path, live, markers):
+        tagged = plane.frames(spark, live)
+        marks = plane.marker_frame(spark, markers)
+        if marks is not None:
+            # shards that lose at least one row to an applied marker, by
+            # the same insert-order rule the fold applies (marker t kills
+            # rows inserted strictly before t)
+            killed = union_all([
+                f.join(
+                    F.broadcast(marks.where(F.col("t") > F.lit(int(b))).select("_id")),
+                    "_id",
+                    "left_semi",
+                ).select("_shard")
+                for b, f in tagged
+            ])
+            dirty_shards.extend(sorted(
+                r["_shard"]
+                for r in killed.distinct().collect()
+                if r["_shard"] is not None
+            ))
+        df = union_all(_apply_screen_markers(tagged, marks))
+        # keys are unique across deltas by construction (a key admitted
+        # in batch i is history for batch j>i); min-id keeps the fold
+        # deterministic anyway. NULL-key passthrough rows fold verbatim
+        # — a groupBy would wrongly collapse them into one row.
+        nn = (
+            df.where(F.col("key").isNotNull())
+            .groupBy("key", "_shard")
+            .agg(F.min("_id").alias("_id"))
         )
-    new_v = max(pending + mpending)
-    df = frames[0]
-    for fr in frames[1:]:
-        df = df.unionByName(fr)
-    # keys are unique across deltas by construction (a key admitted in
-    # batch i is history for batch j>i); min-id keeps the fold
-    # deterministic anyway. NULL-key passthrough rows fold verbatim —
-    # a groupBy would wrongly collapse them into one row.
-    nn = (
-        df.where(F.col("key").isNotNull())
-        .groupBy("key", "_shard")
-        .agg(F.min("_id").alias("_id"))
-    )
-    nulls = df.where(F.col("key").isNull()).select("key", "_shard", "_id").distinct()
-    (
-        nn.unionByName(nulls)
-        .repartition("_shard")
-        .sortWithinPartitions("key")
-        .write.mode("overwrite")
-        .partitionBy("_shard")
-        .parquet(os.path.join(index_dir, "base", f"v={new_v}"))
-    )
-    _write_pointer(index_dir, new_v)
-    if dirty_shards:
-        _rebuild_dirty_bitmaps(spark, index_dir, new_v, dirty_shards)
-    for i in ids:
-        if i <= new_v:
-            state_io.remove_tree(_new_dir(index_dir, i))
-    for t in _marker_ids(index_dir):
-        if t <= new_v:
-            state_io.remove_tree(_deleted_dir(index_dir, t))
-    if ptr is not None:
-        state_io.remove_tree(os.path.join(index_dir, "base", f"v={ptr}"))
-    return new_v
+        nulls = df.where(F.col("key").isNull()).select("key", "_shard", "_id").distinct()
+        (
+            nn.unionByName(nulls)
+            .repartition("_shard")
+            .sortWithinPartitions("key")
+            .write.mode("overwrite")
+            .partitionBy("_shard")
+            .parquet(path)
+        )
+
+    def rebuild(new_v):
+        if dirty_shards:
+            _rebuild_dirty_bitmaps(spark, index_dir, new_v, dirty_shards)
+
+    return plane.fold(write, upto_batch, on_flip=rebuild)
 
 
 def _rebuild_dirty_bitmaps(
@@ -1006,7 +928,7 @@ def _rebuild_dirty_bitmaps(
     sm_bits, sk = geom
     survivors = (
         spark.read.schema(_INDEX_SCHEMA)
-        .parquet(os.path.join(index_dir, "base", f"v={base_v}"))
+        .parquet(_plane(index_dir).base_path(base_v))
         .where(F.col("_shard").isin(present))
     )
     rebuilt = _shard_bits(survivors, sm_bits, sk)

@@ -51,6 +51,7 @@ from pyspark.sql import functions as F
 from spark_streaming_sql_s3_connector_spark.streaming.concurrency import (
     run_concurrently,
 )
+from spark_streaming_sql_s3_connector_spark.streaming.delta_plane import union_all
 from spark_streaming_sql_s3_connector_spark.streaming.exact_dedup import (
     _N_SHARDS,
     DeferredBitmapUpdate,
@@ -135,9 +136,7 @@ def process_batch(
         )
         frames = _index_frames(spark, index_dir, before_batch=batch_id)
         if frames:
-            hist = frames[0]
-            for fr in frames[1:]:
-                hist = hist.unionByName(fr)
+            hist = union_all(frames)
             # one shard-list collect per screen (see exact_dedup): the
             # batch's full shard set prunes history identically — keys
             # outside these shards cannot match any candidate
@@ -329,12 +328,10 @@ def compact_index(spark: SparkSession, index_dir: str, upto_batch=None):
     (no replay possible) pass ``upto_batch=<newest id> + 1`` to fold
     everything."""
     from spark_streaming_sql_s3_connector_spark.streaming.exact_dedup import (
-        _delta_ids,
+        _plane,
         compact_index as _compact,
     )
 
     if upto_batch is None:
-        ids = _delta_ids(index_dir)
-        if ids:
-            upto_batch = max(ids)
+        upto_batch = max(_plane(index_dir).delta_ids(), default=None)
     return _compact(spark, index_dir, upto_batch=upto_batch)

@@ -43,7 +43,6 @@ append-only data, compacted only for file-count hygiene.
 
 from __future__ import annotations
 
-import json
 import os
 from typing import Optional
 
@@ -52,13 +51,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from spark_streaming_sql_s3_connector_spark.operators.packing import pack_concat
-from spark_streaming_sql_s3_connector_spark.streaming import state_io
-from spark_streaming_sql_s3_connector_spark.streaming.rollup import (
-    _delta_dir,
-    _delta_ids,
-    _read_pointer,
-    _write_pointer,
+from spark_streaming_sql_s3_connector_spark.streaming.delta_plane import (
+    SIDECAR,
+    DeltaPlane,
 )
+from spark_streaming_sql_s3_connector_spark.streaming.rollup import _delta_dir
 
 _PACK = "pack"
 _CURSORS = "cursors"
@@ -67,38 +64,22 @@ _CURSORS = "cursors"
 # dirs, which schema inference rejects but a fixed schema reads empty
 _CURSOR_SCHEMA = "shard int, toks bigint"
 
-# the manifest schema depends on the caller's id column, so it can't be
-# a module constant like _CURSOR_SCHEMA — it is persisted ONCE at the
-# first write and every later read (manifest reads AND the compaction
-# fold) uses it, so a zero-survivor batch's _SUCCESS-only pack dir
-# reads as empty instead of breaking schema inference
-_SCHEMA_FILE = "_schema.json"
+
+def _cursor_plane(pack_dir: str) -> DeltaPlane:
+    return DeltaPlane(os.path.join(pack_dir, _CURSORS), schema=_CURSOR_SCHEMA)
 
 
-def _manifest_schema_path(pack_dir: str) -> str:
-    return os.path.join(pack_dir, _PACK, _SCHEMA_FILE)
-
-
-def _read_manifest_schema(pack_dir: str) -> Optional[StructType]:
-    try:
-        raw = state_io.read_text(_manifest_schema_path(pack_dir))
-    except FileNotFoundError:
-        return None
-    return StructType.fromJson(json.loads(raw))
+def _pack_plane(pack_dir: str) -> DeltaPlane:
+    # the manifest schema depends on the caller's id column, so it can't
+    # be a constant like _CURSOR_SCHEMA — it is persisted ONCE at the
+    # first write and every later read (manifest reads AND the fold)
+    # uses it, so a zero-survivor batch's _SUCCESS-only pack dir reads
+    # as empty instead of breaking schema inference
+    return DeltaPlane(os.path.join(pack_dir, _PACK), schema=SIDECAR)
 
 
 def _write_manifest_schema_once(pack_dir: str, schema: StructType) -> None:
-    # exclusive create: an existing schema wins (replay/restart convergent)
-    state_io.write_text_atomic(
-        _manifest_schema_path(pack_dir),
-        json.dumps(schema.jsonValue()),
-        overwrite=False,
-    )
-
-
-def _manifest_reader(spark: SparkSession, pack_dir: str):
-    schema = _read_manifest_schema(pack_dir)
-    return spark.read.schema(schema) if schema is not None else spark.read
+    _pack_plane(pack_dir).write_schema_once(schema)
 
 
 def _cursor_base(
@@ -107,29 +88,15 @@ def _cursor_base(
     """Per-shard token cursors accumulated STRICTLY before
     ``before_batch``: base (if compacted) + cursor deltas, summed.
     Returns an empty frame on a fresh state."""
-    sub = os.path.join(pack_dir, _CURSORS)
-    ptr = _read_pointer(sub)
-    frames = []
-    if ptr is not None:
-        frames.append(
-            spark.read.schema(_CURSOR_SCHEMA).parquet(
-                os.path.join(sub, "base", f"v={ptr}")
-            )
-        )
-    for b in _delta_ids(sub):
-        if ptr is not None and b <= ptr:
-            continue
-        if before_batch is not None and b >= before_batch:
-            continue
-        frames.append(
-            spark.read.schema(_CURSOR_SCHEMA).parquet(_delta_dir(sub, b))
-        )
-    if not frames:
+    plane = _cursor_plane(pack_dir)
+    live = plane.live(before_batch)
+    if not live:
         return spark.createDataFrame([], _CURSOR_SCHEMA)
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
-    return out.groupBy("shard").agg(F.sum("toks").alias("toks"))
+    return _sum_cursors(plane.read(spark, live))
+
+
+def _sum_cursors(cursors: DataFrame) -> DataFrame:
+    return cursors.groupBy("shard").agg(F.sum("toks").alias("toks"))
 
 
 def pack_batch_incremental(
@@ -211,22 +178,11 @@ def read_packed_manifest(spark: SparkSession, pack_dir: str) -> DataFrame:
     """The accumulated per-doc manifest across every packed batch —
     identical schema and values to ``pack_concat`` over the union of
     the batches (the law the tests pin)."""
-    sub = os.path.join(pack_dir, _PACK)
-    ptr = _read_pointer(sub)
-    reader = _manifest_reader(spark, pack_dir)
-    frames = []
-    if ptr is not None:
-        frames.append(
-            reader.parquet(os.path.join(sub, "base", f"v={ptr}"))
-        )
-    live = [b for b in _delta_ids(sub) if ptr is None or b > ptr]
-    frames.extend(reader.parquet(_delta_dir(sub, b)) for b in live)
-    if not frames:
+    plane = _pack_plane(pack_dir)
+    live = plane.live()
+    if not live:
         raise FileNotFoundError(f"no packing state under {pack_dir}")
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
-    return out
+    return plane.read(spark, live)
 
 
 def streaming_pack(
@@ -260,49 +216,25 @@ def compact_pack_state(
     spark: SparkSession, pack_dir: str, upto_batch: Optional[int] = None
 ) -> None:
     """Fold committed deltas of both state tables into ``base/v=<n>``
-    behind atomic pointers (rollup discipline). Cursors fold to ONE
+    behind atomic pointers (the `delta_plane` write → flip → GC
+    contract). Cursors fold to ONE
     ``num_shards``-row frame (sums are mergeable); the manifest folds
     by concatenation — pure file-count hygiene, rows never change.
     ``upto_batch`` defaults to everything; pass the last COMMITTED
     batch id when compacting beside a live stream (same replay guard
     as every compactor in this package)."""
-    for sub_name, fold_sum in ((_CURSORS, True), (_PACK, False)):
-        sub = os.path.join(pack_dir, sub_name)
-        ptr = _read_pointer(sub)
-        ids = [
-            b
-            for b in _delta_ids(sub)
-            if (ptr is None or b > ptr)
-            and (upto_batch is None or b <= upto_batch)
-        ]
-        if not ids:
-            continue
-
-        def _read(path):
-            r = (
-                spark.read.schema(_CURSOR_SCHEMA)
-                if fold_sum
-                else _manifest_reader(spark, pack_dir)
-            )
-            return r.parquet(path)
-
-        frames = []
-        if ptr is not None:
-            frames.append(_read(os.path.join(sub, "base", f"v={ptr}")))
-        frames.extend(_read(_delta_dir(sub, b)) for b in ids)
-        allf = frames[0]
-        for f in frames[1:]:
-            allf = allf.unionByName(f)
-        if fold_sum:
-            folded = allf.groupBy("shard").agg(F.sum("toks").alias("toks")).coalesce(1)
-        else:
-            folded = allf
-        new_v = max(ids)
-        folded.write.mode("overwrite").parquet(
-            os.path.join(sub, "base", f"v={new_v}")
-        )
-        _write_pointer(sub, new_v)
-        for b in ids:
-            state_io.remove_tree(_delta_dir(sub, b))
-        if ptr is not None:
-            state_io.remove_tree(os.path.join(sub, "base", f"v={ptr}"))
+    below = None if upto_batch is None else upto_batch + 1
+    cursors, pack = _cursor_plane(pack_dir), _pack_plane(pack_dir)
+    cursors.fold(
+        lambda path, live, _: _sum_cursors(cursors.read(spark, live))
+        .coalesce(1)
+        .write.mode("overwrite")
+        .parquet(path),
+        below,
+    )
+    pack.fold(
+        lambda path, live, _: pack.read(spark, live)
+        .write.mode("overwrite")
+        .parquet(path),
+        below,
+    )

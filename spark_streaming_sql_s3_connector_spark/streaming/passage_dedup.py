@@ -51,6 +51,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from spark_streaming_sql_s3_connector_spark.streaming.delta_plane import union_all
 from spark_streaming_sql_s3_connector_spark.streaming.exact_dedup import (
     _N_SHARDS,
     _batch_probe_column,
@@ -127,9 +128,7 @@ def process_batch(
         )
         frames = _index_frames(spark, index_dir, before_batch=batch_id)
         if frames:
-            hist = frames[0]
-            for fr in frames[1:]:
-                hist = hist.unionByName(fr)
+            hist = union_all(frames)
             probe = _batch_probe_column(
                 index_dir, firsts, sm_bits, sk, expected_total_items, fpp
             )
@@ -265,12 +264,10 @@ def compact_index(spark: SparkSession, index_dir: str, upto_batch=None):
     derives the always-safe default — fold only deltas strictly below
     the newest delta id; pass ``<newest id> + 1`` after a clean stop."""
     from spark_streaming_sql_s3_connector_spark.streaming.exact_dedup import (
-        _delta_ids,
+        _plane,
         compact_index as _compact,
     )
 
     if upto_batch is None:
-        ids = _delta_ids(index_dir)
-        if ids:
-            upto_batch = max(ids)
+        upto_batch = max(_plane(index_dir).delta_ids(), default=None)
     return _compact(spark, index_dir, upto_batch=upto_batch)

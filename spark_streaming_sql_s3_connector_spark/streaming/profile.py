@@ -39,13 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from spark_streaming_sql_s3_connector_spark.operators.profile import _render
-from spark_streaming_sql_s3_connector_spark.streaming import state_io
-from spark_streaming_sql_s3_connector_spark.streaming.rollup import (
-    _delta_dir,
-    _delta_ids,
-    _read_pointer,
-    _write_pointer,
-)
+from spark_streaming_sql_s3_connector_spark.streaming.delta_plane import DeltaPlane
 
 _SKETCHABLE = (
     T.ByteType, T.ShortType, T.IntegerType, T.LongType,
@@ -94,6 +88,12 @@ def _merge_partials(frames: DataFrame, cols: Sequence[str]) -> DataFrame:
     return frames.agg(*aggs)
 
 
+def _merge_all(allp: DataFrame) -> DataFrame:
+    """Fold the partial rows of every profiled column into one."""
+    cols = sorted({c[4:] for c in allp.columns if c.startswith("_nn_")})
+    return _merge_partials(allp, cols)
+
+
 def profile_batch(
     batch: DataFrame,
     batch_id: int,
@@ -108,7 +108,7 @@ def profile_batch(
     if not cols:
         raise ValueError("no columns to profile")
     _partials(batch, cols).write.mode("overwrite").parquet(
-        _delta_dir(sink_dir, batch_id)
+        DeltaPlane(sink_dir).delta_path(batch_id)
     )
 
 
@@ -145,32 +145,17 @@ def streaming_profile(
     return writer.start()
 
 
-def _live_partial_frames(spark: SparkSession, sink_dir: str) -> list[DataFrame]:
-    import os
-
-    ptr = _read_pointer(sink_dir)
-    frames = []
-    if ptr is not None:
-        frames.append(spark.read.parquet(os.path.join(sink_dir, "base", f"v={ptr}")))
-    for bid in _delta_ids(sink_dir):
-        if ptr is None or bid > ptr:
-            frames.append(spark.read.parquet(_delta_dir(sink_dir, bid)))
-    return frames
-
-
 def read_profile(spark: SparkSession, sink_dir: str) -> DataFrame:
     """The current profile, in the exact schema of
     ``operators/profile.profile_table``: one row per column —
     ``col_name | n_rows | n_null | n_distinct | min_value | max_value``
     with portable-string min/max and HLL-estimated distincts."""
-    frames = _live_partial_frames(spark, sink_dir)
-    if not frames:
+    plane = DeltaPlane(sink_dir)
+    live = plane.live()
+    if not live:
         raise FileNotFoundError(f"no profile state under {sink_dir}")
-    allp = frames[0]
-    for f in frames[1:]:
-        allp = allp.unionByName(f)
-    cols = sorted({c[4:] for c in allp.columns if c.startswith("_nn_")})
-    one = _merge_partials(allp, cols)
+    one = _merge_all(plane.read(spark, live))
+    cols = sorted({c[4:] for c in one.columns if c.startswith("_nn_")})
     by_type = {f.name: f.dataType for f in one.schema.fields}
     entries = []
     for c in cols:
@@ -208,34 +193,13 @@ def read_profile(spark: SparkSession, sink_dir: str) -> DataFrame:
 
 
 def compact_profile(spark: SparkSession, sink_dir: str) -> Optional[int]:
-    """Fold base + committed deltas into one base row and flip the
-    pointer (tmp+rename); delta dirs at/below the pointer become dead to
-    readers and are GC'd. Crash-safe at every step — an unflipped new
-    base is unreachable, un-GC'd dead deltas are filtered by the
-    pointer. Returns the new pointer, or None if nothing to fold."""
-    import os
-
-    ptr = _read_pointer(sink_dir)
-    ids = [i for i in _delta_ids(sink_dir) if ptr is None or i > ptr]
-    if not ids:
-        return None
-    new_ptr = max(ids)
-    frames = _live_partial_frames(spark, sink_dir)
-    allp = frames[0]
-    for f in frames[1:]:
-        allp = allp.unionByName(f)
-    cols = sorted({c[4:] for c in allp.columns if c.startswith("_nn_")})
-    folded = _merge_partials(allp, cols)
-    folded.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(sink_dir, "base", f"v={new_ptr}")
+    """Fold base + committed deltas into one base row (the
+    `delta_plane` write → flip → GC contract). Returns the new pointer,
+    or None if nothing to fold."""
+    plane = DeltaPlane(sink_dir)
+    return plane.fold(
+        lambda path, live, _: _merge_all(plane.read(spark, live))
+        .coalesce(1)
+        .write.mode("overwrite")
+        .parquet(path)
     )
-    _write_pointer(sink_dir, new_ptr)
-    # GC: dead deltas and superseded bases
-    for bid in _delta_ids(sink_dir):
-        if bid <= new_ptr:
-            state_io.remove_tree(_delta_dir(sink_dir, bid))
-    base_root = os.path.join(sink_dir, "base")
-    for v in state_io.list_versions(base_root):
-        if v != new_ptr:
-            state_io.remove_tree(os.path.join(base_root, f"v={v}"))
-    return new_ptr

@@ -36,13 +36,15 @@ prunes to the queried time range, and compaction shuffles partial rows
 
 from __future__ import annotations
 
-import os
 from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from spark_streaming_sql_s3_connector_spark.streaming import state_io
+from spark_streaming_sql_s3_connector_spark.streaming.delta_plane import (
+    DeltaPlane,
+    union_all,
+)
 
 _PARTIALS = (
     ("_ca_cnt", lambda v: F.count(F.lit(1))),
@@ -71,19 +73,11 @@ def time_bucket(col, width_seconds: int):
 
 
 def _delta_dir(sink_dir: str, batch_id: int) -> str:
-    return os.path.join(sink_dir, "_deltas", f"batch={batch_id}")
-
-
-# pointer + listing IO lives in state_io (object-store capable since
-# r12); these aliases keep the pre-r12 import surface working — new
-# code should import state_io directly.
-_read_pointer = state_io.read_pointer
-_write_pointer = state_io.write_pointer
-list_batch_ids = state_io.list_batch_ids
+    return DeltaPlane(sink_dir).delta_path(batch_id)
 
 
 def _delta_ids(sink_dir: str) -> list[int]:
-    return state_io.list_batch_ids(os.path.join(sink_dir, "_deltas"))
+    return DeltaPlane(sink_dir).delta_ids()
 
 
 def _merge(df: DataFrame, keys: Sequence[str]) -> DataFrame:
@@ -135,16 +129,7 @@ def continuous_aggregate(
 
 
 def _live_frames(spark: SparkSession, sink_dir: str) -> list[DataFrame]:
-    ptr = _read_pointer(sink_dir)
-    frames = []
-    if ptr is not None:
-        frames.append(spark.read.parquet(os.path.join(sink_dir, "base", f"v={ptr}")))
-    frames.extend(
-        spark.read.parquet(_delta_dir(sink_dir, i))
-        for i in _delta_ids(sink_dir)
-        if ptr is None or i > ptr
-    )
-    return frames
+    return [spark.read.parquet(p) for _, p in DeltaPlane(sink_dir).live()]
 
 
 def read_rollup(spark: SparkSession, sink_dir: str, keys: Sequence[str] = ("event_type",)) -> DataFrame:
@@ -153,10 +138,7 @@ def read_rollup(spark: SparkSession, sink_dir: str, keys: Sequence[str] = ("even
     frames = _live_frames(spark, sink_dir)
     if not frames:
         raise FileNotFoundError(f"no rollup data at {sink_dir}")
-    df = frames[0]
-    for f in frames[1:]:
-        df = df.unionByName(f)
-    merged = _merge(df, list(keys))
+    merged = _merge(union_all(frames), list(keys))
     out = [
         "bucket",
         *keys,
@@ -173,31 +155,14 @@ def read_rollup(spark: SparkSession, sink_dir: str, keys: Sequence[str] = ("even
 
 def compact_rollup(spark: SparkSession, sink_dir: str, keys: Sequence[str] = ("event_type",)) -> Optional[int]:
     """Fold base + all current deltas into a new base version and flip the
-    pointer. Crash-safe at every step: an unflipped new base is unread, a
-    flipped pointer makes folded deltas dead, and deleting dead deltas is
-    pure GC. Returns the new version (None if nothing to fold)."""
-    ids = _delta_ids(sink_dir)
-    ptr = _read_pointer(sink_dir)
-    pending = [i for i in ids if ptr is None or i > ptr]
-    if not pending:
-        return None
-    new_v = max(pending)
-    frames = _live_frames(spark, sink_dir)
-    df = frames[0]
-    for f in frames[1:]:
-        df = df.unionByName(f)
-    (
-        _merge(df, list(keys))
+    pointer (the `delta_plane` write → flip → GC contract). Returns the
+    new version (None if nothing to fold)."""
+
+    plane = DeltaPlane(sink_dir)
+    return plane.fold(
+        lambda path, live, _: _merge(plane.read(spark, live), list(keys))
         .repartition("bucket")
         .write.mode("overwrite")
         .partitionBy("bucket")
-        .parquet(os.path.join(sink_dir, "base", f"v={new_v}"))
+        .parquet(path)
     )
-    _write_pointer(sink_dir, new_v)
-    # GC: dead to every reader from here on
-    for i in ids:
-        if i <= new_v:
-            state_io.remove_tree(_delta_dir(sink_dir, i))
-    if ptr is not None:
-        state_io.remove_tree(os.path.join(sink_dir, "base", f"v={ptr}"))
-    return new_v

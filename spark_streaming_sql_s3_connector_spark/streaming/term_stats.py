@@ -35,12 +35,7 @@ from pyspark.sql import functions as F
 
 from spark_streaming_sql_s3_connector_spark.functions.text import tokenize
 from spark_streaming_sql_s3_connector_spark.streaming import state_io
-from spark_streaming_sql_s3_connector_spark.streaming.rollup import (
-    _delta_dir,
-    _delta_ids,
-    _read_pointer,
-    _write_pointer,
-)
+from spark_streaming_sql_s3_connector_spark.streaming.delta_plane import DeltaPlane
 
 _TERMS = "terms"
 _CORPUS = "corpus"
@@ -60,6 +55,12 @@ _DELETED = "deleted"
 # a query touches only its terms' buckets
 _POSTINGS_FILES = 8
 
+
+def _plane(sink_dir: str, sub: str) -> DeltaPlane:
+    """The ``terms`` / ``corpus`` / ``postings`` plane; the postings
+    plane owns the ``deleted`` markers (its pointer is their horizon)."""
+    markers = os.path.join(sink_dir, _DELETED, "_deltas") if sub == _POSTINGS else None
+    return DeltaPlane(os.path.join(sink_dir, sub), markers=markers)
 
 def term_stats_batch(
     batch: DataFrame,
@@ -108,10 +109,10 @@ def term_stats_batch(
         # as the curation screens' paired plane writes)
         writes = [
             lambda: terms.write.mode("overwrite").parquet(
-                _delta_dir(os.path.join(sink_dir, _TERMS), batch_id)
+                _plane(sink_dir, _TERMS).delta_path(batch_id)
             ),
             lambda: corpus.write.mode("overwrite").parquet(
-                _delta_dir(os.path.join(sink_dir, _CORPUS), batch_id)
+                _plane(sink_dir, _CORPUS).delta_path(batch_id)
             ),
         ]
         if with_postings:
@@ -130,7 +131,7 @@ def term_stats_batch(
             )
             writes.append(
                 lambda: postings.write.mode("overwrite").parquet(
-                    _delta_dir(os.path.join(sink_dir, _POSTINGS), batch_id)
+                    _plane(sink_dir, _POSTINGS).delta_path(batch_id)
                 )
             )
         run_concurrently(*writes)
@@ -170,10 +171,10 @@ def delete_docs_from_term_stats(
         (-F.coalesce(F.sum(F.size(toks)), F.lit(0))).cast("bigint").alias("sum_dl"),
     )
     terms.write.mode("overwrite").parquet(
-        _delta_dir(os.path.join(sink_dir, _TERMS), batch_id)
+        _plane(sink_dir, _TERMS).delta_path(batch_id)
     )
     corpus.write.mode("overwrite").parquet(
-        _delta_dir(os.path.join(sink_dir, _CORPUS), batch_id)
+        _plane(sink_dir, _CORPUS).delta_path(batch_id)
     )
     (
         docs.select(F.col(id_col).alias("id"))
@@ -181,7 +182,7 @@ def delete_docs_from_term_stats(
         .withColumn("t", F.lit(int(batch_id)).cast("long"))
         .coalesce(1)
         .write.mode("overwrite")
-        .parquet(_delta_dir(os.path.join(sink_dir, _DELETED), batch_id))
+        .parquet(_plane(sink_dir, _POSTINGS).marker_path(batch_id))
     )
 
 
@@ -218,24 +219,15 @@ def streaming_term_stats(
 def term_stats_exist(sink_dir: str) -> bool:
     """True iff ``sink_dir`` holds servable term-stats state (a base
     pointer or at least one live delta for the corpus totals)."""
-    sub = os.path.join(sink_dir, _CORPUS)
-    return _read_pointer(sub) is not None or bool(_delta_ids(sub))
+    return bool(_plane(sink_dir, _CORPUS).live())
 
 
-def _live(spark: SparkSession, subdir: str) -> list[DataFrame]:
-    ptr = _read_pointer(subdir)
-    frames = []
-    if ptr is not None:
-        frames.append(spark.read.parquet(os.path.join(subdir, "base", f"v={ptr}")))
-    for bid in _delta_ids(subdir):
-        if ptr is None or bid > ptr:
-            frames.append(spark.read.parquet(_delta_dir(subdir, bid)))
-    if not frames:
-        raise FileNotFoundError(f"no term-stats state under {subdir}")
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
-    return out
+def _live(spark: SparkSession, sink_dir: str, sub: str) -> DataFrame:
+    plane = _plane(sink_dir, sub)
+    live = plane.live()
+    if not live:
+        raise FileNotFoundError(f"no term-stats state under {sink_dir}/{sub}")
+    return plane.read(spark, live)
 
 
 def read_term_stats(
@@ -244,7 +236,7 @@ def read_term_stats(
     """Current per-term document frequencies: ``term | df``. Pass
     ``terms`` to read only a query's slice (the serving path — the
     filter prunes before the fold)."""
-    allt = _live(spark, os.path.join(sink_dir, _TERMS))
+    allt = _live(spark, sink_dir, _TERMS)
     if terms is not None:
         allt = allt.where(F.col("term").isin(list(terms)))
     return allt.groupBy("term").agg(F.sum("df").alias("df"))
@@ -252,7 +244,10 @@ def read_term_stats(
 
 def read_corpus_stats(spark: SparkSession, sink_dir: str) -> DataFrame:
     """Current corpus totals: one row ``n_docs | sum_dl``."""
-    allc = _live(spark, os.path.join(sink_dir, _CORPUS))
+    return _corpus_totals(_live(spark, sink_dir, _CORPUS))
+
+
+def _corpus_totals(allc: DataFrame) -> DataFrame:
     return allc.agg(
         F.sum("n_docs").cast("bigint").alias("n_docs"),
         F.sum("sum_dl").cast("bigint").alias("sum_dl"),
@@ -265,20 +260,8 @@ def _live_delete_markers(spark: SparkSession, sink_dir: str) -> Optional[DataFra
     physically by compaction and GC'd; a replayed folded dir is
     filtered here, exactly like the ANN tombstone liveness rule).
     None when the state has never seen a delete."""
-    sub = os.path.join(sink_dir, _DELETED)
-    ids = _delta_ids(sub)
-    if not ids:
-        return None
-    ptr = _read_pointer(os.path.join(sink_dir, _POSTINGS))
-    horizon = -1 if ptr is None else int(ptr)
-    live = [b for b in ids if b > horizon]
-    if not live:
-        return None
-    frames = [spark.read.parquet(_delta_dir(sub, b)) for b in live]
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
-    return out
+    plane = _plane(sink_dir, _POSTINGS)
+    return plane.marker_frame(spark, plane.live_markers())
 
 
 def _apply_markers(posts: DataFrame, marks: Optional[DataFrame]) -> DataFrame:
@@ -311,92 +294,45 @@ def compact_term_stats(
     to the folded postings (rows keep their insert order ``b``, so the
     anti-join is exact) and their dirs GC'd; markers above the horizon
     stay live and keep filtering at read."""
-    for sub, keys in ((_TERMS, ["term"]), (_CORPUS, []), (_POSTINGS, None)):
-        subdir = os.path.join(sink_dir, sub)
-        if sub == _POSTINGS and not state_io.is_dir(subdir):
-            continue  # postings are opt-in state
-        ptr = _read_pointer(subdir)
-        ids = [
-            b
-            for b in _delta_ids(subdir)
-            if (ptr is None or b > ptr)
-            and (upto_batch is None or b <= upto_batch)
-        ]
-        if sub == _POSTINGS:
-            mark_sub = os.path.join(sink_dir, _DELETED)
-            mark_ids = [
-                b
-                for b in _delta_ids(mark_sub)
-                if (ptr is None or b > ptr)
-                and (upto_batch is None or b <= upto_batch)
-            ]
-        else:
-            mark_ids = []
-        if not ids and not mark_ids:
-            continue
-        frames = []
-        if ptr is not None:
-            frames.append(
-                spark.read.parquet(os.path.join(subdir, "base", f"v={ptr}"))
-            )
-        frames.extend(spark.read.parquet(_delta_dir(subdir, b)) for b in ids)
-        if not frames:
-            # marker-only window over a postings dir with no base and no
-            # in-window postings deltas: nothing to fold the markers
-            # against — leave them live (they keep filtering at read)
-            # rather than indexing into an empty frame list
-            continue
-        allf = frames[0]
-        for f in frames[1:]:
-            allf = allf.unionByName(f)
-        if keys:
-            # deletes net terms to df=0 — drop them from the base
-            folded = allf.groupBy(*keys).agg(F.sum("df").alias("df")).where(
-                F.col("df") != 0
-            )
-        elif sub == _POSTINGS:
-            # each (term, doc) pair lives in exactly one batch (the
-            # exactly-once precondition above), so postings need no
-            # fold — compaction is file-count hygiene in the pruning
-            # layout, plus the physical application of the delete
-            # markers being folded (rows keep their insert order `b`)
-            if mark_ids:
-                mframes = [
-                    spark.read.parquet(_delta_dir(mark_sub, b))
-                    for b in mark_ids
-                ]
-                marks = mframes[0]
-                for f in mframes[1:]:
-                    marks = marks.unionByName(f)
-                allf = _apply_markers(allf, marks)
-            folded = allf.repartition(
-                _POSTINGS_FILES, "term"
-            ).sortWithinPartitions("term")
-        else:
-            folded = allf.agg(
-                F.sum("n_docs").cast("bigint").alias("n_docs"),
-                F.sum("sum_dl").cast("bigint").alias("sum_dl"),
-            )
-        # the postings horizon advances over APPLIED markers too, so a
-        # delete-only window still flips the pointer (marker liveness
-        # keys off it) and GCs the marker dirs
-        new_v = max(ids + mark_ids)
-        folded.write.mode("overwrite").parquet(
-            os.path.join(subdir, "base", f"v={new_v}")
+    below = None if upto_batch is None else upto_batch + 1
+    terms = _plane(sink_dir, _TERMS)
+    # deletes net terms to df=0 — drop them from the base
+    terms.fold(
+        lambda path, live, _: terms.read(spark, live)
+        .groupBy("term")
+        .agg(F.sum("df").alias("df"))
+        .where(F.col("df") != 0)
+        .write.mode("overwrite")
+        .parquet(path),
+        below,
+    )
+    corpus = _plane(sink_dir, _CORPUS)
+    corpus.fold(
+        lambda path, live, _: _corpus_totals(corpus.read(spark, live))
+        .write.mode("overwrite")
+        .parquet(path),
+        below,
+    )
+    postings = _plane(sink_dir, _POSTINGS)
+    if not state_io.is_dir(postings.root):
+        return  # postings are opt-in state
+    # each (term, doc) pair lives in exactly one batch (the exactly-once
+    # precondition above), so postings need no fold — compaction is
+    # file-count hygiene in the pruning layout, plus the physical
+    # application of the delete markers being folded (rows keep their
+    # insert order `b`). The postings horizon advances over applied
+    # markers too, so a delete-only window still flips the pointer
+    # (marker liveness keys off it) and GCs the marker dirs.
+    postings.fold(
+        lambda path, live, markers: _apply_markers(
+            postings.read(spark, live), postings.marker_frame(spark, markers)
         )
-        _write_pointer(subdir, new_v)
-        for b in ids:
-            state_io.remove_tree(_delta_dir(subdir, b))
-        for b in mark_ids:
-            state_io.remove_tree(_delta_dir(mark_sub, b))
-        # GC superseded base versions (dead once the pointer flipped) —
-        # without this every fold leaves its predecessor behind and the
-        # version count grows unbounded over a long-running stream
-        # (list_versions tolerates stray names, like _marker_ids/_delta_ids)
-        base_root = os.path.join(subdir, "base")
-        for v in state_io.list_versions(base_root):
-            if v != new_v:
-                state_io.remove_tree(os.path.join(base_root, f"v={v}"))
+        .repartition(_POSTINGS_FILES, "term")
+        .sortWithinPartitions("term")
+        .write.mode("overwrite")
+        .parquet(path),
+        below,
+    )
 
 
 def bm25_search_indexed(
@@ -563,7 +499,7 @@ def bm25_search_postings_batch(
     # frame, law-tested).
     live_df = read_term_stats(spark, sink_dir, union).where(F.col("df") > 0)
     posts = _apply_markers(
-        _live(spark, os.path.join(sink_dir, _POSTINGS)).where(
+        _live(spark, sink_dir, _POSTINGS).where(
             F.col("term").isin(union)
         ),
         _live_delete_markers(spark, sink_dir),
@@ -607,8 +543,7 @@ def bm25_search_postings_batch(
 
 def postings_exist(sink_dir: str) -> bool:
     """True iff the state carries the opt-in postings table."""
-    sub = os.path.join(sink_dir, _POSTINGS)
-    return _read_pointer(sub) is not None or bool(_delta_ids(sub))
+    return bool(_plane(sink_dir, _POSTINGS).live())
 
 
 def bm25_search_postings(
@@ -661,7 +596,7 @@ def bm25_search_postings(
     avgdl = F.lit(float(sum_dl)) / F.lit(float(n_docs))
     live = [t for t in terms if dfreq.get(t, 0) > 0]
     posts = _apply_markers(
-        _live(spark, os.path.join(sink_dir, _POSTINGS)).where(
+        _live(spark, sink_dir, _POSTINGS).where(
             F.col("term").isin(live if live else terms)
         ),
         _live_delete_markers(spark, sink_dir),

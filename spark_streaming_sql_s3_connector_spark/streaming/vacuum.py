@@ -1,14 +1,16 @@
 """One maintenance entry point for EVERY persisted state plane.
 
-The package accumulates delta-log state in seven layouts — rollup /
-profile / drift-count / embedding-moment sinks (``_deltas`` + pointer),
-BM25 term stats (``terms``/``corpus``/``postings`` subdirs), the
+The package's streaming planes all share one delta / base / pointer
+layout and one write → flip → GC fold (``streaming/delta_plane.py``),
+but they arrange it in seven signatures — rollup / profile /
+drift-count / embedding-moment sinks (``_deltas`` + pointer), BM25
+term stats (``terms``/``corpus``/``postings`` subdirs), the
 incremental packing manifest (``pack``/``cursors``), the dedup
 screening indexes (``_new`` key dirs), the MinHash band index
-(``_bands``), and the IVF-PQ ANN index (``quantizers.json``) — each
-with its own compactor and GC. Correct, but an operator running a
-100 TB pipeline should not need to know seven maintenance calls and
-their per-plane replay guards: this module walks a state root,
+(``_bands``) — beside the IVF-PQ ANN index (``quantizers.json``), and
+each merges its deltas its own way behind its own compactor and
+replay guard. An operator running a 100 TB pipeline should not need
+to know seven maintenance calls: this module walks a state root,
 CLASSIFIES each plane by its on-disk signature (layout markers first,
 then the delta schema for the ``_deltas`` family), and dispatches to
 the right compactor with its always-safe default — the serving-plane
@@ -136,6 +138,10 @@ def walk_planes(spark: SparkSession, state_root: str):
                 stack.append(p)
 
 
+def _newest_write(plane) -> Optional[int]:
+    return max(plane.delta_ids() + plane.marker_ids(), default=None)
+
+
 def _vacuum_plane(
     spark: SparkSession, d: str, kind: str, upto_batch: Optional[int]
 ) -> dict:
@@ -157,7 +163,7 @@ def _vacuum_plane(
             compact_ann_index,
         )
         from spark_streaming_sql_s3_connector_spark.streaming.ann_lifecycle import (
-            _vectors_dir,
+            _vectors_plane,
             fold_landed_vectors,
         )
         from spark_streaming_sql_s3_connector_spark.streaming.drift import (
@@ -169,11 +175,11 @@ def _vacuum_plane(
             # vector landing — the only trigger a restart could replay
             # (vectors land FIRST in a trigger, so their newest id is
             # the lifecycle's newest write)
-            ids = state_io.list_batch_ids(_vectors_dir(d))
+            vectors = _vectors_plane(d)
+            ids = vectors.delta_ids()
             horizon = max(ids) - 1 if ids else None
             fold = fold_landed_vectors(spark, d, upto_batch=horizon) if (
-                horizon is not None
-                or state_io.read_pointer(_vectors_dir(d)) is None
+                horizon is not None or vectors.pointer() is None
             ) else None
             idx = compact_ann_index(
                 spark, os.path.join(d, "index"), upto_batch=max(ids) if ids else None
@@ -191,11 +197,8 @@ def _vacuum_plane(
         }
     if kind == "minhash_bands":
         from spark_streaming_sql_s3_connector_spark.streaming.dedup_index import (
-            _band_delta_ids,
+            _plane,
             compact_index,
-        )
-        from spark_streaming_sql_s3_connector_spark.streaming.exact_dedup import (
-            _marker_ids,
         )
 
         if upto_batch is None:
@@ -203,8 +206,7 @@ def _vacuum_plane(
             # newest delta OR forget marker — the only batch a live
             # stream could still be writing or a restart could replay
             # (a marker-only window's newest write is the marker)
-            ids = _band_delta_ids(d) + _marker_ids(d)
-            horizon = max(ids) if ids else None
+            horizon = _newest_write(_plane(d))
         else:
             horizon = upto_batch
         return {
@@ -214,8 +216,7 @@ def _vacuum_plane(
         }
     if kind == "key_screen":
         from spark_streaming_sql_s3_connector_spark.streaming.exact_dedup import (
-            _delta_ids,
-            _marker_ids,
+            _plane,
             compact_index,
         )
 
@@ -223,8 +224,7 @@ def _vacuum_plane(
             # the line/passage safe default: never fold the newest
             # delta OR forget marker — the only batch a restart could
             # replay (marker-only windows included)
-            ids = _delta_ids(d) + _marker_ids(d)
-            horizon = max(ids) if ids else None
+            horizon = _newest_write(_plane(d))
         else:
             horizon = upto_batch
         return {
