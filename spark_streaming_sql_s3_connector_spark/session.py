@@ -21,21 +21,44 @@ Until r15 only the bench/microbench harnesses set this, so any other
 session silently reverted to 32 and re-paid the listing jobs (r14
 verdict item #7). :func:`apply_engine_defaults` is the one documented
 call a deployment makes on the session it hands to the streaming
-pipelines; the in-repo harnesses (bench.py, tools/microbench.py,
-tools/scaling_report.py, tests/conftest.py) all route through it.
+pipelines; the in-repo harnesses (bench.py, perfbench, tests/conftest.py,
+tools/microbench.py, tools/scaling_report.py, tools/check_oracle.py) all
+route through it.
+
+The same call installs the package's Python worker daemon
+(:mod:`~spark_streaming_sql_s3_connector_spark.worker_daemon`) as
+``spark.python.daemon.module`` when that conf is unset. Every
+``format("s3-connector")`` read runs in Python workers, and with Spark's
+own daemon each task re-reads ``pyspark.zip`` before it reads a byte;
+this daemon makes the workers import the installed pyspark instead
+(only when its version equals the zipped one). Spark reads the conf
+each time it builds a Python runner, from ``SparkEnv``'s conf, which in
+local mode is the driver's live conf, so setting it after
+``getOrCreate`` takes effect for the next task. Executors on a cluster
+read it when they launch: pass it at submit there (README, "Scale
+design"). The workers need this package on their path, which every
+session reading ``format("s3-connector")`` or running the package's
+UDFs has anyway.
 """
 
 from __future__ import annotations
 
 import os
 
+WORKER_DAEMON = "spark_streaming_sql_s3_connector_spark.worker_daemon"
+
 
 def apply_engine_defaults(spark) -> None:
     """Set the session confs the engine's own state-plane layouts
-    assume (see module doc). Idempotent; call once per session, before
-    the first state-plane read. Env overrides win so a deployment can
-    re-tune without code changes."""
+    assume and install the zip-free worker daemon (see module doc).
+    Idempotent; call once per session, before the first state-plane
+    read or Python task. Env overrides win so a deployment can re-tune
+    without code changes, and a daemon module the user set is kept."""
     spark.conf.set(
         "spark.sql.sources.parallelPartitionDiscovery.threshold",
         os.environ.get("SPARK_GRAFT_PARALLEL_DISCOVERY_THRESHOLD", "1024"),
     )
+    # the live SparkConf (SparkEnv's in local mode), not the SQL conf
+    conf = spark.sparkContext._conf
+    if not conf.contains("spark.python.daemon.module"):
+        conf.set("spark.python.daemon.module", WORKER_DAEMON)

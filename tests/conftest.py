@@ -7,11 +7,8 @@ TESTS_DIR = os.path.dirname(os.path.abspath(__file__))
 REPO_ROOT = os.path.dirname(TESTS_DIR)
 sys.path.insert(0, REPO_ROOT)
 # Python data source workers are separate processes: they import the package
-# by name, so the repo root must be on their PYTHONPATH too (and this
-# directory, for the worker daemon module set below).
-os.environ["PYTHONPATH"] = os.pathsep.join(
-    [REPO_ROOT, TESTS_DIR, os.environ.get("PYTHONPATH", "")]
-)
+# by name, so the repo root must be on their PYTHONPATH too.
+os.environ["PYTHONPATH"] = REPO_ROOT + os.pathsep + os.environ.get("PYTHONPATH", "")
 
 
 @pytest.fixture(scope="session")
@@ -38,14 +35,12 @@ def spark():
         .config("spark.sql.shuffle.partitions", "4")
         .config("spark.sql.adaptive.enabled", "false")
         .config("spark.ui.enabled", "false")
-        # workers import pyspark from the installed package, not from
-        # pyspark.zip: see s3conn_worker_daemon for the per-task cost
-        .config("spark.python.daemon.module", "s3conn_worker_daemon")
         .config("spark.sql.session.timeZone", "UTC")
         .getOrCreate()
     )
-    # the engine-owned state-plane confs (discovery threshold for the
-    # 64-shard layouts) — the same call a deployment makes (r15, #7)
+    # the engine-owned confs (discovery threshold for the 64-shard
+    # layouts, the zip-free worker daemon) — the same call a deployment
+    # makes, before the first Python task
     apply_engine_defaults(spark)
     yield spark
     spark.stop()

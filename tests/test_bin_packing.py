@@ -78,7 +78,15 @@ def test_pack_respects_max_bytes(tmp_path):
     assert bins is not None and len(bins) == 3
 
 
-def test_pack_unstatable_returns_none(tmp_path):
+def test_pack_unstatable_returns_none(tmp_path, monkeypatch):
+    # an in-memory object store behind the file_read seam: the same
+    # not-found branch as a real bucket, without credential lookups
+    from pyarrow.fs import _MockFileSystem
+
+    import spark_streaming_sql_s3_connector_spark.sources.file_read as fr
+
+    mock = _MockFileSystem()
+    monkeypatch.setattr(fr, "_fs_from_uri", lambda uri: (mock, uri.split("://", 1)[1]))
     p = tmp_path / "real.bin"
     p.write_bytes(b"x")
     bins = _pack_file_slices([(str(p), 0), ("s3://bucket/missing", 1)], 1 << 27)

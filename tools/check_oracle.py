@@ -177,6 +177,9 @@ def main():
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
+    from spark_streaming_sql_s3_connector_spark.session import apply_engine_defaults
+
+    apply_engine_defaults(spark)  # the confs and worker daemon a deployment gets
     con = duckdb.connect()
     for t in ["region", "nation", "customer", "supplier", "part", "orders", "lineitem", "events", "documents", "embeddings"]:
         p = os.path.join(sf_dir, f"{t}.parquet")
