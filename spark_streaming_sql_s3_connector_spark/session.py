@@ -21,29 +21,17 @@ Until r15 only the bench/microbench harnesses set this, so any other
 session silently reverted to 32 and re-paid the listing jobs (r14
 verdict item #7). :func:`apply_engine_defaults` is the one documented
 call a deployment makes on the session it hands to the streaming
-pipelines; the in-repo harnesses (bench.py, perfbench, tests/conftest.py,
-tools/microbench.py, tools/scaling_report.py, tools/check_oracle.py) all
-route through it.
+pipelines; the in-repo harnesses (bench.py, perfbench, tests/conftest.py
+and every session-building script under tools/) all route through it.
 
-The same call installs the package's Python worker daemon
-(:mod:`~spark_streaming_sql_s3_connector_spark.worker_daemon`) as
-``spark.python.daemon.module`` when that conf is unset. Every
-``format("s3-connector")`` read runs in Python workers, and with Spark's
-own daemon each task re-reads ``pyspark.zip`` before it reads a byte;
-this daemon makes the workers import the installed pyspark instead
-(only when its version equals the zipped one). Spark reads the conf
-each time it builds a Python runner, from ``SparkEnv``'s conf, which in
-local mode is the driver's live conf, so setting it after
-``getOrCreate`` takes effect for the next task. Executors on a cluster
-read it when they launch: pass it at submit there (README, "Scale
-design"). The workers need this package on their path, which every
-session reading ``format("s3-connector")`` or running the package's
-UDFs has anyway.
+The same call installs the zip-free Python worker daemon when the
+workers can import it (see :mod:`~spark_streaming_sql_s3_connector_spark.worker_daemon`).
 """
 
 from __future__ import annotations
 
 import os
+import subprocess
 
 WORKER_DAEMON = "spark_streaming_sql_s3_connector_spark.worker_daemon"
 
@@ -58,7 +46,42 @@ def apply_engine_defaults(spark) -> None:
         "spark.sql.sources.parallelPartitionDiscovery.threshold",
         os.environ.get("SPARK_GRAFT_PARALLEL_DISCOVERY_THRESHOLD", "1024"),
     )
-    # the live SparkConf (SparkEnv's in local mode), not the SQL conf
-    conf = spark.sparkContext._conf
-    if not conf.contains("spark.python.daemon.module"):
+    sc = spark.sparkContext
+    # the live SparkConf, which is SparkEnv's only in local mode; a
+    # cluster's executors read the conf when they launch (README)
+    conf = sc._conf
+    if (
+        sc.master.split("[")[0] == "local"
+        and not conf.contains("spark.python.daemon.module")
+        and _workers_import_daemon(sc)
+    ):
         conf.set("spark.python.daemon.module", WORKER_DAEMON)
+
+
+def _workers_import_daemon(sc) -> bool:
+    """Whether a local Python worker can import the daemon module when
+    Spark starts it: with the worker's interpreter, the PYTHONPATH it
+    inherits (the executor environment's, then the JVM's) and the JVM's
+    working directory. A package that reaches the workers only through
+    ``addPyFile`` or a local-mode ``--py-files`` does not count: pyspark
+    puts those on ``sys.path`` inside each task, after the daemon has
+    started."""
+    system = sc._jvm.java.lang.System
+    path = [sc.environment.get("PYTHONPATH"), system.getenv("PYTHONPATH")]
+    env = {**os.environ, **sc.environment}
+    env["PYTHONPATH"] = os.pathsep.join(p for p in path if p)
+    probe = (
+        "import importlib.util, sys\n"
+        f"sys.exit(importlib.util.find_spec({WORKER_DAEMON!r}) is None)"
+    )
+    try:
+        done = subprocess.run(
+            [sc.pythonExec, "-c", probe],
+            env=env,
+            cwd=system.getProperty("user.dir"),
+            capture_output=True,
+            timeout=60,
+        )
+    except (OSError, subprocess.TimeoutExpired):
+        return False
+    return done.returncode == 0

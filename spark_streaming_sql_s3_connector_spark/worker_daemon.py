@@ -19,7 +19,14 @@ path is left as it is and the workers run exactly as with Spark's own
 daemon.
 
 :func:`spark_streaming_sql_s3_connector_spark.session.apply_engine_defaults`
-installs it. Spark runs it as ``python -m <this module> <worker module>``
+installs it in local mode, after getOrCreate: Spark reads the conf from
+``SparkEnv`` each time it builds a Python runner, and in local mode that
+is the driver's live conf. It does so only when the worker interpreter
+can import this module as Spark starts it; a package shipped with
+``addPyFile`` reaches ``sys.path`` only inside each task, after the
+daemon has started. Executors on a cluster read the conf when they
+launch, so a deployment passes it at submit (README, "Scale design").
+Spark runs it as ``python -m <this module> <worker module>``
 and the arguments go through to ``pyspark.daemon`` unchanged. The
 package ``__init__`` runs first and must not import pyspark.
 """

@@ -7,6 +7,8 @@ jar Spark puts on a worker's path, and a user archive such as a
 ``--py-files`` zip, which must survive the rewrite.
 """
 
+import os
+import subprocess
 import sys
 import zipfile
 import zipimport
@@ -135,3 +137,42 @@ def test_worker_imports_installed_pyspark_and_user_zip(spark, tmp_path):
     assert value == 42
     assert user in path
     assert not [p for p in path if worker_daemon._is_spark_entry(p)]
+
+
+def test_engine_defaults_skip_daemon_for_package_shipped_per_task(tmp_path):
+    """A session whose workers get the package only through ``addPyFile``
+    (``plans.io.ensure_package_shipped``) keeps Spark's own daemon: the
+    archive reaches a worker's path inside each task, after the daemon
+    has started, so ours could not be imported. Python tasks still run."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = f"""
+import sys
+sys.path.insert(0, {repo!r})  # the driver imports the package, workers do not
+from pyspark.sql import SparkSession
+from spark_streaming_sql_s3_connector_spark.plans.io import ensure_package_shipped
+from spark_streaming_sql_s3_connector_spark.session import apply_engine_defaults
+spark = (SparkSession.builder.master("local[1]")
+         .config("spark.ui.enabled", "false")
+         .config("spark.driver.memory", "512m").getOrCreate())
+ensure_package_shipped(spark)
+apply_engine_defaults(spark)
+print("DAEMON=" + str(spark.sparkContext._conf.get({_KEY!r}, None)))
+def probe(_):
+    import spark_streaming_sql_s3_connector_spark as pkg
+    yield pkg.__name__
+print("ROWS=" + ",".join(spark.sparkContext.parallelize([0], 1).mapPartitions(probe).collect()))
+spark.stop()
+"""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["TMPDIR"] = str(tmp_path)  # where ensure_package_shipped writes its zip
+    proc = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    assert "DAEMON=None" in proc.stdout
+    assert "ROWS=spark_streaming_sql_s3_connector_spark" in proc.stdout

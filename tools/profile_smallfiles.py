@@ -43,6 +43,9 @@ def main():
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
+    from spark_streaming_sql_s3_connector_spark.session import apply_engine_defaults
+
+    apply_engine_defaults(spark)  # discovery threshold, zip-free worker daemon
 
     from spark_streaming_sql_s3_connector_spark.plans.io import (
         ensure_package_shipped,

@@ -31,6 +31,9 @@ def main() -> int:
         .config("spark.sql.session.timeZone", "UTC")
         .getOrCreate()
     )
+    from spark_streaming_sql_s3_connector_spark.session import apply_engine_defaults
+
+    apply_engine_defaults(spark)  # discovery threshold, zip-free worker daemon
 
     # --- streaming surface: ingest + exactly-once under redelivery ---
     from spark_streaming_sql_s3_connector_spark.queueing.local import (
