@@ -96,15 +96,7 @@ def time_string_as_ms(s: str) -> int:
     return int(value * _TIME_UNITS_MS[unit])
 
 
-def _get_sqs(parameters: Mapping[str, str], name: str) -> Optional[str]:
-    v = parameters.get(_SQS_PREFIX + name)
-    if v is None:
-        v = parameters.get(_SQS_PREFIX_REF + name)
-    return v
-
-
-def _positive_int(parameters: Mapping[str, str], key: str, default: int, raw: Optional[str] = None) -> int:
-    s = raw if raw is not None else parameters.get(key)
+def _positive_int(key: str, default: int, s: Optional[str]) -> int:
     if s is None:
         return default
     try:
@@ -253,12 +245,12 @@ class S3ConnectorSourceOptions:
                     f" and {SQS_LONG_POLLING_WAIT_TIME_SECONDS_MAX_VALUE}"
                 )
 
-        sqs_max_retries = _positive_int({}, SQS_MAX_RETRIES, SQS_MAX_RETRIES_DEFAULT_VALUE, get_sqs(SQS_MAX_RETRIES))
+        sqs_max_retries = _positive_int(SQS_MAX_RETRIES, SQS_MAX_RETRIES_DEFAULT_VALUE, get_sqs(SQS_MAX_RETRIES))
         sqs_max_concurrency = _positive_int(
-            {}, SQS_MAX_CONCURRENCY, SQS_MAX_CONCURRENCY_DEFAULT_VALUE, get_sqs(SQS_MAX_CONCURRENCY)
+            SQS_MAX_CONCURRENCY, SQS_MAX_CONCURRENCY_DEFAULT_VALUE, get_sqs(SQS_MAX_CONCURRENCY)
         )
         sqs_visibility = _positive_int(
-            {}, SQS_VISIBILITY_TIMEOUT_SECONDS, SQS_VISIBILITY_TIMEOUT_DEFAULT_VALUE,
+            SQS_VISIBILITY_TIMEOUT_SECONDS, SQS_VISIBILITY_TIMEOUT_DEFAULT_VALUE,
             get_sqs(SQS_VISIBILITY_TIMEOUT_SECONDS),
         )
         sqs_keep = _boolean(
@@ -267,11 +259,11 @@ class S3ConnectorSourceOptions:
             SQS_KEEP_MESSAGE_FOR_CONSUMER_ERROR_DEFAULT_VALUE,
         )
         fetch_wait = _positive_int(
-            {}, QUEUE_FETCH_WAIT_TIMEOUT_SECONDS, 2 * long_poll if long_poll > 0 else 1,
+            QUEUE_FETCH_WAIT_TIMEOUT_SECONDS, 2 * long_poll if long_poll > 0 else 1,
             get(QUEUE_FETCH_WAIT_TIMEOUT_SECONDS),
         )
         max_bytes_per_partition = _positive_int(
-            {}, MAX_BYTES_PER_PARTITION, MAX_BYTES_PER_PARTITION_DEFAULT_VALUE,
+            MAX_BYTES_PER_PARTITION, MAX_BYTES_PER_PARTITION_DEFAULT_VALUE,
             get(MAX_BYTES_PER_PARTITION),
         )
 

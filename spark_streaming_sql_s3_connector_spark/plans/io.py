@@ -158,7 +158,11 @@ def ensure_package_shipped(spark: SparkSession) -> None:
             spark.sparkContext.addPyFile(newest)
             spark._s3conn_pkg_shipped = True
             return
-    fd, zpath = tempfile.mkstemp(prefix="s3conn-pkg-", suffix=".zip")
+    # Spark's per-context temp dir: readable while the context lives (the
+    # executors fetch the zip from it), deleted when the JVM shuts down
+    fd, zpath = tempfile.mkstemp(
+        prefix="s3conn-pkg-", suffix=".zip", dir=spark.sparkContext._temp_dir
+    )
     os.close(fd)
     with zipfile.ZipFile(zpath, "w") as z:
         for root, _dirs, files in os.walk(pkg_dir):

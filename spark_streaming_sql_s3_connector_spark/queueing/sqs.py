@@ -5,9 +5,10 @@ Production analog of the reference's AsyncSqsClientImpl
 ``sqs.maxConcurrency`` (reference hard cap 200), receive batches of 10 (SQS
 cap, scala:484), batched deletes of 10 with per-entry fallback
 (scala:238-319), visibility extension for retry-later (scala:442-464).
-boto3 is not available in this container; the class raises ImportError at
-construction and is exercised only through its shared drain logic, which is
-identical to LocalFileQueueClient's (tested there).
+The default client is boto3's (imported at construction; ImportError with
+a hint when it is missing). The drain loop is this class's own, not shared
+with LocalFileQueueClient; tests drive the class through the injected
+``sqs_client`` (tests/test_sqs_client.py, tests/test_sqs_stateful.py).
 """
 
 from __future__ import annotations

@@ -62,20 +62,14 @@ class AdmissionController:
         self.metadata_path = metadata_path
         # metadataPath may be local OR an object-store URI (s3://, hdfs://)
         # — the reference checkpoints admission state to DFS
-        # (S3ConnectorSource.scala:53-59). r14: resolution goes through
-        # `streaming.state_io.resolve` — the SAME scheme-dispatched layer
-        # every analytics plane uses (registered test schemes included),
-        # so a deployment can put admission metadata on the object store
-        # while the data warehouse stays elsewhere. meta_fs injects a
-        # filesystem directly (tests: pyarrow mock FS).
+        # (S3ConnectorSource.scala:53-59). It resolves through
+        # `filesystem_for`, like every state plane (registered test
+        # schemes included). meta_fs injects a filesystem directly
+        # (tests: pyarrow mock FS).
         if meta_fs is not None:
             self._meta_fs, self._meta_root = meta_fs, metadata_path
         else:
-            from spark_streaming_sql_s3_connector_spark.streaming.state_io import (
-                resolve as _resolve_state_path,
-            )
-
-            self._meta_fs, self._meta_root = _resolve_state_path(metadata_path)
+            self._meta_fs, self._meta_root = filesystem_for(metadata_path)
         self._meta_fs.mkdirs(self._meta_root)
         self.file_cache = FileCache(options.max_file_age_ms)
         self.metadata_log = JsonMetadataLog(

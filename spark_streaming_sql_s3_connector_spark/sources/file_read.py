@@ -17,6 +17,11 @@ fast path of the Python Data Source API):
 - Hive-style partition-column reconstruction from the file path relative
   to ``basePath`` (S3ConnectorSourceItSuite.scala:224-255).
 
+Every path resolves through ``state/log_fs.filesystem_for``, the
+resolver the metadata log and the state planes use: local and
+``file://`` paths are read by bare path; ``s3a://`` event paths and any
+other pyarrow.fs URI through one cached client per ``scheme://authority``.
+
 Scale note: a task reads a list of files, one after another. The driver
 plans one read task per driver core, more only when bytes exceed
 ``maxBytesPerPartition`` or a task would read more than
@@ -35,6 +40,11 @@ import pyarrow as pa
 
 from pyspark.sql.types import StructType
 
+from spark_streaming_sql_s3_connector_spark.state.log_fs import (
+    PosixLogFileSystem,
+    filesystem_for,
+)
+
 
 # formats the Arrow executor path reads natively; anything else routes
 # through the JVM-read orchestrator (reference passthrough semantics:
@@ -48,53 +58,14 @@ def normalize_local_path(path: str) -> str:
     return path
 
 
-def _fs_from_uri(path: str):
-    """Seam for tests (pyarrow's C classes can't be monkeypatched)."""
-    from pyarrow.fs import FileSystem
-
-    return FileSystem.from_uri(path)
-
-
-# FileSystem client cache, keyed by "scheme://authority". Planning passes
-# call resolve_read_path once per FILE; without this, every object-store
-# file costs a fresh S3 client construction (O(files) client setups per
-# micro-batch plan). Entries pin the _fs_from_uri seam they were built
-# with so a test monkeypatching the seam never sees a stale filesystem.
-_FS_CACHE: dict = {}
-
-
 def resolve_read_path(path: str):
-    """Dispatch a path to its filesystem: returns ``(fs, resolved)``
-    where ``fs`` is None for local paths (readers take the bare path —
-    the mmap-capable fast path) or a ``pyarrow.fs.FileSystem`` for
-    object-store URIs (``s3://…``, ``hdfs://…``, …). The data-plane
-    analog of the reference reading S3 objects through Hadoop FS
-    (S3ConnectorSource.scala:170-181). Filesystems are memoized per
-    ``scheme://authority`` so a many-file listing builds ONE client."""
-    if path.startswith("file://"):
-        return None, path[len("file://"):]
-    if "://" in path:
-        from pyarrow.fs import LocalFileSystem
-
-        scheme, rest = path.split("://", 1)
-        authority, _, tail = rest.partition("/")
-        prefix = scheme + "://" + authority
-        cached = _FS_CACHE.get(prefix)
-        if cached is not None and cached[0] is _fs_from_uri:
-            _, fs, base = cached
-            return fs, (base + "/" + tail) if tail else base
-        fs, p = _fs_from_uri(path)
-        if isinstance(fs, LocalFileSystem):
-            fs = None
-        # Resolved paths end with the URI's path component for every
-        # pyarrow FS (s3://b/k → "b/k", hdfs://h/k → "/k"), so the
-        # prefix's resolved base is derivable — cache (seam, fs, base);
-        # a mapping that doesn't fit this shape just stays uncached.
-        suffix = "/" + tail if tail else ""
-        if suffix and p.endswith(suffix):
-            _FS_CACHE[prefix] = (_fs_from_uri, fs, p[: len(p) - len(suffix)])
-        return fs, p
-    return None, path
+    """``(fs, resolved)`` for a data file: ``fs`` is None for local paths
+    (readers take the bare path, the mmap-capable fast path), otherwise
+    the ``pyarrow.fs.FileSystem`` ``filesystem_for`` resolved."""
+    fs, resolved = filesystem_for(path)
+    if isinstance(fs, PosixLogFileSystem):
+        return None, resolved
+    return fs.arrow_fs, resolved
 
 
 def _file_size(fs, path: str) -> int:

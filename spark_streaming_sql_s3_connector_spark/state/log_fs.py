@@ -1,4 +1,4 @@
-"""Pluggable file layer under the metadata log.
+"""The package's file layer: one resolver from a path to its filesystem.
 
 The reference checkpoints its state plane to DFS: RocksDBFileManager.scala
 :157-312 uploads SSTs + ``<v>.zip`` to the checkpoint dir resolved from
@@ -21,9 +21,15 @@ operations the log performs (mkdirs / exists / list / read / atomic-write
   docs: correctness requires the single-writer discipline the streaming
   engine already enforces — one driver owns a checkpoint dir).
 
-``filesystem_for(path)`` picks the implementation from the path scheme, so
-``metadataPath`` may be a local path, ``file://…``, or any
-``scheme://…`` pyarrow.fs understands.
+``filesystem_for(path)`` is the package's one path → filesystem
+resolver: the metadata log, the reprocess lock, the ANN index, every
+``streaming/`` state plane (through ``streaming/state_io``) and the
+executor read path (``sources/file_read.resolve_read_path``) all ask it.
+A path may be local, ``file://…``, ``s3a://``/``s3n://`` (read as
+``s3://``), or any ``scheme://…`` pyarrow.fs understands; clients are
+cached per ``scheme://authority``. ``register_scheme`` routes a scheme
+to a given filesystem (tests: the pyarrow mock), and
+``_pyarrow_from_uri`` is the one seam where clients are built.
 """
 
 from __future__ import annotations
@@ -187,23 +193,23 @@ class ArrowLogFileSystem:
     """
 
     def __init__(self, fs) -> None:
-        self._fs = fs
+        self.arrow_fs = fs
 
     def join(self, *parts: str) -> str:
         return "/".join(p.strip("/") if i else p.rstrip("/") for i, p in enumerate(parts))
 
     def mkdirs(self, path: str) -> None:
-        self._fs.create_dir(path, recursive=True)
+        self.arrow_fs.create_dir(path, recursive=True)
 
     def exists(self, path: str) -> bool:
         from pyarrow.fs import FileType
 
-        return self._fs.get_file_info(path).type != FileType.NotFound
+        return self.arrow_fs.get_file_info(path).type != FileType.NotFound
 
     def is_dir(self, path: str) -> bool:
         from pyarrow.fs import FileType
 
-        return self._fs.get_file_info(path).type == FileType.Directory
+        return self.arrow_fs.get_file_info(path).type == FileType.Directory
 
     def listdir(self, path: str) -> list[str]:
         from pyarrow.fs import FileSelector
@@ -213,7 +219,7 @@ class ArrowLogFileSystem:
         # MUST propagate: during _recover an empty listing would silently
         # restart admission state from scratch and re-admit seen files.
         try:
-            infos = self._fs.get_file_info(
+            infos = self.arrow_fs.get_file_info(
                 FileSelector(path, allow_not_found=True, recursive=False)
             )
         except FileNotFoundError:
@@ -224,7 +230,7 @@ class ArrowLogFileSystem:
         from pyarrow.fs import FileSelector, FileType
 
         try:
-            infos = self._fs.get_file_info(
+            infos = self.arrow_fs.get_file_info(
                 FileSelector(path, allow_not_found=True, recursive=False)
             )
         except FileNotFoundError:
@@ -235,11 +241,11 @@ class ArrowLogFileSystem:
         # pyarrow raises FileNotFoundError for missing objects; any other
         # OSError is a real I/O failure and must fail loudly rather than
         # masquerade as missing state (see listdir note).
-        with self._fs.open_input_stream(path) as f:
+        with self.arrow_fs.open_input_stream(path) as f:
             return f.read().decode("utf-8")
 
     def read_bytes(self, path: str) -> bytes:
-        with self._fs.open_input_stream(path) as f:
+        with self.arrow_fs.open_input_stream(path) as f:
             return f.read()
 
     def write_atomic(self, path: str, data: str, overwrite: bool) -> bool:
@@ -248,7 +254,7 @@ class ArrowLogFileSystem:
     def write_bytes_atomic(self, path: str, data: bytes, overwrite: bool) -> bool:
         if not overwrite and self.exists(path):
             return False
-        with self._fs.open_output_stream(path) as f:
+        with self.arrow_fs.open_output_stream(path) as f:
             f.write(data)
         return True
 
@@ -263,7 +269,7 @@ class ArrowLogFileSystem:
         check..put span as before.)"""
         if self.exists(path):
             return False
-        with self._fs.open_output_stream(path) as f:
+        with self.arrow_fs.open_output_stream(path) as f:
             f.write(token.encode("utf-8"))
         try:
             return self.read_text(path) == token
@@ -274,35 +280,64 @@ class ArrowLogFileSystem:
         # Swallow only not-found; a failed delete on a live object must
         # surface (a silently-undeleted lock/batch doc breaks replay).
         try:
-            self._fs.delete_file(path)
+            self.arrow_fs.delete_file(path)
         except FileNotFoundError:
             pass
 
     def delete_dir(self, path: str) -> None:
         try:
-            self._fs.delete_dir(path)
+            self.arrow_fs.delete_dir(path)
         except FileNotFoundError:
             pass
 
 
+_POSIX = PosixLogFileSystem()
+
+# test seam: scheme -> LogFileSystem for that scheme's paths, which it
+# receives with "<scheme>://" stripped (pyarrow's from_uri contract)
+_SCHEME_OVERRIDES: dict[str, LogFileSystem] = {}
+
+# (scheme, authority) -> (seam that built it, fs, resolved authority
+# root). from_uri builds a new client per call (for S3 that includes a
+# region lookup), while the fs depends only on scheme + authority.
+# Entries pin their seam so a test that swaps it never gets a stale fs.
+_FS_CACHE: dict[tuple[str, str], tuple] = {}
+
+
+def register_scheme(scheme: str, fs: LogFileSystem) -> None:
+    """Route ``<scheme>://…`` paths through ``fs`` (tests: the pyarrow
+    mock filesystem)."""
+    _SCHEME_OVERRIDES[scheme] = fs
+
+
+def unregister_scheme(scheme: str) -> None:
+    _SCHEME_OVERRIDES.pop(scheme, None)
+
+
 def filesystem_for(path: str) -> Tuple[LogFileSystem, str]:
-    """Resolve ``path`` to (filesystem, normalized path). Local paths and
-    ``file://`` URIs get the POSIX impl; any other scheme goes through
-    ``pyarrow.fs.FileSystem.from_uri`` (s3://, hdfs://, gs://, …).
-    ``s3a://``/``s3n://`` — the HADOOP spellings Spark's parquet reader
-    wants on vanilla clusters — alias to pyarrow's ``s3://`` here, so one
-    state-root string serves both the Spark data plane and this metadata
-    plane."""
-    if path.startswith("file://"):
-        return PosixLogFileSystem(), path[len("file://"):]
-    for alias in ("s3a://", "s3n://"):
-        if path.startswith(alias):
-            path = "s3://" + path[len(alias):]
-            break
-    if "://" in path:
-        fs, resolved = _pyarrow_from_uri(path)
-        return ArrowLogFileSystem(fs), resolved
-    return PosixLogFileSystem(), path
+    """Resolve ``path`` to (filesystem, fs-native path): bare paths and
+    ``file://`` URIs to the POSIX impl, a registered scheme to its
+    filesystem, any other scheme to a pyarrow.fs client (s3://, hdfs://,
+    gs://, …) built once per ``scheme://authority``. ``s3a://`` and
+    ``s3n://``, the Hadoop spellings Spark and S3 event notifications
+    use, are ``s3://``."""
+    if "://" not in path:
+        return _POSIX, path
+    scheme, rest = path.split("://", 1)
+    if scheme == "file":
+        return _POSIX, rest
+    if scheme in ("s3a", "s3n"):
+        scheme = "s3"
+    if scheme in _SCHEME_OVERRIDES:
+        return _SCHEME_OVERRIDES[scheme], rest
+    authority, _, tail = rest.partition("/")
+    cached = _FS_CACHE.get((scheme, authority))
+    if cached is None or cached[0] is not _pyarrow_from_uri:
+        fs, root = _pyarrow_from_uri(f"{scheme}://{authority}")
+        cached = (_pyarrow_from_uri, ArrowLogFileSystem(fs), root)
+        _FS_CACHE[(scheme, authority)] = cached
+    _, fs, root = cached
+    return fs, (root.rstrip("/") + "/" + tail) if tail else root
 
 
 def _pyarrow_from_uri(path: str):

@@ -1,17 +1,6 @@
-"""THE file layer for every ``streaming/`` analytics state plane.
+"""The file helpers every ``streaming/`` analytics state plane uses.
 
-Until r12 the planes (rollup / term_stats / exact- line- passage-dedup /
-dedup_index bands / packing_state / profile / drift / curation /
-ann_lifecycle / vacuum) did their pointer, listing, sidecar and GC IO
-with raw ``open()`` / ``os.listdir`` / ``shutil.rmtree`` — correct
-locally, but a state root on ``s3://``/``hdfs://`` failed at the first
-``os.listdir``. The connector's own metadata log solved exactly this in
-r6 (``state/log_fs.filesystem_for``, the analog of the reference's
-RocksDB-to-DFS checkpoint, RocksDBFileManager.scala:157-312), and
-``operators/ann_index.py`` already routes through it; this module
-finishes the job for the streaming family.
-
-Division of labour (same as ann_index):
+Division of labour (same as ``operators/ann_index``):
 
 - **Parquet data IO stays Spark's.** Paths are passed verbatim to
   ``spark.read.parquet`` / ``df.write.parquet`` — scheme handling on
@@ -20,17 +9,16 @@ Division of labour (same as ann_index):
 - **Metadata IO goes through here**: the ``_latest`` pointers, the
   ``batch=<id>`` / ``v=<n>`` dir listings, write-once schema / geometry
   / threshold sidecars, bloom bitmap bytes, and GC deletes. Each helper
-  resolves the path's scheme per call via
-  ``state/log_fs.filesystem_for`` (``s3a://`` aliases to pyarrow's s3)
-  — these run a handful of times per trigger, so per-call resolution is
-  noise next to the trigger's Spark jobs.
+  resolves its path with ``state/log_fs.filesystem_for``, the package's
+  one resolver (the analog of the reference's RocksDB-to-DFS checkpoint,
+  RocksDBFileManager.scala:157-312): local, ``file://``, ``s3a://``,
+  anything pyarrow.fs understands, or a scheme registered with
+  ``log_fs.register_scheme``, with one client per ``scheme://authority``.
 
-Tests can route a fake scheme with :func:`register_scheme` (e.g.
-``mock://`` → a pyarrow ``_MockFileSystem``-backed ``LogFileSystem``) —
-the ``test_metadata_log.py`` pattern applied to the planes' shared IO
-layer. Full plane lifecycles additionally run over ``file://`` URIs,
-which exercise the real scheme-routing end-to-end (Spark can read
-``file://``; the in-process mock it cannot).
+Tests route a fake scheme with ``log_fs.register_scheme`` (e.g.
+``mock://`` → a pyarrow ``_MockFileSystem``-backed ``LogFileSystem``).
+Full plane lifecycles additionally run over ``file://`` URIs, which
+Spark can read; the in-process mock it cannot.
 
 Durability note (same contract as the metadata log): pointer flips are
 tmp+rename on POSIX and a single PUT on object stores — atomic either
@@ -44,60 +32,7 @@ from __future__ import annotations
 import posixpath
 from typing import Optional
 
-from spark_streaming_sql_s3_connector_spark.state.log_fs import (
-    LogFileSystem,
-    filesystem_for,
-)
-
-# test seam: scheme -> LogFileSystem; the path handed to the fs is the
-# URI with "<scheme>://" stripped (mirrors pyarrow's from_uri contract)
-_SCHEME_OVERRIDES: dict[str, LogFileSystem] = {}
-
-
-def register_scheme(scheme: str, fs: LogFileSystem) -> None:
-    """Route ``<scheme>://…`` paths through ``fs`` (tests: the pyarrow
-    mock filesystem). Overrides win over ``filesystem_for``."""
-    _SCHEME_OVERRIDES[scheme] = fs
-
-
-def unregister_scheme(scheme: str) -> None:
-    _SCHEME_OVERRIDES.pop(scheme, None)
-
-
-# (scheme, authority) -> (fs, resolved prefix of "scheme://authority"):
-# pyarrow's from_uri constructs a fresh FileSystem per call (for S3 that
-# includes region resolution — network RTTs), and the planes resolve
-# paths several times per trigger. The fs depends only on scheme +
-# authority, so one construction per (scheme, bucket/namenode) amortizes
-# across the stream's lifetime.
-_FS_CACHE: dict[tuple[str, str], tuple[LogFileSystem, str]] = {}
-
-
-def clear_fs_cache() -> None:
-    """Test seam: drop memoized filesystem instances."""
-    _FS_CACHE.clear()
-
-
-def resolve(path: str) -> tuple[LogFileSystem, str]:
-    """(filesystem, fs-native path) for any plane path — plain local,
-    ``file://``, a registered test scheme, or anything pyarrow.fs
-    understands (plus the ``s3a://`` Hadoop alias)."""
-    if "://" not in path:
-        return filesystem_for(path)
-    scheme, rest = path.split("://", 1)
-    if scheme in _SCHEME_OVERRIDES:
-        return _SCHEME_OVERRIDES[scheme], rest
-    if scheme == "file":
-        return filesystem_for(path)  # POSIX impl — construction is free
-    authority, _, tail = rest.partition("/")
-    key = (scheme, authority)
-    if key not in _FS_CACHE:
-        fs, resolved_root = filesystem_for(f"{scheme}://{authority}")
-        _FS_CACHE[key] = (fs, resolved_root)
-    fs, resolved_root = _FS_CACHE[key]
-    if not tail:
-        return fs, resolved_root
-    return fs, resolved_root.rstrip("/") + "/" + tail
+from spark_streaming_sql_s3_connector_spark.state.log_fs import filesystem_for
 
 
 # --- pointers -------------------------------------------------------------
@@ -114,7 +49,7 @@ def read_pointer(state_dir: str) -> Optional[int]:
     fold. Unparsable content reads as None (a torn POSIX write can't
     happen — writes are atomic — but an operator's stray file must not
     wedge the plane)."""
-    fs, p = resolve(pointer_path(state_dir))
+    fs, p = filesystem_for(pointer_path(state_dir))
     try:
         return int(fs.read_text(p).strip())
     except (FileNotFoundError, ValueError):
@@ -124,7 +59,7 @@ def read_pointer(state_dir: str) -> Optional[int]:
 def write_pointer(state_dir: str, version: int) -> None:
     """Atomically flip the plane's base pointer (tmp+rename / single
     PUT). The flip IS the commit point of every fold."""
-    fs, p = resolve(pointer_path(state_dir))
+    fs, p = filesystem_for(pointer_path(state_dir))
     fs.mkdirs(posixpath.dirname(p))
     fs.write_atomic(p, str(int(version)), overwrite=True)
 
@@ -147,7 +82,7 @@ def list_batch_ids(root: str, prefix: str = "batch=") -> list[int]:
     """Sorted integer ids of the ``<prefix><id>`` dirs directly under
     ``root`` (unparsable names tolerated and skipped; missing root reads
     as empty) — THE shared delta-dir listing parser."""
-    fs, p = resolve(root)
+    fs, p = filesystem_for(root)
     out = []
     for e in _listdir_tolerant(fs, p):
         if e.startswith(prefix):
@@ -167,7 +102,7 @@ def list_versions(base_root: str) -> list[int]:
 def list_names(path: str) -> list[str]:
     """Raw base names under ``path``; [] when missing (or a stray
     plain file — see ``_listdir_tolerant``)."""
-    fs, p = resolve(path)
+    fs, p = filesystem_for(path)
     return _listdir_tolerant(fs, p)
 
 
@@ -175,7 +110,7 @@ def list_names_info(path: str) -> list[tuple[str, bool]]:
     """(base name, is_dir) pairs under ``path``; [] when missing — ONE
     store round trip where ``list_names`` + per-entry :func:`is_dir`
     would pay N+1 (the vacuum walk's shape)."""
-    fs, p = resolve(path)
+    fs, p = filesystem_for(path)
     try:
         return fs.listdir_info(p)
     except NotADirectoryError:
@@ -183,12 +118,12 @@ def list_names_info(path: str) -> list[tuple[str, bool]]:
 
 
 def exists(path: str) -> bool:
-    fs, p = resolve(path)
+    fs, p = filesystem_for(path)
     return fs.exists(p)
 
 
 def is_dir(path: str) -> bool:
-    fs, p = resolve(path)
+    fs, p = filesystem_for(path)
     return fs.is_dir(p)
 
 
@@ -199,7 +134,7 @@ def read_text(path: str) -> str:
     """Raises FileNotFoundError when missing (a POSIX path whose parent
     component is a plain file — NotADirectoryError — normalizes to
     missing too: the sidecar genuinely isn't there)."""
-    fs, p = resolve(path)
+    fs, p = filesystem_for(path)
     try:
         return fs.read_text(p)
     except NotADirectoryError:
@@ -210,13 +145,13 @@ def write_text_atomic(path: str, data: str, overwrite: bool = True) -> bool:
     """All-or-nothing text write, parent dirs created. With
     ``overwrite=False``: write-once semantics (an existing file wins,
     returns False)."""
-    fs, p = resolve(path)
+    fs, p = filesystem_for(path)
     fs.mkdirs(posixpath.dirname(p))
     return fs.write_atomic(p, data, overwrite=overwrite)
 
 
 def read_bytes(path: str) -> bytes:
-    fs, p = resolve(path)
+    fs, p = filesystem_for(path)
     try:
         return fs.read_bytes(p)
     except NotADirectoryError:
@@ -224,7 +159,7 @@ def read_bytes(path: str) -> bytes:
 
 
 def write_bytes_atomic(path: str, data: bytes, overwrite: bool = True) -> bool:
-    fs, p = resolve(path)
+    fs, p = filesystem_for(path)
     fs.mkdirs(posixpath.dirname(p))
     return fs.write_bytes_atomic(p, data, overwrite=overwrite)
 
@@ -236,15 +171,15 @@ def remove_tree(path: str) -> None:
     """Recursive delete; missing is a no-op. Used ONLY on dirs that are
     already dead to every reader (below a flipped pointer), so the call
     is pure GC — any moment, any outcome, still correct."""
-    fs, p = resolve(path)
+    fs, p = filesystem_for(path)
     fs.delete_dir(p)
 
 
 def remove_file(path: str) -> None:
-    fs, p = resolve(path)
+    fs, p = filesystem_for(path)
     fs.delete(p)
 
 
 def makedirs(path: str) -> None:
-    fs, p = resolve(path)
+    fs, p = filesystem_for(path)
     fs.mkdirs(p)

@@ -79,14 +79,14 @@ def test_pack_respects_max_bytes(tmp_path):
 
 
 def test_pack_unstatable_returns_none(tmp_path, monkeypatch):
-    # an in-memory object store behind the file_read seam: the same
+    # an in-memory object store behind the log_fs seam: the same
     # not-found branch as a real bucket, without credential lookups
     from pyarrow.fs import _MockFileSystem
 
-    import spark_streaming_sql_s3_connector_spark.sources.file_read as fr
+    import spark_streaming_sql_s3_connector_spark.state.log_fs as log_fs
 
     mock = _MockFileSystem()
-    monkeypatch.setattr(fr, "_fs_from_uri", lambda uri: (mock, uri.split("://", 1)[1]))
+    monkeypatch.setattr(log_fs, "_pyarrow_from_uri", lambda uri: (mock, uri.split("://", 1)[1]))
     p = tmp_path / "real.bin"
     p.write_bytes(b"x")
     bins = _pack_file_slices([(str(p), 0), ("s3://bucket/missing", 1)], 1 << 27)

@@ -195,10 +195,10 @@ def make_file(request, tmp_path, monkeypatch):
 
     from pyarrow.fs import _MockFileSystem
 
-    import spark_streaming_sql_s3_connector_spark.sources.file_read as fr
+    import spark_streaming_sql_s3_connector_spark.state.log_fs as log_fs
 
     mock = _MockFileSystem()
-    monkeypatch.setattr(fr, "_fs_from_uri", lambda uri: (mock, uri.split("://", 1)[1]))
+    monkeypatch.setattr(log_fs, "_pyarrow_from_uri", lambda uri: (mock, uri.split("://", 1)[1]))
 
     def write(name, data):
         rel = f"bucket/{name}"
@@ -290,11 +290,12 @@ def test_fs_dispatch_partition_columns(make_file):
 def test_resolve_read_path_caches_filesystem_per_authority(monkeypatch):
     """Planning passes resolve per FILE: the filesystem client must be
     built ONCE per scheme://authority (the advisor-flagged O(files)
-    client-construction cost), and a swapped _fs_from_uri seam (another
-    test's mock) must never see a stale cached filesystem."""
+    client-construction cost), and a swapped _pyarrow_from_uri seam
+    (another test's mock) must never see a stale cached filesystem."""
     from pyarrow.fs import _MockFileSystem
 
     import spark_streaming_sql_s3_connector_spark.sources.file_read as fr
+    import spark_streaming_sql_s3_connector_spark.state.log_fs as log_fs
 
     calls = []
     mock = _MockFileSystem()
@@ -303,7 +304,7 @@ def test_resolve_read_path_caches_filesystem_per_authority(monkeypatch):
         calls.append(uri)
         return mock, uri.split("://", 1)[1]
 
-    monkeypatch.setattr(fr, "_fs_from_uri", seam)
+    monkeypatch.setattr(log_fs, "_pyarrow_from_uri", seam)
     fs1, p1 = fr.resolve_read_path("mock://bucket/a/x.parquet")
     fs2, p2 = fr.resolve_read_path("mock://bucket/b/y.parquet")
     assert fs1 is mock and fs2 is mock
@@ -314,6 +315,58 @@ def test_resolve_read_path_caches_filesystem_per_authority(monkeypatch):
     assert len(calls) == 2
     # seam swap invalidates: no stale filesystem leaks across tests
     mock2 = _MockFileSystem()
-    monkeypatch.setattr(fr, "_fs_from_uri", lambda uri: (mock2, uri.split("://", 1)[1]))
+    monkeypatch.setattr(log_fs, "_pyarrow_from_uri", lambda uri: (mock2, uri.split("://", 1)[1]))
     fs3, _ = fr.resolve_read_path("mock://bucket/c/z.parquet")
     assert fs3 is mock2
+
+
+def test_s3a_event_path_plans_and_reads_on_arrow_path(monkeypatch):
+    """S3 event notifications name objects as ``s3a://bucket/key``: the
+    planner must size such a file (bins, not the one-file-per-task
+    fallback) and a read task must yield its rows, both through the
+    Arrow path's pyarrow ``s3://`` client."""
+    from pyarrow.fs import _MockFileSystem
+
+    import spark_streaming_sql_s3_connector_spark.state.log_fs as log_fs
+    from spark_streaming_sql_s3_connector_spark.queueing.events import (
+        make_s3_event_body,
+        parse_s3_event,
+    )
+    from spark_streaming_sql_s3_connector_spark.sources.datasource import _pack_file_slices
+    from spark_streaming_sql_s3_connector_spark.sources.file_read import iter_record_batches
+
+    ts = 1_700_000_000_000
+    path = parse_s3_event(make_s3_event_body("s3://bucket/d/x.parquet", ts)).file_path
+    assert path == "s3a://bucket/d/x.parquet"
+    mock = _MockFileSystem()
+    monkeypatch.setattr(log_fs, "_pyarrow_from_uri", lambda uri: (mock, uri.split("://", 1)[1]))
+    mock.create_dir("bucket/d", recursive=True)
+    with mock.open_output_stream("bucket/d/x.parquet") as f:
+        f.write(_parquet_bytes(ROWS))
+
+    bins = _pack_file_slices([(path, ts)], 1 << 27)
+    assert bins is not None and [e for b in bins for e in b] == [(path, ts)]
+    batches = list(iter_record_batches([(path, ts)], "parquet", BASIC, {}, [], None))
+    t = pa.Table.from_batches(batches)
+    assert t.column("testString").to_pylist() == ["James", "Michael", "Robert"]
+
+
+def test_metadata_logs_on_one_bucket_share_one_client(monkeypatch):
+    """Every resolution goes through one client cache: two metadata logs
+    on the same bucket (one spelled ``s3a://``) build one S3 client."""
+    from pyarrow.fs import _MockFileSystem
+
+    import spark_streaming_sql_s3_connector_spark.state.log_fs as log_fs
+    from spark_streaming_sql_s3_connector_spark.state.metadata_log import JsonMetadataLog
+
+    calls = []
+    mock = _MockFileSystem()
+
+    def seam(uri):
+        calls.append(uri)
+        return mock, uri.split("://", 1)[1]
+
+    monkeypatch.setattr(log_fs, "_pyarrow_from_uri", seam)
+    JsonMetadataLog("s3a://bucket/ckpt-a/s3conn-log")
+    JsonMetadataLog("s3://bucket/ckpt-b/s3conn-log")
+    assert calls == ["s3://bucket"]

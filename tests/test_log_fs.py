@@ -182,12 +182,13 @@ def test_filesystem_for_uri_goes_through_pyarrow(monkeypatch):
 
     def fake_from_uri(uri):
         seen["uri"] = uri
-        return mock, "bucket/ckpt"
+        return mock, uri.split("://", 1)[1]
 
     monkeypatch.setattr(log_fs, "_pyarrow_from_uri", fake_from_uri)
     fs, p = filesystem_for("s3://bucket/ckpt")
     assert isinstance(fs, ArrowLogFileSystem) and p == "bucket/ckpt"
-    assert seen["uri"] == "s3://bucket/ckpt"
+    # the client is built for the authority, then cached for every key
+    assert seen["uri"] == "s3://bucket"
 
 
 # ---------- log behavior on the non-POSIX impl ----------

@@ -7,6 +7,7 @@ RocksDBFileManager.scala:157-312)."""
 
 import pytest
 
+from spark_streaming_sql_s3_connector_spark.state import log_fs
 from spark_streaming_sql_s3_connector_spark.streaming import state_io
 
 
@@ -25,12 +26,12 @@ def root(request, tmp_path):
         )
 
         fs = ArrowLogFileSystem(_MockFileSystem())
-        state_io.register_scheme("mock", fs)
+        log_fs.register_scheme("mock", fs)
         try:
             fs.mkdirs("state")
             yield "mock://state"
         finally:
-            state_io.unregister_scheme("mock")
+            log_fs.unregister_scheme("mock")
 
 
 def test_pointer_roundtrip_and_flip(root):
@@ -131,8 +132,6 @@ def test_file_uri_routes_to_posix(tmp_path):
 
 def test_s3a_alias_resolves_like_s3(monkeypatch):
     """s3a:// (the Hadoop/Spark spelling) must reach pyarrow as s3://."""
-    import spark_streaming_sql_s3_connector_spark.state.log_fs as log_fs
-
     seen = {}
 
     def fake_from_uri(path):
@@ -143,23 +142,18 @@ def test_s3a_alias_resolves_like_s3(monkeypatch):
 
         return _Fake(), path.split("://", 1)[1]
 
+    # a new seam never reuses a client cached by an earlier one
     monkeypatch.setattr(log_fs, "_pyarrow_from_uri", fake_from_uri)
-    state_io.clear_fs_cache()
-    try:
-        fs, resolved = state_io.resolve("s3a://bucket/state/plane")
-        # the cached construction resolves the authority root once
-        assert seen["path"] == "s3://bucket"
-        assert resolved == "bucket/state/plane"
-    finally:
-        state_io.clear_fs_cache()
+    fs, resolved = log_fs.filesystem_for("s3a://bucket/state/plane")
+    # the cached construction resolves the authority root once
+    assert seen["path"] == "s3://bucket"
+    assert resolved == "bucket/state/plane"
 
 
 def test_resolve_caches_fs_per_authority(monkeypatch):
     """One pyarrow FileSystem construction per (scheme, authority) —
     for S3 each from_uri pays region-resolution RTTs, and the planes
     resolve several paths per trigger."""
-    import spark_streaming_sql_s3_connector_spark.state.log_fs as log_fs
-
     calls = []
 
     def fake_from_uri(path):
@@ -172,18 +166,14 @@ def test_resolve_caches_fs_per_authority(monkeypatch):
         return _Fake(), path.split("://", 1)[1]
 
     monkeypatch.setattr(log_fs, "_pyarrow_from_uri", fake_from_uri)
-    state_io.clear_fs_cache()
-    try:
-        fs1, p1 = state_io.resolve("s3://bucket/state/plane/_latest")
-        fs2, p2 = state_io.resolve("s3://bucket/state/other/_deltas")
-        fs3, p3 = state_io.resolve("s3://bucket2/x")
-        assert p1 == "bucket/state/plane/_latest"
-        assert p2 == "bucket/state/other/_deltas"
-        assert p3 == "bucket2/x"
-        assert fs1._fs is fs2._fs and fs1._fs is not fs3._fs
-        assert len(calls) == 2  # one per authority, not per path
-    finally:
-        state_io.clear_fs_cache()
+    fs1, p1 = log_fs.filesystem_for("s3://bucket/state/plane/_latest")
+    fs2, p2 = log_fs.filesystem_for("s3://bucket/state/other/_deltas")
+    fs3, p3 = log_fs.filesystem_for("s3://bucket2/x")
+    assert p1 == "bucket/state/plane/_latest"
+    assert p2 == "bucket/state/other/_deltas"
+    assert p3 == "bucket2/x"
+    assert fs1.arrow_fs is fs2.arrow_fs and fs1.arrow_fs is not fs3.arrow_fs
+    assert len(calls) == 2  # one per authority, not per path
 
 
 def test_list_names_info_pairs(root):
@@ -208,7 +198,7 @@ def test_vacuum_walk_discovers_planes_on_mock_store(spark):
     from spark_streaming_sql_s3_connector_spark.streaming.vacuum import walk_planes
 
     fs = ArrowLogFileSystem(_MockFileSystem())
-    state_io.register_scheme("mockwalk", fs)
+    log_fs.register_scheme("mockwalk", fs)
     try:
         for p in (
             "root/pipeline/bm25/terms",
@@ -229,4 +219,4 @@ def test_vacuum_walk_discovers_planes_on_mock_store(spark):
             "mockwalk://root/life": "ann_lifecycle",
         }
     finally:
-        state_io.unregister_scheme("mockwalk")
+        log_fs.unregister_scheme("mockwalk")

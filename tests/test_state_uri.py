@@ -237,7 +237,7 @@ def test_hybrid_schemes_metadata_on_mock_data_on_file(spark, tmp_path):
     RocksDB-on-S3 analog, S3ConnectorSource.scala:53-59) on the object
     store, Spark-readable warehouse paths elsewhere. Drive the
     JVM-read orchestrator with its metadataPath on a REGISTERED mock
-    scheme (admission resolves through `state_io.resolve`, so scheme
+    scheme (admission resolves through `log_fs.filesystem_for`, so scheme
     overrides reach it) while the source parquet and the composed
     curation+lifecycle roots stay `file://`, then assert EVERY
     admission-metadata op hit the mock filesystem (instrumented call
@@ -252,6 +252,7 @@ def test_hybrid_schemes_metadata_on_mock_data_on_file(spark, tmp_path):
     from spark_streaming_sql_s3_connector_spark.queueing.local import (
         LocalFileQueueClient,
     )
+    from spark_streaming_sql_s3_connector_spark.state import log_fs
     from spark_streaming_sql_s3_connector_spark.state.log_fs import (
         ArrowLogFileSystem,
     )
@@ -289,7 +290,7 @@ def test_hybrid_schemes_metadata_on_mock_data_on_file(spark, tmp_path):
             return wrapper
 
     meta_fs = _CountingFS(ArrowLogFileSystem(_MockFileSystem()))
-    state_io.register_scheme("hybridmeta", meta_fs)
+    log_fs.register_scheme("hybridmeta", meta_fs)
     try:
         # source data on POSIX/file://; queue local; metadata mock://
         rng = random.Random(23)
@@ -401,4 +402,4 @@ def test_hybrid_schemes_metadata_on_mock_data_on_file(spark, tmp_path):
         finally:
             orch2.close()
     finally:
-        state_io.unregister_scheme("hybridmeta")
+        log_fs.unregister_scheme("hybridmeta")

@@ -164,7 +164,9 @@ print("ROWS=" + ",".join(spark.sparkContext.parallelize([0], 1).mapPartitions(pr
 spark.stop()
 """
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
-    env["TMPDIR"] = str(tmp_path)  # where ensure_package_shipped writes its zip
+    # every temp dir the driver could leave the shipped zip in
+    env["TMPDIR"] = str(tmp_path)
+    env["SPARK_LOCAL_DIRS"] = str(tmp_path / "spark-local")
     proc = subprocess.run(
         [sys.executable, "-c", script],
         cwd=tmp_path,
@@ -176,3 +178,5 @@ spark.stop()
     assert proc.returncode == 0, proc.stderr[-2000:]
     assert "DAEMON=None" in proc.stdout
     assert "ROWS=spark_streaming_sql_s3_connector_spark" in proc.stdout
+    # the shipped zip does not outlive the driver
+    assert list(tmp_path.rglob("s3conn-pkg-*.zip")) == []
