@@ -249,7 +249,4 @@ class AdmissionController:
         t = self._fetch_thread
         if t is not None and t.is_alive():
             t.join(timeout=2.0)  # bounded drain, mirroring Utils.scala:43-65
-        try:
-            self.queue_client.close()
-        finally:
-            self.metadata_log.close()
+        self.queue_client.close()

@@ -74,9 +74,10 @@ def _pack_file_slices(files: list, max_bytes: int):
     SparkContext can be asked for slots): it follows the driver's cores
     and ignores the executor count, which only the files bound covers.
 
-    Returns None when any size is unavailable: caller falls back to one
-    file per task, the always-correct layout. Sizes come through the same
-    pyarrow.fs dispatch as the reads (one HEAD per object-store file)."""
+    A file that cannot be stat'd (deleted, unresolvable) is planned at
+    size 0: its read yields no rows, so it must not cost a task of its
+    own. Sizes come through the same pyarrow.fs dispatch as the reads
+    (one HEAD per object-store file)."""
     import heapq
     import math
 
@@ -89,9 +90,10 @@ def _pack_file_slices(files: list, max_bytes: int):
     for path, ts in files:
         try:
             fs, local = resolve_read_path(path)
-            sized.append((_file_size(fs, local), path, ts))
+            size = _file_size(fs, local)
         except (OSError, ValueError):  # missing file / unresolvable URI
-            return None
+            size = 0
+        sized.append((size, path, ts))
     total = sum(size for size, _, _ in sized)
     cores = os.cpu_count() or 1
     by_files = math.ceil(len(sized) / _MAX_FILES_PER_TASK)
@@ -228,8 +230,6 @@ class S3ConnectorStreamReader(DataSourceStreamReader):
             return [FileSlicePartition(files=[])]
         files = [(e.path, e.timestamp) for e in entries]
         packed = _pack_file_slices(files, self._options.max_bytes_per_partition)
-        if packed is None:
-            return [FileSlicePartition(files=[f]) for f in files]
         return [FileSlicePartition(files=b) for b in packed]
 
     def commit(self, end: dict) -> None:
@@ -284,12 +284,7 @@ class S3ConnectorBatchReader(DataSourceReader):
             from spark_streaming_sql_s3_connector_spark.state.metadata_log import JsonMetadataLog
 
             log = JsonMetadataLog(os.path.join(self._metadata_path, "s3conn-log"))
-            latest = log.get_latest_batch_id()
-            if latest is not None:
-                seen = {}
-                for e in log.get_range(0, latest):
-                    seen[e.path] = e.timestamp
-                files = sorted(seen.items())
+            files = sorted(log.files().items())
         if not files:
             return [FileSlicePartition(files=[])]
         return self._split_partitions(files)
@@ -326,10 +321,7 @@ class S3ConnectorBatchReader(DataSourceReader):
         else:
             small = list(files)
         packed = _pack_file_slices(small, self._options.max_bytes_per_partition)
-        if packed is None:
-            parts.extend(FileSlicePartition(files=[f]) for f in small)
-        else:
-            parts.extend(FileSlicePartition(files=b) for b in packed)
+        parts.extend(FileSlicePartition(files=b) for b in packed)
         return parts
 
     def read(self, partition: FileSlicePartition) -> Iterator:

@@ -4,9 +4,11 @@ Replaces the reference's ~1,600-LoC RocksDB state store
 (RocksDBS3SourceLog.scala + org.apache.spark.sql.streaming.connector.s3.*)
 with the HDFSMetadataLog pattern Spark's own FileStreamSource uses, per
 SURVEY.md §7.1: one JSON file per batch under ``<dir>/batches/``, written
-atomically (tmp + rename, exclusive create detects duplicate batch ids),
-plus a periodically compacted ``seen`` snapshot so startup doesn't replay
-the whole history.
+atomically (tmp + rename, exclusive create detects duplicate batch ids).
+The batch files are the log's only on-disk state: the seen-files index
+(path → max logged ts) lives in memory, is rebuilt from the retained
+batches at startup, and is kept current by ``add`` and the GC. Every
+``add`` is durable when it returns, so there is nothing to flush or close.
 
 Behavioral parity with RocksDBS3SourceLog:
 - ``add`` returns False on duplicate batchId (scala:191-255);
@@ -14,7 +16,7 @@ Behavioral parity with RocksDBS3SourceLog:
 - ``is_new_file`` re-admits files whose logged ts < purge horizon (scala:295-314);
 - bounded GC: ≤ MAX_BATCH_TO_REMOVE_PER_ADD batches cleaned per add, a batch
   is only removed when batch ts AND max file ts are below the horizon
-  (scala:416-460, 489).
+  (scala:416-460, 489); a removed batch's paths leave the seen index.
 
 The log's file ops go through ``state.log_fs.LogFileSystem``, so the log
 dir may live on a local disk OR any ``pyarrow.fs`` store (``s3://``,
@@ -28,7 +30,6 @@ from __future__ import annotations
 import json
 import time
 import threading
-import zlib
 from typing import Callable, Optional
 
 from spark_streaming_sql_s3_connector_spark.models import FileEntry
@@ -38,16 +39,7 @@ from spark_streaming_sql_s3_connector_spark.state.log_fs import (
 )
 
 MAX_BATCH_TO_REMOVE_PER_ADD = 20
-COMPACT_EVERY_N_ADDS = 25
 VERSION = 1
-# The seen-files index is hash-sharded by path so compaction rewrites only
-# the shards that changed since the last snapshot — the JSON-log analog of
-# RocksDB's incremental checkpointing (RocksDBFileManager.scala:157-312
-# reuses unchanged SSTs by (name, size); here an untouched shard file is
-# simply not rewritten). At 10^7 tracked files a monolithic snapshot is an
-# O(n) driver rewrite every 25 adds; with 64 shards a steady-state add
-# touches O(batch_size) shards and compaction cost is proportional to churn.
-N_SEEN_SHARDS = 64
 
 
 class MetadataLogHoleError(RuntimeError):
@@ -67,39 +59,21 @@ class JsonMetadataLog:
         metadataPath init S3ConnectorSource.scala:53-59). Pass ``fs``
         explicitly to inject a filesystem (tests use the pyarrow mock
         FS as the object-store stand-in)."""
-        if fs is not None:
-            self._fs: LogFileSystem = fs
-            self._dir = log_dir
-        else:
-            self._fs, self._dir = filesystem_for(log_dir)
-        j = self._fs.join
-        self._batches_dir = j(self._dir, "batches")
-        # legacy (pre-sharding) monolithic snapshot — read if present,
-        # migrated to shards at the next compaction, then removed
-        self._legacy_snapshot_path = j(self._dir, "seen-snapshot.json")
-        self._shards_dir = j(self._dir, "seen-shards")
+        self._fs, self._dir = (fs, log_dir) if fs is not None else filesystem_for(log_dir)
+        self._batches_dir = self._fs.join(self._dir, "batches")
         self._fs.mkdirs(self._batches_dir)
-        self._fs.mkdirs(self._shards_dir)
         self._purge_ts = purge_timestamp_provider or (lambda: 0)
         self._lock = threading.RLock()
-        # add/commit latency distributions (reference: RocksDB.scala:334-381
+        # add latency distribution (reference: RocksDB.scala:334-381
         # records get/put/commit histograms; here the JSON log records its
         # own write-path timing)
         from spark_streaming_sql_s3_connector_spark.queueing.base import LatencyHistogram
 
-        self.histograms = {
-            "add_ms": LatencyHistogram(),
-            "compact_ms": LatencyHistogram(),
-        }
-        # path -> timestamp for every tracked file, PARTITIONED BY SHARD so
-        # dirty-shard serialization touches only those shards' entries
-        # (a flat dict would make every compaction an O(total-files) scan)
-        self._seen_shards: list[dict[str, int]] = [{} for _ in range(N_SEEN_SHARDS)]
-        # shards whose on-disk snapshot no longer matches memory
-        self._dirty_shards: set[int] = set()
+        self.histograms = {"add_ms": LatencyHistogram()}
+        # path -> max logged timestamp over the retained batches
+        self._seen: dict[str, int] = {}
         # batchId -> batch timestamp (for bounded GC without re-reading files)
         self._batch_ts: dict[int, int] = {}
-        self._adds_since_compact = 0
         self._recover()
 
     # ---------- recovery ----------
@@ -107,51 +81,10 @@ class JsonMetadataLog:
     def _batch_path(self, batch_id: int) -> str:
         return self._fs.join(self._batches_dir, f"{batch_id}.json")
 
-    def _shard_of(self, path: str) -> int:
-        # crc32, NOT builtin hash(): stable across processes/restarts
-        # (PYTHONHASHSEED randomizes str hash between runs)
-        return zlib.crc32(path.encode("utf-8")) % N_SEEN_SHARDS
-
-    def _shard_path(self, shard: int) -> str:
-        return self._fs.join(self._shards_dir, f"seen-{shard:02d}.json")
-
-    def _seen_get(self, path: str) -> Optional[int]:
-        return self._seen_shards[self._shard_of(path)].get(path)
-
-    def _seen_put(self, path: str, ts: int) -> None:
-        s = self._shard_of(path)
-        shard = self._seen_shards[s]
-        cur = shard.get(path)
-        new = max(ts, cur) if cur is not None else ts
-        if cur != new:
-            shard[path] = new
-            self._dirty_shards.add(s)
-
-    def _seen_pop(self, path: str) -> None:
-        s = self._shard_of(path)
-        if self._seen_shards[s].pop(path, None) is not None:
-            self._dirty_shards.add(s)
+    def _track(self, path: str, ts: int) -> None:
+        self._seen[path] = max(ts, self._seen.get(path, ts))
 
     def _recover(self) -> None:
-        if self._fs.exists(self._legacy_snapshot_path):
-            snap = json.loads(self._fs.read_text(self._legacy_snapshot_path))
-            for k, v in snap.get("seen", {}).items():
-                self._seen_put(k, int(v))
-        for name in self._fs.listdir(self._shards_dir):
-            if not (name.startswith("seen-") and name.endswith(".json")):
-                continue
-            snap = json.loads(
-                self._fs.read_text(self._fs.join(self._shards_dir, name))
-            )
-            # direct load, no dirty-marking: these entries match disk by
-            # definition (unless a legacy value above already superseded
-            # one — that shard is then already marked dirty)
-            for k, v in snap.get("seen", {}).items():
-                ts = int(v)
-                shard = self._seen_shards[self._shard_of(k)]
-                cur = shard.get(k)
-                if cur is None or ts > cur:
-                    shard[k] = ts
         for name in self._fs.listdir(self._batches_dir):
             if not name.endswith(".json"):
                 continue
@@ -164,7 +97,7 @@ class JsonMetadataLog:
                 continue
             self._batch_ts[batch_id] = doc["timestamp"]
             for e in doc["entries"]:
-                self._seen_put(e["path"], int(e["timestamp"]))
+                self._track(e["path"], int(e["timestamp"]))
 
     def _read_batch_doc(self, batch_id: int) -> Optional[dict]:
         try:
@@ -208,55 +141,8 @@ class JsonMetadataLog:
                 return False
             self._batch_ts[batch_id] = ts
             for e in file_entries:
-                self._seen_put(e.path, e.timestamp)
-            self._adds_since_compact += 1
-            if self._adds_since_compact >= COMPACT_EVERY_N_ADDS:
-                self._write_snapshot()
-                self._adds_since_compact = 0
+                self._track(e.path, e.timestamp)
             return True
-
-    def _write_snapshot(self) -> None:
-        """Rewrite ONLY the shards whose entries changed since the last
-        snapshot (each shard file written atomically via tmp + rename).
-        Unchanged shards are not touched — compaction cost follows churn,
-        not total tracked-file count."""
-        if not self._dirty_shards:
-            return
-        from spark_streaming_sql_s3_connector_spark.queueing.base import timed
-
-        with timed(self.histograms["compact_ms"]):
-            self._write_dirty_shards()
-
-    def _write_dirty_shards(self) -> None:
-        # O(entries-in-dirty-shards), NOT O(total tracked files): the seen
-        # index is stored pre-partitioned by shard
-        horizon = self._purge_ts()
-        for s in self._dirty_shards:
-            seen = self._seen_shards[s]
-            if horizon > 0:
-                # age the shard while it is being serialized anyway
-                # (r13, reference log-clean analog
-                # RocksDBS3SourceLog.scala:416-460): entries below the
-                # purge horizon are exactly the set `is_new_file`
-                # already re-admits, so dropping them changes NO
-                # admission verdict — it just stops the snapshot
-                # growing with total-files-ever-admitted instead of the
-                # active window. Cold shards age at their next churn;
-                # a shard that never churns stopped growing by
-                # definition, so the bound still holds.
-                expired = [p for p, ts in seen.items() if ts < horizon]
-                for p in expired:
-                    del seen[p]
-            self._fs.write_atomic(
-                self._shard_path(s),
-                json.dumps({"v": VERSION, "seen": seen}),
-                overwrite=True,
-            )
-        self._dirty_shards.clear()
-        # legacy monolithic snapshot fully superseded once shards persist
-        # everything it contributed (its entries were marked dirty at
-        # recovery, so they are on disk in shard form by now)
-        self._fs.delete(self._legacy_snapshot_path)
 
     def _clean_log(self, last_purge_timestamp: int) -> int:
         """Bounded GC (RocksDBS3SourceLog.scala:416-460): remove at most
@@ -278,8 +164,8 @@ class JsonMetadataLog:
                 self._batch_ts.pop(batch_id, None)
                 for e in doc["entries"]:
                     # drop from seen index only if not re-logged with a newer ts
-                    if (self._seen_get(e["path"]) or 0) <= int(e["timestamp"]):
-                        self._seen_pop(e["path"])
+                    if self._seen.get(e["path"], 0) <= int(e["timestamp"]):
+                        self._seen.pop(e["path"], None)
                 removed += 1
         return removed
 
@@ -317,7 +203,12 @@ class JsonMetadataLog:
 
     def get_file(self, path: str) -> Optional[int]:
         with self._lock:
-            return self._seen_get(path)
+            return self._seen.get(path)
+
+    def files(self) -> dict[str, int]:
+        """Every tracked path → its max logged timestamp (a copy)."""
+        with self._lock:
+            return dict(self._seen)
 
     def is_new_file(self, path: str, last_purge_timestamp: int) -> bool:
         """New if never logged, or logged with ts older than the purge
@@ -326,7 +217,3 @@ class JsonMetadataLog:
         if ts is None:
             return True
         return ts < last_purge_timestamp
-
-    def close(self) -> None:
-        with self._lock:
-            self._write_snapshot()

@@ -2,8 +2,8 @@
 coalesce into one read task per core (each Python task has a fixed
 start-up cost), bytes beyond maxBytesPerPartition or files beyond
 _MAX_FILES_PER_TASK per core open more tasks, big
-files keep one task each and remote/un-stat-able paths fall back to
-one-file-per-task."""
+files keep one task each and an un-stat-able path is planned at size 0
+into an ordinary bin."""
 
 from __future__ import annotations
 
@@ -89,8 +89,21 @@ def test_pack_unstatable_returns_none(tmp_path, monkeypatch):
     monkeypatch.setattr(log_fs, "_pyarrow_from_uri", lambda uri: (mock, uri.split("://", 1)[1]))
     p = tmp_path / "real.bin"
     p.write_bytes(b"x")
-    bins = _pack_file_slices([(str(p), 0), ("s3://bucket/missing", 1)], 1 << 27)
-    assert bins is None
+    files = [(str(p), 0), ("s3://bucket/missing", 1)]
+    bins = _pack_file_slices(files, 1 << 27)
+    # the missing object is planned (at size 0), in exactly one bin
+    assert sorted(f for b in bins for f in b) == sorted(files)
+    assert sum(("s3://bucket/missing", 1) in b for b in bins) == 1
+
+
+def test_pack_one_missing_file_keeps_the_bin_count(tmp_path, four_cores):
+    # one deleted file in a 500-file trigger must not turn the trigger
+    # into 500 one-file tasks: it reads as zero rows, so it packs at size 0
+    files = _tiny_files(tmp_path, 500)
+    os.remove(files[123][0])
+    bins = _pack_file_slices(files, 128 * 1024 * 1024)
+    assert len(bins) == 4
+    assert sorted(f for b in bins for f in b) == sorted(files)
 
 
 def test_streaming_many_small_files_few_partitions(spark, tmp_path):
@@ -164,6 +177,43 @@ def test_batch_reader_packs_small_files(tmp_path, four_cores):
     # rows survive the packed read
     n = sum(1 for part in parts for rb in reader.read(part) for _ in range(rb.num_rows))
     assert n == 128
+
+
+def test_batch_reader_reads_a_gc_trimmed_log(tmp_path):
+    """A batch read over metadataPath plans the files of the RETAINED
+    batches: once bounded GC has removed batch 0 (every stream older than
+    maxFileAge) the log starts at batch 1, which is not a hole."""
+    from spark_streaming_sql_s3_connector_spark.models import FileEntry
+    from spark_streaming_sql_s3_connector_spark.sources.datasource import (
+        S3ConnectorBatchReader,
+    )
+    from spark_streaming_sql_s3_connector_spark.state.metadata_log import JsonMetadataLog
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    paths = []
+    for i in range(3):
+        p = str(tmp_path / f"g{i}.parquet")
+        pq.write_table(pa.table({"id": pa.array([i], type=pa.int64())}), p)
+        paths.append(p)
+    horizon = [0]
+    log = JsonMetadataLog(str(tmp_path / "meta" / "s3conn-log"), lambda: horizon[0])
+    for bid, ts in enumerate([90, 500, 600]):
+        horizon[0] = 400 if bid == 2 else 0
+        assert log.add(bid, [FileEntry(paths[bid], ts, bid)], timestamp=ts)
+    assert log.get(0) is None and log.get(1) is not None  # batch 0 GC'd
+    reader = S3ConnectorBatchReader(
+        StructType([StructField("id", LongType())]),
+        {
+            "spark.s3conn.fileFormat": "parquet",
+            "spark.s3conn.queueUrl": "unused",
+            "spark.s3conn.queueType": "local",
+            "spark.s3conn.metadataPath": str(tmp_path / "meta"),
+        },
+    )
+    parts = reader.partitions()
+    assert sorted(f[0] for part in parts for f in part.files) == paths[1:]
+    ids = sorted(v for part in parts for rb in reader.read(part) for v in rb.column(0).to_pylist())
+    assert ids == [1, 2]
 
 
 def test_streaming_planner_packs(tmp_path, four_cores):

@@ -74,10 +74,9 @@ def test_queue_client_histograms_capture(tmp_path):
 
 def test_metadata_log_write_path_histograms(tmp_path):
     log = JsonMetadataLog(str(tmp_path / "log"))
-    for b in range(30):  # crosses one compaction (every 25 adds)
+    for b in range(30):
         log.add(b, [FileEntry(f"f{b}", 100, b)], timestamp=100)
     assert log.histograms["add_ms"].count == 30
-    assert log.histograms["compact_ms"].count >= 1
     s = log.histograms["add_ms"].snapshot()
     assert s["max"] >= s["p95"] >= s["p50"] >= s["min"] >= 0
 

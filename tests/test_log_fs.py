@@ -5,7 +5,7 @@ The reference checkpoints admission state to DFS
 S3ConnectorSource.scala:53-59); here the JSON log runs over either the
 POSIX impl or any pyarrow.fs store. These tests pin the FS contract on
 BOTH impls (mock FS = the object-store stand-in), the log's
-compaction/recovery behavior on the non-POSIX impl, and the
+write/recovery behavior on the non-POSIX impl, and the
 checkpoint-restart e2e over a mock-FS metadataPath.
 """
 
@@ -20,10 +20,7 @@ from spark_streaming_sql_s3_connector_spark.state.log_fs import (
     PosixLogFileSystem,
     filesystem_for,
 )
-from spark_streaming_sql_s3_connector_spark.state.metadata_log import (
-    COMPACT_EVERY_N_ADDS,
-    JsonMetadataLog,
-)
+from spark_streaming_sql_s3_connector_spark.state.metadata_log import JsonMetadataLog
 
 
 def entries(batch_id, *paths_ts):
@@ -199,18 +196,25 @@ def _mock_log(fs=None, **kw):
     return JsonMetadataLog("ckpt/s3conn-log", fs=fs, **kw), fs
 
 
+def _files_under(fs, root):
+    from pyarrow.fs import FileSelector, FileType
+
+    infos = fs.arrow_fs.get_file_info(FileSelector(root, recursive=True))
+    return sorted(i.path for i in infos if i.type == FileType.File)
+
+
 def test_log_compaction_and_recovery_on_mock_fs():
+    """The batch files are the log's only on-disk state: each add writes
+    exactly one object, and a reopen recovers the seen index from them."""
     log, fs = _mock_log()
-    for i in range(COMPACT_EVERY_N_ADDS):
+    for i in range(30):
+        before = _files_under(fs, "ckpt/s3conn-log")
         log.add(i, entries(i, (f"p/{i}", 500)), timestamp=500)
-    # compaction fired: shard snapshots exist on the mock store
-    shard_files = [
-        n for n in fs.listdir("ckpt/s3conn-log/seen-shards") if n.endswith(".json")
-    ]
-    assert shard_files
-    nxt = COMPACT_EVERY_N_ADDS
+        after = _files_under(fs, "ckpt/s3conn-log")
+        assert sorted(set(after) - set(before)) == [f"ckpt/s3conn-log/batches/{i}.json"]
+        assert set(before) <= set(after)
+    nxt = 30
     log.add(nxt, entries(nxt, ("tail/x", 900)), timestamp=900)
-    log.close()
     log2 = JsonMetadataLog("ckpt/s3conn-log", fs=fs)
     assert log2.get_latest_batch_id() == nxt
     assert log2.get_file("p/0") == 500
@@ -229,27 +233,39 @@ def test_log_purge_on_mock_fs():
     log.add(2, entries(2, ("new", 600)), timestamp=600)
     assert log.get(0) is None
     assert log.get(1) is not None  # max-file-ts guard
-    log.close()
     log2 = JsonMetadataLog("ckpt/s3conn-log", fs=fs)
     assert log2.get_file("old") is None
     assert log2.get_file("keep") == 500
 
 
 def test_legacy_snapshot_migrates_on_mock_fs():
+    """A checkpoint that still holds the older seen-index snapshots
+    (``seen-snapshot.json``, ``seen-shards/``) recovers its verdicts from
+    the batch files alone: an entry with no batch behind it (GC already
+    dropped it) does not come back, and the leftovers are ignored."""
     fs = ArrowLogFileSystem(_MockFileSystem())
     fs.mkdirs("ckpt/s3conn-log/batches")
+    fs.mkdirs("ckpt/s3conn-log/seen-shards")
+    stale = {"v": 1, "seen": {"legacy/a": 111, "kept": 999}}
+    fs.write_atomic("ckpt/s3conn-log/seen-snapshot.json", json.dumps(stale), overwrite=True)
+    fs.write_atomic("ckpt/s3conn-log/seen-shards/seen-07.json", json.dumps(stale), overwrite=True)
     fs.write_atomic(
-        "ckpt/s3conn-log/seen-snapshot.json",
-        json.dumps({"v": 1, "seen": {"legacy/a": 111}}),
-        overwrite=True,
+        "ckpt/s3conn-log/batches/3.json",
+        json.dumps(
+            {"v": 1, "batchId": 3, "timestamp": 40,
+             "entries": [{"path": "kept", "timestamp": 40, "batchId": 3}]}
+        ),
+        overwrite=False,
     )
     log = JsonMetadataLog("ckpt/s3conn-log", fs=fs)
-    assert log.get_file("legacy/a") == 111
-    for i in range(COMPACT_EVERY_N_ADDS):
-        log.add(i, entries(i, (f"n/{i}", 10)), timestamp=10)
-    assert not fs.exists("ckpt/s3conn-log/seen-snapshot.json")
+    assert log.get_file("legacy/a") is None
+    assert log.is_new_file("legacy/a", 0)
+    assert log.get_file("kept") == 40  # the batch, not the stale snapshot
+    assert log.files() == {"kept": 40}
+    assert log.get_latest_batch_id() == 3
+    assert log.add(4, entries(4, ("n/4", 50)), timestamp=50)
     log2 = JsonMetadataLog("ckpt/s3conn-log", fs=fs)
-    assert log2.get_file("legacy/a") == 111
+    assert log2.files() == {"kept": 40, "n/4": 50}
 
 
 # ---------- checkpoint-restart e2e over a mock-FS metadataPath ----------

@@ -91,7 +91,6 @@ def test_recovery_after_reopen(log_factory):
     log = log_factory()
     log.add(0, entries(0, ("a", 10)))
     log.add(1, entries(1, ("b", 20)))
-    log.close()
     log2 = log_factory()
     assert log2.get_latest_batch_id() == 1
     assert log2.get_file("a") == 10

@@ -94,7 +94,6 @@ def test_log_roundtrip_and_duplicate_rejection(tmp_path_factory, batches, data):
     all_entries = log.get_range(0, len(batches) - 1)
     flat = [(p, ts) for files in batches for p, ts in files]
     assert [(e.path, e.timestamp) for e in all_entries] == flat
-    log.close()
 
 
 @settings(max_examples=40, deadline=None)
@@ -112,7 +111,6 @@ def test_log_is_new_file_horizon_law(tmp_path_factory, files, horizon):
         assert log.is_new_file(p, horizon) == (ts < horizon)
     # unknown paths are always new
     assert log.is_new_file("never-logged-path", horizon) is True
-    log.close()
 
 
 @settings(max_examples=30, deadline=None)
@@ -132,7 +130,6 @@ def test_log_recovery_equals_original(tmp_path_factory, n_batches, data):
         )
         truth[bid] = files
         log.add(bid, [FileEntry(p, ts, bid) for p, ts in files])
-    log.close()
 
     reopened = JsonMetadataLog(log_dir)
     assert reopened.get_latest_batch_id() == n_batches - 1
@@ -144,4 +141,3 @@ def test_log_recovery_equals_original(tmp_path_factory, n_batches, data):
             seen_last[p] = ts
     for p, ts in seen_last.items():
         assert reopened.get_file(p) is not None
-    reopened.close()

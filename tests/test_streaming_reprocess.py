@@ -100,7 +100,6 @@ def test_reprocess_stream_end_to_end(spark, tmp_path, sf_dir):
 
     log = JsonMetadataLog(str(tmp_path / "meta" / "s3conn-log"))
     assert log.get_latest_batch_id() >= 1
-    log.close()
 
     # phase 4: lock file blocks a concurrent second replay
     q3 = (

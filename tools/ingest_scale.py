@@ -5,13 +5,14 @@ files, one trigger). This tool runs the same A/B (s3-connector
 queue-driven vs stock listing-driven file stream) at 1,000 and 10,000
 files — SAME total bytes — with maxFilesPerTrigger=1000, so the 10×
 point processes 10 consecutive triggers against a growing admission
-history / metadata log / seen-shard state. Two claims under test:
+history / metadata log / seen-file index. Two claims under test:
 
 1. total ingest: the connector stays faster than the listing source at
    both points (the no-LIST design thesis);
 2. per-trigger wall for the CONNECTOR is flat across the 10 triggers of
-   the 10× point — admission, metadata-log append (≤20-per-add GC
-   bound, state/metadata_log.py:246), and seen-file checks are
+   the 10× point — admission, metadata-log append (one batch file
+   per add, ≤ MAX_BATCH_TO_REMOVE_PER_ADD batches GC'd per add,
+   state/metadata_log.py ``_clean_log``), and seen-file checks are
    O(files-per-trigger), not O(history). The listing source's
    per-trigger cost grows with directory size instead (it re-LISTs).
 

@@ -1,7 +1,8 @@
 """The .claude/skills/verify recipe as a one-shot script: drive the
 s3-connector streaming flow end-to-end (incl. the exactly-once
-redelivery probe) and oracle-check a handful of registry keys against
-DuckDB at sf0.01. Usage: python tools/verify_quick.py [key ...]
+redelivery probe, before and after a source restart) and oracle-check
+a handful of registry keys against DuckDB at sf0.01.
+Usage: python tools/verify_quick.py [key ...]
 (keys default to a representative spread; entry() always runs)."""
 
 from __future__ import annotations
@@ -57,32 +58,47 @@ def main() -> int:
                 w.writerow([i * 10 + j, f"x{j}"])
         paths.append(p)
     qc = LocalFileQueueClient(f"local://{qdir}")
-    for p in paths:
-        qc.send_file_event(p, time.time())
-    q = (
-        spark.readStream.format("s3-connector")
-        .schema("id INT, v STRING")
-        .option("spark.s3conn.fileFormat", "csv")
-        .option("spark.s3conn.queueUrl", f"local://{qdir}")
-        .option("spark.s3conn.queueType", "local")
-        .option("spark.s3conn.metadataPath", meta)
-        .option("spark.s3conn.queueFetchWaitTimeoutSeconds", "1")
-        .option("header", "true")
-        .load()
-        .writeStream.format("memory")
-        .queryName("verify_quick_tbl")
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
+
+    def send_events():
+        for p in paths:
+            qc.send_file_event(p, time.time())
+
+    def start(table, checkpoint):
+        return (
+            spark.readStream.format("s3-connector")
+            .schema("id INT, v STRING")
+            .option("spark.s3conn.fileFormat", "csv")
+            .option("spark.s3conn.queueUrl", f"local://{qdir}")
+            .option("spark.s3conn.queueType", "local")
+            .option("spark.s3conn.metadataPath", meta)
+            .option("spark.s3conn.queueFetchWaitTimeoutSeconds", "1")
+            .option("header", "true")
+            .load()
+            .writeStream.format("memory")
+            .queryName(table)
+            .option("checkpointLocation", checkpoint)
+            .start()
+        )
+
+    send_events()
+    q = start("verify_quick_tbl", ckpt)
     q.processAllAvailable()
     n1 = spark.table("verify_quick_tbl").count()
-    for p in paths:  # duplicate redelivery must not change counts
-        qc.send_file_event(p, time.time())
+    send_events()  # duplicate redelivery must not change counts
     q.processAllAvailable()
     n2 = spark.table("verify_quick_tbl").count()
     q.stop()
     assert n1 == 30 and n2 == 30, (n1, n2)
-    print(f"STREAMING E2E OK: {n1} rows, exactly-once held under redelivery")
+    # restart on the same metadataPath: admission state recovers from the
+    # metadata log alone, so a redelivery admits nothing. The memory sink
+    # cannot resume an append-mode checkpoint, hence a fresh one.
+    send_events()
+    q = start("verify_quick_restart_tbl", ckpt + "-restart")
+    q.processAllAvailable()
+    n3 = spark.table("verify_quick_restart_tbl").count()
+    q.stop()
+    assert n3 == 0, n3
+    print(f"STREAMING E2E OK: {n1} rows, exactly-once held under redelivery and restart")
 
     # --- batch surface: registry keys vs DuckDB oracle ---
     import duckdb
