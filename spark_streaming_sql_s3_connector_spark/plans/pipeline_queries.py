@@ -135,8 +135,10 @@ def _ngram_jaccard_docs(spark, sf):
 # 3-grams, distinct), same overlap/union arithmetic. The Spark operator's
 # df-cap skew guard (max_shingle_df=1000) cannot trigger at sf0.01
 # (df <= 500 docs), so the operator is exact there and the oracle is fair.
-_NGRAM_JACCARD_SQL = r"""
-WITH toks AS (
+# The shingle CTEs (`toks`, `sh`, `ex`, then the open `ov`) are shared by
+# every exact-Jaccard oracle; `ov`/`sz` come in a self-join flavour
+# (id_a < id_b) and a cross-corpus one (even new docs × odd base docs).
+_SHINGLE_CTES = r"""toks AS (
   SELECT doc_id,
          CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
               ELSE regexp_split_to_array(trim(text), '\s+') END AS t
@@ -151,10 +153,17 @@ WITH toks AS (
 ), ex AS (
   SELECT doc_id, unnest(s) AS shingle FROM sh
 ), ov AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS inter
+"""
+_SELF_JACCARD_OV = r"""  SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS inter
   FROM ex a JOIN ex b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
   GROUP BY 1, 2
-), sz AS (SELECT doc_id, len(s) AS sz FROM sh)
+), sz AS (SELECT doc_id, len(s) AS sz FROM sh"""
+_CROSS_JACCARD_OV = r"""  SELECT a.doc_id AS id_new, b.doc_id AS id_base, COUNT(*) AS inter
+  FROM ex a JOIN ex b ON a.shingle = b.shingle
+  WHERE a.doc_id % 2 = 0 AND b.doc_id % 2 = 1
+  GROUP BY 1, 2
+), sz AS (SELECT doc_id, len(s) AS sz FROM sh"""
+_NGRAM_JACCARD_SQL = "\nWITH " + _SHINGLE_CTES + _SELF_JACCARD_OV + r""")
 SELECT id_a, id_b
 FROM ov
 JOIN sz sa ON sa.doc_id = id_a
@@ -221,27 +230,9 @@ def _dedup_cluster_docs(spark, sf):
 
 # transitive closure of the deterministic exact-Jaccard edge set (same
 # shingling/arithmetic as _NGRAM_JACCARD_SQL) via recursive CTE;
-# component = min reachable id, matching the Spark min-label fixpoint
-_DEDUP_CLUSTER_SQL = r"""
-WITH RECURSIVE toks AS (
-  SELECT doc_id,
-         CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-              ELSE regexp_split_to_array(trim(text), '\s+') END AS t
-  FROM documents
-), sh AS (
-  SELECT doc_id,
-         CASE WHEN len(t) >= 3 THEN list_distinct(
-                [array_to_string(t[i:i+2], ' ') for i in generate_series(1, len(t)-2)])
-              WHEN len(t) > 0 THEN [array_to_string(t, ' ')]
-              ELSE CAST([] AS VARCHAR[]) END AS s
-  FROM toks
-), ex AS (
-  SELECT doc_id, unnest(s) AS shingle FROM sh
-), ov AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS inter
-  FROM ex a JOIN ex b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-), sz AS (SELECT doc_id, len(s) AS sz FROM sh
+# component = min reachable id, matching the Spark min-label fixpoint.
+# The chain ends in an open `keep AS (` that each cluster oracle fills.
+_CLUSTER_CTES = "\nWITH RECURSIVE " + _SHINGLE_CTES + _SELF_JACCARD_OV + r"""
 ), pairs AS (
   SELECT id_a, id_b
   FROM ov
@@ -262,7 +253,8 @@ WITH RECURSIVE toks AS (
   SELECT m.u, m.component, length(d.text) AS n_chars
   FROM memb m JOIN documents d ON d.doc_id = m.u
 ), keep AS (
-  SELECT component, u AS keeper_id FROM (
+"""
+_DEDUP_CLUSTER_SQL = _CLUSTER_CTES + r"""  SELECT component, u AS keeper_id FROM (
     SELECT component, u,
            row_number() OVER (PARTITION BY component ORDER BY n_chars DESC, u) AS rn
     FROM scored) t
@@ -301,47 +293,7 @@ def _near_dup_keep_best_docs(spark, sf):
     )
 
 
-_NEAR_DUP_KEEP_BEST_SQL = r"""
-WITH RECURSIVE toks AS (
-  SELECT doc_id,
-         CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-              ELSE regexp_split_to_array(trim(text), '\s+') END AS t
-  FROM documents
-), sh AS (
-  SELECT doc_id,
-         CASE WHEN len(t) >= 3 THEN list_distinct(
-                [array_to_string(t[i:i+2], ' ') for i in generate_series(1, len(t)-2)])
-              WHEN len(t) > 0 THEN [array_to_string(t, ' ')]
-              ELSE CAST([] AS VARCHAR[]) END AS s
-  FROM toks
-), ex AS (
-  SELECT doc_id, unnest(s) AS shingle FROM sh
-), ov AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS inter
-  FROM ex a JOIN ex b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-), sz AS (SELECT doc_id, len(s) AS sz FROM sh
-), pairs AS (
-  SELECT id_a, id_b
-  FROM ov
-  JOIN sz sa ON sa.doc_id = id_a
-  JOIN sz sb ON sb.doc_id = id_b
-  WHERE inter * 1.0 / (sa.sz + sb.sz - inter) >= 0.5
-), und AS (
-  SELECT id_a AS u, id_b AS v FROM pairs
-  UNION ALL
-  SELECT id_b, id_a FROM pairs
-), reach(u, lbl) AS (
-  SELECT u, u FROM (SELECT DISTINCT u FROM und) t
-  UNION
-  SELECT und.u, reach.lbl FROM und JOIN reach ON und.v = reach.u
-), memb AS (
-  SELECT u, MIN(lbl) AS component FROM reach GROUP BY u
-), scored AS (
-  SELECT m.u, m.component, length(d.text) AS n_chars
-  FROM memb m JOIN documents d ON d.doc_id = m.u
-), keep AS (
-  SELECT component, u AS doc_id, n_chars FROM (
+_NEAR_DUP_KEEP_BEST_SQL = _CLUSTER_CTES + r"""  SELECT component, u AS doc_id, n_chars FROM (
     SELECT component, u, n_chars,
            row_number() OVER (PARTITION BY component ORDER BY n_chars DESC, u) AS rn
     FROM scored) t
@@ -424,31 +376,33 @@ def _sample_docs(spark, sf):
     return labeled.select("doc_id", "split").orderBy("doc_id")
 
 
-_SAMPLE_DOCS_SQL = """
+# The sampling oracles' shared pieces, also composed into the fused
+# sampling_docs_combined oracle: the 10% hash sample up to its SELECT
+# list, the hash train/test label, the exact-3-per-language window, and
+# the token-budget mixing fraction with its hash-membership filter.
+_SAMPLED_CTE = """
 WITH sampled AS (
   SELECT doc_id
   FROM documents
   WHERE CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR) || 'bench'), 1, 8) AS BIGINT)
         % 10000 < 1000
 )
-SELECT doc_id,
+SELECT """
+_SPLIT_LABEL = """doc_id,
        CASE WHEN CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR) || 'split'), 1, 8) AS BIGINT)
                  % 10000 < 2000
-            THEN 'test' ELSE 'train' END AS split
+            THEN 'test' ELSE 'train' END AS """
+_SAMPLE_DOCS_SQL = _SAMPLED_CTE + _SPLIT_LABEL + """split
 FROM sampled
 ORDER BY doc_id
 """
 
 
-def _lsh_bucket_pairs_docs(spark, sf):
-    """LSH near-duplicate detection in its proper regime (cosine ≥ 0.9):
-    the synthetic embeddings have no natural near-dups, so the query
-    plants them — each vector unions with a deterministically jittered
-    copy (cosine ≈ 0.97 to its original) and LSH must recover the
-    original↔copy pairs. Below ~0.6 sign-LSH degenerates to brute force
-    (see _planes_for_threshold); the exact all-pairs baseline at 0.4 is
-    dedup_embedding_pairs. Rows-only check (recall < 1 by design);
-    recall is asserted in test_operators."""
+def _with_planted_near_dups(spark, sf):
+    """``(emb, emb ∪ jittered copies)``: every embedding (as
+    ``array<double>``) plus a deterministically jittered copy under
+    ``vec_id + 1_000_000`` (cosine ≈ 0.97 to its original) — the
+    planted near-dup pairs the LSH and IVF pair keys must recover."""
     import numpy as np
     from pyspark.sql.types import ArrayType, DoubleType
 
@@ -470,13 +424,26 @@ def _lsh_bucket_pairs_docs(spark, sf):
         (F.col("vec_id") + 1_000_000).alias("vec_id"),
         jitter(F.col("embedding"), F.col("vec_id")).alias("embedding"),
     )
+    return emb, emb.unionByName(jittered)
+
+
+def _lsh_bucket_pairs_docs(spark, sf):
+    """LSH near-duplicate detection in its proper regime (cosine ≥ 0.9):
+    the synthetic embeddings have no natural near-dups, so the query
+    plants them — each vector unions with a deterministically jittered
+    copy (cosine ≈ 0.97 to its original) and LSH must recover the
+    original↔copy pairs. Below ~0.6 sign-LSH degenerates to brute force
+    (see _planes_for_threshold); the exact all-pairs baseline at 0.4 is
+    dedup_embedding_pairs. Rows-only check (recall < 1 by design);
+    recall is asserted in test_operators."""
+    _, planted = _with_planted_near_dups(spark, sf)
     # eager localCheckpoint, not persist: the corpus feeds the signature
     # pass AND both sides of the exact-rerank vector join — un-materialized,
     # the jitter ArrowEval + parquet scan re-run 3×. A localCheckpoint is
     # keyed to THIS DataFrame instance (a fresh one per invocation), so
     # unlike a leaked .persist() it can never serve a later invocation's
     # plan from cache — the recompute-from-parquet contract holds.
-    corpus = emb.unionByName(jittered).localCheckpoint(eager=True)
+    corpus = planted.localCheckpoint(eager=True)
     return (
         lsh_bucket_pairs(corpus, "embedding", "vec_id", 0.9, dim=64)
         .select("id_a", "id_b")
@@ -679,17 +646,20 @@ def _quality_score_docs(spark, sf):
     ).orderBy("doc_id")
 
 
-_QUALITY_SCORE_SQL = r"""
-WITH m AS (
-  SELECT doc_id,
-         length(text)::DOUBLE AS n_chars,
+# the per-doc inputs of functions/text.quality_score, shared by every
+# oracle that recomputes the score
+_QUALITY_METRIC_COLS = r"""         length(text)::DOUBLE AS n_chars,
          (CASE WHEN trim(text) = '' THEN 0
                ELSE len(regexp_split_to_array(trim(text), '\s+')) END)::DOUBLE AS n_tokens,
          (CASE WHEN trim(text) = '' THEN 0
                ELSE len(list_distinct(regexp_split_to_array(trim(text), '\s+'))) END)::DOUBLE
            AS n_distinct,
          length(regexp_replace(text, '[^A-Za-z]', '', 'g'))::DOUBLE AS n_alpha,
-         length(regexp_replace(text, '[A-Za-z0-9\s]', '', 'g'))::DOUBLE AS n_punct
+         length(regexp_replace(text, '[A-Za-z0-9\s]', '', 'g'))::DOUBLE AS n_punct"""
+_QUALITY_SCORE_SQL = r"""
+WITH m AS (
+  SELECT doc_id,
+""" + _QUALITY_METRIC_COLS + r"""
   FROM documents
 )
 SELECT doc_id,
@@ -710,11 +680,10 @@ def _lang_id_docs(spark, sf):
     return docs.select("doc_id", language_id(F.col("text")).alias("lang_pred")).orderBy("doc_id")
 
 
-def _lang_id_oracle_sql() -> str:
-    """Language-ID is deterministic JVM expressions, so it oracles exactly:
-    mirror the stopword-profile argmax in DuckDB (list_max over
-    (score, lang) structs has the same compare-score-then-lang tie-break
-    as Spark's array_max)."""
+def _lang_best_ctes() -> str:
+    """`toks` and `best`: each doc's (stopword score, lang) argmax over
+    the language profiles, shared by the lang-ID and text-profile
+    oracles."""
     from spark_streaming_sql_s3_connector_spark.functions.text import _LANG_PROFILES
 
     struct_rows = ",\n    ".join(
@@ -734,7 +703,15 @@ WITH toks AS (
     """ + struct_rows + r"""
   ]) AS b
   FROM toks
-)
+"""
+
+
+def _lang_id_oracle_sql() -> str:
+    """Language-ID is deterministic JVM expressions, so it oracles exactly:
+    mirror the stopword-profile argmax in DuckDB (list_max over
+    (score, lang) structs has the same compare-score-then-lang tie-break
+    as Spark's array_max)."""
+    return _lang_best_ctes() + r""")
 SELECT doc_id, CASE WHEN b.score > 0 THEN b.lang ELSE 'und' END AS lang_pred
 FROM best
 ORDER BY doc_id
@@ -1014,18 +991,19 @@ def _table_schema(spark, sf, name):
     return s
 
 
-def _connector_batch_read(spark, sf):
-    """Read lineitem through the s3-connector Python data source (Arrow
-    executor reads) and aggregate — proves the connector's read path against
-    the DuckDB oracle, not just the JVM reader.
+def _connector_lineitem_read(spark, sf, pushdown=False):
+    """``lineitem``'s ``l_returnflag``/``l_quantity`` through the
+    s3-connector Python data source (Arrow executor reads).
 
-    The user schema carries ONLY the two columns the query needs: the
+    The user schema carries ONLY the two columns the queries need: the
     Python Data Source API has no Catalyst column-pruning hook, so
     projection is expressed through the schema (by-name parquet column
     selection, file_read.py B9) — the way a 100 TB user of this connector
     would prune, and the apples-to-apples analog of the JVM scan's pushed
     ReadSchema. Full-schema reads are exercised by every streaming e2e
-    test and the ingest bench."""
+    test and the ingest bench. ``pushdown`` flips the session to the
+    pushdown-capable reader subclass; it changes nothing for unfiltered
+    reads, so leaving it set is safe."""
     import os as _os
 
     from spark_streaming_sql_s3_connector_spark.plans.io import ensure_package_shipped
@@ -1033,9 +1011,11 @@ def _connector_batch_read(spark, sf):
 
     ensure_package_shipped(spark)
     register(spark)
+    if pushdown:
+        spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     full = _table_schema(spark, sf, "lineitem")
     schema = StructType([f for f in full.fields if f.name in ("l_returnflag", "l_quantity")])
-    df = (
+    return (
         spark.read.format("s3-connector")
         .schema(schema)
         .option("spark.s3conn.fileFormat", "parquet")
@@ -1044,6 +1024,9 @@ def _connector_batch_read(spark, sf):
         .option("paths", _os.path.join(sf, "lineitem.parquet"))
         .load()
     )
+
+
+def _returnflag_qty(df):
     return (
         df.groupBy("l_returnflag")
         .agg(F.count("*").alias("cnt"), F.sum("l_quantity").alias("sum_qty"))
@@ -1051,39 +1034,23 @@ def _connector_batch_read(spark, sf):
     )
 
 
+def _connector_batch_read(spark, sf):
+    """Read lineitem through the s3-connector Python data source and
+    aggregate — proves the connector's read path against the DuckDB
+    oracle, not just the JVM reader."""
+    return _returnflag_qty(_connector_lineitem_read(spark, sf))
+
+
 def _connector_pushdown_read(spark, sf):
     """Filtered read through the Python data source WITH filter pushdown
     (Spark 4.1 pushFilters): the predicate prunes parquet row groups via
-    footer stats and filters Arrow-side before the JVM transfer. The conf
-    flips the session to the pushdown-capable reader subclass; it changes
-    nothing for unfiltered reads, so leaving it set is safe."""
-    import os as _os
-
-    from spark_streaming_sql_s3_connector_spark.plans.io import ensure_package_shipped
-    from spark_streaming_sql_s3_connector_spark.sources.datasource import register
-
-    ensure_package_shipped(spark)
-    register(spark)
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    full = _table_schema(spark, sf, "lineitem")
-    schema = StructType([f for f in full.fields if f.name in ("l_returnflag", "l_quantity")])
-    df = (
-        spark.read.format("s3-connector")
-        .schema(schema)
-        .option("spark.s3conn.fileFormat", "parquet")
-        .option("spark.s3conn.queueUrl", "unused")
-        .option("spark.s3conn.queueType", "local")
-        .option("paths", _os.path.join(sf, "lineitem.parquet"))
-        .load()
-    )
+    footer stats and filters Arrow-side before the JVM transfer."""
+    df = _connector_lineitem_read(spark, sf, pushdown=True)
     # `<` not `>`: gt/ge on floating columns are rejected by pushFilters
     # (Spark's NaN-is-largest ordering diverges from IEEE in pyarrow), so
     # lt keeps the numeric predicate on the accepted-and-pushed path
-    return (
+    return _returnflag_qty(
         df.where((F.col("l_quantity") < 5) & (F.col("l_returnflag") == "R"))
-        .groupBy("l_returnflag")
-        .agg(F.count("*").alias("cnt"), F.sum("l_quantity").alias("sum_qty"))
-        .orderBy("l_returnflag")
     )
 
 
@@ -1413,15 +1380,14 @@ ORDER BY d.doc_id
 """
 
 
-def _web_clean_docs(spark, sf):
-    """Web-corpus cleaning (functions/web + operators/web): canonical
-    URL (synthesized deterministically per doc — the corpus has no URL
-    column — exercising case/port/tracking/fragment/trailing-slash rules
-    end to end) and cross-doc boilerplate counts over sentence-lines
-    (the repetition oracle's `lined` transform)."""
+def _web_line_frames(spark, sf):
+    """``(urls, lined, kf)`` over documents: the canonical URL of a
+    deterministic per-doc raw URL (the corpus has no URL column), the
+    sentence-lined text, and the corpus-global keep-FIRST line dedup
+    (the keep-one counterpart of boilerplate strip's remove-all)."""
     from spark_streaming_sql_s3_connector_spark.functions.web import canonical_url
     from spark_streaming_sql_s3_connector_spark.operators.web import (
-        boilerplate_profile,
+        dedup_lines_keep_first,
         lined_text,
     )
 
@@ -1437,26 +1403,31 @@ def _web_clean_docs(spark, sf):
         F.col("doc_id").cast("string"),
         F.lit("#sec"),
     )
-    from spark_streaming_sql_s3_connector_spark.operators.web import (
-        strip_boilerplate,
-    )
-
-    from spark_streaming_sql_s3_connector_spark.operators.web import (
-        dedup_lines_keep_first,
-    )
-
     urls = docs.select("doc_id", canonical_url(raw_url).alias("canon_url"))
     lined = docs.select("doc_id", lined_text(F.col("text")).alias("text"))
-    bp = boilerplate_profile(lined, "text", "doc_id", min_doc_freq=2)
-    stripped = strip_boilerplate(lined, "text", "doc_id", min_doc_freq=2).select(
-        "doc_id", F.md5(F.encode(F.col("clean_text"), "UTF-8")).alias("clean_md5")
-    )
-    # r6 fused behavior: corpus-global keep-FIRST line dedup (the keep-one
-    # counterpart of boilerplate strip's remove-all)
     kf = dedup_lines_keep_first(lined, "text", "doc_id").select(
         "doc_id",
         F.md5(F.encode(F.col("deduped_text"), "UTF-8")).alias("keepfirst_md5"),
         F.col("n_kept_lines").cast("bigint").alias("n_kept_lines"),
+    )
+    return urls, lined, kf
+
+
+def _web_clean_docs(spark, sf):
+    """Web-corpus cleaning (functions/web + operators/web): canonical
+    URL (synthesized deterministically per doc — the corpus has no URL
+    column — exercising case/port/tracking/fragment/trailing-slash rules
+    end to end) and cross-doc boilerplate counts over sentence-lines
+    (the repetition oracle's `lined` transform)."""
+    from spark_streaming_sql_s3_connector_spark.operators.web import (
+        boilerplate_profile,
+        strip_boilerplate,
+    )
+
+    urls, lined, kf = _web_line_frames(spark, sf)
+    bp = boilerplate_profile(lined, "text", "doc_id", min_doc_freq=2)
+    stripped = strip_boilerplate(lined, "text", "doc_id", min_doc_freq=2).select(
+        "doc_id", F.md5(F.encode(F.col("clean_text"), "UTF-8")).alias("clean_md5")
     )
     return (
         urls.join(bp, "doc_id")
@@ -1512,11 +1483,16 @@ def _dedup_lines_docs(spark, sf):
     ).orderBy("doc_id")
 
 
-_DEDUP_LINES_SQL = r"""
+# The keep-first line dedup oracle chain, shared by the batch and the
+# streaming line-dedup keys and the web-clean oracle: `lined` (sentence
+# lines), `ltab`/`posl` (one row per non-blank line and position), and
+# `kf`/`kfagg` (the first occurrence of each line, rebuilt per doc).
+_LINED_CTE = r"""
 WITH lined AS (
   SELECT doc_id, regexp_replace(text, '\. ', '.' || chr(10), 'g') AS t
   FROM documents
-), ltab AS (
+), """
+_POSL_CTES = r"""ltab AS (
   SELECT doc_id,
          list_filter([trim(x) for x in str_split(t, chr(10))], x -> x != '') AS l
   FROM lined
@@ -1524,7 +1500,8 @@ WITH lined AS (
   SELECT doc_id, l[i] AS line, i AS pos
   FROM ltab, unnest(generate_series(1, len(l))) AS t(i)
   WHERE len(l) > 0
-), kf AS (
+), """
+_KEEPFIRST_CTES = r"""kf AS (
   SELECT doc_id, line, pos FROM (
     SELECT doc_id, line, pos,
            row_number() OVER (PARTITION BY line ORDER BY doc_id, pos) AS rn
@@ -1536,7 +1513,8 @@ WITH lined AS (
          CAST(COUNT(*) AS BIGINT) AS n_kept_lines
   FROM kf GROUP BY doc_id
 )
-SELECT l.doc_id,
+"""
+_DEDUP_LINES_SQL = _LINED_CTE + _POSL_CTES + _KEEPFIRST_CTES + r"""SELECT l.doc_id,
        CAST(len(l.l) AS BIGINT) AS n_lines,
        COALESCE(kfagg.n_kept_lines, 0) AS n_kept_lines,
        COALESCE(kfagg.keepfirst_md5, md5('')) AS keepfirst_md5
@@ -1552,11 +1530,7 @@ def _web_clean_sql() -> str:
     )
 
     raw = _RAW_URL_SQL
-    return r"""
-WITH lined AS (
-  SELECT doc_id, regexp_replace(text, '\. ', '.' || chr(10), 'g') AS t
-  FROM documents
-), dlines AS (
+    return _LINED_CTE + r"""dlines AS (
   SELECT DISTINCT doc_id, trim(x) AS line
   FROM lined, unnest(str_split(t, chr(10))) AS u(x)
   WHERE trim(x) != ''
@@ -1569,34 +1543,14 @@ WITH lined AS (
            AS n_boilerplate_lines
   FROM dlines JOIN ldf USING (line)
   GROUP BY doc_id
-), ltab AS (
-  SELECT doc_id,
-         list_filter([trim(x) for x in str_split(t, chr(10))], x -> x != '') AS l
-  FROM lined
-), posl AS (
-  SELECT doc_id, l[i] AS line, i AS pos
-  FROM ltab, unnest(generate_series(1, len(l))) AS t(i)
-  WHERE len(l) > 0
-), kept AS (
+), """ + _POSL_CTES + r"""kept AS (
   SELECT p.doc_id, p.line, p.pos
   FROM posl p
   ANTI JOIN (SELECT line FROM ldf WHERE doc_freq >= 2) b ON p.line = b.line
 ), clean AS (
   SELECT doc_id, md5(string_agg(line, chr(10) ORDER BY pos)) AS clean_md5
   FROM kept GROUP BY doc_id
-), kf AS (
-  SELECT doc_id, line, pos FROM (
-    SELECT doc_id, line, pos,
-           row_number() OVER (PARTITION BY line ORDER BY doc_id, pos) AS rn
-    FROM posl) t
-  WHERE rn = 1
-), kfagg AS (
-  SELECT doc_id,
-         md5(string_agg(line, chr(10) ORDER BY pos)) AS keepfirst_md5,
-         CAST(COUNT(*) AS BIGINT) AS n_kept_lines
-  FROM kf GROUP BY doc_id
-)
-SELECT doc_id,
+), """ + _KEEPFIRST_CTES + r"""SELECT doc_id,
        """ + canonical_url_duckdb_sql(raw) + r""" AS canon_url,
        bp.n_distinct_lines,
        bp.n_boilerplate_lines,
@@ -1613,6 +1567,34 @@ ORDER BY doc_id
 """
 
 
+def _scratch_state_dir(prefix: str, key: str) -> str:
+    """Deterministic per-``key`` state dir under the temp dir, wiped on
+    entry and at interpreter exit: the returned DataFrame reads the
+    state lazily, so the dir must outlive the builder — but repeated
+    runs must not leak one mkdtemp per invocation."""
+    import atexit
+    import hashlib
+    import shutil
+    import tempfile
+
+    tag = hashlib.md5(key.encode()).hexdigest()[:12]
+    path = os.path.join(tempfile.gettempdir(), f"{prefix}-{tag}")
+    shutil.rmtree(path, ignore_errors=True)
+    os.makedirs(path, exist_ok=True)
+    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    return path
+
+
+def _doc_id_thirds(docs):
+    """``docs`` split into 3 doc_id-range micro-batches."""
+    hi = docs.agg(F.max("doc_id")).collect()[0][0] or 0
+    cuts = [0, (hi + 1) // 3, 2 * (hi + 1) // 3, hi + 1]
+    return [
+        docs.where((F.col("doc_id") >= cuts[b]) & (F.col("doc_id") < cuts[b + 1]))
+        for b in range(3)
+    ]
+
+
 def _streaming_exact_dedup_docs(spark, sf):
     """Drive streaming/exact_dedup.py batch-by-batch over documents
     partitioned into 3 'micro-batches' (doc_id % 3) and return the
@@ -1620,27 +1602,13 @@ def _streaming_exact_dedup_docs(spark, sf):
     incremental keeper of a text is the row minimizing (batch, doc_id) —
     so the bloom-accelerated incremental path oracle-checks against a
     plain window over the whole corpus."""
-    import atexit
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from spark_streaming_sql_s3_connector_spark.streaming.exact_dedup import (
         process_batch,
         read_unique_ids,
     )
 
     docs = load_table(spark, sf, "documents").select("doc_id", "text")
-    # Deterministic per-sf dir, wiped on entry and at interpreter exit:
-    # the returned DataFrame reads the index lazily, so the dir must
-    # outlive this function — but repeated runs must not leak one
-    # mkdtemp per invocation.
-    tag = hashlib.md5(str(sf).encode()).hexdigest()[:12]
-    idx = os.path.join(tempfile.gettempdir(), f"s3conn-xdedup-{tag}")
-    shutil.rmtree(idx, ignore_errors=True)
-    os.makedirs(idx, exist_ok=True)
-    atexit.register(shutil.rmtree, idx, ignore_errors=True)
+    idx = _scratch_state_dir("s3conn-xdedup", str(sf))
     for b in range(3):
         process_batch(
             docs.where(F.col("doc_id") % 3 == b),
@@ -1681,12 +1649,6 @@ def _streaming_line_dedup_docs(spark, sf):
     (batch, doc, pos)' coincide with 'first in (doc, pos)', so the
     incremental path oracle-checks against the plain batch keep-first
     SQL (same oracle family as dedup_lines_docs)."""
-    import atexit
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from spark_streaming_sql_s3_connector_spark.operators.web import lined_text
     from spark_streaming_sql_s3_connector_spark.streaming.line_dedup import (
         process_batch,
@@ -1696,22 +1658,10 @@ def _streaming_line_dedup_docs(spark, sf):
     docs = load_table(spark, sf, "documents").select(
         "doc_id", lined_text(F.col("text")).alias("text")
     )
-    hi = docs.agg(F.max("doc_id")).collect()[0][0] or 0
-    cuts = [0, (hi + 1) // 3, 2 * (hi + 1) // 3, hi + 1]
-    tag = hashlib.md5(("lines" + str(sf)).encode()).hexdigest()[:12]
-    idx = os.path.join(tempfile.gettempdir(), f"s3conn-linededup-{tag}")
-    shutil.rmtree(idx, ignore_errors=True)
-    os.makedirs(idx, exist_ok=True)
-    atexit.register(shutil.rmtree, idx, ignore_errors=True)
-    for b in range(3):
-        process_batch(
-            docs.where(
-                (F.col("doc_id") >= cuts[b]) & (F.col("doc_id") < cuts[b + 1])
-            ),
-            b,
-            idx,
-            expected_total_items=100_000,
-        )
+    thirds = _doc_id_thirds(docs)
+    idx = _scratch_state_dir("s3conn-linededup", "lines" + str(sf))
+    for b, batch in enumerate(thirds):
+        process_batch(batch, b, idx, expected_total_items=100_000)
     return (
         read_deduped_docs(spark, idx)
         .select(
@@ -1723,31 +1673,7 @@ def _streaming_line_dedup_docs(spark, sf):
     )
 
 
-_STREAMING_LINE_DEDUP_SQL = r"""
-WITH lined AS (
-  SELECT doc_id, regexp_replace(text, '\. ', '.' || chr(10), 'g') AS t
-  FROM documents
-), ltab AS (
-  SELECT doc_id,
-         list_filter([trim(x) for x in str_split(t, chr(10))], x -> x != '') AS l
-  FROM lined
-), posl AS (
-  SELECT doc_id, l[i] AS line, i AS pos
-  FROM ltab, unnest(generate_series(1, len(l))) AS t(i)
-  WHERE len(l) > 0
-), kf AS (
-  SELECT doc_id, line, pos FROM (
-    SELECT doc_id, line, pos,
-           row_number() OVER (PARTITION BY line ORDER BY doc_id, pos) AS rn
-    FROM posl) t
-  WHERE rn = 1
-), kfagg AS (
-  SELECT doc_id,
-         md5(string_agg(line, chr(10) ORDER BY pos)) AS keepfirst_md5,
-         CAST(COUNT(*) AS BIGINT) AS n_kept_lines
-  FROM kf GROUP BY doc_id
-)
-SELECT d.doc_id,
+_STREAMING_LINE_DEDUP_SQL = _LINED_CTE + _POSL_CTES + _KEEPFIRST_CTES + r"""SELECT d.doc_id,
        COALESCE(kfagg.n_kept_lines, 0) AS n_kept_lines,
        COALESCE(kfagg.keepfirst_md5, md5('')) AS keepfirst_md5
 FROM documents d
@@ -1779,14 +1705,7 @@ def _quality_gate_docs(spark, sf):
 _QUALITY_GATE_SQL = r"""
 WITH m AS (
   SELECT doc_id, lang,
-         length(text)::DOUBLE AS n_chars,
-         (CASE WHEN trim(text) = '' THEN 0
-               ELSE len(regexp_split_to_array(trim(text), '\s+')) END)::DOUBLE AS n_tokens,
-         (CASE WHEN trim(text) = '' THEN 0
-               ELSE len(list_distinct(regexp_split_to_array(trim(text), '\s+'))) END)::DOUBLE
-           AS n_distinct,
-         length(regexp_replace(text, '[^A-Za-z]', '', 'g'))::DOUBLE AS n_alpha,
-         length(regexp_replace(text, '[A-Za-z0-9\s]', '', 'g'))::DOUBLE AS n_punct
+""" + _QUALITY_METRIC_COLS + r"""
   FROM documents
 ), scored AS (
   SELECT doc_id, lang,
@@ -1834,7 +1753,9 @@ def _passage_dedup_docs(spark, sf):
     ).orderBy("doc_id")
 
 
-_PASSAGE_DEDUP_SQL = r"""
+# keep-first 5-gram passage dedup; the streaming twin's oracle is this
+# chain with its own last column list (it reports no removed count)
+_PASSAGE_DEDUP_HEAD = r"""
 WITH base AS (
   SELECT doc_id,
          CASE WHEN text IS NULL OR trim(text) = '' THEN CAST([] AS VARCHAR[])
@@ -1867,7 +1788,8 @@ WITH base AS (
 )
 SELECT b.doc_id,
        COALESCE(a.dedup_md5, md5('')) AS dedup_md5,
-       COALESCE(a.n_kept_tokens, 0) AS n_kept_tokens,
+       COALESCE(a.n_kept_tokens, 0) AS n_kept_tokens"""
+_PASSAGE_DEDUP_SQL = _PASSAGE_DEDUP_HEAD + r""",
        CAST(len(b.tk) AS BIGINT) - COALESCE(a.n_kept_tokens, 0) AS n_removed_tokens
 FROM base b LEFT JOIN agg a USING (doc_id)
 ORDER BY doc_id
@@ -1918,14 +1840,7 @@ def _source_curation_docs(spark, sf):
 _SOURCE_CURATION_SQL = r"""
 WITH m AS (
   SELECT doc_id, source,
-         length(text)::DOUBLE AS n_chars,
-         (CASE WHEN trim(text) = '' THEN 0
-               ELSE len(regexp_split_to_array(trim(text), '\s+')) END)::DOUBLE AS n_tokens,
-         (CASE WHEN trim(text) = '' THEN 0
-               ELSE len(list_distinct(regexp_split_to_array(trim(text), '\s+'))) END)::DOUBLE
-           AS n_distinct,
-         length(regexp_replace(text, '[^A-Za-z]', '', 'g'))::DOUBLE AS n_alpha,
-         length(regexp_replace(text, '[A-Za-z0-9\s]', '', 'g'))::DOUBLE AS n_punct,
+""" + _QUALITY_METRIC_COLS + r""",
          md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS key
   FROM documents
 ), scored AS (
@@ -1974,34 +1889,16 @@ def _streaming_passage_dedup_docs(spark, sf):
     start)', so the incremental path oracle-checks against the plain
     batch passage-dedup SQL (same construction as
     streaming_line_dedup_docs)."""
-    import atexit
-    import hashlib
-    import shutil
-    import tempfile
-
     from spark_streaming_sql_s3_connector_spark.streaming.passage_dedup import (
         process_batch,
         read_deduped_docs,
     )
 
     docs = load_table(spark, sf, "documents").select("doc_id", "text")
-    hi = docs.agg(F.max("doc_id")).collect()[0][0] or 0
-    cuts = [0, (hi + 1) // 3, 2 * (hi + 1) // 3, hi + 1]
-    tag = hashlib.md5(("passages" + str(sf)).encode()).hexdigest()[:12]
-    idx = os.path.join(tempfile.gettempdir(), f"s3conn-passagededup-{tag}")
-    shutil.rmtree(idx, ignore_errors=True)
-    os.makedirs(idx, exist_ok=True)
-    atexit.register(shutil.rmtree, idx, ignore_errors=True)
-    for b in range(3):
-        process_batch(
-            docs.where(
-                (F.col("doc_id") >= cuts[b]) & (F.col("doc_id") < cuts[b + 1])
-            ),
-            b,
-            idx,
-            k=5,
-            expected_total_items=100_000,
-        )
+    thirds = _doc_id_thirds(docs)
+    idx = _scratch_state_dir("s3conn-passagededup", "passages" + str(sf))
+    for b, batch in enumerate(thirds):
+        process_batch(batch, b, idx, k=5, expected_total_items=100_000)
     return (
         read_deduped_docs(spark, idx)
         .select(
@@ -2013,40 +1910,7 @@ def _streaming_passage_dedup_docs(spark, sf):
     )
 
 
-_STREAMING_PASSAGE_DEDUP_SQL = r"""
-WITH base AS (
-  SELECT doc_id,
-         CASE WHEN text IS NULL OR trim(text) = '' THEN CAST([] AS VARCHAR[])
-              ELSE regexp_split_to_array(trim(text), '\s+') END AS tk
-  FROM documents
-), grams AS (
-  SELECT doc_id, i.i - 1 AS start0,
-         array_to_string(tk[i.i:i.i+4], ' ') AS gram
-  FROM base, unnest(generate_series(1, len(tk) - 4)) AS i(i)
-), dups AS (
-  SELECT doc_id, start0 FROM (
-    SELECT doc_id, start0,
-           row_number() OVER (PARTITION BY gram ORDER BY doc_id, start0) AS rn
-    FROM grams) t
-  WHERE rn > 1
-), covered AS (
-  SELECT DISTINCT doc_id, start0 + o.o AS pos0
-  FROM dups, unnest(generate_series(0, 4)) AS o(o)
-), toks AS (
-  SELECT doc_id, i.i - 1 AS pos0, tk[i.i] AS tok
-  FROM base, unnest(generate_series(1, len(tk))) AS i(i)
-), kept AS (
-  SELECT t.doc_id, t.pos0, t.tok
-  FROM toks t LEFT JOIN covered c ON t.doc_id = c.doc_id AND t.pos0 = c.pos0
-  WHERE c.doc_id IS NULL
-), agg AS (
-  SELECT doc_id, md5(string_agg(tok, ' ' ORDER BY pos0)) AS dedup_md5,
-         CAST(COUNT(*) AS BIGINT) AS n_kept_tokens
-  FROM kept GROUP BY doc_id
-)
-SELECT b.doc_id,
-       COALESCE(a.dedup_md5, md5('')) AS dedup_md5,
-       COALESCE(a.n_kept_tokens, 0) AS n_kept_tokens
+_STREAMING_PASSAGE_DEDUP_SQL = _PASSAGE_DEDUP_HEAD + r"""
 FROM base b LEFT JOIN agg a USING (doc_id)
 ORDER BY doc_id
 """
@@ -2169,33 +2033,15 @@ def _ivf_near_dup_pairs_docs(spark, sf):
     n_centroids is the honesty condition). Rows-only with a
     SELF-CHECKING column: planted-pair recall ≥ 0.8, computed
     distributed (anti-join + counts, never a pair collect)."""
-    import numpy as np
-    from pyspark.sql.types import ArrayType, DoubleType
-
     from spark_streaming_sql_s3_connector_spark.operators.similarity import (
         ivf_near_dup_pairs,
     )
 
-    @F.pandas_udf(ArrayType(DoubleType()))
-    def jitter(vec: pd.Series, vid: pd.Series) -> pd.Series:
-        X = np.asarray([np.asarray(v, dtype=np.float64) for v in vec])
-        if X.size == 0:
-            return pd.Series([], dtype=object)
-        i = np.arange(X.shape[1], dtype=np.float64)
-        out = X * (1.0 + 0.3 * np.sin(1.7 * i[None, :] + vid.to_numpy()[:, None]))
-        return pd.Series(list(out))
-
-    emb = load_table(spark, sf, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    jittered = emb.select(
-        (F.col("vec_id") + 1_000_000).alias("vec_id"),
-        jitter(F.col("embedding"), F.col("vec_id")).alias("embedding"),
-    )
+    emb, planted_corpus = _with_planted_near_dups(spark, sf)
     # persist: the corpus feeds the quantizer training sample, the
     # assignment pass, and BOTH sides of the rerank vector join —
     # without it the jitter UDF and the parquet read re-run 4×
-    corpus = emb.unionByName(jittered).persist()
+    corpus = planted_corpus.persist()
     got = (
         ivf_near_dup_pairs(
             corpus, "embedding", "vec_id", 0.9, n_centroids=32, n_assign=2, seed=42
@@ -2251,16 +2097,9 @@ def _perplexity_docs(spark, sf):
     return unigram_nll_docs(docs, "text", "doc_id", lm).orderBy("doc_id")
 
 
-_PERPLEXITY_SQL = r"""
-WITH toks AS (
-  SELECT doc_id, unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS tok
-  FROM documents
-  WHERE text IS NOT NULL AND trim(text) != ''
-), counts AS (
-  SELECT tok, COUNT(*) AS c FROM toks GROUP BY tok
-), tot AS (
-  SELECT SUM(c) AS n, COUNT(*) AS n_distinct FROM counts
-), vocab AS (
+# the add-0.5 unigram LM over the top-4096 vocabulary (`vocab`, `vsize`,
+# `lm`) and its OOV log-prob, after the caller's `counts` and `tot`
+_UNIGRAM_LM_CTES = r"""), vocab AS (
   SELECT tok, c FROM counts ORDER BY c DESC, tok LIMIT 4096
 ), vsize AS (
   SELECT COUNT(*) AS v FROM vocab
@@ -2273,7 +2112,17 @@ WITH toks AS (
   SELECT CAST(ROUND(ln(0.5 / (tot.n + 0.5 * (vsize.v + 1))), 7)
               AS DECIMAL(20,7)) AS lp
   FROM tot, vsize
-), scored AS (
+"""
+_PERPLEXITY_SQL = r"""
+WITH toks AS (
+  SELECT doc_id, unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS tok
+  FROM documents
+  WHERE text IS NOT NULL AND trim(text) != ''
+), counts AS (
+  SELECT tok, COUNT(*) AS c FROM toks GROUP BY tok
+), tot AS (
+  SELECT SUM(c) AS n, COUNT(*) AS n_distinct FROM counts
+""" + _UNIGRAM_LM_CTES + r"""), scored AS (
   SELECT t.doc_id, COALESCE(lm.lp, (SELECT lp FROM oov)) AS lp
   FROM toks t LEFT JOIN lm USING (tok)
 ), agg AS (
@@ -2387,22 +2236,34 @@ ORDER BY doc_id
 """
 
 
-def _ann_index_dir_for(sf: str) -> str:
-    """Deterministic on-disk cache location for the persisted ANN index
-    of one corpus: keyed by the embeddings source's identity (path +
-    size + mtime) and the index geometry, so a regenerated corpus or a
-    geometry change rebuilds instead of serving stale codes."""
+def _source_cache_dir(sf: str, table: str, tag: str, subdir: str) -> str:
+    """Deterministic on-disk cache location for state built from one
+    ``sf`` table: keyed by the table's identity (path + size + mtime)
+    and a version ``tag`` naming the state's geometry or layout, so a
+    regenerated corpus or a layout change rebuilds instead of serving
+    stale state."""
     import hashlib
     import tempfile
 
-    src = os.path.join(sf, "embeddings.parquet")
+    src = os.path.join(sf, f"{table}.parquet")
     try:
         st = os.stat(src)
         ident = f"{os.path.abspath(src)}:{st.st_size}:{st.st_mtime_ns}"
     except OSError:
         ident = os.path.abspath(src)
-    fp = hashlib.md5(f"{ident}:v2:c16-m16-k256".encode()).hexdigest()[:16]
-    return os.path.join(tempfile.gettempdir(), "spark_graft_ann_index", fp)
+    fp = hashlib.md5(f"{ident}:{tag}".encode()).hexdigest()[:16]
+    return os.path.join(tempfile.gettempdir(), subdir, fp)
+
+
+def _brute_recall_ge_50(spark, sf, q, got_ids) -> bool:
+    """The serving keys' recall floor: ``got_ids`` holds at least 5 of
+    the brute-force top-10 neighbours of ``q`` (vec_id 0 excluded)."""
+    emb = load_table(spark, sf, "embeddings").where(F.col("vec_id") != 0)
+    brute_ids = {
+        r.neighbor_id
+        for r in brute_force_topk(emb, "embedding", "vec_id", q, k=10).collect()
+    }
+    return len(set(got_ids) & brute_ids) >= 5
 
 
 def _ann_index_topk_q(spark, sf):
@@ -2421,26 +2282,13 @@ def _ann_index_topk_q(spark, sf):
     and must stay True (floor 5/10, measured 8-9)."""
     from spark_streaming_sql_s3_connector_spark.operators.ann_index import (
         ann_index_topk,
-        build_ann_index,
-        index_exists,
     )
 
-    index_dir = _ann_index_dir_for(sf)
-    if not index_exists(index_dir):
-        emb = load_table(spark, sf, "embeddings").where(F.col("vec_id") != 0)
-        build_ann_index(
-            emb, "embedding", "vec_id", index_dir,
-            n_centroids=16, m_subspaces=16, pq_centroids=256, seed=42,
-        )
+    index_dir = _ensure_ann_index(spark, sf)
     q = _query_vector(spark, sf)
     served = ann_index_topk(spark, index_dir, q, k=10, n_probe=6)
     served_rows = served.collect()  # k=10 — bounded driver traffic
-    emb = load_table(spark, sf, "embeddings").where(F.col("vec_id") != 0)
-    brute_ids = {
-        r.neighbor_id
-        for r in brute_force_topk(emb, "embedding", "vec_id", q, k=10).collect()
-    }
-    ok = len({r.neighbor_id for r in served_rows} & brute_ids) >= 5
+    ok = _brute_recall_ge_50(spark, sf, q, {r.neighbor_id for r in served_rows})
     return (
         spark.createDataFrame(
             [(int(r.neighbor_id), float(r.adc_score)) for r in served_rows],
@@ -2468,17 +2316,9 @@ def _ann_index_batch_topk(spark, sf):
     batch path returned exactly k rows for every query."""
     from spark_streaming_sql_s3_connector_spark.operators.ann_index import (
         ann_index_topk_batch,
-        build_ann_index,
-        index_exists,
     )
 
-    index_dir = _ann_index_dir_for(sf)
-    if not index_exists(index_dir):
-        emb = load_table(spark, sf, "embeddings").where(F.col("vec_id") != 0)
-        build_ann_index(
-            emb, "embedding", "vec_id", index_dir,
-            n_centroids=16, m_subspaces=16, pq_centroids=256, seed=42,
-        )
+    index_dir = _ensure_ann_index(spark, sf)
     emb = load_table(spark, sf, "embeddings")
     qrows = (
         emb.where(F.col("vec_id") < 8)
@@ -2496,15 +2336,8 @@ def _ann_index_batch_topk(spark, sf):
     complete = sorted(by_q) == [str(q) for q, _ in sorted(queries)] and all(
         len(v) == 10 for v in by_q.values()
     )
-    corpus = emb.where(F.col("vec_id") != 0)
-    brute_ids = {
-        r.neighbor_id
-        for r in brute_force_topk(
-            corpus, "embedding", "vec_id", _query_vector(spark, sf), k=10
-        ).collect()
-    }
     got0 = {r.neighbor_id for r in by_q.get("0", [])}
-    ok = len(got0 & brute_ids) >= 5
+    ok = _brute_recall_ge_50(spark, sf, _query_vector(spark, sf), got0)
     return (
         spark.createDataFrame(
             [
@@ -2598,11 +2431,8 @@ def _text_transform_profile(spark, sf):
     shard-window cumsum, each joined back on doc_id. Inner join matches
     the chunker's contract (zero-token docs emit no chunks, and the
     oracle mirrors that)."""
-    from spark_streaming_sql_s3_connector_spark.functions.web import canonical_url
     from spark_streaming_sql_s3_connector_spark.operators.web import (
         boilerplate_profile,
-        dedup_lines_keep_first,
-        lined_text,
     )
 
     rep = _repetition_docs(spark, sf)
@@ -2613,28 +2443,10 @@ def _text_transform_profile(spark, sf):
     # query also computes strip_boilerplate's clean_md5, and Catalyst
     # cannot prune an inner join's unused aggregate subtree — this slot
     # would pay a whole boilerplate-strip rebuild for a dropped column
-    docs = load_table(spark, sf, "documents")
-    raw_url = F.concat(
-        F.lit("HTTPS://WWW."),
-        F.upper(F.col("source")),
-        F.lit(".Example.COM:443/"),
-        F.col("lang"),
-        F.lit("/"),
-        F.col("doc_id").cast("string"),
-        F.lit("/?utm_source=feed&ref="),
-        F.col("doc_id").cast("string"),
-        F.lit("#sec"),
-    )
-    urls = docs.select("doc_id", canonical_url(raw_url).alias("canon_url"))
-    lined = docs.select("doc_id", lined_text(F.col("text")).alias("text"))
+    urls, lined, kf = _web_line_frames(spark, sf)
     bp = boilerplate_profile(lined, "text", "doc_id", min_doc_freq=2).where(
         F.col("n_distinct_lines") > 0
     ).select("doc_id", "n_boilerplate_lines")
-    kf = dedup_lines_keep_first(lined, "text", "doc_id").select(
-        "doc_id",
-        F.md5(F.encode(F.col("deduped_text"), "UTF-8")).alias("keepfirst_md5"),
-        F.col("n_kept_lines").cast("bigint").alias("n_kept_lines"),
-    )
     wc = urls.join(bp, "doc_id").join(kf, "doc_id")
     return (
         rep.join(ch, "doc_id")
@@ -2773,9 +2585,7 @@ def _stratified_sample_docs(spark, sf):
     return stratified_sample_exact(docs, "doc_id", ["lang"], 3).orderBy("lang", "doc_id")
 
 
-_STRATIFIED_SAMPLE_SQL = """
-SELECT lang, doc_id FROM (
-  SELECT lang, doc_id,
+_STRAT_SAMPLE_RN = """  SELECT lang, doc_id,
          row_number() OVER (
            PARTITION BY lang
            ORDER BY md5(CAST(doc_id AS VARCHAR) || ''), doc_id
@@ -2783,7 +2593,10 @@ SELECT lang, doc_id FROM (
   FROM documents
 ) t
 WHERE rn <= 3
-ORDER BY lang, doc_id
+"""
+_STRATIFIED_SAMPLE_SQL = """
+SELECT lang, doc_id FROM (
+""" + _STRAT_SAMPLE_RN + """ORDER BY lang, doc_id
 """
 
 
@@ -2844,15 +2657,9 @@ FROM events GROUP BY event_type ORDER BY event_type
 """
 
 
-def _asof_view_click(spark, sf):
-    """Keyed as-of join (operators/temporal_joins.asof_join): for every
-    'view' event, the latest same-user 'click' at-or-before it. ONE
-    shuffle on user_id (union + window sweep — no self-join), then a
-    per-user rollup. Gaps reported in integer microseconds so the oracle
-    hash is exact (no float summation-order hazard); the click side is
-    pre-deduped per (user, ts) so tie resolution cannot differ between
-    engines. Oracle: DuckDB's native ASOF LEFT JOIN."""
-    ev = load_table(spark, sf, "events")
+def _asof_view_click_agg(ev):
+    """Per user: views, views with a same-user click at-or-before them,
+    and the min/max view − click gap in microseconds."""
     views = ev.where(F.col("event_type") == "view").select("user_id", "ts", "event_id")
     clicks = (
         ev.where(F.col("event_type") == "click")
@@ -2864,39 +2671,17 @@ def _asof_view_click(spark, sf):
         views, clicks, on=["user_id"], left_ts="ts", right_ts="cts", right_cols=["cval"]
     )
     gap = F.unix_micros(F.col("ts")) - F.unix_micros(F.col("cts_r"))
-    return (
-        joined.groupBy("user_id")
-        .agg(
-            F.count("*").alias("n_views"),
-            F.count("cts_r").alias("n_matched"),
-            F.min(gap).alias("min_gap_us"),
-            F.max(gap).alias("max_gap_us"),
-        )
-        .orderBy("user_id")
+    return joined.groupBy("user_id").agg(
+        F.count("*").alias("n_views"),
+        F.count("cts_r").alias("n_matched"),
+        F.min(gap).alias("min_gap_us"),
+        F.max(gap).alias("max_gap_us"),
     )
 
 
-_ASOF_VIEW_CLICK_SQL = """
-WITH v AS (SELECT user_id, ts, event_id FROM events WHERE event_type = 'view'),
-c AS (SELECT user_id, ts AS cts, MAX(value) AS cval
-      FROM events WHERE event_type = 'click' GROUP BY user_id, ts),
-j AS (SELECT v.user_id, v.ts, c.cts
-      FROM v ASOF LEFT JOIN c ON v.user_id = c.user_id AND v.ts >= c.cts)
-SELECT user_id, COUNT(*) AS n_views, COUNT(cts) AS n_matched,
-       MIN(epoch_us(ts) - epoch_us(cts)) AS min_gap_us,
-       MAX(epoch_us(ts) - epoch_us(cts)) AS max_gap_us
-FROM j GROUP BY user_id ORDER BY user_id
-"""
-
-
-def _range_join_error_context(spark, sf):
-    """Binned range join (operators/temporal_joins.range_join_binned):
-    clicks landing inside the 30-minute window before each same-user
-    error. The inequality join runs as an equi-join on (user_id, time
-    bin) — bin width = window length, so each error interval explodes to
-    ≤2 bins and the shuffle stays ~2× the errors table; the exact BETWEEN
-    filters inside the bin. Per-user totals in BIGINT."""
-    ev = load_table(spark, sf, "events")
+def _error_context_agg(ev):
+    """Per user with an error: errors, and the clicks inside the 30
+    minutes before one of them (binned range join)."""
     errs = (
         ev.where(F.col("event_type") == "error")
         .select(
@@ -2914,15 +2699,47 @@ def _range_join_error_context(spark, sf):
     )
     pair_counts = pairs.groupBy("user_id").agg(F.count("*").alias("_ctx"))
     err_counts = errs.groupBy("user_id").agg(F.count("*").alias("n_errors"))
-    return (
-        err_counts.join(pair_counts, "user_id", "left")
-        .select(
-            "user_id",
-            "n_errors",
-            F.coalesce(F.col("_ctx"), F.lit(0).cast("bigint")).alias("ctx_clicks"),
-        )
-        .orderBy("user_id")
+    return err_counts.join(pair_counts, "user_id", "left").select(
+        "user_id",
+        "n_errors",
+        F.coalesce(F.col("_ctx"), F.lit(0).cast("bigint")).alias("ctx_clicks"),
     )
+
+
+def _asof_view_click(spark, sf):
+    """Keyed as-of join (operators/temporal_joins.asof_join): for every
+    'view' event, the latest same-user 'click' at-or-before it. ONE
+    shuffle on user_id (union + window sweep — no self-join), then a
+    per-user rollup. Gaps reported in integer microseconds so the oracle
+    hash is exact (no float summation-order hazard); the click side is
+    pre-deduped per (user, ts) so tie resolution cannot differ between
+    engines. Oracle: DuckDB's native ASOF LEFT JOIN."""
+    return _asof_view_click_agg(load_table(spark, sf, "events")).orderBy("user_id")
+
+
+# `v`, `c` and the as-of join `j`, shared with the fused temporal profile
+_ASOF_CTES = """
+WITH v AS (SELECT user_id, ts, event_id FROM events WHERE event_type = 'view'),
+c AS (SELECT user_id, ts AS cts, MAX(value) AS cval
+      FROM events WHERE event_type = 'click' GROUP BY user_id, ts),
+j AS (SELECT v.user_id, v.ts, c.cts
+      FROM v ASOF LEFT JOIN c ON v.user_id = c.user_id AND v.ts >= c.cts)"""
+_ASOF_VIEW_CLICK_SQL = _ASOF_CTES + """
+SELECT user_id, COUNT(*) AS n_views, COUNT(cts) AS n_matched,
+       MIN(epoch_us(ts) - epoch_us(cts)) AS min_gap_us,
+       MAX(epoch_us(ts) - epoch_us(cts)) AS max_gap_us
+FROM j GROUP BY user_id ORDER BY user_id
+"""
+
+
+def _range_join_error_context(spark, sf):
+    """Binned range join (operators/temporal_joins.range_join_binned):
+    clicks landing inside the 30-minute window before each same-user
+    error. The inequality join runs as an equi-join on (user_id, time
+    bin) — bin width = window length, so each error interval explodes to
+    ≤2 bins and the shuffle stays ~2× the errors table; the exact BETWEEN
+    filters inside the bin. Per-user totals in BIGINT."""
+    return _error_context_agg(load_table(spark, sf, "events")).orderBy("user_id")
 
 
 _RANGE_JOIN_ERROR_CONTEXT_SQL = """
@@ -2974,35 +2791,9 @@ def _text_profile_docs(spark, sf):
 
 
 def _text_profile_oracle_sql() -> str:
-    from spark_streaming_sql_s3_connector_spark.functions.text import _LANG_PROFILES
-
-    struct_rows = ",\n    ".join(
-        "{'score': len(list_filter(t, x -> list_contains(["
-        + ", ".join("'" + w.replace("'", "''") + "'" for w in words)
-        + "], x))), 'lang': '" + lang + "'}"
-        for lang, words in _LANG_PROFILES.items()
-    )
-    return r"""
-WITH toks AS (
+    return _lang_best_ctes() + r"""), m AS (
   SELECT doc_id,
-         [regexp_replace(x, '[^\p{L}'']', '', 'g')
-          for x in regexp_split_to_array(lower(trim(text)), '\s+')] AS t
-  FROM documents
-), best AS (
-  SELECT doc_id, list_max([
-    """ + struct_rows + r"""
-  ]) AS b
-  FROM toks
-), m AS (
-  SELECT doc_id,
-         length(text)::DOUBLE AS n_chars,
-         (CASE WHEN trim(text) = '' THEN 0
-               ELSE len(regexp_split_to_array(trim(text), '\s+')) END)::DOUBLE AS n_tokens,
-         (CASE WHEN trim(text) = '' THEN 0
-               ELSE len(list_distinct(regexp_split_to_array(trim(text), '\s+'))) END)::DOUBLE
-           AS n_distinct,
-         length(regexp_replace(text, '[^A-Za-z]', '', 'g'))::DOUBLE AS n_alpha,
-         length(regexp_replace(text, '[A-Za-z0-9\s]', '', 'g'))::DOUBLE AS n_punct
+""" + _QUALITY_METRIC_COLS + r"""
   FROM documents
 )
 SELECT d.doc_id,
@@ -3084,6 +2875,39 @@ ORDER BY t.doc_id
 """
 
 
+def _mixed_docs(docs):
+    """Token-budget mix of ``docs``: lang-keyed target shares (en 0.5,
+    de 0.2, fr 0.1, others 0.05) of a 20k-char budget."""
+    from spark_streaming_sql_s3_connector_spark.operators.sampling import mix_corpus
+
+    return mix_corpus(
+        docs,
+        "doc_id",
+        "lang",
+        "n_chars",
+        {"en": 0.5, "de": 0.2, "fr": 0.1},
+        token_budget=20_000,
+        salt="mix",
+        default_share=0.05,
+    )
+
+
+# the mixing fraction per doc and its hash-membership filter, shared by
+# the standalone and the fused sampling oracles
+_MIX_FRAC_SQL = """  SELECT d.doc_id, d.lang,
+         LEAST(1.0,
+               (CASE d.lang WHEN 'en' THEN 0.5 WHEN 'de' THEN 0.2
+                            WHEN 'fr' THEN 0.1 ELSE 0.05 END)
+               * 20000.0 / t.grp) AS frac
+  FROM documents d
+  JOIN (SELECT lang, CAST(SUM(n_chars) AS DOUBLE) AS grp
+        FROM documents GROUP BY lang) t USING (lang)
+) m
+WHERE CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR) || 'mix'), 1, 8) AS BIGINT)
+      % 10000 < CAST(FLOOR(frac * 10000) AS BIGINT)
+"""
+
+
 def _sampling_docs_combined(spark, sf):
     """Hash-membership sample (+ train/test split), exact-k stratified
     sample, AND (r5) token-budget data mixing, union-tagged into one
@@ -3091,8 +2915,6 @@ def _sampling_docs_combined(spark, sf):
     `mix_corpus_docs` into one driver-verified slot. All are membership
     filters / one-shuffle window ops / broadcast-joined group totals; the
     union adds no shuffle."""
-    from spark_streaming_sql_s3_connector_spark.operators.sampling import mix_corpus
-
     docs = load_table(spark, sf, "documents")
     sampled = deterministic_sample(docs, "doc_id", 0.10, salt="bench")
     labeled = with_split(sampled, "doc_id", test_fraction=0.2, salt="split")
@@ -3103,17 +2925,7 @@ def _sampling_docs_combined(spark, sf):
     strat_part = strat.select(
         F.lit("strat").alias("method"), "doc_id", F.col("lang").alias("label")
     )
-    mixed = mix_corpus(
-        docs,
-        "doc_id",
-        "lang",
-        "n_chars",
-        {"en": 0.5, "de": 0.2, "fr": 0.1},
-        token_budget=20_000,
-        salt="mix",
-        default_share=0.05,
-    )
-    mix_part = mixed.select(
+    mix_part = _mixed_docs(docs).select(
         F.lit("mix").alias("method"), "doc_id", F.col("lang").alias("label")
     )
     return (
@@ -3122,42 +2934,13 @@ def _sampling_docs_combined(spark, sf):
     )
 
 
-_SAMPLING_COMBINED_SQL = """
-WITH sampled AS (
-  SELECT doc_id
-  FROM documents
-  WHERE CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR) || 'bench'), 1, 8) AS BIGINT)
-        % 10000 < 1000
-)
-SELECT 'hash' AS method, doc_id,
-       CASE WHEN CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR) || 'split'), 1, 8) AS BIGINT)
-                 % 10000 < 2000
-            THEN 'test' ELSE 'train' END AS label
+_SAMPLING_COMBINED_SQL = _SAMPLED_CTE + "'hash' AS method, " + _SPLIT_LABEL + """label
 FROM sampled
 UNION ALL
 SELECT 'strat' AS method, doc_id, lang AS label FROM (
-  SELECT lang, doc_id,
-         row_number() OVER (
-           PARTITION BY lang
-           ORDER BY md5(CAST(doc_id AS VARCHAR) || ''), doc_id
-         ) AS rn
-  FROM documents
-) t
-WHERE rn <= 3
-UNION ALL
+""" + _STRAT_SAMPLE_RN + """UNION ALL
 SELECT 'mix' AS method, doc_id, lang AS label FROM (
-  SELECT d.doc_id, d.lang,
-         LEAST(1.0,
-               (CASE d.lang WHEN 'en' THEN 0.5 WHEN 'de' THEN 0.2
-                            WHEN 'fr' THEN 0.1 ELSE 0.05 END)
-               * 20000.0 / t.grp) AS frac
-  FROM documents d
-  JOIN (SELECT lang, CAST(SUM(n_chars) AS DOUBLE) AS grp
-        FROM documents GROUP BY lang) t USING (lang)
-) m
-WHERE CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR) || 'mix'), 1, 8) AS BIGINT)
-      % 10000 < CAST(FLOOR(frac * 10000) AS BIGINT)
-ORDER BY method, doc_id
+""" + _MIX_FRAC_SQL + """ORDER BY method, doc_id
 """
 
 
@@ -3167,38 +2950,14 @@ def _mix_corpus_docs(spark, sf):
     rounds to 6 places on both engines (the underlying doubles are
     bit-identical — integer-valued sums stay exact under double addition,
     and both engines evaluate the same IEEE expression tree)."""
-    from spark_streaming_sql_s3_connector_spark.operators.sampling import mix_corpus
-
-    docs = load_table(spark, sf, "documents")
-    mixed = mix_corpus(
-        docs,
-        "doc_id",
-        "lang",
-        "n_chars",
-        {"en": 0.5, "de": 0.2, "fr": 0.1},
-        token_budget=20_000,
-        salt="mix",
-        default_share=0.05,
-    )
-    return mixed.select(
+    return _mixed_docs(load_table(spark, sf, "documents")).select(
         "doc_id", "lang", F.round("keep_fraction", 6).alias("keep_fraction")
     ).orderBy("doc_id")
 
 
 _MIX_CORPUS_SQL = """
 SELECT doc_id, lang, ROUND(frac, 6) AS keep_fraction FROM (
-  SELECT d.doc_id, d.lang,
-         LEAST(1.0,
-               (CASE d.lang WHEN 'en' THEN 0.5 WHEN 'de' THEN 0.2
-                            WHEN 'fr' THEN 0.1 ELSE 0.05 END)
-               * 20000.0 / t.grp) AS frac
-  FROM documents d
-  JOIN (SELECT lang, CAST(SUM(n_chars) AS DOUBLE) AS grp
-        FROM documents GROUP BY lang) t USING (lang)
-) m
-WHERE CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR) || 'mix'), 1, 8) AS BIGINT)
-      % 10000 < CAST(FLOOR(frac * 10000) AS BIGINT)
-ORDER BY doc_id
+""" + _MIX_FRAC_SQL + """ORDER BY doc_id
 """
 
 
@@ -3275,45 +3034,8 @@ def _temporal_join_profile(spark, sf):
     are already per-user aggregates (tiny), so the final join is cheap;
     the heavy lifting stays the two one-shuffle temporal joins."""
     ev = load_table(spark, sf, "events")
-    views = ev.where(F.col("event_type") == "view").select("user_id", "ts", "event_id")
-    clicks = (
-        ev.where(F.col("event_type") == "click")
-        .groupBy("user_id", "ts")
-        .agg(F.max("value").alias("cval"))
-        .select("user_id", F.col("ts").alias("cts"), "cval")
-    )
-    joined = asof_join(
-        views, clicks, on=["user_id"], left_ts="ts", right_ts="cts", right_cols=["cval"]
-    )
-    gap = F.unix_micros(F.col("ts")) - F.unix_micros(F.col("cts_r"))
-    asof_agg = joined.groupBy("user_id").agg(
-        F.count("*").alias("n_views"),
-        F.count("cts_r").alias("n_matched"),
-        F.min(gap).alias("min_gap_us"),
-        F.max(gap).alias("max_gap_us"),
-    )
-    errs = (
-        ev.where(F.col("event_type") == "error")
-        .select(
-            "user_id",
-            F.col("event_id").alias("err_id"),
-            F.col("ts").alias("end_ts"),
-        )
-        .withColumn("start_ts", F.col("end_ts") - F.expr("INTERVAL 30 MINUTES"))
-    )
-    clk = ev.where(F.col("event_type") == "click").select(
-        "user_id", F.col("ts").alias("cts")
-    )
-    pairs = range_join_binned(
-        clk, errs, ["user_id"], "cts", "start_ts", "end_ts", bin_width=1800.0
-    )
-    pair_counts = pairs.groupBy("user_id").agg(F.count("*").alias("_ctx"))
-    err_counts = errs.groupBy("user_id").agg(F.count("*").alias("n_errors"))
-    range_agg = err_counts.join(pair_counts, "user_id", "left").select(
-        "user_id",
-        "n_errors",
-        F.coalesce(F.col("_ctx"), F.lit(0).cast("bigint")).alias("ctx_clicks"),
-    )
+    asof_agg = _asof_view_click_agg(ev)
+    range_agg = _error_context_agg(ev)
     return (
         asof_agg.join(range_agg, "user_id", "full_outer")
         .select(
@@ -3329,12 +3051,7 @@ def _temporal_join_profile(spark, sf):
     )
 
 
-_TEMPORAL_JOIN_PROFILE_SQL = """
-WITH v AS (SELECT user_id, ts, event_id FROM events WHERE event_type = 'view'),
-c AS (SELECT user_id, ts AS cts, MAX(value) AS cval
-      FROM events WHERE event_type = 'click' GROUP BY user_id, ts),
-j AS (SELECT v.user_id, v.ts, c.cts
-      FROM v ASOF LEFT JOIN c ON v.user_id = c.user_id AND v.ts >= c.cts),
+_TEMPORAL_JOIN_PROFILE_SQL = _ASOF_CTES + """,
 asof_agg AS (
   SELECT user_id, COUNT(*) AS n_views, COUNT(cts) AS n_matched,
          MIN(epoch_us(ts) - epoch_us(cts)) AS min_gap_us,
@@ -3506,12 +3223,6 @@ def _streaming_profile_docs(spark, sf):
     against a plain batch profile SQL; the HLL n_distinct column is
     dropped here (estimator-specific) — its accuracy law lives in
     test_streaming_profile.py."""
-    import atexit
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from spark_streaming_sql_s3_connector_spark.streaming.profile import (
         profile_batch,
         read_profile,
@@ -3520,17 +3231,9 @@ def _streaming_profile_docs(spark, sf):
     docs = load_table(spark, sf, "documents").select(
         "doc_id", "lang", "n_chars"
     )
-    hi = docs.agg(F.max("doc_id")).collect()[0][0] or 0
-    cuts = [0, (hi + 1) // 3, 2 * (hi + 1) // 3, hi + 1]
-    tag = hashlib.md5(("profile" + str(sf)).encode()).hexdigest()[:12]
-    sink = os.path.join(tempfile.gettempdir(), f"s3conn-streamprof-{tag}")
-    shutil.rmtree(sink, ignore_errors=True)
-    os.makedirs(sink, exist_ok=True)
-    atexit.register(shutil.rmtree, sink, ignore_errors=True)
-    for b in range(3):
-        batch = docs.where(
-            (F.col("doc_id") >= cuts[b]) & (F.col("doc_id") < cuts[b + 1])
-        )
+    thirds = _doc_id_thirds(docs)
+    sink = _scratch_state_dir("s3conn-streamprof", "profile" + str(sf))
+    for b, batch in enumerate(thirds):
         profile_batch(batch, b, sink)
         if b == 1:  # crash-replay of the same batch id: must converge
             profile_batch(batch, b, sink)
@@ -3634,20 +3337,7 @@ WITH toks AS (
   SELECT tok, COUNT(*) AS c FROM utoks GROUP BY tok
 ), tot AS (
   SELECT SUM(c) AS n FROM counts
-), vocab AS (
-  SELECT tok, c FROM counts ORDER BY c DESC, tok LIMIT 4096
-), vsize AS (
-  SELECT COUNT(*) AS v FROM vocab
-), lm AS (
-  SELECT tok,
-         CAST(ROUND(ln((c + 0.5) / (tot.n + 0.5 * (vsize.v + 1))), 7)
-              AS DECIMAL(20,7)) AS lp
-  FROM vocab, tot, vsize
-), oov AS (
-  SELECT CAST(ROUND(ln(0.5 / (tot.n + 0.5 * (vsize.v + 1))), 7)
-              AS DECIMAL(20,7)) AS lp
-  FROM tot, vsize
-), pairs AS (
+""" + _UNIGRAM_LM_CTES + r"""), pairs AS (
   SELECT doc_id,
          unnest(t[1:len(t)-1]) AS w1,
          unnest(t[2:len(t)]) AS w2
@@ -3814,18 +3504,10 @@ def _ann_semantic_dedup(spark, sf):
     bucket is always probed and its ADC is the reconstruction
     self-similarity)."""
     from spark_streaming_sql_s3_connector_spark.operators.ann_index import (
-        build_ann_index,
         dedup_against_ann_index,
-        index_exists,
     )
 
-    index_dir = _ann_index_dir_for(sf)
-    if not index_exists(index_dir):
-        emb = load_table(spark, sf, "embeddings").where(F.col("vec_id") != 0)
-        build_ann_index(
-            emb, "embedding", "vec_id", index_dir,
-            n_centroids=16, m_subspaces=16, pq_centroids=256, seed=42,
-        )
+    index_dir = _ensure_ann_index(spark, sf)
     emb = load_table(spark, sf, "embeddings")
     batch = (
         emb.where((F.col("vec_id") >= 1) & (F.col("vec_id") <= 20))
@@ -4384,10 +4066,11 @@ def _gopher_gate_docs(spark, sf):
     ).orderBy("doc_id")
 
 
-_GOPHER_GATE_SQL = r"""
-WITH base AS (
-  SELECT doc_id,
-         CASE WHEN text IS NULL OR trim(text) = '' THEN CAST([] AS VARCHAR[])
+# The Gopher and C4 gate oracles' column blocks, reused verbatim by the
+# composed published-pipeline oracle: the `base` token/line/paragraph
+# arrays and symbol counts, the word-count rules' inputs, the line and
+# paragraph rules' inputs, and (below, with the C4 gate) the C4 rules.
+_GOPHER_BASE_COLS = r"""         CASE WHEN text IS NULL OR trim(text) = '' THEN CAST([] AS VARCHAR[])
               ELSE regexp_split_to_array(trim(text), '\s+') END AS t,
          CASE WHEN text IS NULL THEN CAST([] AS VARCHAR[])
               ELSE list_filter(list_transform(regexp_split_to_array(text, '\n'), x -> trim(x)), x -> x != '') END AS lines,
@@ -4396,20 +4079,26 @@ WITH base AS (
          COALESCE(len(text) - len(replace(text, '#', '')), 0) AS n_hash,
          COALESCE(CAST((len(text) - len(replace(text, '...', ''))) / 3 AS BIGINT), 0) AS n_ell
   FROM documents
-), m AS (
-  SELECT doc_id,
-         len(t) AS n_words,
+"""
+_GOPHER_WORD_COLS = r"""         len(t) AS n_words,
          COALESCE(list_sum(list_transform(t, x -> len(x))), 0) AS sum_word_len,
          len(list_filter(t, x -> regexp_matches(x, '[A-Za-z]'))) AS n_alpha_words,
-         len(list_intersect(list_distinct(list_transform(t, x -> lower(x))),
-             ['the','be','to','of','and','that','have','with'])) AS n_stops,
-         n_hash + n_ell AS n_symbols,
+"""
+_GOPHER_LINE_COLS = r"""         n_hash + n_ell AS n_symbols,
          len(lines) AS n_lines,
          len(list_distinct(lines)) AS n_dl,
          len(paras) AS n_paras,
          len(list_distinct(paras)) AS n_dp,
          len(list_filter(lines, x -> starts_with(x, '-') OR starts_with(x, '*') OR starts_with(x, '•'))) AS n_bullet,
-         len(list_filter(lines, x -> ends_with(x, '...') OR ends_with(x, '…'))) AS n_ell_lines
+         len(list_filter(lines, x -> ends_with(x, '...') OR ends_with(x, '…'))) AS n_ell_lines"""
+_GOPHER_GATE_SQL = r"""
+WITH base AS (
+  SELECT doc_id,
+""" + _GOPHER_BASE_COLS + r"""), m AS (
+  SELECT doc_id,
+""" + _GOPHER_WORD_COLS + r"""         len(list_intersect(list_distinct(list_transform(t, x -> lower(x))),
+             ['the','be','to','of','and','that','have','with'])) AS n_stops,
+""" + _GOPHER_LINE_COLS + r"""
   FROM base
 )
 SELECT doc_id,
@@ -4580,6 +4269,16 @@ def _c4_gate_docs(spark, sf):
     ).orderBy("doc_id")
 
 
+_C4_RULE_COLS = r"""         NOT COALESCE(contains(lower(text), 'lorem ipsum'), FALSE)
+         AND NOT COALESCE(contains(lower(text), 'terms of use'), FALSE)
+         AND NOT COALESCE(contains(lower(text), 'privacy policy'), FALSE)
+         AND NOT COALESCE(contains(lower(text), 'cookie policy'), FALSE)
+         AND NOT COALESCE(contains(lower(text), 'javascript'), FALSE) AS rule_no_policy,
+         NOT COALESCE(contains(text, '{'), FALSE) AS rule_no_braces,
+         len(list_filter(lines, x -> ends_with(x, '.') OR ends_with(x, '!')
+             OR ends_with(x, '?') OR ends_with(x, '"'))) AS n_terminal
+  FROM base
+"""
 _C4_GATE_SQL = r"""
 WITH base AS (
   SELECT doc_id, text,
@@ -4590,16 +4289,7 @@ WITH base AS (
   FROM documents
 ), m AS (
   SELECT doc_id, n_words,
-         NOT COALESCE(contains(lower(text), 'lorem ipsum'), FALSE)
-         AND NOT COALESCE(contains(lower(text), 'terms of use'), FALSE)
-         AND NOT COALESCE(contains(lower(text), 'privacy policy'), FALSE)
-         AND NOT COALESCE(contains(lower(text), 'cookie policy'), FALSE)
-         AND NOT COALESCE(contains(lower(text), 'javascript'), FALSE) AS rule_no_policy,
-         NOT COALESCE(contains(text, '{'), FALSE) AS rule_no_braces,
-         len(list_filter(lines, x -> ends_with(x, '.') OR ends_with(x, '!')
-             OR ends_with(x, '?') OR ends_with(x, '"'))) AS n_terminal
-  FROM base
-)
+""" + _C4_RULE_COLS + r""")
 SELECT doc_id,
        (n_words >= 20) AS rule_min_words,
        rule_no_policy,
@@ -4920,12 +4610,8 @@ def _unimax_mix_docs(spark, sf):
     ).orderBy("doc_id", "epoch")
 
 
-_UNIMAX_MIX_SQL = r"""
-WITH totals AS (
-  SELECT lang AS g, CAST(SUM(n_chars) AS BIGINT) AS total
-  FROM documents WHERE lang IS NOT NULL
-  GROUP BY lang HAVING SUM(n_chars) > 0
-), s AS (
+# the UniMax water-fill level over `totals` (also in the published pipeline)
+_UNIMAX_WATERFILL_CTES = r"""), s AS (
   SELECT g, total, total * 2 AS cap,
          ROW_NUMBER() OVER (ORDER BY total * 2, g) AS i,
          COUNT(*) OVER () AS L,
@@ -4934,7 +4620,13 @@ WITH totals AS (
   FROM totals
 ), lvl AS (
   SELECT MIN(i) AS istar
-  FROM s WHERE (230000 - pref) / (L - i + 1) <= cap
+"""
+_UNIMAX_MIX_SQL = r"""
+WITH totals AS (
+  SELECT lang AS g, CAST(SUM(n_chars) AS BIGINT) AS total
+  FROM documents WHERE lang IS NOT NULL
+  GROUP BY lang HAVING SUM(n_chars) > 0
+""" + _UNIMAX_WATERFILL_CTES + r"""  FROM s WHERE (230000 - pref) / (L - i + 1) <= cap
 ), plan AS (
   SELECT s.g, s.total,
          ROUND(
@@ -5032,37 +4724,10 @@ def _published_pipeline_docs(spark, sf):
 _PUBLISHED_PIPELINE_SQL = r"""
 WITH base AS (
   SELECT doc_id, lang, text,
-         CASE WHEN text IS NULL OR trim(text) = '' THEN CAST([] AS VARCHAR[])
-              ELSE regexp_split_to_array(trim(text), '\s+') END AS t,
-         CASE WHEN text IS NULL THEN CAST([] AS VARCHAR[])
-              ELSE list_filter(list_transform(regexp_split_to_array(text, '\n'), x -> trim(x)), x -> x != '') END AS lines,
-         CASE WHEN text IS NULL THEN CAST([] AS VARCHAR[])
-              ELSE list_filter(list_transform(regexp_split_to_array(text, '\n\s*\n'), x -> trim(x)), x -> x != '') END AS paras,
-         COALESCE(len(text) - len(replace(text, '#', '')), 0) AS n_hash,
-         COALESCE(CAST((len(text) - len(replace(text, '...', ''))) / 3 AS BIGINT), 0) AS n_ell
-  FROM documents
-), gm AS (
+""" + _GOPHER_BASE_COLS + r"""), gm AS (
   SELECT doc_id,
-         len(t) AS n_words,
-         COALESCE(list_sum(list_transform(t, x -> len(x))), 0) AS sum_word_len,
-         len(list_filter(t, x -> regexp_matches(x, '[A-Za-z]'))) AS n_alpha_words,
-         n_hash + n_ell AS n_symbols,
-         len(lines) AS n_lines,
-         len(list_distinct(lines)) AS n_dl,
-         len(paras) AS n_paras,
-         len(list_distinct(paras)) AS n_dp,
-         len(list_filter(lines, x -> starts_with(x, '-') OR starts_with(x, '*') OR starts_with(x, '•'))) AS n_bullet,
-         len(list_filter(lines, x -> ends_with(x, '...') OR ends_with(x, '…'))) AS n_ell_lines,
-         NOT COALESCE(contains(lower(text), 'lorem ipsum'), FALSE)
-         AND NOT COALESCE(contains(lower(text), 'terms of use'), FALSE)
-         AND NOT COALESCE(contains(lower(text), 'privacy policy'), FALSE)
-         AND NOT COALESCE(contains(lower(text), 'cookie policy'), FALSE)
-         AND NOT COALESCE(contains(lower(text), 'javascript'), FALSE) AS rule_no_policy,
-         NOT COALESCE(contains(text, '{'), FALSE) AS rule_no_braces,
-         len(list_filter(lines, x -> ends_with(x, '.') OR ends_with(x, '!')
-             OR ends_with(x, '?') OR ends_with(x, '"'))) AS n_terminal
-  FROM base
-), gated AS (
+""" + _GOPHER_WORD_COLS + _GOPHER_LINE_COLS + r""",
+""" + _C4_RULE_COLS + r"""), gated AS (
   SELECT b.doc_id, b.lang, b.text
   FROM base b JOIN gm USING (doc_id)
   WHERE (gm.n_words >= 20 AND gm.n_words <= 100000)
@@ -5088,16 +4753,7 @@ WITH base AS (
   SELECT lang AS g, CAST(SUM(n_toks) AS BIGINT) AS total
   FROM kept WHERE lang IS NOT NULL
   GROUP BY lang HAVING SUM(n_toks) > 0
-), s AS (
-  SELECT g, total, total * 2 AS cap,
-         ROW_NUMBER() OVER (ORDER BY total * 2, g) AS i,
-         COUNT(*) OVER () AS L,
-         COALESCE(SUM(total * 2) OVER (ORDER BY total * 2, g
-           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS pref
-  FROM totals
-), lvl AS (
-  SELECT MIN(i) AS istar
-  FROM s WHERE (100000 - pref) / (L - i + 1) <= cap
+""" + _UNIMAX_WATERFILL_CTES + r"""  FROM s WHERE (100000 - pref) / (L - i + 1) <= cap
 ), plan AS (
   SELECT s.g,
          ROUND(
@@ -5143,18 +4799,12 @@ ORDER BY seq_id
 """
 
 
-def _retrieval_eval_embeddings(spark, sf):
-    """IR evaluation over a label-judged retrieval run
-    (operators/retrieval.retrieval_metrics): every 100th vector plays a
-    query, its relevance judgments are all same-label vectors
-    (known-topic search), the run is brute cosine top-10 (6-dp-rounded
-    score, id tie-break — the rank-stable form), and the slot hashes
-    recall@10 / precision@10 / reciprocal-rank per query. Broadcast
-    query batch × one corpus scan (hard_negatives' shape) + the
-    corpus-independent metric joins."""
-    from spark_streaming_sql_s3_connector_spark.operators.retrieval import (
-        retrieval_metrics,
-    )
+def _label_judged_run(spark, sf, graded=False):
+    """``(results, qrels)`` of the retrieval-eval keys: every 100th
+    vector plays a query, the run is brute cosine top-10 (6-dp-rounded
+    score, id tie-break — the rank-stable form), and the judgments are
+    all same-label vectors, with a synthetic ``grade`` 1..3
+    (``1 + vec_id % 3``) when ``graded``."""
     from spark_streaming_sql_s3_connector_spark.operators.similarity import (
         cosine_sim,
     )
@@ -5180,17 +4830,40 @@ def _retrieval_eval_embeddings(spark, sf):
         .where(F.col("rank") <= 10)
         .select(F.col("qid").alias("query_id"), F.col("did").alias("doc_id"), "rank")
     )
+    cols = [F.col("qid").alias("query_id"), F.col("vec_id").alias("doc_id")]
+    if graded:
+        cols.append((F.lit(1) + F.col("vec_id") % 3).cast("int").alias("grade"))
     qrels = (
         emb.crossJoin(F.broadcast(q))
         .where((F.col("vec_id") != F.col("qid")) & (F.col("label") == F.col("qlabel")))
-        .select(F.col("qid").alias("query_id"), F.col("vec_id").alias("doc_id"))
+        .select(*cols)
     )
+    return results, qrels
+
+
+def _retrieval_eval_embeddings(spark, sf):
+    """IR evaluation over a label-judged retrieval run
+    (operators/retrieval.retrieval_metrics): every 100th vector plays a
+    query, its relevance judgments are all same-label vectors
+    (known-topic search), the run is brute cosine top-10 (6-dp-rounded
+    score, id tie-break — the rank-stable form), and the slot hashes
+    recall@10 / precision@10 / reciprocal-rank per query. Broadcast
+    query batch × one corpus scan (hard_negatives' shape) + the
+    corpus-independent metric joins."""
+    from spark_streaming_sql_s3_connector_spark.operators.retrieval import (
+        retrieval_metrics,
+    )
+
+    results, qrels = _label_judged_run(spark, sf)
     return retrieval_metrics(results, qrels, "query_id", "doc_id", k=10).orderBy(
         "query_id"
     )
 
 
-_RETRIEVAL_EVAL_SQL = """
+# The retrieval-eval oracles' shared pieces: the run (`q`, `scored`,
+# `res`) up to the open `qrels AS (`, the judgment filter plus `reln`,
+# and the hit join plus the binary metric columns.
+_EVAL_RUN_CTES = """
 WITH q AS (
   SELECT vec_id AS qid, embedding::DOUBLE[] AS qv, label AS qlabel
   FROM embeddings WHERE vec_id % 100 = 1
@@ -5207,18 +4880,12 @@ WITH q AS (
     FROM scored
   ) WHERE rank <= 10
 ), qrels AS (
-  SELECT q.qid, c.vec_id AS did
-  FROM q, embeddings c WHERE c.vec_id != q.qid AND c.label = q.qlabel
+"""
+_EVAL_RELN_CTE = """  FROM q, embeddings c WHERE c.vec_id != q.qid AND c.label = q.qlabel
 ), reln AS (
   SELECT qid, COUNT(*) AS n_rel FROM qrels GROUP BY qid
-), hits AS (
-  -- DCG discounts: the same integer-picounit table
-  -- operators/retrieval.ndcg_discounts(10) embeds in the Spark plan
-  SELECT r.qid, COUNT(*) AS n_hits, MIN(r.rank) AS first_rank,
-         SUM(([1000000000000, 630929753571, 500000000000, 430676558073,
-               386852807235, 356207187108, 333333333333, 315464876786,
-               301029995664, 289064826318])[r.rank]) AS dcg
-  FROM res r JOIN qrels u ON r.qid = u.qid AND r.did = u.did
+), """
+_EVAL_METRIC_COLS = """  FROM res r JOIN qrels u ON r.qid = u.qid AND r.did = u.did
   GROUP BY r.qid
 )
 SELECT reln.qid AS query_id,
@@ -5227,7 +4894,16 @@ SELECT reln.qid AS query_id,
        ROUND(COALESCE(h.n_hits, 0) / reln.n_rel, 6) AS recall_at_k,
        ROUND(COALESCE(h.n_hits, 0) / 10.0, 6) AS precision_at_k,
        ROUND(COALESCE(1.0 / h.first_rank, 0), 6) AS reciprocal_rank,
-       ROUND(CAST(COALESCE(h.dcg, 0) AS DOUBLE)
+"""
+_RETRIEVAL_EVAL_SQL = _EVAL_RUN_CTES + """  SELECT q.qid, c.vec_id AS did
+""" + _EVAL_RELN_CTE + """hits AS (
+  -- DCG discounts: the same integer-picounit table
+  -- operators/retrieval.ndcg_discounts(10) embeds in the Spark plan
+  SELECT r.qid, COUNT(*) AS n_hits, MIN(r.rank) AS first_rank,
+         SUM(([1000000000000, 630929753571, 500000000000, 430676558073,
+               386852807235, 356207187108, 333333333333, 315464876786,
+               301029995664, 289064826318])[r.rank]) AS dcg
+""" + _EVAL_METRIC_COLS + """       ROUND(CAST(COALESCE(h.dcg, 0) AS DOUBLE)
              / ([1000000000000, 1630929753571, 2130929753571, 2561606311644,
                  2948459118879, 3304666305987, 3637999639320, 3953464516106,
                  4254494511770, 4543559338088])[LEAST(reln.n_rel, 10)], 6)
@@ -5347,27 +5023,7 @@ def _cross_corpus_dedup_docs(spark, sf):
 # same shingling/arithmetic as _NGRAM_JACCARD_SQL, sides split by
 # doc_id parity; the jaccard division has exact integer inputs so the
 # IEEE double (and its 6-dp round) agrees across engines
-_CROSS_CORPUS_DEDUP_SQL = r"""
-WITH toks AS (
-  SELECT doc_id,
-         CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-              ELSE regexp_split_to_array(trim(text), '\s+') END AS t
-  FROM documents
-), sh AS (
-  SELECT doc_id,
-         CASE WHEN len(t) >= 3 THEN list_distinct(
-                [array_to_string(t[i:i+2], ' ') for i in generate_series(1, len(t)-2)])
-              WHEN len(t) > 0 THEN [array_to_string(t, ' ')]
-              ELSE CAST([] AS VARCHAR[]) END AS s
-  FROM toks
-), ex AS (
-  SELECT doc_id, unnest(s) AS shingle FROM sh
-), ov AS (
-  SELECT a.doc_id AS id_new, b.doc_id AS id_base, COUNT(*) AS inter
-  FROM ex a JOIN ex b ON a.shingle = b.shingle
-  WHERE a.doc_id % 2 = 0 AND b.doc_id % 2 = 1
-  GROUP BY 1, 2
-), sz AS (SELECT doc_id, len(s) AS sz FROM sh)
+_CROSS_CORPUS_DEDUP_SQL = "\nWITH " + _SHINGLE_CTES + _CROSS_JACCARD_OV + r""")
 SELECT id_new, id_base,
        ROUND(inter * 1.0 / (sa.sz + sb.sz - inter), 6) AS jaccard_sim
 FROM ov
@@ -5649,26 +5305,7 @@ WITH newd AS (
 ), basek AS (
   SELECT DISTINCT md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS k
   FROM documents WHERE doc_id % 2 = 1
-), toks AS (
-  SELECT doc_id,
-         CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-              ELSE regexp_split_to_array(trim(text), '\s+') END AS t
-  FROM documents
-), sh AS (
-  SELECT doc_id,
-         CASE WHEN len(t) >= 3 THEN list_distinct(
-                [array_to_string(t[i:i+2], ' ') for i in generate_series(1, len(t)-2)])
-              WHEN len(t) > 0 THEN [array_to_string(t, ' ')]
-              ELSE CAST([] AS VARCHAR[]) END AS s
-  FROM toks
-), ex AS (
-  SELECT doc_id, unnest(s) AS shingle FROM sh
-), ov AS (
-  SELECT a.doc_id AS id_new, b.doc_id AS id_base, COUNT(*) AS inter
-  FROM ex a JOIN ex b ON a.shingle = b.shingle
-  WHERE a.doc_id % 2 = 0 AND b.doc_id % 2 = 1
-  GROUP BY 1, 2
-), sz AS (SELECT doc_id, len(s) AS sz FROM sh
+), """ + _SHINGLE_CTES + _CROSS_JACCARD_OV + r"""
 ), near AS (
   SELECT DISTINCT id_new AS doc_id
   FROM ov
@@ -5707,40 +5344,8 @@ def _retrieval_eval_graded(spark, sf):
     from spark_streaming_sql_s3_connector_spark.operators.retrieval import (
         retrieval_metrics,
     )
-    from spark_streaming_sql_s3_connector_spark.operators.similarity import (
-        cosine_sim,
-    )
-    from pyspark.sql import Window
 
-    emb = load_table(spark, sf, "embeddings").select("vec_id", "embedding", "label")
-    q = emb.select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").cast("array<double>").alias("qv"),
-        F.col("label").alias("qlabel"),
-    ).where(F.col("qid") % 100 == 1)
-    paired = emb.crossJoin(F.broadcast(q)).where(F.col("vec_id") != F.col("qid"))
-    scored = paired.select(
-        "qid",
-        F.col("vec_id").alias("did"),
-        F.round(
-            cosine_sim(F.col("embedding").cast("array<double>"), F.col("qv")), 6
-        ).alias("_cos"),
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("_cos").desc(), F.col("did").asc())
-    results = (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= 10)
-        .select(F.col("qid").alias("query_id"), F.col("did").alias("doc_id"), "rank")
-    )
-    qrels = (
-        emb.crossJoin(F.broadcast(q))
-        .where((F.col("vec_id") != F.col("qid")) & (F.col("label") == F.col("qlabel")))
-        .select(
-            F.col("qid").alias("query_id"),
-            F.col("vec_id").alias("doc_id"),
-            (F.lit(1) + F.col("vec_id") % 3).cast("int").alias("grade"),
-        )
-    )
+    results, qrels = _label_judged_run(spark, sf, graded=True)
     return retrieval_metrics(
         results, qrels, "query_id", "doc_id", k=10, grade_col="grade"
     ).orderBy("query_id")
@@ -5757,28 +5362,8 @@ def _graded_eval_sql() -> str:
 
     disc = ndcg_discounts(10)
     arr = "[" + ", ".join(str(d) for d in disc) + "]"
-    return f"""
-WITH q AS (
-  SELECT vec_id AS qid, embedding::DOUBLE[] AS qv, label AS qlabel
-  FROM embeddings WHERE vec_id % 100 = 1
-), scored AS (
-  SELECT q.qid, c.vec_id AS did,
-         ROUND(list_dot_product(c.embedding::DOUBLE[], q.qv)
-               / (sqrt(list_dot_product(c.embedding::DOUBLE[], c.embedding::DOUBLE[]))
-                  * sqrt(list_dot_product(q.qv, q.qv))), 6) AS cos
-  FROM q, embeddings c WHERE c.vec_id != q.qid
-), res AS (
-  SELECT qid, did, CAST(rank AS INT) AS rank FROM (
-    SELECT qid, did,
-           ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, did ASC) AS rank
-    FROM scored
-  ) WHERE rank <= 10
-), qrels AS (
-  SELECT q.qid, c.vec_id AS did, CAST(1 + c.vec_id % 3 AS INT) AS grade
-  FROM q, embeddings c WHERE c.vec_id != q.qid AND c.label = q.qlabel
-), reln AS (
-  SELECT qid, COUNT(*) AS n_rel FROM qrels GROUP BY qid
-), ideal AS (
+    return _EVAL_RUN_CTES + """  SELECT q.qid, c.vec_id AS did, CAST(1 + c.vec_id % 3 AS INT) AS grade
+""" + _EVAL_RELN_CTE + f"""ideal AS (
   SELECT qid, SUM(((1::BIGINT << grade) - 1) * ({arr})[irank]) AS idcg
   FROM (
     SELECT qid, grade,
@@ -5788,37 +5373,10 @@ WITH q AS (
 ), hits AS (
   SELECT r.qid, COUNT(*) AS n_hits, MIN(r.rank) AS first_rank,
          SUM(((1::BIGINT << u.grade) - 1) * ({arr})[r.rank]) AS dcg
-  FROM res r JOIN qrels u ON r.qid = u.qid AND r.did = u.did
-  GROUP BY r.qid
-)
-SELECT reln.qid AS query_id,
-       CAST(reln.n_rel AS BIGINT) AS n_rel,
-       CAST(COALESCE(h.n_hits, 0) AS BIGINT) AS n_hits,
-       ROUND(COALESCE(h.n_hits, 0) / reln.n_rel, 6) AS recall_at_k,
-       ROUND(COALESCE(h.n_hits, 0) / 10.0, 6) AS precision_at_k,
-       ROUND(COALESCE(1.0 / h.first_rank, 0), 6) AS reciprocal_rank,
-       ROUND(CAST(COALESCE(h.dcg, 0) AS DOUBLE) / i.idcg, 6) AS ndcg_at_k
+""" + _EVAL_METRIC_COLS + """       ROUND(CAST(COALESCE(h.dcg, 0) AS DOUBLE) / i.idcg, 6) AS ndcg_at_k
 FROM reln LEFT JOIN hits h USING (qid) JOIN ideal i USING (qid)
 ORDER BY query_id
 """
-
-
-def _term_stats_dir_for(sf: str) -> str:
-    """Deterministic on-disk cache for the persisted BM25 term-stats
-    state of one documents corpus — same source-identity keying as
-    :func:`_ann_index_dir_for`, so a regenerated corpus rebuilds
-    instead of serving stale statistics."""
-    import hashlib
-    import tempfile
-
-    src = os.path.join(sf, "documents.parquet")
-    try:
-        st = os.stat(src)
-        ident = f"{os.path.abspath(src)}:{st.st_size}:{st.st_mtime_ns}"
-    except OSError:
-        ident = os.path.abspath(src)
-    fp = hashlib.md5(f"{ident}:termstats-v3".encode()).hexdigest()[:16]
-    return os.path.join(tempfile.gettempdir(), "spark_graft_term_stats", fp)
 
 
 def _ensure_postings_state(spark, sf: str) -> str:
@@ -5834,7 +5392,9 @@ def _ensure_postings_state(spark, sf: str) -> str:
         term_stats_exist,
     )
 
-    stats_dir = _term_stats_dir_for(sf)
+    stats_dir = _source_cache_dir(
+        sf, "documents", "termstats-v3", "spark_graft_term_stats"
+    )
     if not (term_stats_exist(stats_dir) and postings_exist(stats_dir)):
         docs = load_table(spark, sf, "documents").select("doc_id", "text")
         term_stats_batch(docs, 0, stats_dir, "text", "doc_id",
@@ -5852,7 +5412,9 @@ def _ensure_ann_index(spark, sf: str) -> str:
         index_exists,
     )
 
-    index_dir = _ann_index_dir_for(sf)
+    index_dir = _source_cache_dir(
+        sf, "embeddings", "v2:c16-m16-k256", "spark_graft_ann_index"
+    )
     if not index_exists(index_dir):
         emb = load_table(spark, sf, "embeddings").where(F.col("vec_id") != 0)
         build_ann_index(
@@ -5862,38 +5424,11 @@ def _ensure_ann_index(spark, sf: str) -> str:
     return index_dir
 
 
-# exact-twin fused ids per (term-stats dir, ann-index dir) — the dirs
-# encode corpus identity (size+mtime fingerprint), so a regenerated
-# corpus recomputes. The self-check's ground truth is instrumentation,
-# not serving work: without this cache every repeat serve would pay the
-# full brute scan twin and the bench median could never show the
-# amortization the serving shape exists for.
-_EXACT_HYBRID_IDS: dict = {}
-
-
-def _hybrid_search_indexed_q(spark, sf):
-    """SERVING-shape hybrid search (r8 verdict task #3): RRF fusion of
-    the two AMORTIZED retriever halves — BM25 over persisted postings
-    state (``streaming/term_stats.bm25_search_postings``: every input
-    is a query-term slice of the inverted index, ZERO corpus scans —
-    query cost O(Σ df(term)), corpus-size independent) and ANN over the
-    persisted IVF-PQ index via ADC over-fetch + exact refine
-    (``operators/ann_index.ann_index_topk_refined``: bucket-pruned
-    code-only candidate fetch, then exact cosine over the
-    k·overfetch captured ids — PQ rank noise removed, only candidate
-    recall remains approximate). Both states build once per corpus
-    (disk-cached, source-identity keyed) — the vector-DB /
-    search-engine serving shape, vs ``hybrid_search_docs``'s
-    ground-truth scan twin (two corpus stats scans + brute cosine over
-    every vector). Compare the two keys' bench medians for the
-    amortization win; `tests/test_retrieval.py`'s law test pins
-    fused-top-15 jaccard overlap vs the scan twin.
-
-    Rows-only key (ANN serving is not SQL-expressible); carries a
-    self-checking ``overlap_ok`` column: jaccard@15 vs the exact twin
-    computed in-plan must clear 0.8 (the lex halves are law-identical;
-    the refined sem half keeps rank order exact over its captured
-    candidates)."""
+def _indexed_hybrid_fused(spark, sf):
+    """``(stats_dir, index_dir, fused)``: the RRF-fused top-15 of the
+    two amortized retriever halves — BM25 over the persisted postings
+    state and ANN over the persisted IVF-PQ index via ADC over-fetch +
+    exact refine — both built once per corpus."""
     from spark_streaming_sql_s3_connector_spark.operators.ann_index import (
         ann_index_topk_refined,
     )
@@ -5933,7 +5468,42 @@ def _hybrid_search_indexed_q(spark, sf):
         [F.col("cosine").desc()],
         "doc_id",
     )
-    fused = rrf_fuse([lex, sem], "doc_id", k=60, top_k=15)
+    return stats_dir, index_dir, rrf_fuse([lex, sem], "doc_id", k=60, top_k=15)
+
+
+# exact-twin fused ids per (term-stats dir, ann-index dir) — the dirs
+# encode corpus identity (size+mtime fingerprint), so a regenerated
+# corpus recomputes. The self-check's ground truth is instrumentation,
+# not serving work: without this cache every repeat serve would pay the
+# full brute scan twin and the bench median could never show the
+# amortization the serving shape exists for.
+_EXACT_HYBRID_IDS: dict = {}
+
+
+def _hybrid_search_indexed_q(spark, sf):
+    """SERVING-shape hybrid search (r8 verdict task #3): RRF fusion of
+    the two AMORTIZED retriever halves — BM25 over persisted postings
+    state (``streaming/term_stats.bm25_search_postings``: every input
+    is a query-term slice of the inverted index, ZERO corpus scans —
+    query cost O(Σ df(term)), corpus-size independent) and ANN over the
+    persisted IVF-PQ index via ADC over-fetch + exact refine
+    (``operators/ann_index.ann_index_topk_refined``: bucket-pruned
+    code-only candidate fetch, then exact cosine over the
+    k·overfetch captured ids — PQ rank noise removed, only candidate
+    recall remains approximate). Both states build once per corpus
+    (disk-cached, source-identity keyed) — the vector-DB /
+    search-engine serving shape, vs ``hybrid_search_docs``'s
+    ground-truth scan twin (two corpus stats scans + brute cosine over
+    every vector). Compare the two keys' bench medians for the
+    amortization win; `tests/test_retrieval.py`'s law test pins
+    fused-top-15 jaccard overlap vs the scan twin.
+
+    Rows-only key (ANN serving is not SQL-expressible); carries a
+    self-checking ``overlap_ok`` column: jaccard@15 vs the exact twin
+    computed in-plan must clear 0.8 (the lex halves are law-identical;
+    the refined sem half keeps rank order exact over its captured
+    candidates)."""
+    stats_dir, index_dir, fused = _indexed_hybrid_fused(spark, sf)
     # in-plan overlap self-check vs the exact scan twin's fused ids
     # (computed once per corpus — see _EXACT_HYBRID_IDS)
     ck = (stats_dir, index_dir)
@@ -6068,37 +5638,7 @@ def _hybrid_serve_only(spark, sf):
     the correctness witness; this key is the number to read for "what
     does a hybrid query cost once the states are warm" (and the SCALING
     row that must stay flat while the scan twin grows)."""
-    from spark_streaming_sql_s3_connector_spark.operators.ann_index import (
-        ann_index_topk_refined,
-    )
-    from spark_streaming_sql_s3_connector_spark.operators.retrieval import (
-        rrf_fuse,
-        with_rank,
-    )
-    from spark_streaming_sql_s3_connector_spark.streaming.term_stats import (
-        bm25_search_postings,
-    )
-
-    stats_dir = _ensure_postings_state(spark, sf)
-    index_dir = _ensure_ann_index(spark, sf)
-    lex = with_rank(
-        bm25_search_postings(
-            spark, ["spark", "join", "stream", "vector"], stats_dir,
-            id_col="doc_id", top_k=20,
-        ),
-        [F.col("score").desc()],
-        "doc_id",
-    )
-    emb = load_table(spark, sf, "embeddings").where(F.col("vec_id") != 0)
-    sem = with_rank(
-        ann_index_topk_refined(
-            spark, index_dir, emb, "embedding", "vec_id",
-            _query_vector(spark, sf), k=20, n_probe=16, overfetch=4,
-        ).withColumnRenamed("neighbor_id", "doc_id"),
-        [F.col("cosine").desc()],
-        "doc_id",
-    )
-    return rrf_fuse([lex, sem], "doc_id", k=60, top_k=15).select(
+    return _indexed_hybrid_fused(spark, sf)[2].select(
         "doc_id", F.round("rrf_score", 9).alias("rrf_score"), "n_lists"
     )
 
@@ -6231,28 +5771,6 @@ def _hybrid_serve_batch(spark, sf):
     )
 
 
-def _incremental_curation_dir_for(sf: str) -> str:
-    """Disk cache for the streamed incremental-curation pipeline state
-    of one documents corpus — same source-identity keying as
-    :func:`_term_stats_dir_for`."""
-    import hashlib
-    import tempfile
-
-    src = os.path.join(sf, "documents.parquet")
-    try:
-        st = os.stat(src)
-        ident = f"{os.path.abspath(src)}:{st.st_size}:{st.st_mtime_ns}"
-    except OSError:
-        ident = os.path.abspath(src)
-    # v2 (r13): clustered delta writes — rebuild so the prewarmed state
-    # carries the one-file-per-shard layout the trigger now produces
-    # v3 (r14): the gated plane is folded into the pack manifest
-    # (keep_cols) — the manifest schema changed, so stale v2 states
-    # (separate gated dirs, 6-column manifests) must not be replayed
-    fp = hashlib.md5(f"{ident}:curation-incr-v3".encode()).hexdigest()[:16]
-    return os.path.join(tempfile.gettempdir(), "spark_graft_curation_incr", fp)
-
-
 def _ensure_incremental_curation(spark, sf: str) -> str:
     """Stream the documents corpus ONCE per corpus (disk-cached) through
     the full r11 continuous-curation lifecycle — 3 doc-id-range batches
@@ -6269,7 +5787,14 @@ def _ensure_incremental_curation(spark, sf: str) -> str:
         read_pointer as _pack_ptr,
     )
 
-    pdir = _incremental_curation_dir_for(sf)
+    # v2 (r13): clustered delta writes — rebuild so the prewarmed state
+    # carries the one-file-per-shard layout the trigger now produces
+    # v3 (r14): the gated plane is folded into the pack manifest
+    # (keep_cols) — the manifest schema changed, so stale v2 states
+    # (separate gated dirs, 6-column manifests) must not be replayed
+    pdir = _source_cache_dir(
+        sf, "documents", "curation-incr-v3", "spark_graft_curation_incr"
+    )
     done = read_frozen_thresholds(pdir) is not None and _pack_ptr(
         os.path.join(pdir, "pack_state", "pack")
     ) is not None
@@ -6308,6 +5833,23 @@ def _incr_curation_batches(spark, sf: str):
     ]
 
 
+def _replay_curation_trigger(spark, sf) -> str:
+    """Replay the lifecycle's last batch (id 2) against the prewarmed
+    pipeline state, maintenance cadence off, and return the pipeline
+    dir."""
+    from spark_streaming_sql_s3_connector_spark.streaming.curation import (
+        process_curation_batch_incremental,
+    )
+
+    pdir = _ensure_incremental_curation(spark, sf)
+    batch = _incr_curation_batches(spark, sf)[2]
+    process_curation_batch_incremental(
+        batch, 2, pdir,
+        expected_total_items=1_000_000, monitor=False, vacuum_every=None,
+    )
+    return pdir
+
+
 def _curation_trigger_serve_only(spark, sf):
     """STEADY-STATE wall of ONE incremental-curation trigger (r11
     verdict Next #5): replay the lifecycle's last batch against the
@@ -6335,16 +5877,10 @@ def _curation_trigger_serve_only(spark, sf):
         _gate_frozen,
         _gated_dir,
         _score,
-        process_curation_batch_incremental,
         read_frozen_thresholds,
     )
 
-    pdir = _ensure_incremental_curation(spark, sf)
-    batch = _incr_curation_batches(spark, sf)[2]
-    process_curation_batch_incremental(
-        batch, 2, pdir,
-        expected_total_items=1_000_000, monitor=False, vacuum_every=None,
-    )
+    pdir = _replay_curation_trigger(spark, sf)
     stored = spark.read.parquet(_gated_dir(pdir, 2)).select("doc_id", "lang")
     want = _gate_frozen(
         _score(_batch_survivors(spark, pdir, 2, "doc_id")),
@@ -6380,16 +5916,10 @@ def _curation_trigger_bare(spark, sf):
     sidecar (`read_trigger_timings`)."""
     from spark_streaming_sql_s3_connector_spark.streaming.curation import (
         _gated_dir,
-        process_curation_batch_incremental,
         read_trigger_timings,
     )
 
-    pdir = _ensure_incremental_curation(spark, sf)
-    batch = _incr_curation_batches(spark, sf)[2]
-    process_curation_batch_incremental(
-        batch, 2, pdir,
-        expected_total_items=1_000_000, monitor=False, vacuum_every=None,
-    )
+    pdir = _replay_curation_trigger(spark, sf)
     t = read_trigger_timings(pdir, 2) or {}
     timings_ok = bool(
         {"line_screen", "exact_screen", "finalize_pack", "total"} <= set(t)
@@ -6401,23 +5931,6 @@ def _curation_trigger_bare(spark, sf):
         .withColumn("timings_ok", F.lit(timings_ok))
         .orderBy("lang")
     )
-
-
-def _ann_lifecycle_dir_for(sf: str) -> str:
-    """Disk cache for the prewarmed self-refreshing ANN lifecycle of
-    one embeddings corpus — same source-identity keying as
-    :func:`_incremental_curation_dir_for`."""
-    import hashlib
-    import tempfile
-
-    src = os.path.join(sf, "embeddings.parquet")
-    try:
-        st = os.stat(src)
-        ident = f"{os.path.abspath(src)}:{st.st_size}:{st.st_mtime_ns}"
-    except OSError:
-        ident = os.path.abspath(src)
-    fp = hashlib.md5(f"{ident}:ann-life-v2".encode()).hexdigest()[:16]
-    return os.path.join(tempfile.gettempdir(), "spark_graft_ann_life", fp)
 
 
 def _ensure_ann_lifecycle(spark, sf: str) -> str:
@@ -6434,7 +5947,7 @@ def _ensure_ann_lifecycle(spark, sf: str) -> str:
         process_ann_lifecycle_batch,
     )
 
-    root = _ann_lifecycle_dir_for(sf)
+    root = _source_cache_dir(sf, "embeddings", "ann-life-v2", "spark_graft_ann_life")
     try:
         load_index_meta(_life_index_dir(root))
         return root

@@ -17,6 +17,10 @@ from dataclasses import dataclass, field
 from typing import Callable, Optional
 
 from spark_streaming_sql_s3_connector_spark.models import FileMetadata
+from spark_streaming_sql_s3_connector_spark.queueing.events import (
+    S3EventNotCreated,
+    S3EventParseError,
+)
 
 
 def _nearest_rank(data: list[float], q: float) -> float:
@@ -191,8 +195,59 @@ class QueueClientMetrics:
 class QueueClient(ABC):
     """Driver-side queue consumer. Implementations must be thread-safe."""
 
-    def __init__(self) -> None:
+    def __init__(
+        self,
+        visibility_timeout_seconds: int = 60,
+        keep_message_for_consumer_error: bool = False,
+    ) -> None:
         self.metrics = QueueClientMetrics()
+        self._visibility_timeout = visibility_timeout_seconds
+        self._keep_for_consumer_error = keep_message_for_consumer_error
+
+    def _handle_message(
+        self,
+        msg: QueueMessage,
+        consumer: ConsumerCallback,
+        parse: Callable[..., FileMetadata],
+    ) -> bool:
+        """Parse one received message with ``parse`` and hand its file to
+        ``consumer``; True when consumed. A not-created event is deleted.
+        A parse failure or a consumer exception keeps the message for
+        redelivery after the visibility timeout when
+        ``keepMessageForConsumerError`` is set (DLQ debugging), else
+        deletes it. A consumer that returns False has already routed the
+        message (visibility retry or delete). Each client passes its own
+        module's ``parse_s3_event``, looked up per call, so a wrapper
+        installed on that module attribute (the span tracer's) sees every
+        parse."""
+        try:
+            meta = parse(msg.body, message_id=msg.receipt_handle)
+        except S3EventNotCreated:
+            self.metrics.incr("discarded_messages")
+            self.delete_messages([msg.receipt_handle])
+            return False
+        except S3EventParseError:
+            self.metrics.incr("parse_failed_messages")
+        else:
+            self.metrics.incr("parsed_messages")
+            on_fetch_thread = _on_async_fetch_thread()
+            try:
+                ok = consumer(meta)
+            except Exception:
+                self.metrics.incr("consume_failed_messages")
+                if on_fetch_thread:
+                    self.metrics.incr("fetch_thread_consume_failed_messages")
+            else:
+                if ok:
+                    self.metrics.incr("consumed_messages")
+                    if on_fetch_thread:
+                        self.metrics.incr("fetch_thread_consumed_messages")
+                return ok
+        if self._keep_for_consumer_error:
+            self.set_message_visibility(msg.receipt_handle, self._visibility_timeout)
+        else:
+            self.delete_messages([msg.receipt_handle])
+        return False
 
     @abstractmethod
     def fetch(self, consumer: ConsumerCallback, wait_timeout_seconds: float, max_files: Optional[int]) -> int:

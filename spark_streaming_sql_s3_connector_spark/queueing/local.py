@@ -21,12 +21,9 @@ from spark_streaming_sql_s3_connector_spark.queueing.base import (
     ConsumerCallback,
     QueueClient,
     QueueMessage,
-    _on_async_fetch_thread,
     timed,
 )
 from spark_streaming_sql_s3_connector_spark.queueing.events import (
-    S3EventNotCreated,
-    S3EventParseError,
     make_s3_event_body,
     parse_s3_event,
 )
@@ -43,11 +40,9 @@ class LocalFileQueueClient(QueueClient):
         visibility_timeout_seconds: int = 60,
         keep_message_for_consumer_error: bool = False,
     ):
-        super().__init__()
+        super().__init__(visibility_timeout_seconds, keep_message_for_consumer_error)
         self._dir = queue_dir_from_url(queue_url)
         os.makedirs(self._dir, exist_ok=True)
-        self._visibility_timeout = visibility_timeout_seconds
-        self._keep_for_consumer_error = keep_message_for_consumer_error
 
     # -- producer side (used by tests / fixtures) --
 
@@ -127,41 +122,9 @@ class LocalFileQueueClient(QueueClient):
             if not batch:
                 break  # local dir has no long-poll latency: empty means drained
             self.metrics.incr("received_messages", len(batch))
-            on_fetch_thread = _on_async_fetch_thread()
             for msg in batch:
-                try:
-                    meta = parse_s3_event(msg.body, message_id=msg.receipt_handle)
-                except S3EventNotCreated:
-                    self.metrics.incr("discarded_messages")
-                    self.delete_messages([msg.receipt_handle])
-                    continue
-                except S3EventParseError:
-                    self.metrics.incr("parse_failed_messages")
-                    if self._keep_for_consumer_error:
-                        self.set_message_visibility(msg.receipt_handle, self._visibility_timeout)
-                    else:
-                        self.delete_messages([msg.receipt_handle])
-                    continue
-                self.metrics.incr("parsed_messages")
-                try:
-                    ok = consumer(meta)
-                except Exception:
-                    # consumer error: keep for DLQ debugging or drop
-                    self.metrics.incr("consume_failed_messages")
-                    if on_fetch_thread:
-                        self.metrics.incr("fetch_thread_consume_failed_messages")
-                    if self._keep_for_consumer_error:
-                        self.set_message_visibility(msg.receipt_handle, self._visibility_timeout)
-                    else:
-                        self.delete_messages([msg.receipt_handle])
-                    continue
-                if ok:
-                    self.metrics.incr("consumed_messages")
-                    if on_fetch_thread:
-                        self.metrics.incr("fetch_thread_consumed_messages")
+                if self._handle_message(msg, consumer, parse_s3_event):
                     consumed += 1
-                # not ok → consumer already decided (validator routed to
-                # visibility-retry or delete); nothing to do here
             # stop conditions AFTER draining the received batch — every
             # received message reaches the consumer so its file lands in the
             # cache (the batch cut, not the fetch, enforces

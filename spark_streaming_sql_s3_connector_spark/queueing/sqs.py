@@ -6,9 +6,11 @@ Production analog of the reference's AsyncSqsClientImpl
 cap, scala:484), batched deletes of 10 with per-entry fallback
 (scala:238-319), visibility extension for retry-later (scala:442-464).
 The default client is boto3's (imported at construction; ImportError with
-a hint when it is missing). The drain loop is this class's own, not shared
-with LocalFileQueueClient; tests drive the class through the injected
-``sqs_client`` (tests/test_sqs_client.py, tests/test_sqs_stateful.py).
+a hint when it is missing). The drain loop is this class's own; the
+per-message parse → consume → keep-or-delete handling is
+``QueueClient._handle_message``, shared with LocalFileQueueClient. Tests
+drive the class through the injected ``sqs_client``
+(tests/test_sqs_client.py, tests/test_sqs_stateful.py).
 """
 
 from __future__ import annotations
@@ -21,14 +23,9 @@ from spark_streaming_sql_s3_connector_spark.queueing.base import (
     ConsumerCallback,
     QueueClient,
     QueueMessage,
-    _on_async_fetch_thread,
     timed,
 )
-from spark_streaming_sql_s3_connector_spark.queueing.events import (
-    S3EventNotCreated,
-    S3EventParseError,
-    parse_s3_event,
-)
+from spark_streaming_sql_s3_connector_spark.queueing.events import parse_s3_event
 
 MAX_SQS_BATCH_SIZE = 10  # SQS hard cap (AsyncSqsClientImpl.scala:484)
 MAX_POOL_SIZE = 200  # reference hard cap (AsyncSqsClientImpl.scala:483)
@@ -51,7 +48,7 @@ class SqsQueueClient(QueueClient):
         (AsyncSqsClientSuite.scala:39-884). Default: boto3 with adaptive
         retry, the default-credentials chain covering the reference's
         retrying provider (ConnectorAwsCredentialsProvider.scala:35-67)."""
-        super().__init__()
+        super().__init__(visibility_timeout_seconds, keep_message_for_consumer_error)
         if sqs_client is None:
             try:
                 import boto3
@@ -68,8 +65,6 @@ class SqsQueueClient(QueueClient):
         self._sqs = sqs_client
         self._queue_url = queue_url
         self._long_poll = long_poll_wait_seconds
-        self._visibility_timeout = visibility_timeout_seconds
-        self._keep_for_consumer_error = keep_message_for_consumer_error
         self._pool = concurrent.futures.ThreadPoolExecutor(
             max_workers=min(max_concurrency, MAX_POOL_SIZE), thread_name_prefix="sqs-fetch"
         )
@@ -92,39 +87,6 @@ class SqsQueueClient(QueueClient):
             for m in resp.get("Messages", [])
         ]
 
-    def _handle_message(self, msg: QueueMessage, consumer: ConsumerCallback) -> bool:
-        on_fetch_thread = _on_async_fetch_thread()
-        try:
-            meta = parse_s3_event(msg.body, message_id=msg.receipt_handle)
-        except S3EventNotCreated:
-            self.metrics.incr("discarded_messages")
-            self.delete_messages([msg.receipt_handle])
-            return False
-        except S3EventParseError:
-            self.metrics.incr("parse_failed_messages")
-            if self._keep_for_consumer_error:
-                self.set_message_visibility(msg.receipt_handle, self._visibility_timeout)
-            else:
-                self.delete_messages([msg.receipt_handle])
-            return False
-        self.metrics.incr("parsed_messages")
-        try:
-            ok = consumer(meta)
-        except Exception:
-            self.metrics.incr("consume_failed_messages")
-            if on_fetch_thread:
-                self.metrics.incr("fetch_thread_consume_failed_messages")
-            if self._keep_for_consumer_error:
-                self.set_message_visibility(msg.receipt_handle, self._visibility_timeout)
-            else:
-                self.delete_messages([msg.receipt_handle])
-            return False
-        if ok:
-            self.metrics.incr("consumed_messages")
-            if on_fetch_thread:
-                self.metrics.incr("fetch_thread_consumed_messages")
-        return ok
-
     def fetch(self, consumer: ConsumerCallback, wait_timeout_seconds: float, max_files: Optional[int]) -> int:
         """Concurrent drain: fan out receives on the pool until the queue is
         empty, the timeout elapses, or max_files messages were consumed —
@@ -145,7 +107,7 @@ class SqsQueueClient(QueueClient):
                 break
             self.metrics.incr("received_messages", len(msgs))
             for msg in msgs:
-                if self._handle_message(msg, consumer):
+                if self._handle_message(msg, consumer, parse_s3_event):
                     consumed += 1
             # stop AFTER the received batch is fully consumed into the cache
             if max_files is not None and consumed >= max_files:

@@ -42,6 +42,12 @@ MAX_BATCH_TO_REMOVE_PER_ADD = 20
 VERSION = 1
 
 
+def _gc_key(batch_ts: int, file_ts) -> int:
+    """The horizon a batch must fall below to be collected: its batch ts
+    and every file ts (an empty batch counts its files at 0)."""
+    return max(batch_ts, max(file_ts, default=0))
+
+
 class MetadataLogHoleError(RuntimeError):
     """Missing batch inside a requested range (RocksDBS3SourceLog.scala:352-356)."""
 
@@ -72,8 +78,10 @@ class JsonMetadataLog:
         self.histograms = {"add_ms": LatencyHistogram()}
         # path -> max logged timestamp over the retained batches
         self._seen: dict[str, int] = {}
-        # batchId -> batch timestamp (for bounded GC without re-reading files)
-        self._batch_ts: dict[int, int] = {}
+        # batchId -> GC key: max(batch ts, max file ts). A batch is
+        # collectable once its key is below the horizon, so the bounded GC
+        # reads a batch file only to delete it.
+        self._gc_ts: dict[int, int] = {}
         self._recover()
 
     # ---------- recovery ----------
@@ -95,7 +103,9 @@ class JsonMetadataLog:
             doc = self._read_batch_doc(batch_id)
             if doc is None:
                 continue
-            self._batch_ts[batch_id] = doc["timestamp"]
+            self._gc_ts[batch_id] = _gc_key(
+                doc["timestamp"], (int(e["timestamp"]) for e in doc["entries"])
+            )
             for e in doc["entries"]:
                 self._track(e["path"], int(e["timestamp"]))
 
@@ -139,7 +149,7 @@ class JsonMetadataLog:
             # under this lock (single-writer checkpoint contract)
             if not self._fs.write_atomic(target, json.dumps(doc), overwrite=False):
                 return False
-            self._batch_ts[batch_id] = ts
+            self._gc_ts[batch_id] = _gc_key(ts, (e.timestamp for e in file_entries))
             for e in file_entries:
                 self._track(e.path, e.timestamp)
             return True
@@ -149,24 +159,21 @@ class JsonMetadataLog:
         MAX_BATCH_TO_REMOVE_PER_ADD batches whose batch timestamp AND max
         file timestamp are both below the horizon."""
         removed = 0
-        for batch_id in sorted(self._batch_ts):
+        for batch_id in sorted(self._gc_ts):
             if removed >= MAX_BATCH_TO_REMOVE_PER_ADD:
                 break
-            if self._batch_ts[batch_id] >= last_purge_timestamp:
+            if self._gc_ts[batch_id] >= last_purge_timestamp:
                 continue
             doc = self._read_batch_doc(batch_id)
+            self._gc_ts.pop(batch_id)
             if doc is None:
-                self._batch_ts.pop(batch_id, None)
                 continue
-            max_file_ts = max((int(e["timestamp"]) for e in doc["entries"]), default=0)
-            if max_file_ts < last_purge_timestamp:
-                self._fs.delete(self._batch_path(batch_id))
-                self._batch_ts.pop(batch_id, None)
-                for e in doc["entries"]:
-                    # drop from seen index only if not re-logged with a newer ts
-                    if self._seen.get(e["path"], 0) <= int(e["timestamp"]):
-                        self._seen.pop(e["path"], None)
-                removed += 1
+            self._fs.delete(self._batch_path(batch_id))
+            for e in doc["entries"]:
+                # drop from seen index only if not re-logged with a newer ts
+                if self._seen.get(e["path"], 0) <= int(e["timestamp"]):
+                    self._seen.pop(e["path"], None)
+            removed += 1
         return removed
 
     # ---------- read path ----------
@@ -192,7 +199,7 @@ class JsonMetadataLog:
 
     def get_latest_batch_id(self) -> Optional[int]:
         with self._lock:
-            return max(self._batch_ts) if self._batch_ts else None
+            return max(self._gc_ts) if self._gc_ts else None
 
     def get_latest(self) -> Optional[tuple[int, list[FileEntry]]]:
         bid = self.get_latest_batch_id()

@@ -586,7 +586,7 @@ def refresh_lifecycle_if_drifted(
     wall tracks corpus size, not whether synthetic drift fired);
     returns the observed shift, or -1.0 when no window exists yet.
 
-    Stage attribution (r14, the curation trigger's `_StageClock`
+    Stage attribution (r14, the curation trigger's `StageClock`
     pattern — it found that trigger's sliver-file disease in one
     round): ``drift_check`` / ``fold`` / ``rebuild`` / ``pointer_flip``
     wall seconds accumulate into ``clock`` when the caller passes one

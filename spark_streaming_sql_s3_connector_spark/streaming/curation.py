@@ -68,12 +68,6 @@ def _timings_dir(pipeline_dir: str) -> str:
     return os.path.join(pipeline_dir, "_timings")
 
 
-def _span(clock: Optional["_StageClock"], stage: str):
-    import contextlib
-
-    return clock(stage) if clock is not None else contextlib.nullcontext()
-
-
 class _scoped_conf:
     """Set a session conf for the duration of one trigger, restoring the
     prior EFFECTIVE value on exit (including on error). Used to switch
@@ -105,24 +99,6 @@ class _scoped_conf:
             except Exception:
                 self._spark.conf.set(self._key, self._old)
         return False
-
-
-# r14: the clock/plane machinery moved to streaming/stage_timings.py so
-# the ANN lifecycle shares the exact discipline; these aliases keep the
-# r13 surface (tests, bench) stable
-_TIMINGS_KEEP = stage_timings.KEEP
-_StageClock = stage_timings.StageClock
-
-
-def _write_trigger_timings(
-    pipeline_dir: str, batch_id: int, clock: _StageClock
-) -> None:
-    """Persist one trigger's per-stage wall seconds under
-    ``_timings/batch=<id>`` (atomic, replay-overwrites) and prune
-    beyond the last ``_TIMINGS_KEEP`` batches — the plane is bounded
-    observability, not durable state, so it ages like the reference's
-    rolling metrics window rather than growing with trigger count."""
-    stage_timings.write_stage_timings(_timings_dir(pipeline_dir), batch_id, clock)
 
 
 def read_trigger_timings(
@@ -179,7 +155,7 @@ def process_curation_batch(
     lang_col: str = "lang",
     expected_total_items: int = 1_000_000,
     monitor: bool = True,
-    clock: Optional[_StageClock] = None,
+    clock: Optional[stage_timings.StageClock] = None,
     defer_bitmaps: Optional[list] = None,
     handoff_docs: bool = False,
 ):
@@ -226,7 +202,7 @@ def process_curation_batch(
 
     def _meta_and_monitor() -> None:
         # (doc_id, lang) side table for the finalization gate
-        with _span(clock, "meta"):
+        with stage_timings.span(clock, "meta"):
             meta = batch.select(F.col(id_col), F.col(lang_col))
             _concat_plane(os.path.join(pipeline_dir, "_meta")).write_schema_once(
                 meta.schema
@@ -240,7 +216,7 @@ def process_curation_batch(
                 profile_batch,
             )
 
-            with _span(clock, "monitor"):
+            with stage_timings.span(clock, "monitor"):
                 profile_batch(
                     batch.select(
                         F.col(id_col),
@@ -266,7 +242,7 @@ def process_curation_batch(
 
         def _line_screen() -> None:
             nonlocal docs_df, line_cleanup
-            with _span(clock, "line_screen"):
+            with stage_timings.span(clock, "line_screen"):
                 docs_df, line_cleanup = line_dedup.process_batch(
                     batch.select(F.col(id_col), F.col(text_col)),
                     batch_id,
@@ -283,7 +259,7 @@ def process_curation_batch(
         # phase 2: line-screen plane writes ∥ the exact screen over the
         # SAME cached rebuilt-docs rows (chain semantics unchanged: the
         # frame is exactly what lands under _docs/batch=<id>)
-        with _span(clock, "exact_screen"):
+        with stage_timings.span(clock, "exact_screen"):
             run_concurrently(
                 *line_writes,
                 lambda: exact_dedup.process_batch(
@@ -299,7 +275,7 @@ def process_curation_batch(
         if caller_owns_flush:
             flushed = True  # ownership (flush + cleanup) is the caller's
         else:
-            with _span(clock, "bitmap_flush"):
+            with stage_timings.span(clock, "bitmap_flush"):
                 exact_dedup.flush_bitmap_updates(spark, deferred)
                 flushed = True
         ok = True
@@ -737,7 +713,7 @@ def finalize_curation_batch(
     frac: float = 0.4,
     capacity: int = 128,
     num_shards: int = 8,
-    clock: Optional[_StageClock] = None,
+    clock: Optional[stage_timings.StageClock] = None,
     docs_df: Optional[DataFrame] = None,
 ) -> None:
     """Incrementally finalize ONE committed micro-batch (call after
@@ -755,7 +731,7 @@ def finalize_curation_batch(
         pack_batch_incremental,
     )
 
-    with _span(clock, "finalize_gate"):
+    with stage_timings.span(clock, "finalize_gate"):
         scored = _score(
             _batch_survivors(spark, pipeline_dir, batch_id, id_col, docs_df=docs_df)
         )
@@ -770,7 +746,7 @@ def finalize_curation_batch(
     # `gated` now has a single consumer, so the persist went with it
     # (pack_batch_incremental caches its own packed frame for the
     # manifest + cursor writes).
-    with _span(clock, "finalize_pack"):
+    with stage_timings.span(clock, "finalize_pack"):
         pack_batch_incremental(
             gated,
             batch_id,
@@ -876,7 +852,7 @@ def process_curation_batch_incremental(
     under AQE with nothing to re-plan (see `_scoped_conf`; ~19%
     measured at sf0.01). Set False if other queries share the session
     concurrently and must keep AQE mid-trigger."""
-    clock = _StageClock()
+    clock = stage_timings.StageClock()
     import contextlib
 
     aqe_guard = (
@@ -928,7 +904,7 @@ def _process_curation_batch_incremental_inner(
         # `total`.
         def _flush():
             nonlocal flushed
-            with _span(clock, "bitmap_flush"):
+            with stage_timings.span(clock, "bitmap_flush"):
                 exact_dedup.flush_bitmap_updates(batch.sparkSession, deferred)
                 flushed = True
 
@@ -963,7 +939,8 @@ def _process_curation_batch_incremental_inner(
             compact_curation_outputs(
                 batch.sparkSession, pipeline_dir, upto_batch=batch_id
             )
-    _write_trigger_timings(pipeline_dir, batch_id, clock)
+    # per-stage wall seconds under _timings/batch=<id> (bounded window)
+    stage_timings.write_stage_timings(_timings_dir(pipeline_dir), batch_id, clock)
 
 
 def streaming_curation_incremental(

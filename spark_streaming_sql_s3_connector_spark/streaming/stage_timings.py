@@ -1,6 +1,6 @@
 """Per-trigger stage attribution, shared by every streaming trigger loop.
 
-The r13 curation trigger grew a `_StageClock` + persisted `_timings`
+The r13 curation trigger grew a `StageClock` + persisted `_timings`
 plane and the instrumentation found a tasks×shards sliver-file disease
 within one round; r14 promotes the pattern to a shared module so other
 trigger loops (the ANN lifecycle first) get the same attribution

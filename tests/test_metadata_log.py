@@ -122,3 +122,33 @@ def test_clean_log_caps_batches_per_add(log_factory):
     log.add(n, entries(n, ("fresh", 20_000)), timestamp=20_000)
     remaining = [i for i in range(n) if log.get(i) is not None]
     assert len(remaining) == 5  # only 20 removed in one add
+
+
+def test_clean_log_reads_no_guarded_batch(log_factory, monkeypatch):
+    """A batch below the horizon whose newest file is not stays, and the
+    bounded GC decides that from memory: later adds read no batch file
+    (re-reading every guarded batch on every add made 2,000 reads here)."""
+    purge_ts = [0]
+    log = log_factory(purge_timestamp_provider=lambda: purge_ts[0])
+    for i in range(200):
+        log.add(i, entries(i, (f"keep{i}", 10_000)), timestamp=100)
+    purge_ts[0] = 400
+    reads = []
+    real_read = log._fs.read_text
+    monkeypatch.setattr(
+        log._fs, "read_text", lambda path: reads.append(path) or real_read(path)
+    )
+    for i in range(200, 210):
+        assert log.add(i, entries(i, (f"new{i}", 600)), timestamp=600)
+    assert reads == []
+    assert all(log.get(i) is not None for i in range(200))
+    assert log.get_file("keep0") == 10_000
+    # once the horizon passes the guarded files, the next add collects
+    # them — at most MAX_BATCH_TO_REMOVE_PER_ADD, oldest first
+    purge_ts[0] = 20_000
+    reads.clear()
+    log.add(210, entries(210, ("fresh", 30_000)), timestamp=30_000)
+    assert len(reads) == MAX_BATCH_TO_REMOVE_PER_ADD
+    gone = [i for i in range(210) if log.get(i) is None]
+    assert gone == list(range(MAX_BATCH_TO_REMOVE_PER_ADD))
+    assert log.get_file("keep0") is None

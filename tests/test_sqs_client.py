@@ -250,3 +250,47 @@ def test_cross_account_cross_region_queue():
     c.delete_messages(["rh9"])
     assert all(u == url for u in fake.urls) and len(fake.urls) >= 2
     c.close()
+
+
+@pytest.mark.parametrize("keep", [False, True])
+@pytest.mark.parametrize("failure", ["parse", "consumer"])
+def test_local_and_sqs_clients_share_the_keep_or_delete_rule(tmp_path, failure, keep):
+    """The same failing message through both queue clients: a parse
+    failure or a consumer exception ends in the same counters and the
+    same disposition — kept for redelivery with keepMessageForConsumerError,
+    deleted without it."""
+    from spark_streaming_sql_s3_connector_spark.queueing.local import (
+        LocalFileQueueClient,
+    )
+
+    body = BAD if failure == "parse" else CREATED
+
+    def consumer(meta):
+        raise RuntimeError("consumer failed")
+
+    fake = FakeSqs([body])
+    sqs = _client(fake, keep_message_for_consumer_error=keep)
+    assert sqs.fetch(consumer, wait_timeout_seconds=1, max_files=None) == 0
+    sqs_disposition = (
+        "kept" if fake.visibility_changes else "deleted" if fake.deleted else "none"
+    )
+
+    local = LocalFileQueueClient(
+        f"local://{tmp_path}", keep_message_for_consumer_error=keep
+    )
+    local.send_body(body)
+    assert local.fetch(consumer, wait_timeout_seconds=1, max_files=None) == 0
+    left = list(tmp_path.iterdir())
+    local_disposition = (
+        "kept" if any(".inflight-" in p.name for p in left)
+        else "deleted" if not left else "none"
+    )
+
+    assert local_disposition == sqs_disposition == ("kept" if keep else "deleted")
+    counters = sqs.metrics.as_dict()
+    assert counters == local.metrics.as_dict()
+    assert counters["received_messages"] == 1
+    assert counters["parse_failed_messages"] == (failure == "parse")
+    assert counters["consume_failed_messages"] == (failure == "consumer")
+    assert counters["visibility_changed_messages"] == keep
+    assert counters["deleted_messages"] == (not keep)

@@ -601,12 +601,14 @@ def test_trigger_timings_recorded_and_bounded(spark, tmp_path):
     stage keys cover screens + finalize + flush, spans sum to <= total,
     replay overwrites convergently, and the window stays bounded."""
     from spark_streaming_sql_s3_connector_spark.streaming.curation import (
-        _TIMINGS_KEEP,
         _timings_dir,
         process_curation_batch_incremental,
         read_trigger_timings,
     )
     from spark_streaming_sql_s3_connector_spark.streaming import state_io
+    from spark_streaming_sql_s3_connector_spark.streaming.stage_timings import (
+        KEEP as _TIMINGS_KEEP,
+    )
 
     rows = _corpus()
     df = spark.createDataFrame(rows, DOC_SCHEMA)
