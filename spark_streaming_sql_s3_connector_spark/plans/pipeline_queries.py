@@ -1600,8 +1600,8 @@ def _streaming_exact_dedup_docs(spark, sf):
     partitioned into 3 'micro-batches' (doc_id % 3) and return the
     first-seen keeper ids. Deterministic, and SQL-expressible: the
     incremental keeper of a text is the row minimizing (batch, doc_id) —
-    so the bloom-accelerated incremental path oracle-checks against a
-    plain window over the whole corpus."""
+    so the incremental path oracle-checks against a plain window over
+    the whole corpus."""
     from spark_streaming_sql_s3_connector_spark.streaming.exact_dedup import (
         process_batch,
         read_unique_ids,
@@ -1610,12 +1610,7 @@ def _streaming_exact_dedup_docs(spark, sf):
     docs = load_table(spark, sf, "documents").select("doc_id", "text")
     idx = _scratch_state_dir("s3conn-xdedup", str(sf))
     for b in range(3):
-        process_batch(
-            docs.where(F.col("doc_id") % 3 == b),
-            b,
-            idx,
-            expected_total_items=10_000,
-        )
+        process_batch(docs.where(F.col("doc_id") % 3 == b), b, idx)
     return (
         read_unique_ids(spark, idx)
         .select(F.col("doc_id"))
@@ -1661,7 +1656,7 @@ def _streaming_line_dedup_docs(spark, sf):
     thirds = _doc_id_thirds(docs)
     idx = _scratch_state_dir("s3conn-linededup", "lines" + str(sf))
     for b, batch in enumerate(thirds):
-        process_batch(batch, b, idx, expected_total_items=100_000)
+        process_batch(batch, b, idx)
     return (
         read_deduped_docs(spark, idx)
         .select(
@@ -1898,7 +1893,7 @@ def _streaming_passage_dedup_docs(spark, sf):
     thirds = _doc_id_thirds(docs)
     idx = _scratch_state_dir("s3conn-passagededup", "passages" + str(sf))
     for b, batch in enumerate(thirds):
-        process_batch(batch, b, idx, k=5, expected_total_items=100_000)
+        process_batch(batch, b, idx, k=5)
     return (
         read_deduped_docs(spark, idx)
         .select(
@@ -5802,9 +5797,7 @@ def _ensure_incremental_curation(spark, sf: str) -> str:
         batches = _incr_curation_batches(spark, sf)
         for b in (0, 1, 2, 2):  # the second 2 is the replayed batch
             process_curation_batch_incremental(
-                batches[b], b, pdir,
-                expected_total_items=1_000_000,
-                monitor=False, vacuum_every=2,
+                batches[b], b, pdir, monitor=False, vacuum_every=2,
             )
     return pdir
 
@@ -5844,8 +5837,7 @@ def _replay_curation_trigger(spark, sf) -> str:
     pdir = _ensure_incremental_curation(spark, sf)
     batch = _incr_curation_batches(spark, sf)[2]
     process_curation_batch_incremental(
-        batch, 2, pdir,
-        expected_total_items=1_000_000, monitor=False, vacuum_every=None,
+        batch, 2, pdir, monitor=False, vacuum_every=None,
     )
     return pdir
 

@@ -67,10 +67,6 @@ class LogFileSystem(Protocol):
         """Raises FileNotFoundError if missing."""
         ...
 
-    def read_bytes(self, path: str) -> bytes:
-        """Raises FileNotFoundError if missing."""
-        ...
-
     def write_atomic(self, path: str, data: str, overwrite: bool) -> bool:
         """Persist ``data`` at ``path`` all-or-nothing. With
         ``overwrite=False`` this is an exclusive create: returns False
@@ -78,7 +74,8 @@ class LogFileSystem(Protocol):
         ...
 
     def write_bytes_atomic(self, path: str, data: bytes, overwrite: bool) -> bool:
-        """Binary twin of :meth:`write_atomic` (bloom bitmaps etc.)."""
+        """Binary twin of :meth:`write_atomic`, which encodes its text
+        and writes through it."""
         ...
 
     def delete(self, path: str) -> None:
@@ -130,10 +127,6 @@ class PosixLogFileSystem:
 
     def read_text(self, path: str) -> str:
         with open(path, "r") as f:
-            return f.read()
-
-    def read_bytes(self, path: str) -> bytes:
-        with open(path, "rb") as f:
             return f.read()
 
     def write_atomic(self, path: str, data: str, overwrite: bool) -> bool:
@@ -243,10 +236,6 @@ class ArrowLogFileSystem:
         # masquerade as missing state (see listdir note).
         with self.arrow_fs.open_input_stream(path) as f:
             return f.read().decode("utf-8")
-
-    def read_bytes(self, path: str) -> bytes:
-        with self.arrow_fs.open_input_stream(path) as f:
-            return f.read()
 
     def write_atomic(self, path: str, data: str, overwrite: bool) -> bool:
         return self.write_bytes_atomic(path, data.encode("utf-8"), overwrite)

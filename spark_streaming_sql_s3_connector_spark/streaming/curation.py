@@ -13,9 +13,9 @@ uninterrupted run):
 - per micro-batch (:func:`process_curation_batch`): corpus-global
   keep-first line dedup (``streaming/line_dedup``), then exact dedup of
   the line-deduped text vs everything seen (``streaming/exact_dedup``)
-  — both incremental, bloom-screened, overwrite-by-batch-dir replay
-  convergent; plus a tiny ``(doc_id, lang)`` side table per batch for
-  the finalization gate.
+  — both incremental, screened by exact joins against their key
+  indexes, overwrite-by-batch-dir replay convergent; plus a tiny
+  ``(doc_id, lang)`` side table per batch for the finalization gate.
 - at corpus end (:func:`finalize_curation`): join the surviving docs,
   score the DEDUPED text, keep the top fraction per language
   (``keep_top_fraction`` — rank-exact), and concat-and-split pack the
@@ -29,10 +29,10 @@ id space in order, and the finalization stages are pure functions of
 the (identical) surviving set.
 
 Scale shape: the streaming stages inherit their components' stories
-(line-keyed partial aggs, shard-pruned history joins, per-shard bloom
-bitmaps); the finalization is one gate shuffle on ``lang`` plus the
-pack's one shard-window shuffle. Nothing in the composition adds a new
-scan of the raw corpus.
+(line-keyed partial aggs, shard-pruned exact history joins); the
+finalization is one gate shuffle on ``lang`` plus the pack's one
+shard-window shuffle. Nothing in the composition adds a new scan of
+the raw corpus.
 """
 
 from __future__ import annotations
@@ -107,15 +107,14 @@ def read_trigger_timings(
     """Per-stage wall seconds of one incremental trigger (the newest
     retained one when ``batch_id`` is None), or None if the pipeline
     has not recorded any. Keys: ``meta`` | ``monitor`` (when on) |
-    ``line_screen`` | ``exact_screen`` | ``bitmap_flush`` |
-    ``finalize_gate`` | ``finalize_pack`` | ``vacuum`` (when the
-    cadence fired) | ``total`` | ``batch_id`` —
-    the attribution surface for trigger-latency regressions, so a slow
-    steady-state trigger names its stage without re-profiling. r14:
-    independent stages overlap (``bitmap_flush`` runs concurrently
-    with the finalize pair; screens submit their paired plane writes
-    in parallel), so each span bounds its own stage but the spans'
-    SUM may exceed ``total``."""
+    ``line_screen`` | ``exact_screen`` | ``finalize_gate`` |
+    ``finalize_pack`` | ``vacuum`` (when the cadence fired) |
+    ``total`` | ``batch_id`` — the attribution surface for
+    trigger-latency regressions, so a slow steady-state trigger names
+    its stage without re-profiling. Independent stages overlap (the
+    meta/monitor writes run beside the line screen, the line screen's
+    plane writes beside the exact screen), so each span bounds its own
+    stage but the spans' SUM may exceed ``total``."""
     return stage_timings.read_stage_timings(_timings_dir(pipeline_dir), batch_id)
 
 
@@ -153,23 +152,13 @@ def process_curation_batch(
     text_col: str = "text",
     id_col: str = "doc_id",
     lang_col: str = "lang",
-    expected_total_items: int = 1_000_000,
     monitor: bool = True,
     clock: Optional[stage_timings.StageClock] = None,
-    defer_bitmaps: Optional[list] = None,
     handoff_docs: bool = False,
 ):
     """One micro-batch of the composed pipeline. Every write is keyed by
     ``batch=<id>`` and overwritten on replay — the same convergence
     argument as each component stage.
-
-    ``defer_bitmaps``: when the caller passes a list, the screens'
-    queued bloom ORs are NOT flushed here — ownership (the fused
-    `exact_dedup.flush_bitmap_updates` job AND the never-flushed
-    cleanup of the queued entries' persisted parents) moves to the
-    caller, which can overlap the flush with downstream work (the
-    bitmaps are advisory and only the NEXT trigger's probe reads
-    them). Default None keeps the self-contained behavior.
 
     ``handoff_docs`` (r14): when True, returns ``(docs_df, cleanup)``
     where ``docs_df`` is the line screen's rebuilt-docs frame, still
@@ -198,7 +187,6 @@ def process_curation_batch(
     with :func:`read_curation_profile` / :func:`read_curation_drift`
     while the stream runs to catch schema/null/range anomalies and
     distribution shift BEFORE finalization."""
-    spark = batch.sparkSession
 
     def _meta_and_monitor() -> None:
         # (doc_id, lang) side table for the finalization gate
@@ -228,12 +216,6 @@ def process_curation_batch(
                 )
                 count_batch(batch, batch_id, _lang_counts_dir(pipeline_dir), lang_col)
 
-    # the two screens queue their bloom ORs and flush them as ONE
-    # partials job at the end of the trigger (r13: the per-trigger wall
-    # is job dispatch, not rows — see exact_dedup.flush_bitmap_updates)
-    caller_owns_flush = defer_bitmaps is not None
-    deferred: list = defer_bitmaps if caller_owns_flush else []
-    flushed = False
     docs_df = None
     line_cleanup = None
     ok = False
@@ -249,8 +231,6 @@ def process_curation_batch(
                     _line_index(pipeline_dir),
                     text_col=text_col,
                     id_col=id_col,
-                    expected_total_items=expected_total_items,
-                    defer_bitmaps=deferred,
                     defer_writes=line_writes,
                 )
 
@@ -268,44 +248,16 @@ def process_curation_batch(
                     _exact_index(pipeline_dir),
                     text_col="deduped_text",
                     id_col=id_col,
-                    expected_total_items=expected_total_items,
-                    defer_bitmaps=deferred,
                 ),
             )
-        if caller_owns_flush:
-            flushed = True  # ownership (flush + cleanup) is the caller's
-        else:
-            with stage_timings.span(clock, "bitmap_flush"):
-                exact_dedup.flush_bitmap_updates(spark, deferred)
-                flushed = True
         ok = True
         if handoff_docs:
             return docs_df, line_cleanup
         line_cleanup()
         return None
     finally:
-        # a throw between a screen and the fused flush would otherwise
-        # leak the screens' persisted keeper frames — each checkpoint
-        # retry caching another copy; the flush's own finally handles
-        # the happy path, this handles the never-flushed one
-        if not flushed:
-            _unpersist_deferred_parents(deferred)
         if not ok and line_cleanup is not None:
             line_cleanup()
-
-
-def _unpersist_deferred_parents(deferred: list) -> None:
-    """Drop the persisted parents of queued-but-never-flushed
-    `DeferredBitmapUpdate` entries (the flush's finally does this on
-    the normal path)."""
-    for d in deferred:
-        if d is None:
-            continue
-        for p in getattr(d, "parents", []):
-            try:
-                p.unpersist()
-            except Exception:
-                pass
 
 
 def streaming_curation(
@@ -315,7 +267,6 @@ def streaming_curation(
     text_col: str = "text",
     id_col: str = "doc_id",
     lang_col: str = "lang",
-    expected_total_items: int = 1_000_000,
     monitor: bool = True,
 ):
     """Run the composed pipeline as a foreachBatch stream; returns the
@@ -330,7 +281,6 @@ def streaming_curation(
             text_col=text_col,
             id_col=id_col,
             lang_col=lang_col,
-            expected_total_items=expected_total_items,
             monitor=monitor,
         )
 
@@ -507,8 +457,8 @@ def batch_curation(
 #   never recomputed — a moving threshold would retro-invalidate
 #   already-packed sequences (a doc packed at batch 3 can't be
 #   un-packed at batch 7 because the corpus got better). Frozen-gate
-#   semantics are the streaming norm (compare: bloom FPP sized at
-#   bootstrap, ANN codebooks trained at build).
+#   semantics are the streaming norm (compare: ANN codebooks trained
+#   at build).
 # - per trigger, ONLY the batch's own survivors (its line-deduped docs
 #   ∩ its first-seen exact-dedup ids — both already materialized by
 #   `process_curation_batch` under batch=<id> dirs) are scored, gated
@@ -851,7 +801,11 @@ def process_curation_batch_incremental(
     small-batch plans pay one extra scheduled job per query stage
     under AQE with nothing to re-plan (see `_scoped_conf`; ~19%
     measured at sf0.01). Set False if other queries share the session
-    concurrently and must keep AQE mid-trigger."""
+    concurrently and must keep AQE mid-trigger.
+
+    ``expected_total_items`` is accepted for older callers and
+    ignored: the screens are exact joins against their key indexes and
+    need no sizing."""
     clock = stage_timings.StageClock()
     import contextlib
 
@@ -863,70 +817,42 @@ def process_curation_batch_incremental(
     with aqe_guard:
         _process_curation_batch_incremental_inner(
             batch, batch_id, pipeline_dir, text_col, id_col, lang_col,
-            expected_total_items, monitor, frac, capacity, num_shards,
-            vacuum_every, clock,
+            monitor, frac, capacity, num_shards, vacuum_every, clock,
         )
 
 
 def _process_curation_batch_incremental_inner(
     batch, batch_id, pipeline_dir, text_col, id_col, lang_col,
-    expected_total_items, monitor, frac, capacity, num_shards,
-    vacuum_every, clock,
+    monitor, frac, capacity, num_shards, vacuum_every, clock,
 ) -> None:
-    deferred: list = []
-    flushed = False
-    docs_df = None
-    line_cleanup = None
+    docs_df, line_cleanup = process_curation_batch(
+        batch,
+        batch_id,
+        pipeline_dir,
+        text_col=text_col,
+        id_col=id_col,
+        lang_col=lang_col,
+        monitor=monitor,
+        clock=clock,
+        handoff_docs=True,
+    )
     try:
-        docs_df, line_cleanup = process_curation_batch(
-            batch,
+        # finalize consumes the line screen's cached rebuilt-docs frame
+        # (byte-identical to the committed parquet) plus committed
+        # batch dirs
+        finalize_curation_batch(
+            batch.sparkSession,
             batch_id,
             pipeline_dir,
-            text_col=text_col,
             id_col=id_col,
-            lang_col=lang_col,
-            expected_total_items=expected_total_items,
-            monitor=monitor,
+            frac=frac,
+            capacity=capacity,
+            num_shards=num_shards,
             clock=clock,
-            defer_bitmaps=deferred,
-            handoff_docs=True,
-        )
-
-        # the fused bitmap flush and the finalize touch disjoint planes
-        # with no ordering contract (the bitmaps are ADVISORY — only
-        # the NEXT trigger's probe reads them; finalize consumes the
-        # screens' cached rebuilt-docs frame — byte-identical to the
-        # committed parquet — plus committed batch dirs, not the caches
-        # the flush owns) — overlap them so the flush's fixed job cost
-        # hides under the finalize wall (r14, streaming/concurrency).
-        # Stage spans therefore run on concurrent wall windows: each
-        # span still bounds its own stage, but their SUM may exceed
-        # `total`.
-        def _flush():
-            nonlocal flushed
-            with stage_timings.span(clock, "bitmap_flush"):
-                exact_dedup.flush_bitmap_updates(batch.sparkSession, deferred)
-                flushed = True
-
-        run_concurrently(
-            _flush,
-            lambda: finalize_curation_batch(
-                batch.sparkSession,
-                batch_id,
-                pipeline_dir,
-                id_col=id_col,
-                frac=frac,
-                capacity=capacity,
-                num_shards=num_shards,
-                clock=clock,
-                docs_df=docs_df,
-            ),
+            docs_df=docs_df,
         )
     finally:
-        if not flushed:
-            _unpersist_deferred_parents(deferred)
-        if line_cleanup is not None:
-            line_cleanup()
+        line_cleanup()
     if vacuum_every and batch_id > 0 and batch_id % vacuum_every == 0:
         from spark_streaming_sql_s3_connector_spark.streaming.vacuum import vacuum
 
@@ -950,7 +876,6 @@ def streaming_curation_incremental(
     text_col: str = "text",
     id_col: str = "doc_id",
     lang_col: str = "lang",
-    expected_total_items: int = 1_000_000,
     monitor: bool = True,
     frac: float = 0.4,
     capacity: int = 128,
@@ -970,7 +895,6 @@ def streaming_curation_incremental(
             text_col=text_col,
             id_col=id_col,
             lang_col=lang_col,
-            expected_total_items=expected_total_items,
             monitor=monitor,
             frac=frac,
             capacity=capacity,

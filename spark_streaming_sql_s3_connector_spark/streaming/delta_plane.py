@@ -188,18 +188,17 @@ class DeltaPlane:
         self,
         write: Callable[[str, list[Entry], list[Entry]], None],
         below: Optional[int] = None,
-        on_flip: Optional[Callable[[int], None]] = None,
     ) -> Optional[int]:
         """Fold the live entries below ``below`` into a new base.
 
         ``write(path, live, markers)`` writes the new base at ``path``
         from ``live`` (base or seed first, then the pending deltas) and
         the pending ``markers``; it may raise to refuse the fold.
-        Then the pointer flips, ``on_flip(new_v)`` runs, and
-        :meth:`gc` collects. Returns the new pointer — the newest
-        pending delta or marker, −1 for a seed-only fold — or None when
-        nothing is pending, or when only markers are pending and there
-        is nothing to apply them to (they stay live)."""
+        Then the pointer flips and :meth:`gc` collects. Returns the new
+        pointer — the newest pending delta or marker, −1 for a seed-only
+        fold — or None when nothing is pending, or when only markers are
+        pending and there is nothing to apply them to (they stay
+        live)."""
         ptr = self.pointer()
         head = self._head(ptr)
         deltas = self._above(self.delta_ids(), ptr, below, self.delta_path)
@@ -212,8 +211,6 @@ class DeltaPlane:
         new_v = max((i for i, _ in deltas + marks), default=-1)
         write(self.base_path(new_v), head + deltas, marks)
         state_io.write_pointer(self.root, new_v)
-        if on_flip is not None:
-            on_flip(new_v)
         self.gc(new_v)
         return new_v
 

@@ -8,9 +8,8 @@ earlier (doc, position) within this batch — and emit each document
 rebuilt from its surviving lines. The line-key index persists between
 triggers with the same layout and crash story as
 `streaming/exact_dedup.py` (whose helpers this module reuses): delta
-parquet under ``_new/batch=<id>``, shard-pruned history joins, an
-OR-idempotent Bloom bitmap as pure acceleration, overwrite-by-batch-dir
-replay convergence.
+parquet under ``_new/batch=<id>``, shard-pruned exact history joins,
+overwrite-by-batch-dir replay convergence.
 
 Per-batch recipe:
 
@@ -18,14 +17,14 @@ Per-batch recipe:
    blanks dropped — the same line convention as the batch operator);
 2. within-batch first per key: ``min(struct(id, pos))`` — partial agg,
    no window over a skewed hot-line partition;
-3. screen the firsts against the persisted key index: bloom-NEGATIVE
-   keys are guaranteed new; positives anti-join the shard-pruned
-   history (exactly `exact_dedup`'s two-phase screen);
+3. screen the firsts against the persisted key index: one exact join
+   of their keys against the shard-pruned history (exactly
+   `exact_dedup`'s screen);
 4. a batch row survives iff it IS the within-batch first of its key
    AND the key is not historical;
 5. rebuild each doc from its surviving lines → ``_docs/batch=<id>``
    (every input doc gets a row; fully-deduped docs come back empty);
-6. append the new keys under ``_new/batch=<id>``; OR the bloom bits.
+6. append the new keys under ``_new/batch=<id>``.
 
 Law (tested): processing range-ordered batches incrementally equals the
 batch operator on the union — because "first in (batch, doc, pos)
@@ -34,8 +33,8 @@ the id space in order.
 
 Scale shape: index rows are (key, keeper id, shard) — ~40 B per DISTINCT
 line ever kept, not the corpus; each trigger shuffles only the batch's
-lines once (the min-struct agg) and joins only the bloom-positive slice
-against pruned history shards. Text travels twice within the batch
+lines once (the min-struct agg) and joins the firsts' keys against
+pruned history shards. Text travels twice within the batch
 (explode + rebuild) — the same irreducible 2× any line-level rewrite
 pays.
 """
@@ -54,12 +53,8 @@ from spark_streaming_sql_s3_connector_spark.streaming.concurrency import (
 from spark_streaming_sql_s3_connector_spark.streaming.delta_plane import union_all
 from spark_streaming_sql_s3_connector_spark.streaming.exact_dedup import (
     _N_SHARDS,
-    DeferredBitmapUpdate,
-    _batch_probe_column,
     _index_frames,
     _new_dir,
-    _shard_params,
-    _update_shard_bitmaps,
 )
 
 
@@ -92,15 +87,10 @@ def process_batch(
     index_dir: str,
     text_col: str = "text",
     id_col: str = "doc_id",
-    expected_total_items: int = 1_000_000,
-    fpp: float = 0.01,
-    defer_bitmaps: Optional[list] = None,
     defer_writes: Optional[list] = None,
 ):
     """One micro-batch of the incremental keep-first line dedup.
     Overwrites its ``batch=<id>`` outputs — replay converges.
-    ``defer_bitmaps`` queues the bloom OR for a fused
-    `exact_dedup.flush_bitmap_updates` (see that docstring).
 
     ``defer_writes`` (r14): when a list is passed, the two batch-dir
     writes (rebuilt docs, index delta) are NOT run here — zero-arg
@@ -115,10 +105,8 @@ def process_batch(
     Replay semantics are unchanged: both writes still land inside the
     same trigger, before the checkpoint commit."""
     spark = batch.sparkSession
-    sm_bits, sk = _shard_params(expected_total_items, fpp)
 
     lines = _lines(batch, text_col, id_col).persist()
-    flagged = None
     cached_matched = None  # assigned in the history branch; finally unpersists
     handed_off = False
     try:
@@ -136,39 +124,24 @@ def process_batch(
         )
         frames = _index_frames(spark, index_dir, before_batch=batch_id)
         if frames:
-            hist = union_all(frames)
-            # one shard-list collect per screen (see exact_dedup): the
-            # batch's full shard set prunes history identically — keys
-            # outside these shards cannot match any candidate
+            # one shard-list collect per screen (see exact_dedup): keys
+            # outside the batch's shards cannot match any first
             shards = [
                 r["_shard"] for r in firsts.select("_shard").distinct().collect()
             ]
-            probe = _batch_probe_column(
-                index_dir, firsts, sm_bits, sk, expected_total_items, fpp,
-                shard_list=shards,
-            )
-            if probe is not None:
-                flagged = firsts.withColumn("_maybe", probe).persist()
-                negatives = flagged.where(~F.col("_maybe")).drop("_maybe")
-                cand = flagged.where(F.col("_maybe")).drop("_maybe")
-            else:
-                negatives = firsts.limit(0)
-                cand = firsts
-            hist = hist.where(F.col("_shard").isin(shards))
+            hist = union_all(frames).where(F.col("_shard").isin(shards))
             # persisted: `matched` sits under BOTH the rebuilt-docs and
             # the index-delta writes — without the cache each write
             # re-runs the pruned HISTORY scan, doubling the trigger's
             # dominant IO
             matched = (
-                hist.join(F.broadcast(cand.select("key")), "key", "left_semi")
+                hist.join(F.broadcast(firsts.select("key")), "key", "left_semi")
                 .select("key")
                 .distinct()
                 .persist()
             )
             cached_matched = matched
-            new_firsts = negatives.unionByName(
-                cand.join(F.broadcast(matched), "key", "left_anti")
-            )
+            new_firsts = firsts.join(F.broadcast(matched), "key", "left_anti")
         else:
             new_firsts = firsts
 
@@ -229,33 +202,14 @@ def process_batch(
         else:
             out = out.persist()
             defer_writes.extend([write_docs, write_delta])
-
-        if defer_bitmaps is None:
-            _update_shard_bitmaps(
-                spark, index_dir, firsts.select("key", "_shard"), sm_bits, sk
-            )
-        else:
-            defer_bitmaps.append(
-                DeferredBitmapUpdate(
-                    index_dir,
-                    firsts.select("key", "_shard"),
-                    sm_bits,
-                    sk,
-                    parents=[firsts],
-                )
-            )
         if defer_writes is not None:
             handed_off = True
-            _flagged, _matched = flagged, cached_matched
 
             def _cleanup() -> None:
                 lines.unpersist()
-                if defer_bitmaps is None:
-                    firsts.unpersist()
-                if _flagged is not None:
-                    _flagged.unpersist()
-                if _matched is not None:
-                    _matched.unpersist()
+                firsts.unpersist()
+                if cached_matched is not None:
+                    cached_matched.unpersist()
                 out.unpersist()
 
             return out, _cleanup
@@ -266,11 +220,7 @@ def process_batch(
         # usual unpersists run here
         if not handed_off:
             lines.unpersist()
-            # deferred mode keeps `firsts` cached for the fused flush
-            if defer_bitmaps is None:
-                firsts.unpersist()
-            if flagged is not None:
-                flagged.unpersist()
+            firsts.unpersist()
             if cached_matched is not None:
                 cached_matched.unpersist()
 
@@ -287,8 +237,6 @@ def streaming_line_dedup(
     checkpoint_dir: str,
     text_col: str = "text",
     id_col: str = "doc_id",
-    expected_total_items: int = 1_000_000,
-    fpp: float = 0.01,
 ):
     """Start the incremental keep-first line dedup as a foreachBatch
     stream; returns the StreamingQuery."""
@@ -300,8 +248,6 @@ def streaming_line_dedup(
             index_dir,
             text_col=text_col,
             id_col=id_col,
-            expected_total_items=expected_total_items,
-            fpp=fpp,
         )
 
     return (

@@ -10,8 +10,7 @@ rebuilt with every duplicated occurrence's k token positions masked.
 The gram-key index persists between triggers with the same layout and
 crash story as `streaming/exact_dedup.py` (whose helpers this module
 reuses verbatim): delta parquet under ``_new/batch=<id>``, shard-pruned
-history joins, an OR-idempotent Bloom bitmap as pure acceleration,
-overwrite-by-batch-dir replay convergence.
+exact history joins, overwrite-by-batch-dir replay convergence.
 
 Per-batch recipe:
 
@@ -20,14 +19,14 @@ Per-batch recipe:
    16-byte gram rekey as the batch operator);
 2. within-batch first per key: ``min(struct(id, start))`` — partial
    agg, no window over a hot gram;
-3. screen the firsts against the persisted key index (bloom-negative ⇒
-   guaranteed new; positives anti-join the shard-pruned history);
+3. screen the firsts against the persisted key index (one exact join
+   of their keys against the shard-pruned history);
 4. an occurrence is a DUP iff it is not a surviving first; dups explode
    to their k covered token positions;
 5. rebuild each doc from uncovered tokens → ``_docs/batch=<id>``
    (every input doc gets a row; a doc that was an exact copy of
    earlier-seen text comes back empty);
-6. append the newly-kept keys under ``_new/batch=<id>``; OR the bloom.
+6. append the newly-kept keys under ``_new/batch=<id>``.
 
 Law (tested): processing doc-id-range-ordered batches incrementally
 equals the batch operator on the union — "first in (batch, doc, start)
@@ -37,11 +36,11 @@ partition the id space in order.
 Scale shape: index rows are (key, keeper id, shard) — ~40 B per
 DISTINCT k-gram ever kept. That is token-scale state (the honest cost
 any substring-dedup index pays — a suffix array is larger), which is
-exactly why the index inherits exact_dedup's sharded layout, bloom
-screen, and compactor instead of a driver-side structure. Each trigger
-shuffles the batch's grams once (min-struct partial agg) and joins only
-the bloom-positive slice against pruned history shards; the
-covered-position explode is bounded by k × dup occurrences.
+exactly why the index inherits exact_dedup's sharded layout, screen
+and compactor instead of a driver-side structure. Each trigger shuffles
+the batch's grams once (min-struct partial agg) and joins the firsts'
+keys against pruned history shards; the covered-position explode is
+bounded by k × dup occurrences.
 """
 
 from __future__ import annotations
@@ -54,11 +53,8 @@ from pyspark.sql import functions as F
 from spark_streaming_sql_s3_connector_spark.streaming.delta_plane import union_all
 from spark_streaming_sql_s3_connector_spark.streaming.exact_dedup import (
     _N_SHARDS,
-    _batch_probe_column,
     _index_frames,
     _new_dir,
-    _shard_params,
-    _update_shard_bitmaps,
 )
 
 
@@ -100,60 +96,47 @@ def process_batch(
     text_col: str = "text",
     id_col: str = "doc_id",
     k: int = 5,
-    expected_total_items: int = 1_000_000,
-    fpp: float = 0.01,
 ) -> None:
     """One micro-batch of the incremental keep-first passage dedup.
     Overwrites its ``batch=<id>`` outputs — replay converges."""
     if k < 2:
         raise ValueError("k must be >= 2")
     spark = batch.sparkSession
-    sm_bits, sk = _shard_params(expected_total_items, fpp)
 
     base = _tokenized(batch, text_col, id_col).persist()
     occ = _gram_occurrences(base, k).persist()
-    cached_matched = None  # assigned in the history branch; finally unpersists
-    flagged = None
-    try:
-        firsts = (
-            occ.groupBy("key", "_shard")
-            .agg(F.min(F.struct("_id", "start")).alias("_f"))
-            .select(
-                "key",
-                "_shard",
-                F.col("_f._id").alias("_id"),
-                F.col("_f.start").alias("start"),
-            )
-            .persist()
+    firsts = (
+        occ.groupBy("key", "_shard")
+        .agg(F.min(F.struct("_id", "start")).alias("_f"))
+        .select(
+            "key",
+            "_shard",
+            F.col("_f._id").alias("_id"),
+            F.col("_f.start").alias("start"),
         )
+        .persist()
+    )
+    cached_matched = None  # assigned in the history branch; finally unpersists
+    try:
         frames = _index_frames(spark, index_dir, before_batch=batch_id)
         if frames:
-            hist = union_all(frames)
-            probe = _batch_probe_column(
-                index_dir, firsts, sm_bits, sk, expected_total_items, fpp
-            )
-            if probe is not None:
-                flagged = firsts.withColumn("_maybe", probe).persist()
-                negatives = flagged.where(~F.col("_maybe")).drop("_maybe")
-                cand = flagged.where(F.col("_maybe")).drop("_maybe")
-            else:
-                negatives = firsts.limit(0)
-                cand = firsts
-            shards = [r["_shard"] for r in cand.select("_shard").distinct().collect()]
-            hist = hist.where(F.col("_shard").isin(shards))
+            # one shard-list collect per screen (see exact_dedup): keys
+            # outside the batch's shards cannot match any first
+            shards = [
+                r["_shard"] for r in firsts.select("_shard").distinct().collect()
+            ]
+            hist = union_all(frames).where(F.col("_shard").isin(shards))
             # persisted: `matched` sits under BOTH the rebuilt-docs and
             # the index-delta writes — without the cache each write
             # re-runs the pruned HISTORY scan (the r12 line/exact fix)
             matched = (
-                hist.join(F.broadcast(cand.select("key")), "key", "left_semi")
+                hist.join(F.broadcast(firsts.select("key")), "key", "left_semi")
                 .select("key")
                 .distinct()
                 .persist()
             )
             cached_matched = matched
-            new_firsts = negatives.unionByName(
-                cand.join(F.broadcast(matched), "key", "left_anti")
-            )
+            new_firsts = firsts.join(F.broadcast(matched), "key", "left_anti")
         else:
             new_firsts = firsts
 
@@ -204,15 +187,10 @@ def process_batch(
         new_firsts.select("_id", "key", "_shard").repartition("_shard").write.mode(
             "overwrite"
         ).partitionBy("_shard").parquet(_new_dir(index_dir, batch_id))
-
-        _update_shard_bitmaps(
-            spark, index_dir, firsts.select("key", "_shard"), sm_bits, sk
-        )
     finally:
         base.unpersist()
         occ.unpersist()
-        if flagged is not None:
-            flagged.unpersist()
+        firsts.unpersist()
         if cached_matched is not None:
             cached_matched.unpersist()
 
@@ -229,8 +207,6 @@ def streaming_passage_dedup(
     text_col: str = "text",
     id_col: str = "doc_id",
     k: int = 5,
-    expected_total_items: int = 1_000_000,
-    fpp: float = 0.01,
 ):
     """Start the incremental keep-first passage dedup as a foreachBatch
     stream; returns the StreamingQuery."""
@@ -243,8 +219,6 @@ def streaming_passage_dedup(
             text_col=text_col,
             id_col=id_col,
             k=k,
-            expected_total_items=expected_total_items,
-            fpp=fpp,
         )
 
     return (

@@ -7,10 +7,10 @@ Division of labour (same as ``operators/ann_index``):
   the data plane is Hadoop's (``s3a://`` etc.), exactly where a
   1000-executor cluster needs it.
 - **Metadata IO goes through here**: the ``_latest`` pointers, the
-  ``batch=<id>`` / ``v=<n>`` dir listings, write-once schema / geometry
-  / threshold sidecars, bloom bitmap bytes, and GC deletes. Each helper
-  resolves its path with ``state/log_fs.filesystem_for``, the package's
-  one resolver (the analog of the reference's RocksDB-to-DFS checkpoint,
+  ``batch=<id>`` / ``v=<n>`` dir listings, write-once schema and
+  threshold sidecars, and GC deletes. Each helper resolves its path
+  with ``state/log_fs.filesystem_for``, the package's one resolver
+  (the analog of the reference's RocksDB-to-DFS checkpoint,
   RocksDBFileManager.scala:157-312): local, ``file://``, ``s3a://``,
   anything pyarrow.fs understands, or a scheme registered with
   ``log_fs.register_scheme``, with one client per ``scheme://authority``.
@@ -127,7 +127,7 @@ def is_dir(path: str) -> bool:
     return fs.is_dir(p)
 
 
-# --- sidecar files (schemas, geometry, thresholds, bitmaps) ----------------
+# --- sidecar files (schemas, geometry, thresholds) -------------------------
 
 
 def read_text(path: str) -> str:
@@ -148,20 +148,6 @@ def write_text_atomic(path: str, data: str, overwrite: bool = True) -> bool:
     fs, p = filesystem_for(path)
     fs.mkdirs(posixpath.dirname(p))
     return fs.write_atomic(p, data, overwrite=overwrite)
-
-
-def read_bytes(path: str) -> bytes:
-    fs, p = filesystem_for(path)
-    try:
-        return fs.read_bytes(p)
-    except NotADirectoryError:
-        raise FileNotFoundError(path)
-
-
-def write_bytes_atomic(path: str, data: bytes, overwrite: bool = True) -> bool:
-    fs, p = filesystem_for(path)
-    fs.mkdirs(posixpath.dirname(p))
-    return fs.write_bytes_atomic(p, data, overwrite=overwrite)
 
 
 # --- GC ---------------------------------------------------------------------

@@ -83,7 +83,7 @@ def test_key_screen_fold_collects_crash_leftovers(spark, tmp_path):
     docs = spark.createDataFrame(
         [(i, f"doc {i % 6}") for i in range(12)], "doc_id bigint, text string"
     )
-    ed.process_batch(docs, 0, idx, expected_total_items=1000)
+    ed.process_batch(docs, 0, idx)
     ed.delete_docs_from_screen(docs.where("doc_id = 1"), 1, idx)
     assert ed.compact_index(spark, idx, upto_batch=2) == 1
     ed.process_batch(
@@ -92,7 +92,6 @@ def test_key_screen_fold_collects_crash_leftovers(spark, tmp_path):
         ),
         2,
         idx,
-        expected_total_items=1000,
     )
     want = _rows(ed.read_unique_ids(spark, idx))
     # a straggler index delta and a straggler marker that would kill a

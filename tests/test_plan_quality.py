@@ -671,7 +671,7 @@ def test_screen_marker_filter_broadcasts_never_shuffles_index(spark, tmp_path):
     docs = spark.createDataFrame(
         [(i, f"text {i}") for i in range(50)], "doc_id bigint, text string"
     )
-    process_batch(docs, 0, idx, expected_total_items=1000)
+    process_batch(docs, 0, idx)
     delete_docs_from_screen(
         docs.where(F.col("doc_id") % 7 == 0), 1, idx
     )

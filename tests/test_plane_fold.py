@@ -59,7 +59,7 @@ def test_full_fold_preserves_verdicts_and_bounds_listing(spark, tmp_path):
     idx = str(tmp_path / "idx")
     bs = _batches(spark)
     for i, b in enumerate(bs):
-        ed.process_batch(b, i, idx, expected_total_items=1000)
+        ed.process_batch(b, i, idx)
     before = _dups(spark, idx)
     assert before == {
         11: "within_batch", 12: "within_batch",
@@ -72,7 +72,7 @@ def test_full_fold_preserves_verdicts_and_bounds_listing(spark, tmp_path):
     b2 = spark.createDataFrame(
         [(40, "post fold"), (41, "fresh text 0")], "doc_id bigint, text string"
     )
-    ed.process_batch(b2, 2, idx, expected_total_items=1000)
+    ed.process_batch(b2, 2, idx)
     assert ed.compact_index(spark, idx, upto_batch=3) == 2
     assert _dups(spark, idx) == {**before, 41: "vs_history"}
     got = sorted(r.doc_id for r in ed.read_unique_ids(spark, idx).collect())
@@ -105,7 +105,7 @@ def test_legacy_flat_state_reads_and_folds_unmigrated(spark, tmp_path):
         "_id bigint, key string, dup_kind string",
     ).write.mode("overwrite").parquet(ed._dups_dir(idx, 0))
     # continue under the new writer
-    ed.process_batch(bs[1], 1, idx, expected_total_items=1000)
+    ed.process_batch(bs[1], 1, idx)
     uniq = sorted(r.doc_id for r in ed.read_unique_ids(spark, idx).collect())
     assert uniq == sorted(list(range(10)) + list(range(20, 25)))
     want_dups = {

@@ -12,10 +12,9 @@ behaviors deliberate:
 
 Per-state laws: forget→re-ingest admits; takedown→re-ingest rejects;
 state == rebuild over the surviving unique docs (post-compaction);
-replay of a folded delete converges; bloom bitmaps stay UNTOUCHED and
-correctness holds anyway (extra bits are superset-safe: positives route
-to the exact join, which no longer matches); a re-insert after a forget
-outranks the marker across compaction (insert-order semantics).
+replay of a folded delete converges; a forget writes only its marker
+and leaves every other file of the index untouched; a re-insert after a
+forget outranks the marker across compaction (insert-order semantics).
 
 Also pins this round's ADVICE guards: marker-only term-stats postings
 compaction windows no longer IndexError; compacting an all-tombstoned
@@ -48,13 +47,13 @@ def _b0(spark):
 def test_exact_forget_readmits_and_takedown_rejects(spark, tmp_path):
     for policy_dir, forget in (("forget", True), ("takedown", False)):
         idx = str(tmp_path / policy_dir)
-        exact_batch(_b0(spark), 0, idx, expected_total_items=1000)
+        exact_batch(_b0(spark), 0, idx)
         if forget:
             delete_docs_from_screen(
                 _docs(spark, [(3, "text number 3")]), 1, idx
             )
         recrawl = _docs(spark, [(103, "text number 3")])
-        exact_batch(recrawl, 2, idx, expected_total_items=1000)
+        exact_batch(recrawl, 2, idx)
         uniq = {r.doc_id for r in read_unique_ids(spark, idx).collect()}
         dups = {r.doc_id for r in read_dup_ids(spark, idx).collect()}
         if forget:
@@ -64,32 +63,35 @@ def test_exact_forget_readmits_and_takedown_rejects(spark, tmp_path):
             assert 103 in dups and 103 not in uniq
 
 
+def _index_files(idx):
+    """relative path → bytes for every file under ``idx``."""
+    out = {}
+    for d, _, names in os.walk(idx):
+        for n in names:
+            p = os.path.join(d, n)
+            with open(p, "rb") as f:
+                out[os.path.relpath(p, idx)] = f.read()
+    return out
+
+
 def test_exact_forget_leaves_bloom_untouched_superset_safe(spark, tmp_path):
     idx = str(tmp_path / "idx")
-    exact_batch(_b0(spark), 0, idx, expected_total_items=1000)
-    bloom_dir = os.path.join(idx, "_bloom")
-    before = {
-        e: open(os.path.join(bloom_dir, e), "rb").read()
-        for e in os.listdir(bloom_dir)
-    }
+    exact_batch(_b0(spark), 0, idx)
+    before = _index_files(idx)
     delete_docs_from_screen(_docs(spark, [(3, "x")]), 1, idx)
-    after = {
-        e: open(os.path.join(bloom_dir, e), "rb").read()
-        for e in os.listdir(bloom_dir)
-    }
-    assert before == after  # forget writes only a marker, never bitmaps
-    # the forgotten key still probes bloom-POSITIVE, routes to the exact
-    # join, finds no row, and is admitted as new — superset bits are safe
-    exact_batch(
-        _docs(spark, [(103, "text number 3")]), 2, idx,
-        expected_total_items=1000,
-    )
+    after = _index_files(idx)
+    # forget writes only its marker dir: every other file is untouched
+    assert {k: v for k, v in after.items() if not k.startswith("_deleted")} == before
+    assert any(k.startswith(os.path.join("_deleted", "batch=1")) for k in after)
+    # the forgotten key goes through the exact join, finds no live row,
+    # and is admitted as new
+    exact_batch(_docs(spark, [(103, "text number 3")]), 2, idx)
     assert 103 in {r.doc_id for r in read_unique_ids(spark, idx).collect()}
 
 
 def test_exact_compaction_folds_markers_to_survivors(spark, tmp_path):
     idx = str(tmp_path / "idx")
-    exact_batch(_b0(spark), 0, idx, expected_total_items=1000)
+    exact_batch(_b0(spark), 0, idx)
     delete_docs_from_screen(_docs(spark, [(3, "x")]), 1, idx)
     v = compact_exact(spark, idx)
     assert v == 1  # pointer advances over the marker-only tail too
@@ -104,11 +106,10 @@ def test_exact_compaction_folds_markers_to_survivors(spark, tmp_path):
 
 def test_exact_reinsert_after_forget_survives_compaction(spark, tmp_path):
     idx = str(tmp_path / "idx")
-    exact_batch(_b0(spark), 0, idx, expected_total_items=1000)
+    exact_batch(_b0(spark), 0, idx)
     delete_docs_from_screen(_docs(spark, [(3, "x")]), 1, idx)
     exact_batch(  # re-crawl admitted at batch 2 > marker 1
         _docs(spark, [(103, "text number 3")]), 2, idx,
-        expected_total_items=1000,
     )
     compact_exact(spark, idx)  # marker kills b<1 rows only; 103 has b=2
     uniq = {r.doc_id for r in read_unique_ids(spark, idx).collect()}
@@ -116,7 +117,6 @@ def test_exact_reinsert_after_forget_survives_compaction(spark, tmp_path):
     # and the revived key screens again: another crawl is a duplicate
     exact_batch(
         _docs(spark, [(203, "text number 3")]), 3, idx,
-        expected_total_items=1000,
     )
     assert 203 in {r.doc_id for r in read_dup_ids(spark, idx).collect()}
 
@@ -129,10 +129,10 @@ def test_line_dedup_forget_readmits_lines(spark, tmp_path):
 
     idx = str(tmp_path / "idx")
     b0 = _docs(spark, [(1, "alpha beta\ncommon shared line")])
-    line_batch(b0, 0, idx, expected_total_items=1000)
+    line_batch(b0, 0, idx)
     delete_docs_from_screen(b0, 1, idx)
     b2 = _docs(spark, [(20, "common shared line\nnew unique line")])
-    line_batch(b2, 2, idx, expected_total_items=1000)
+    line_batch(b2, 2, idx)
     out = {
         r.doc_id: r.deduped_text
         for r in read_deduped_docs(spark, idx).collect()
@@ -149,10 +149,10 @@ def test_passage_dedup_forget_readmits_grams(spark, tmp_path):
 
     idx = str(tmp_path / "idx")
     b0 = _docs(spark, [(1, "a b c d e")])
-    passage_batch(b0, 0, idx, k=3, expected_total_items=1000)
+    passage_batch(b0, 0, idx, k=3)
     delete_docs_from_screen(b0, 1, idx)
     b2 = _docs(spark, [(20, "a b c d e x")])
-    passage_batch(b2, 2, idx, k=3, expected_total_items=1000)
+    passage_batch(b2, 2, idx, k=3)
     out = {r.doc_id: r for r in read_deduped_docs(spark, idx).collect()}
     assert out[20].n_kept_tokens == 6  # nothing masked after the forget
 
@@ -211,9 +211,9 @@ def test_propagate_doc_deletes_policy_drives_all_screens(spark, tmp_path):
         [(i, f"alpha beta gamma delta epsilon doc {i}") for i in range(4)],
     )
     dirs = {n: str(tmp_path / n) for n in ("exact", "line", "passage", "bands")}
-    exact_batch(b0, 0, dirs["exact"], expected_total_items=1000)
-    line_batch(b0, 0, dirs["line"], expected_total_items=1000)
-    passage_batch(b0, 0, dirs["passage"], k=3, expected_total_items=1000)
+    exact_batch(b0, 0, dirs["exact"])
+    line_batch(b0, 0, dirs["line"])
+    passage_batch(b0, 0, dirs["passage"], k=3)
     band_batch(b0, 0, dirs["bands"])
     dead = b0.where(F.col("doc_id") == 2)
 
@@ -313,103 +313,6 @@ def test_assemble_context_preserves_string_ids(spark):
     assert ids and all(i.startswith("doc-") for i in ids)
 
 
-def _bitmap_bytes(idx):
-    """shard → bitmap bytes for every shard file present."""
-    import os as _os
-
-    from spark_streaming_sql_s3_connector_spark.streaming.exact_dedup import (
-        _shard_bitmap_path,
-    )
-
-    out = {}
-    root = _os.path.join(idx, "_bloom")
-    if not _os.path.isdir(root):
-        return out
-    for e in _os.listdir(root):
-        if e.startswith("shard="):
-            s = int(e.split("=", 1)[1].split(".", 1)[0])
-            with open(_shard_bitmap_path(idx, s), "rb") as f:
-                out[s] = f.read()
-    return out
-
-
-def test_compaction_rebuilds_dirty_bloom_shards(spark, tmp_path):
-    """r11 bloom-ratchet fix: after a fold applies forget markers, each
-    DIRTY shard's bitmap equals a fresh build over the surviving keys
-    byte-exactly (compare against a parallel index that only ever saw
-    the survivors), and untouched shards keep their bytes."""
-    from spark_streaming_sql_s3_connector_spark.streaming.exact_dedup import (
-        _keyed,
-    )
-
-    rows = [(i, f"text number {i}") for i in range(40)]
-    forget_rows = [r for r in rows if r[0] % 4 == 0]
-    survive_rows = [r for r in rows if r[0] % 4 != 0]
-
-    idx = str(tmp_path / "idx")
-    exact_batch(_docs(spark, rows), 0, idx, expected_total_items=1000)
-    delete_docs_from_screen(_docs(spark, forget_rows), 1, idx)
-    before = _bitmap_bytes(idx)
-    assert compact_exact(spark, idx) == 1
-
-    # the oracle: an index that only ever ingested the survivors
-    twin = str(tmp_path / "twin")
-    exact_batch(_docs(spark, survive_rows), 0, twin, expected_total_items=1000)
-
-    got, want = _bitmap_bytes(idx), _bitmap_bytes(twin)
-    dirty = {
-        r._shard
-        for r in _keyed(_docs(spark, forget_rows), "text", "doc_id")
-        .select("_shard")
-        .distinct()
-        .collect()
-    }
-    assert dirty  # the fixture must actually dirty some shards
-    changed = {s for s in before if got.get(s) != before[s]}
-    assert changed == {s for s in dirty if s in before}
-    for s in dirty:
-        if s in want:
-            assert got[s] == want[s], f"shard {s} not byte-equal to fresh build"
-        else:
-            # every key of s was forgotten → rebuilt to all-zero
-            assert got[s] == bytes(len(before[s]))
-    for s in set(before) - dirty:
-        assert got[s] == before[s]
-
-    # semantics unchanged: forgotten content re-admits, dups still screen
-    exact_batch(_docs(spark, [(100, "text number 0")]), 2, idx, expected_total_items=1000)
-    exact_batch(_docs(spark, [(101, "text number 1")]), 3, idx, expected_total_items=1000)
-    uniq = {r.doc_id for r in read_unique_ids(spark, idx).collect()}
-    assert 100 in uniq and 101 not in uniq
-
-
-def test_bloom_fpp_bounded_under_forget_churn(spark, tmp_path):
-    """Saturation stress: repeated insert→forget→compact cycles must
-    leave the bitmaps equal to a single fresh build over the final
-    survivors — i.e. FPP does NOT ratchet with churn history."""
-    idx = str(tmp_path / "idx")
-    twin = str(tmp_path / "twin")
-    b = 0
-    keep = []
-    for cycle in range(4):
-        batch = [(cycle * 1000 + i, f"cycle {cycle} doc {i}") for i in range(30)]
-        gone = [r for r in batch if r[0] % 3 != 0]
-        keep.extend(r for r in batch if r[0] % 3 == 0)
-        exact_batch(_docs(spark, batch), b, idx, expected_total_items=1000)
-        delete_docs_from_screen(_docs(spark, gone), b + 1, idx)
-        assert compact_exact(spark, idx) == b + 1
-        b += 2
-    exact_batch(_docs(spark, keep), 0, twin, expected_total_items=1000)
-    got, want = _bitmap_bytes(idx), _bitmap_bytes(twin)
-    n_bytes = len(next(iter(got.values())))
-    for s, raw in got.items():
-        assert raw == want.get(s, bytes(n_bytes)), f"shard {s} carries ghost bits"
-    # and the index itself equals the survivor set
-    assert {r.doc_id for r in read_unique_ids(spark, idx).collect()} == {
-        r[0] for r in keep
-    }
-
-
 def test_pipeline_root_delete_discovers_and_drives_all_states(spark, tmp_path):
     """r11: one call on a pipeline ROOT discovers every persisted state
     by the vacuum signature classifier and routes each to its delete —
@@ -433,8 +336,8 @@ def test_pipeline_root_delete_discovers_and_drives_all_states(spark, tmp_path):
         spark,
         [(i, f"alpha beta gamma delta epsilon doc {i}") for i in range(4)],
     )
-    exact_batch(b0, 0, str(root / "exact"), expected_total_items=1000)
-    line_batch(b0, 0, str(root / "line"), expected_total_items=1000)
+    exact_batch(b0, 0, str(root / "exact"))
+    line_batch(b0, 0, str(root / "line"))
     band_batch(b0, 0, str(root / "bands"))
     term_stats_batch(b0, 0, str(root / "ts"), "text", "doc_id", with_postings=True)
     dead = b0.where(F.col("doc_id") == 2)

@@ -72,20 +72,9 @@ def test_write_once_semantics(root):
     assert state_io.read_text(p) == "first"
 
 
-def test_bytes_roundtrip(root):
-    p = root + "/plane/_bloom/shard=5.bin"
-    data = bytes(range(256)) * 4
-    state_io.write_bytes_atomic(p, data)
-    assert state_io.read_bytes(p) == data
-    state_io.write_bytes_atomic(p, b"\x00" * 8)  # overwrite
-    assert state_io.read_bytes(p) == b"\x00" * 8
-
-
 def test_read_missing_raises(root):
     with pytest.raises(FileNotFoundError):
         state_io.read_text(root + "/nope.json")
-    with pytest.raises(FileNotFoundError):
-        state_io.read_bytes(root + "/nope.bin")
 
 
 def test_remove_tree_missing_is_noop(root):

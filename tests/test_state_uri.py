@@ -70,12 +70,10 @@ def test_exact_dedup_lifecycle_over_file_uri(spark, uri_root, tmp_path):
     uniq = {r["doc_id"] for r in exact_dedup.read_unique_ids(spark, index).collect()}
     dups = {r["doc_id"] for r in exact_dedup.read_dup_ids(spark, index).collect()}
     assert uniq == {1, 2, 5} and dups == {3, 4}
-    # bloom sidecars (bytes + geometry JSON) landed via state_io on the URI
+    # the index planes landed on the URI's local path
     local = str(tmp_path / "state" / "screen")
-    assert os.path.exists(os.path.join(local, "_bloom", "_geometry.json"))
-    assert any(
-        e.startswith("shard=") for e in os.listdir(os.path.join(local, "_bloom"))
-    )
+    assert os.path.isdir(os.path.join(local, "_new", "batch=1"))
+    assert os.path.isdir(os.path.join(local, "_dups", "batch=1"))
     v = exact_dedup.compact_index(spark, index)
     assert v == 1  # no stream running: every delta folds
     assert {r["doc_id"] for r in exact_dedup.read_unique_ids(spark, index).collect()} == uniq
@@ -176,7 +174,6 @@ def test_composed_pipeline_lifecycle_over_file_uri(spark, uri_root, tmp_path):
             ),
             b,
             root,
-            expected_total_items=10_000,
             vacuum_every=2,
         )
     packed_before = {r["doc_id"] for r in read_curated_pack(spark, root).collect()}
@@ -335,7 +332,7 @@ def test_hybrid_schemes_metadata_on_mock_data_on_file(spark, tmp_path):
 
         def _process(df, batch_id):
             process_curation_batch_incremental(
-                df, batch_id, pipeline, expected_total_items=10_000
+                df, batch_id, pipeline
             )
             seen_batches.append((batch_id, df.count()))
 

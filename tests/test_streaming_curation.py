@@ -9,6 +9,7 @@ output equals the batch pipeline over the full corpus.
 """
 
 import json
+import os
 import time
 
 import pytest
@@ -87,7 +88,6 @@ def _start(spark, tmp_path, pipeline_dir):
         reader.load(),
         str(pipeline_dir),
         str(tmp_path / "ckpt"),
-        expected_total_items=10_000,
     )
 
 
@@ -145,14 +145,12 @@ def test_driver_style_batches_equal_batch(spark, tmp_path):
             df.where((F.col("doc_id") >= cuts[b]) & (F.col("doc_id") < cuts[b + 1])),
             b,
             pipeline_dir,
-            expected_total_items=10_000,
         )
     # replay the last batch (crash-before-commit): state must converge
     process_curation_batch(
         df.where((F.col("doc_id") >= cuts[2]) & (F.col("doc_id") < cuts[3])),
         2,
         pipeline_dir,
-        expected_total_items=10_000,
     )
     got = _rows(finalize_curation(spark, pipeline_dir))
     want = _rows(batch_curation(df))
@@ -177,7 +175,6 @@ def test_compaction_mid_pipeline_preserves_results(spark, tmp_path):
             df.where((F.col("doc_id") >= cuts[b]) & (F.col("doc_id") < cuts[b + 1])),
             b,
             pipeline_dir,
-            expected_total_items=10_000,
         )
         compact_curation_state(spark, pipeline_dir)
     # replay the newest batch post-compaction: its delta was NOT folded,
@@ -186,7 +183,6 @@ def test_compaction_mid_pipeline_preserves_results(spark, tmp_path):
         df.where((F.col("doc_id") >= cuts[2]) & (F.col("doc_id") < cuts[3])),
         2,
         pipeline_dir,
-        expected_total_items=10_000,
     )
     got = _rows(finalize_curation(spark, pipeline_dir))
     want = _rows(batch_curation(df))
@@ -208,7 +204,6 @@ def test_approx_gate_scale_path(spark, tmp_path):
             df.where((F.col("doc_id") >= cuts[b]) & (F.col("doc_id") < cuts[b + 1])),
             b,
             pipeline_dir,
-            expected_total_items=10_000,
         )
     exact = {r.doc_id: r.qscore for r in finalize_curation(spark, pipeline_dir).collect()}
     approx = {
@@ -272,14 +267,12 @@ def test_monitor_plane_matches_batch_and_converges(spark, tmp_path):
             df.where((F.col("doc_id") >= cuts[b]) & (F.col("doc_id") < cuts[b + 1])),
             b,
             pipeline_dir,
-            expected_total_items=10_000,
         )
     # replay batch 1: monitor deltas overwrite themselves
     process_curation_batch(
         df.where((F.col("doc_id") >= cuts[1]) & (F.col("doc_id") < cuts[2])),
         1,
         pipeline_dir,
-        expected_total_items=10_000,
     )
     live = {r["col_name"]: r for r in read_curation_profile(spark, pipeline_dir).collect()}
     want = {
@@ -307,13 +300,12 @@ def test_monitor_plane_matches_batch_and_converges(spark, tmp_path):
 
 
 def test_monitor_off_writes_no_state(spark, tmp_path):
-    import os
 
     rows = _corpus()
     df = spark.createDataFrame(rows, DOC_SCHEMA)
     pipeline_dir = str(tmp_path / "pipeline")
     process_curation_batch(
-        df, 0, pipeline_dir, expected_total_items=10_000, monitor=False
+        df, 0, pipeline_dir, monitor=False
     )
     assert not os.path.exists(os.path.join(pipeline_dir, "monitor"))
 
@@ -424,7 +416,6 @@ def test_incremental_finalize_equals_frozen_batch_twin(spark, tmp_path):
             df.where((F.col("doc_id") >= cuts[b]) & (F.col("doc_id") < cuts[b + 1])),
             b,
             pipeline_dir,
-            expected_total_items=10_000,
         )
     thr = read_frozen_thresholds(pipeline_dir)
     assert thr and set(thr) <= {"en", "de", "fr"}  # NULL stratum never frozen
@@ -434,7 +425,6 @@ def test_incremental_finalize_equals_frozen_batch_twin(spark, tmp_path):
         df.where((F.col("doc_id") >= cuts[2]) & (F.col("doc_id") < cuts[3])),
         2,
         pipeline_dir,
-        expected_total_items=10_000,
     )
     assert read_frozen_thresholds(pipeline_dir) == thr
     got = _rows(read_curated_pack(spark, pipeline_dir))
@@ -448,7 +438,6 @@ def test_streaming_curation_incremental_through_connector(spark, tmp_path):
     trigger, a duplicate redelivery, and vacuum piggybacked on the
     trigger cadence — the packed corpus is correct AND every state
     plane ends bounded with no manual maintenance calls."""
-    import os
 
     from spark_streaming_sql_s3_connector_spark.streaming.curation import (
         finalize_curation_frozen,
@@ -474,7 +463,6 @@ def test_streaming_curation_incremental_through_connector(spark, tmp_path):
         reader.load(),
         pipeline_dir,
         str(tmp_path / "ckpt"),
-        expected_total_items=10_000,
         vacuum_every=2,
     )
     try:
@@ -510,7 +498,6 @@ def test_curation_output_fold_preserves_results(spark, tmp_path):
     dirs (compact_curation_outputs) changes NOTHING the readers see —
     read_curated_pack and the frozen twin agree before and after, and
     each plane ends at one base + only post-horizon deltas."""
-    import os
 
     from spark_streaming_sql_s3_connector_spark.streaming.curation import (
         compact_curation_outputs,
@@ -528,7 +515,6 @@ def test_curation_output_fold_preserves_results(spark, tmp_path):
             df.where((F.col("doc_id") >= cuts[b]) & (F.col("doc_id") < cuts[b + 1])),
             b,
             pipeline_dir,
-            expected_total_items=10_000,
         )
     before = _rows(read_curated_pack(spark, pipeline_dir))
     compact_curation_outputs(spark, pipeline_dir, upto_batch=2)
@@ -547,7 +533,6 @@ def test_curation_output_fold_preserves_results(spark, tmp_path):
         df.where((F.col("doc_id") >= cuts[1]) & (F.col("doc_id") < cuts[2])),
         1,
         pipeline_dir,
-        expected_total_items=10_000,
     )
     got = _rows(read_curated_pack(spark, pipeline_dir))
     assert got == before
@@ -569,24 +554,18 @@ def test_empty_bootstrap_defers_threshold_freeze(spark, tmp_path):
 
     pipeline_dir = str(tmp_path / "pipeline")
     empty = spark.createDataFrame([], DOC_SCHEMA)
-    process_curation_batch_incremental(
-        empty, 0, pipeline_dir, expected_total_items=10_000
-    )
+    process_curation_batch_incremental(empty, 0, pipeline_dir)
     assert read_frozen_thresholds(pipeline_dir) is None  # deferred
 
     null_lang = spark.createDataFrame(
         [(0, None, "some real text content here")], DOC_SCHEMA
     )
-    process_curation_batch_incremental(
-        null_lang, 1, pipeline_dir, expected_total_items=10_000
-    )
+    process_curation_batch_incremental(null_lang, 1, pipeline_dir)
     assert read_frozen_thresholds(pipeline_dir) is None  # still deferred
 
     rows = [(10 + i, ["en", "de"][i % 2], f"real document number {i} with words") for i in range(8)]
     real = spark.createDataFrame(rows, DOC_SCHEMA)
-    process_curation_batch_incremental(
-        real, 2, pipeline_dir, expected_total_items=10_000
-    )
+    process_curation_batch_incremental(real, 2, pipeline_dir)
     thr = read_frozen_thresholds(pipeline_dir)
     assert thr and set(thr) == {"en", "de"}  # froze on the real batch
     got = _rows(read_curated_pack(spark, pipeline_dir))
@@ -619,21 +598,24 @@ def test_trigger_timings_recorded_and_bounded(spark, tmp_path):
             df.where((F.col("doc_id") >= cuts[b]) & (F.col("doc_id") < cuts[b + 1])),
             b,
             pipeline_dir,
-            expected_total_items=10_000,
         )
     t = read_trigger_timings(pipeline_dir)  # newest = batch 2
     assert t is not None and t["batch_id"] == 2
     stage_keys = {
-        "meta", "monitor", "line_screen", "exact_screen", "bitmap_flush",
+        "meta", "monitor", "line_screen", "exact_screen",
         "finalize_gate", "finalize_pack",
     }
     assert stage_keys <= set(t)
-    # r14: the trigger overlaps independent stages (bitmap flush ∥
-    # finalize; paired plane writes inside screens), so spans run on
-    # concurrent wall windows — each span bounds its own stage and fits
-    # in the total, but their SUM may legitimately exceed it
+    # the trigger overlaps independent stages (paired plane writes
+    # inside screens), so spans run on concurrent wall windows — each
+    # span bounds its own stage and fits in the total, but their SUM
+    # may legitimately exceed it
     assert all(0 <= t[k] <= t["total"] for k in stage_keys)
     assert sum(t[k] for k in stage_keys) > 0
+    # the screens keep no side file beside their key indexes
+    assert not [
+        d for d, _, _ in os.walk(pipeline_dir) if os.path.basename(d) == "_bloom"
+    ]
     # per-batch reads work; replay overwrites (batch_id stable, file count flat)
     assert read_trigger_timings(pipeline_dir, 0)["batch_id"] == 0
     n_before = len(state_io.list_batch_ids(_timings_dir(pipeline_dir)))
@@ -641,12 +623,11 @@ def test_trigger_timings_recorded_and_bounded(spark, tmp_path):
         df.where((F.col("doc_id") >= cuts[2]) & (F.col("doc_id") < cuts[3])),
         2,
         pipeline_dir,
-        expected_total_items=10_000,
     )
     assert len(state_io.list_batch_ids(_timings_dir(pipeline_dir))) == n_before
     # the retention window drops ids <= newest - _TIMINGS_KEEP
     process_curation_batch_incremental(
-        df.limit(0), _TIMINGS_KEEP, pipeline_dir, expected_total_items=10_000
+        df.limit(0), _TIMINGS_KEEP, pipeline_dir
     )
     ids = state_io.list_batch_ids(_timings_dir(pipeline_dir))
     assert 0 not in ids and _TIMINGS_KEEP in ids
@@ -670,20 +651,14 @@ def test_trigger_scoped_aqe_off_restores_conf(spark, tmp_path):
     p1, p2 = str(tmp_path / "p1"), str(tmp_path / "p2")
     for b, (lo, hi) in enumerate([(0, 15), (15, 30)]):
         cut = df.where((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
-        process_curation_batch_incremental(
-            cut, b, p1, expected_total_items=10_000
-        )
-        process_curation_batch_incremental(
-            cut, b, p2, expected_total_items=10_000, disable_aqe=False
-        )
+        process_curation_batch_incremental(cut, b, p1)
+        process_curation_batch_incremental(cut, b, p2, disable_aqe=False)
     assert spark.conf.get(key) == before
     assert _rows(read_curated_pack(spark, p1)) == _rows(read_curated_pack(spark, p2))
     # restore-on-error: a broken batch must not leak the scoped conf
     bad = spark.createDataFrame([(1,)], "wrong_col long")
     with _pytest.raises(Exception):
-        process_curation_batch_incremental(
-            bad, 2, p1, expected_total_items=10_000
-        )
+        process_curation_batch_incremental(bad, 2, p1)
     assert spark.conf.get(key) == before
 
 

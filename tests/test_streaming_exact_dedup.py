@@ -3,19 +3,18 @@
 - Incremental result over N batches == batch `dedup_exact` keepers on
   the union corpus (exact set equality of keeper ids).
 - Replaying a batch converges (idempotent state).
-- Deleting the bloom bitmap mid-stream changes NOTHING in the results
-  (the bloom is acceleration, not correctness).
+- A leftover ``_bloom/`` dir (the shard bitmaps older versions kept
+  beside the index) changes NOTHING in the results: nothing reads it.
 - Cross-batch duplicates are flagged `vs_history`, within-batch ones
   `within_batch`; NULL-text rows pass through as new.
 - Compaction preserves the unique set and replays keep working on the
   compacted base.
 """
 
+import json
 import os
 
-import pytest
-from pyspark.sql import functions as F
-
+from spark_streaming_sql_s3_connector_spark.operators.bloom import bloom_params
 from spark_streaming_sql_s3_connector_spark.operators.dedup import dedup_exact
 from spark_streaming_sql_s3_connector_spark.streaming.exact_dedup import (
     compact_index,
@@ -57,7 +56,7 @@ def test_incremental_equals_batch_dedup(spark, tmp_path):
     idx = str(tmp_path / "idx")
     batches = _mk_batches(spark)
     for i, b in enumerate(batches):
-        process_batch(b, i, idx, expected_total_items=1000)
+        process_batch(b, i, idx)
     got = sorted(r.doc_id for r in read_unique_ids(spark, idx).collect())
     want = sorted(
         r.keeper_id
@@ -70,50 +69,71 @@ def test_replay_converges(spark, tmp_path):
     idx = str(tmp_path / "idx")
     batches = _mk_batches(spark)
     for i, b in enumerate(batches):
-        process_batch(b, i, idx, expected_total_items=1000)
+        process_batch(b, i, idx)
     before = sorted(r.doc_id for r in read_unique_ids(spark, idx).collect())
-    process_batch(batches[1], 1, idx, expected_total_items=1000)  # replay
+    process_batch(batches[1], 1, idx)  # replay
     after = sorted(r.doc_id for r in read_unique_ids(spark, idx).collect())
     assert before == after
     dups = read_dup_ids(spark, idx)
     assert dups.count() == dups.dropDuplicates(["doc_id"]).count()
 
 
-def _rm_bloom_dir(idx):
-    import shutil
+def forge_stale_bloom(idx):
+    """Plant the ``_bloom/`` dir older versions of the screens kept
+    beside an index: 64 all-zero shard bitmaps, sized for their default
+    10⁶-key geometry, and the ``_geometry.json`` naming that geometry.
+    A screen that still read them would call every key new. Returns the
+    planted files' bytes by name."""
+    m, k = bloom_params(1_000_000 // 64 + 1, 0.01)
+    root = os.path.join(idx, "_bloom")
+    os.makedirs(root, exist_ok=True)
+    for s in range(64):
+        with open(os.path.join(root, f"shard={s}.bin"), "wb") as f:
+            f.write(bytes((m + 7) // 8))
+    with open(os.path.join(root, "_geometry.json"), "w") as f:
+        json.dump({"m": m, "k": k}, f)
+    return stale_bloom_files(idx)
 
-    shutil.rmtree(os.path.join(idx, "_bloom"), ignore_errors=True)
+
+def stale_bloom_files(idx):
+    root = os.path.join(idx, "_bloom")
+    out = {}
+    for e in sorted(os.listdir(root)):
+        with open(os.path.join(root, e), "rb") as f:
+            out[e] = f.read()
+    return out
 
 
 def test_bloom_is_acceleration_only(spark, tmp_path):
-    idx_a = str(tmp_path / "with_bloom")
-    idx_b = str(tmp_path / "no_bloom")
-    batches = _mk_batches(spark)
-    for i, b in enumerate(batches):
-        process_batch(b, i, idx_a, expected_total_items=1000)
-    for i, b in enumerate(batches):
-        process_batch(b, i, idx_b, expected_total_items=1000)
-        # sabotage: remove every shard bitmap after every batch
-        _rm_bloom_dir(idx_b)
-    a = sorted(r.doc_id for r in read_unique_ids(spark, idx_a).collect())
-    b = sorted(r.doc_id for r in read_unique_ids(spark, idx_b).collect())
-    assert a == b
+    """A leftover ``_bloom/`` dir is ignored: an index that finds one
+    before every batch gives the same unique ids and dup verdicts as a
+    clean index, and the planted files stay as they were."""
+    clean = str(tmp_path / "clean")
+    stale = str(tmp_path / "stale")
+    for i, b in enumerate(_mk_batches(spark)):
+        process_batch(b, i, clean)
+        planted = forge_stale_bloom(stale)
+        process_batch(b, i, stale)
+        assert stale_bloom_files(stale) == planted
+    assert not os.path.exists(os.path.join(clean, "_bloom"))
+    for read in (read_unique_ids, read_dup_ids):
+        a = sorted(tuple(r) for r in read(spark, clean).collect())
+        b = sorted(tuple(r) for r in read(spark, stale).collect())
+        assert a == b
 
 
 def test_bitmap_loss_mid_stream_rebuilds_not_resets(spark, tmp_path):
-    """The reviewer-found failure mode: lose the bitmaps after batch 0,
-    process batch 1 (which must NOT write batch-1-only bitmaps for the
-    shards batch-0 keys occupied), then batch 2 containing a duplicate
-    of a batch-0 text. A reset shard bitmap would make that key
-    bloom-negative and skip the exact join — silently emitting the
-    duplicate as unique."""
+    """A stale side file appearing mid-stream must not change a verdict:
+    all-zero bitmaps planted after batch 0 would call every key new, so
+    a screen that read them would let batch 2's duplicate of a batch-0
+    text through as unique."""
     idx = str(tmp_path / "idx")
     batches = _mk_batches(spark)
-    process_batch(batches[0], 0, idx, expected_total_items=1000)
-    _rm_bloom_dir(idx)
-    process_batch(batches[1], 1, idx, expected_total_items=1000)
+    process_batch(batches[0], 0, idx)
+    forge_stale_bloom(idx)
+    process_batch(batches[1], 1, idx)
     # batch 2's id 32 duplicates batch-0's "text number 0"
-    process_batch(batches[2], 2, idx, expected_total_items=1000)
+    process_batch(batches[2], 2, idx)
     got = sorted(r.doc_id for r in read_unique_ids(spark, idx).collect())
     want = sorted(
         r.keeper_id
@@ -121,171 +141,6 @@ def test_bitmap_loss_mid_stream_rebuilds_not_resets(spark, tmp_path):
     )
     assert got == want
     assert 32 not in got  # the cross-batch duplicate was caught
-    # and the rebuilt shard bitmaps hold the no-false-negative invariant
-    # for EVERY indexed key, not just post-loss ones
-    from spark_streaming_sql_s3_connector_spark.streaming.exact_dedup import (
-        _N_SHARDS,
-        _load_shard_blooms,
-        _might_contain_sharded,
-        _shard_params,
-        read_unique_ids as _rui,
-    )
-
-    sm, sk = _shard_params(1000, 0.01)
-    keys = (
-        _rui(spark, idx)
-        .where(F.col("key").isNotNull())
-        .withColumn(
-            "_shard", F.pmod(F.xxhash64("key"), F.lit(_N_SHARDS)).cast("int")
-        )
-    )
-    blooms = _load_shard_blooms(idx, sm, sk, list(range(_N_SHARDS)))
-    assert blooms  # at least the touched shards exist
-    # every indexed key whose shard HAS a bitmap must probe positive;
-    # keys of shards without a bitmap default to maybe=True anyway
-    probed = keys.withColumn(
-        "_mc", _might_contain_sharded(keys, "key", "_shard", blooms, sm, sk)
-    )
-    assert probed.where(~F.col("_mc")).count() == 0
-
-
-def test_legacy_monolithic_bitmap_migrates_to_shards(spark, tmp_path):
-    """A pre-r7 index carries one ``bitmap.bin``: it must still probe
-    (no correctness change), and the first post-upgrade batch must
-    migrate it to per-shard files — with the no-false-negative invariant
-    intact across the migration."""
-    from spark_streaming_sql_s3_connector_spark.operators.bloom import (
-        bloom_params,
-        build_bloom,
-    )
-    from spark_streaming_sql_s3_connector_spark.streaming.exact_dedup import (
-        _BLOOM_SEED,
-        _N_SHARDS,
-        _legacy_bitmap_path,
-        _load_shard_blooms,
-        _might_contain_sharded,
-        _shard_params,
-        read_unique_ids as _rui,
-    )
-
-    idx = str(tmp_path / "idx")
-    batches = _mk_batches(spark)
-    process_batch(batches[0], 0, idx, expected_total_items=1000)
-    # forge the pre-r7 layout: monolithic bitmap over batch-0 keys,
-    # shard files removed
-    keys0 = read_unique_ids(spark, idx).where(F.col("key").isNotNull())
-    m, k = bloom_params(1000, 0.01)
-    full = build_bloom(keys0, "key", params=(m, k), seed=_BLOOM_SEED)
-    _rm_bloom_dir(idx)
-    os.makedirs(os.path.join(idx, "_bloom"))
-    with open(_legacy_bitmap_path(idx), "wb") as f:
-        f.write(full.bits.tobytes())
-    # next batches: legacy probes, then migration happens on update
-    process_batch(batches[1], 1, idx, expected_total_items=1000)
-    assert not os.path.exists(_legacy_bitmap_path(idx))  # migrated
-    shard_files = [
-        e for e in os.listdir(os.path.join(idx, "_bloom")) if e.startswith("shard=")
-    ]
-    assert shard_files
-    process_batch(batches[2], 2, idx, expected_total_items=1000)
-    got = sorted(r.doc_id for r in read_unique_ids(spark, idx).collect())
-    want = sorted(
-        r.keeper_id
-        for r in dedup_exact(_union(spark, batches), "text", "doc_id").collect()
-    )
-    assert got == want
-    # no-false-negative across ALL keys post-migration
-    sm, sk = _shard_params(1000, 0.01)
-    blooms = _load_shard_blooms(idx, sm, sk, list(range(_N_SHARDS)))
-    keys = (
-        _rui(spark, idx)
-        .where(F.col("key").isNotNull())
-        .withColumn(
-            "_shard", F.pmod(F.xxhash64("key"), F.lit(_N_SHARDS)).cast("int")
-        )
-    )
-    probed = keys.withColumn(
-        "_mc", _might_contain_sharded(keys, "key", "_shard", blooms, sm, sk)
-    )
-    assert probed.where(~F.col("_mc")).count() == 0
-
-
-def test_sharded_bitmap_bounds_driver_memory(spark, tmp_path):
-    """The 100 TB sizing story: with expected_total_items=10⁷ the honest
-    MONOLITHIC bitmap is ~12 MB; the sharded layout writes only the
-    shards a batch touches, each a 64th of the size — the driver never
-    materializes the full key space's bits. (10⁷ keeps the test fast;
-    the sizing argument is linear from here to 10⁹-10¹⁰.)"""
-    from spark_streaming_sql_s3_connector_spark.operators.bloom import bloom_params
-    from spark_streaming_sql_s3_connector_spark.streaming.exact_dedup import (
-        _shard_params,
-    )
-
-    idx = str(tmp_path / "idx")
-    b = spark.createDataFrame(
-        [(i, f"text {i}") for i in range(200)], "doc_id bigint, text string"
-    )
-    process_batch(b, 0, idx, expected_total_items=10_000_000)
-    bloom_dir = os.path.join(idx, "_bloom")
-    files = [e for e in os.listdir(bloom_dir) if e.startswith("shard=")]
-    assert files
-    sm, sk = _shard_params(10_000_000, 0.01)
-    per_shard = (sm + 7) // 8
-    full_m, _ = bloom_params(10_000_000, 0.01)
-    full_bytes = (full_m + 7) // 8
-    for e in files:
-        assert os.path.getsize(os.path.join(bloom_dir, e)) == per_shard
-    # total on-disk footprint of the touched shards ≪ the monolithic bitmap
-    assert len(files) * per_shard < full_bytes
-    # a second batch still dedups correctly against shard bitmaps
-    b2 = spark.createDataFrame(
-        [(500, "text 7"), (501, "brand new")], "doc_id bigint, text string"
-    )
-    process_batch(b2, 1, idx, expected_total_items=10_000_000)
-    got = sorted(r.doc_id for r in read_unique_ids(spark, idx).collect())
-    assert 500 not in got and 501 in got
-
-
-def test_bitmap_update_traffic_bounded_by_shards_touched(spark):
-    """r7 verdict task: the bitmap update's collect must ship ONE
-    partial per shard touched — not one per (task × shard). The input
-    here is deliberately spread over many partitions; without the
-    by-shard repartition inside _shard_partials every partition would
-    emit its own copy of every shard it sees (~32× the bytes at this
-    shape) and this pin would fail."""
-    from spark_streaming_sql_s3_connector_spark.streaming.exact_dedup import (
-        _keyed,
-        _shard_bits,
-        _shard_params,
-        _shard_partials,
-    )
-
-    batch = spark.createDataFrame(
-        [(i, f"traffic probe text {i}") for i in range(2000)],
-        "doc_id bigint, text string",
-    ).repartition(32)
-    keyed = _keyed(batch, "text", "doc_id")
-    sm_bits, sk = _shard_params(100_000, 0.01)
-    shards_touched = {r._shard for r in keyed.select("_shard").distinct().collect()}
-    partials = _shard_partials(keyed, sm_bits, sk)
-    assert len(partials) <= len(shards_touched)
-    assert {r._s for r in partials} == shards_touched
-    # and the OR of those partials is still a correct bitmap: every key
-    # probes positive against its own shard's bits
-    import numpy as np
-
-    from spark_streaming_sql_s3_connector_spark.operators.bloom import (
-        BloomFilter,
-    )
-    from spark_streaming_sql_s3_connector_spark.streaming.exact_dedup import (
-        _BLOOM_SEED,
-        _might_contain_sharded,
-    )
-
-    bits = _shard_bits(keyed, sm_bits, sk)
-    blooms = {s: BloomFilter(sm_bits, sk, _BLOOM_SEED, b) for s, b in bits.items()}
-    col = _might_contain_sharded(keyed, "key", "_shard", blooms, sm_bits, sk)
-    assert keyed.where(~col).count() == 0
 
 
 def test_dup_kinds_and_nulls(spark, tmp_path):
@@ -296,8 +151,8 @@ def test_dup_kinds_and_nulls(spark, tmp_path):
     b1 = spark.createDataFrame(
         [(10, "alpha"), (11, "beta"), (12, None)], "doc_id bigint, text string"
     )
-    process_batch(b0, 0, idx, expected_total_items=100)
-    process_batch(b1, 1, idx, expected_total_items=100)
+    process_batch(b0, 0, idx)
+    process_batch(b1, 1, idx)
     dups = {r.doc_id: r.dup_kind for r in read_dup_ids(spark, idx).collect()}
     assert dups == {2: "within_batch", 10: "vs_history"}
     uniq = sorted(r.doc_id for r in read_unique_ids(spark, idx).collect())
@@ -307,14 +162,14 @@ def test_dup_kinds_and_nulls(spark, tmp_path):
 def test_compaction_preserves_and_continues(spark, tmp_path):
     idx = str(tmp_path / "idx")
     batches = _mk_batches(spark)
-    process_batch(batches[0], 0, idx, expected_total_items=1000)
-    process_batch(batches[1], 1, idx, expected_total_items=1000)
+    process_batch(batches[0], 0, idx)
+    process_batch(batches[1], 1, idx)
     before = sorted(r.doc_id for r in read_unique_ids(spark, idx).collect())
     v = compact_index(spark, idx)
     assert v == 1
     assert sorted(r.doc_id for r in read_unique_ids(spark, idx).collect()) == before
     # dedup continues to work against the compacted base
-    process_batch(batches[2], 2, idx, expected_total_items=1000)
+    process_batch(batches[2], 2, idx)
     got = sorted(r.doc_id for r in read_unique_ids(spark, idx).collect())
     want = sorted(
         r.keeper_id
@@ -336,8 +191,8 @@ def test_compaction_upto_batch_keeps_replay_verdicts(spark, tmp_path):
     vs_history.)"""
     idx = str(tmp_path / "idx")
     batches = _mk_batches(spark)
-    process_batch(batches[0], 0, idx, expected_total_items=1000)
-    process_batch(batches[1], 1, idx, expected_total_items=1000)
+    process_batch(batches[0], 0, idx)
+    process_batch(batches[1], 1, idx)
     verdicts_before = {
         r.doc_id: r.dup_kind for r in read_dup_ids(spark, idx).collect()
     }
@@ -345,7 +200,7 @@ def test_compaction_upto_batch_keeps_replay_verdicts(spark, tmp_path):
     v = compact_index(spark, idx, upto_batch=1)
     assert v == 0  # only batch 0 folded; batch 1's delta untouched
     assert os.path.isdir(os.path.join(idx, "_new", "batch=1"))
-    process_batch(batches[1], 1, idx, expected_total_items=1000)  # replay
+    process_batch(batches[1], 1, idx)  # replay
     verdicts_after = {
         r.doc_id: r.dup_kind for r in read_dup_ids(spark, idx).collect()
     }
@@ -358,44 +213,3 @@ def test_compaction_upto_batch_keeps_replay_verdicts(spark, tmp_path):
         ).collect()
     )
     assert uniq == want
-
-
-def test_fused_bitmap_flush_matches_sequential_updates(spark, tmp_path):
-    """r13: deferring both screens' bloom ORs into ONE
-    flush_bitmap_updates job writes byte-identical shard bitmaps to
-    running each screen's update separately — the fusion changes job
-    count only, never bits (the no-false-negative probe rests on it)."""
-    from spark_streaming_sql_s3_connector_spark.streaming import (
-        exact_dedup,
-        line_dedup,
-        state_io,
-    )
-
-    rows = [(i, f"line a {i % 4}\nline b {i}\ntail {i*i}") for i in range(40)]
-    docs = spark.createDataFrame(rows, ["doc_id", "text"])
-
-    def run(base, defer):
-        li, ei = f"{base}/line", f"{base}/exact"
-        deferred = [] if defer else None
-        line_dedup.process_batch(
-            docs, 0, li, expected_total_items=10_000, defer_bitmaps=deferred
-        )
-        deduped = spark.read.parquet(line_dedup._docs_dir(li, 0))
-        exact_dedup.process_batch(
-            deduped, 0, ei, text_col="deduped_text",
-            expected_total_items=10_000, defer_bitmaps=deferred,
-        )
-        if defer:
-            exact_dedup.flush_bitmap_updates(spark, deferred)
-        out = {}
-        for idx in (li, ei):
-            for s in range(exact_dedup._N_SHARDS):
-                p = exact_dedup._shard_bitmap_path(idx, s)
-                if state_io.exists(p):
-                    out[(idx.rsplit("/", 1)[1], s)] = state_io.read_bytes(p)
-        return out
-
-    seq = run(str(tmp_path / "seq"), defer=False)
-    fused = run(str(tmp_path / "fused"), defer=True)
-    assert seq and set(seq) == set(fused)
-    assert all(seq[k] == fused[k] for k in seq)

@@ -1,6 +1,7 @@
 """Streaming keep-first line dedup (streaming/line_dedup.py): the
 incremental result must equal the batch operator on the union, replay
-must converge, and the bloom bitmap must be pure acceleration."""
+must converge, and a leftover ``_bloom/`` dir (the shard bitmaps older
+versions kept beside the index) must change nothing."""
 
 import os
 
@@ -11,6 +12,7 @@ from spark_streaming_sql_s3_connector_spark.streaming.line_dedup import (
     process_batch,
     read_deduped_docs,
 )
+from tests.test_streaming_exact_dedup import forge_stale_bloom, stale_bloom_files
 
 
 def _mk_batches(spark):
@@ -49,7 +51,7 @@ def test_incremental_equals_batch_keep_first(spark, tmp_path):
     idx = str(tmp_path / "idx")
     batches = _mk_batches(spark)
     for i, b in enumerate(batches):
-        process_batch(b, i, idx, expected_total_items=1000)
+        process_batch(b, i, idx)
     got = {
         r.doc_id: (r.deduped_text, r.n_kept_lines)
         for r in read_deduped_docs(spark, idx).collect()
@@ -70,12 +72,12 @@ def test_replay_converges(spark, tmp_path):
     idx = str(tmp_path / "idx")
     batches = _mk_batches(spark)
     for i, b in enumerate(batches):
-        process_batch(b, i, idx, expected_total_items=1000)
+        process_batch(b, i, idx)
     before = sorted(
         (r.doc_id, r.deduped_text)
         for r in read_deduped_docs(spark, idx).collect()
     )
-    process_batch(batches[1], 1, idx, expected_total_items=1000)  # replay
+    process_batch(batches[1], 1, idx)  # replay
     after = sorted(
         (r.doc_id, r.deduped_text)
         for r in read_deduped_docs(spark, idx).collect()
@@ -84,21 +86,18 @@ def test_replay_converges(spark, tmp_path):
 
 
 def test_bloom_is_acceleration_only(spark, tmp_path):
-    idx_a, idx_b = str(tmp_path / "a"), str(tmp_path / "b")
-    batches = _mk_batches(spark)
-    for i, b in enumerate(batches):
-        process_batch(b, i, idx_a, expected_total_items=1000)
-    for i, b in enumerate(batches):
-        process_batch(b, i, idx_b, expected_total_items=1000)
-        import shutil
-
-        shutil.rmtree(os.path.join(idx_b, "_bloom"), ignore_errors=True)
-    a = sorted(
-        (r.doc_id, r.deduped_text) for r in read_deduped_docs(spark, idx_a).collect()
-    )
-    b = sorted(
-        (r.doc_id, r.deduped_text) for r in read_deduped_docs(spark, idx_b).collect()
-    )
+    """A stale ``_bloom/`` dir planted before every batch is ignored:
+    the ``_docs`` rows equal a clean index's and the planted files
+    stay as they were."""
+    clean, stale = str(tmp_path / "clean"), str(tmp_path / "stale")
+    for i, b in enumerate(_mk_batches(spark)):
+        process_batch(b, i, clean)
+        planted = forge_stale_bloom(stale)
+        process_batch(b, i, stale)
+        assert stale_bloom_files(stale) == planted
+    assert not os.path.exists(os.path.join(clean, "_bloom"))
+    a = sorted(tuple(r) for r in read_deduped_docs(spark, clean).collect())
+    b = sorted(tuple(r) for r in read_deduped_docs(spark, stale).collect())
     assert a == b
 
 
@@ -109,14 +108,14 @@ def test_compaction_preserves_and_continues(spark, tmp_path):
 
     idx = str(tmp_path / "idx")
     batches = _mk_batches(spark)
-    process_batch(batches[0], 0, idx, expected_total_items=1000)
-    process_batch(batches[1], 1, idx, expected_total_items=1000)
+    process_batch(batches[0], 0, idx)
+    process_batch(batches[1], 1, idx)
     # default derives the safe guard: the newest delta (batch 1 — the
     # only one a restart could replay) is NOT folded
     assert compact_index(spark, idx) == 0
     # dedup continues against the compacted base: batch 2 is fully
     # historical and must come back empty
-    process_batch(batches[2], 2, idx, expected_total_items=1000)
+    process_batch(batches[2], 2, idx)
     got = {
         r.doc_id: (r.deduped_text, r.n_kept_lines)
         for r in read_deduped_docs(spark, idx).collect()

@@ -5,13 +5,12 @@
   `passage_dedup_keep_first` on the union corpus (exact text equality
   per doc).
 - Replaying a batch converges (idempotent state).
-- Deleting the bloom bitmap mid-stream changes NOTHING (acceleration,
-  not correctness).
+- A leftover ``_bloom/`` dir (the shard bitmaps older versions kept
+  beside the index) changes NOTHING: nothing reads it.
 - Compaction preserves outputs and replays keep working.
 """
 
 import os
-import shutil
 
 from pyspark.sql import functions as F
 
@@ -23,6 +22,7 @@ from spark_streaming_sql_s3_connector_spark.streaming.passage_dedup import (
     process_batch,
     read_deduped_docs,
 )
+from tests.test_streaming_exact_dedup import forge_stale_bloom, stale_bloom_files
 
 K = 5
 
@@ -83,42 +83,50 @@ def test_incremental_equals_batch(spark, tmp_path):
     idx = str(tmp_path / "idx")
     batches = _mk_batches(spark)
     for i, b in enumerate(batches):
-        process_batch(b, i, idx, k=K, expected_total_items=1000)
+        process_batch(b, i, idx, k=K)
     assert _streamed(spark, idx) == _batch_expected(spark, batches)
 
 
 def test_replay_converges(spark, tmp_path):
     idx = str(tmp_path / "idx")
     batches = _mk_batches(spark)
-    process_batch(batches[0], 0, idx, k=K, expected_total_items=1000)
-    process_batch(batches[1], 1, idx, k=K, expected_total_items=1000)
+    process_batch(batches[0], 0, idx, k=K)
+    process_batch(batches[1], 1, idx, k=K)
     before = _streamed(spark, idx)
-    process_batch(batches[1], 1, idx, k=K, expected_total_items=1000)  # replay
+    process_batch(batches[1], 1, idx, k=K)  # replay
     assert _streamed(spark, idx) == before
-    process_batch(batches[2], 2, idx, k=K, expected_total_items=1000)
+    process_batch(batches[2], 2, idx, k=K)
     assert _streamed(spark, idx) == _batch_expected(spark, batches)
 
 
 def test_bloom_is_acceleration_only(spark, tmp_path):
-    idx = str(tmp_path / "idx")
+    """A stale ``_bloom/`` dir planted before every batch is ignored:
+    the ``_docs`` rows equal a clean index's (and the batch operator's)
+    and the planted files stay as they were."""
+    clean, stale = str(tmp_path / "clean"), str(tmp_path / "stale")
     batches = _mk_batches(spark)
-    process_batch(batches[0], 0, idx, k=K, expected_total_items=1000)
-    shutil.rmtree(os.path.join(idx, "_bloom"), ignore_errors=True)
-    process_batch(batches[1], 1, idx, k=K, expected_total_items=1000)
-    process_batch(batches[2], 2, idx, k=K, expected_total_items=1000)
-    assert _streamed(spark, idx) == _batch_expected(spark, batches)
+    for i, b in enumerate(batches):
+        process_batch(b, i, clean, k=K)
+        planted = forge_stale_bloom(stale)
+        process_batch(b, i, stale, k=K)
+        assert stale_bloom_files(stale) == planted
+    assert not os.path.exists(os.path.join(clean, "_bloom"))
+    a = sorted(tuple(r) for r in read_deduped_docs(spark, clean).collect())
+    b = sorted(tuple(r) for r in read_deduped_docs(spark, stale).collect())
+    assert a == b
+    assert _streamed(spark, stale) == _batch_expected(spark, batches)
 
 
 def test_compaction_preserves_and_continues(spark, tmp_path):
     idx = str(tmp_path / "idx")
     batches = _mk_batches(spark)
-    process_batch(batches[0], 0, idx, k=K, expected_total_items=1000)
-    process_batch(batches[1], 1, idx, k=K, expected_total_items=1000)
+    process_batch(batches[0], 0, idx, k=K)
+    process_batch(batches[1], 1, idx, k=K)
     # default upto: folds strictly below the newest delta (replay-safe)
     v = compact_index(spark, idx)
     assert v == 0
     assert os.path.isdir(os.path.join(idx, "_new", "batch=1"))
-    process_batch(batches[2], 2, idx, k=K, expected_total_items=1000)
+    process_batch(batches[2], 2, idx, k=K)
     assert _streamed(spark, idx) == _batch_expected(spark, batches)
     # clean-stop fold of everything, then outputs still read identically
     assert compact_index(spark, idx, upto_batch=3) == 2
@@ -165,7 +173,6 @@ def test_streaming_passage_dedup_through_connector(spark, tmp_path):
     idx = str(tmp_path / "idx")
     q = streaming_passage_dedup(
         reader.load(), idx, str(tmp_path / "ckpt"), k=K,
-        expected_total_items=1000,
     )
     try:
         q.processAllAvailable()

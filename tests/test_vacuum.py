@@ -95,7 +95,7 @@ def test_vacuum_compacts_every_plane_and_bounds_versions(spark, tmp_path):
         term_stats_batch(
             batch, b, str(root / "ts"), "text", "doc_id", with_postings=True
         )
-        exact_batch(batch, b, str(root / "screen"), expected_total_items=1000)
+        exact_batch(batch, b, str(root / "screen"))
         band_batch(batch, b, str(root / "bands"))
         pack_batch_incremental(
             batch, b, str(root / "pack"), "doc_id", 16,
