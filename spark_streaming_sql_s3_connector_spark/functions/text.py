@@ -144,15 +144,6 @@ def document_fingerprint(col: Column) -> Column:
     return F.md5(F.encode(normalized, "UTF-8"))
 
 
-def rolling_hash_fingerprint(col: Column, window: int = 8) -> Column:
-    """Winnowing-style fingerprint: min xxhash64 over character ``window``-
-    grams — robust to local edits, pure JVM expressions."""
-    n = F.length(col)
-    starts = F.sequence(F.lit(1), F.greatest(n - window + 1, F.lit(1)))
-    grams = F.transform(starts, lambda i: col.substr(i, F.lit(window)))
-    return F.array_min(F.transform(grams, lambda g: F.xxhash64(g)))
-
-
 # minimal per-language stopword profiles for the n-gram/stopword heuristic
 _LANG_PROFILES: dict[str, list[str]] = {
     "en": ["the", "and", "of", "to", "in", "is", "that", "it", "was", "for", "with", "as", "on", "at", "this"],

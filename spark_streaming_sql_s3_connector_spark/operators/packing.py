@@ -74,9 +74,16 @@ def pack_concat(
     curation finalize carries ``lang``/``qscore``) get them in the SAME
     window pass instead of joining the manifest back against its input —
     the packing arithmetic is unchanged and the default is a no-op.
+    They may not repeat ``id_col`` or a generated column.
     """
     if capacity <= 0:
         raise ValueError("capacity must be positive")
+    taken = {id_col, "shard", "start_offset", "n_tokens", "seq_first", "seq_last"}
+    if set(keep_cols) & taken:
+        raise ValueError(
+            f"keep_cols {sorted(set(keep_cols) & taken)} collide with the "
+            "id column or the generated manifest columns"
+        )
     base, tok = _with_tokens(df, text_col, token_col)
     shard = F.pmod(F.col(id_col), F.lit(num_shards)).cast("int")
     w = Window.partitionBy("shard").orderBy(id_col)

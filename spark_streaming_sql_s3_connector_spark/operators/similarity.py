@@ -26,30 +26,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def cosine_sim_batch():
-    """Arrow-batched pairwise cosine of two vector columns: one einsum
-    per batch instead of 3·dim interpreted lambda evaluations per row —
-    use for bulk reranks (candidate pairs); keep the expression form
-    below where oracle bit-parity matters."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import DoubleType
-
-    def compute(a: pd.Series, b: pd.Series) -> pd.Series:
-        A = np.asarray([np.asarray(v, dtype=np.float64) for v in a])
-        B = np.asarray([np.asarray(v, dtype=np.float64) for v in b])
-        if A.size == 0:
-            return pd.Series([], dtype="float64")
-        dots = np.einsum("ij,ij->i", A, B)
-        na = np.linalg.norm(A, axis=1)
-        nb = np.linalg.norm(B, axis=1)
-        denom = na * nb
-        out = np.where(denom > 0, dots / np.maximum(denom, 1e-300), 0.0)
-        return pd.Series(out)
-
-    return pandas_udf(compute, DoubleType())
-
-
 def cosine_sim(a, b):
     """Cosine similarity of two array<double> columns, all JVM expressions.
 
@@ -113,18 +89,6 @@ def _lsh_sigs_udf(planes_per_table: list[list[list[float]]]):
         return pd.Series(list(sigs))
 
     return pandas_udf(compute, ArrayType(LongType()))
-
-
-def lsh_signature(vec_col, planes: list[list[float]]):
-    """Sign-bit signature: bit i = (vec · plane_i) >= 0. Returns a long."""
-    sig = F.lit(0).cast("long")
-    for i, plane in enumerate(planes):
-        p = F.array(*[F.lit(float(x)) for x in plane])
-        dot = F.aggregate(
-            F.zip_with(vec_col, p, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
-        )
-        sig = sig + F.when(dot >= 0, F.lit(1 << i).cast("long")).otherwise(F.lit(0).cast("long"))
-    return sig
 
 
 def _planes_for_threshold(threshold: float) -> tuple[int, int]:

@@ -5787,8 +5787,10 @@ def _ensure_incremental_curation(spark, sf: str) -> str:
     # v3 (r14): the gated plane is folded into the pack manifest
     # (keep_cols) — the manifest schema changed, so stale v2 states
     # (separate gated dirs, 6-column manifests) must not be replayed
+    # v4: the exact screen and the packer write one combined delta per
+    # trigger (plane=new|dups, plane=pack|cursors)
     pdir = _source_cache_dir(
-        sf, "documents", "curation-incr-v3", "spark_graft_curation_incr"
+        sf, "documents", "curation-incr-v4", "spark_graft_curation_incr"
     )
     done = read_frozen_thresholds(pdir) is not None and _pack_ptr(
         os.path.join(pdir, "pack_state", "pack")
@@ -5867,13 +5869,13 @@ def _curation_trigger_serve_only(spark, sf):
     from spark_streaming_sql_s3_connector_spark.streaming.curation import (
         _batch_survivors,
         _gate_frozen,
-        _gated_dir,
+        _gated_rows,
         _score,
         read_frozen_thresholds,
     )
 
     pdir = _replay_curation_trigger(spark, sf)
-    stored = spark.read.parquet(_gated_dir(pdir, 2)).select("doc_id", "lang")
+    stored = _gated_rows(spark, pdir, 2).select("doc_id", "lang")
     want = _gate_frozen(
         _score(_batch_survivors(spark, pdir, 2, "doc_id")),
         read_frozen_thresholds(pdir),
@@ -5907,7 +5909,7 @@ def _curation_trigger_bare(spark, sf):
     bit asserting the trigger recorded its per-stage attribution
     sidecar (`read_trigger_timings`)."""
     from spark_streaming_sql_s3_connector_spark.streaming.curation import (
-        _gated_dir,
+        _gated_rows,
         read_trigger_timings,
     )
 
@@ -5917,7 +5919,7 @@ def _curation_trigger_bare(spark, sf):
         {"line_screen", "exact_screen", "finalize_pack", "total"} <= set(t)
     )
     return (
-        spark.read.parquet(_gated_dir(pdir, 2))
+        _gated_rows(spark, pdir, 2)
         .groupBy("lang")
         .agg(F.count(F.lit(1)).alias("n_gated"))
         .withColumn("timings_ok", F.lit(timings_ok))

@@ -89,6 +89,7 @@ from spark_streaming_sql_s3_connector_spark.streaming import stage_timings, stat
 from spark_streaming_sql_s3_connector_spark.streaming.delta_plane import (
     SIDECAR,
     DeltaPlane,
+    foreach_batch,
     union_all,
 )
 from spark_streaming_sql_s3_connector_spark.streaming.stage_timings import (
@@ -747,16 +748,8 @@ def streaming_ann_lifecycle(
     """Run the self-refreshing index off any stream (incl. the
     s3-connector source). The root must be bootstrapped first
     (:func:`bootstrap_ann_lifecycle`). Returns the StreamingQuery."""
-
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        process_ann_lifecycle_batch(
-            batch, batch_id, root,
-            threshold=threshold, check_every=check_every,
-            compact_every=compact_every, sample_rows=sample_rows,
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
+    return foreach_batch(
+        stream, checkpoint_dir, process_ann_lifecycle_batch, root,
+        threshold=threshold, check_every=check_every,
+        compact_every=compact_every, sample_rows=sample_rows,
+    ).start()

@@ -61,6 +61,7 @@ from spark_streaming_sql_s3_connector_spark.streaming.concurrency import (
 from spark_streaming_sql_s3_connector_spark.streaming.delta_plane import (
     SIDECAR,
     DeltaPlane,
+    foreach_batch,
 )
 
 
@@ -272,23 +273,10 @@ def streaming_curation(
     """Run the composed pipeline as a foreachBatch stream; returns the
     StreamingQuery. Restart-safe: the checkpoint replays at most the
     last uncommitted batch, whose stage outputs all overwrite."""
-
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        process_curation_batch(
-            batch,
-            batch_id,
-            pipeline_dir,
-            text_col=text_col,
-            id_col=id_col,
-            lang_col=lang_col,
-            monitor=monitor,
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
+    return foreach_batch(
+        stream, checkpoint_dir, process_curation_batch, pipeline_dir,
+        text_col=text_col, id_col=id_col, lang_col=lang_col, monitor=monitor,
+    ).start()
 
 
 def read_curation_profile(spark: SparkSession, pipeline_dir: str) -> DataFrame:
@@ -486,16 +474,16 @@ def _pack_state_dir(pipeline_dir: str) -> str:
     return os.path.join(pipeline_dir, "pack_state")
 
 
-def _gated_dir(pipeline_dir: str, batch_id: int) -> str:
-    """Batch ``batch_id``'s gated (id, lang, qscore) rows. r14: the gated
-    plane is FOLDED INTO the pack manifest (``pack_batch_incremental``
+def _gated_rows(spark: SparkSession, pipeline_dir: str, batch_id: int) -> DataFrame:
+    """Batch ``batch_id``'s gated (id, lang, qscore) rows. The gated
+    plane rides the pack manifest (``pack_batch_incremental``
     ``keep_cols`` carries lang/qscore onto the manifest rows, 1:1 with
-    the gated docs), so the rows live in the manifest's own delta dir —
-    one plane write per trigger instead of two, and readers that want
-    only the gated columns select them off the manifest row."""
-    from spark_streaming_sql_s3_connector_spark.streaming.rollup import _delta_dir
+    the gated docs), so they are the batch's manifest rows."""
+    from spark_streaming_sql_s3_connector_spark.streaming.packing_state import (
+        read_manifest_batch,
+    )
 
-    return _delta_dir(os.path.join(_pack_state_dir(pipeline_dir), "pack"), batch_id)
+    return read_manifest_batch(spark, _pack_state_dir(pipeline_dir), batch_id)
 
 
 def _thresholds_path(pipeline_dir: str) -> str:
@@ -609,11 +597,6 @@ def _batch_survivors(
     (r14) lets the in-trigger finalize pass the line screen's still-
     cached rebuilt-docs frame (byte-identical to the committed parquet)
     and skip the docs re-read; standalone callers leave it None."""
-    from spark_streaming_sql_s3_connector_spark.streaming.exact_dedup import (
-        _INDEX_SCHEMA,
-        _new_dir,
-    )
-
     docs = (
         docs_df
         if docs_df is not None
@@ -621,11 +604,9 @@ def _batch_survivors(
             line_dedup._docs_dir(_line_index(pipeline_dir), batch_id)
         )
     )
-    uniq = (
-        spark.read.schema(_INDEX_SCHEMA)
-        .parquet(_new_dir(_exact_index(pipeline_dir), batch_id))
-        .select(F.col("_id").alias(id_col))
-    )
+    uniq = exact_dedup.read_new_keys(
+        spark, _exact_index(pipeline_dir), batch_id
+    ).select(F.col("_id").alias(id_col))
     meta = spark.read.parquet(_meta_dir(pipeline_dir, batch_id)).select(
         id_col, "lang"
     )
@@ -689,13 +670,10 @@ def finalize_curation_batch(
         if thresholds is None:
             thresholds = freeze_quality_thresholds(scored, pipeline_dir, frac)
         gated = _gate_frozen(scored, thresholds)
-    # r14: the gated (id, lang, qscore) rows ride the pack manifest via
-    # ``keep_cols`` — ONE delta write per trigger where the gated plane
-    # used to cost a second write job + its own schema/compaction plane,
-    # and `read_curated_pack` becomes a plain manifest read (no join).
-    # `gated` now has a single consumer, so the persist went with it
-    # (pack_batch_incremental caches its own packed frame for the
-    # manifest + cursor writes).
+    # the gated (id, lang, qscore) rows ride the pack manifest via
+    # ``keep_cols``: the packer's one delta write per trigger carries
+    # them, and `read_curated_pack` is a plain manifest read (no join).
+    # `gated` has a single consumer, so it is not persisted.
     with stage_timings.span(clock, "finalize_pack"):
         pack_batch_incremental(
             gated,
@@ -886,27 +864,12 @@ def streaming_curation_incremental(
     serving-ready corpus under ``pipeline_dir`` (read it with
     :func:`read_curated_pack`), with self-maintenance baked into the
     cadence when ``vacuum_every`` is set. Returns the StreamingQuery."""
-
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        process_curation_batch_incremental(
-            batch,
-            batch_id,
-            pipeline_dir,
-            text_col=text_col,
-            id_col=id_col,
-            lang_col=lang_col,
-            monitor=monitor,
-            frac=frac,
-            capacity=capacity,
-            num_shards=num_shards,
-            vacuum_every=vacuum_every,
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
+    return foreach_batch(
+        stream, checkpoint_dir, process_curation_batch_incremental, pipeline_dir,
+        text_col=text_col, id_col=id_col, lang_col=lang_col, monitor=monitor,
+        frac=frac, capacity=capacity, num_shards=num_shards,
+        vacuum_every=vacuum_every,
+    ).start()
 
 
 def propagate_doc_deletes(

@@ -52,6 +52,7 @@ from spark_streaming_sql_s3_connector_spark.operators.dedup import (
 )
 from spark_streaming_sql_s3_connector_spark.streaming.delta_plane import (
     DeltaPlane,
+    foreach_batch,
     union_all,
 )
 from spark_streaming_sql_s3_connector_spark.streaming.exact_dedup import (
@@ -178,25 +179,10 @@ def streaming_near_dup_candidates(
     Candidate pairs land under ``_matches/batch=<id>`` (read them with
     ``read_candidate_pairs``); the band index accumulates under
     ``_bands`` + compacted ``base``."""
-
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        process_batch(
-            batch,
-            batch_id,
-            index_dir,
-            text_col=text_col,
-            id_col=id_col,
-            num_perm=num_perm,
-            bands=bands,
-            shingle_k=shingle_k,
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
-    )
+    return foreach_batch(
+        stream, checkpoint_dir, process_batch, index_dir, text_col=text_col,
+        id_col=id_col, num_perm=num_perm, bands=bands, shingle_k=shingle_k,
+    ).start()
 
 
 def read_candidate_pairs(spark: SparkSession, index_dir: str) -> DataFrame:

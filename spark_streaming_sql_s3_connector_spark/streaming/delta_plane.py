@@ -15,6 +15,14 @@ vectors) persists the same four things under one plane root:
   zero-row delta (a ``_SUCCESS``-only dir) never hits parquet schema
   inference.
 
+A state with more than one row kind (the exact screen's index rows and
+dup verdicts, the packer's manifest and cursor totals) keeps them in the
+SAME batch dir, one ``plane=<side>`` partition each (:func:`tagged`),
+so a trigger lands its whole delta in one write and a fold collects
+every side with the dir. :func:`side` reads one side back; a dir with
+no ``plane=`` level (a state written before the sides were combined)
+is all primary-side rows.
+
 Liveness: the pointed base plus every delta and marker strictly above
 the pointer. Everything at or below it is dead to every reader.
 
@@ -39,6 +47,7 @@ import os
 from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from spark_streaming_sql_s3_connector_spark.streaming import state_io
@@ -50,10 +59,47 @@ SIDECAR = "_schema.json"
 # (rank, path): a live dir with the insert order markers kill by
 Entry = tuple[int, str]
 
+# the partition column that names a row's side in a combined batch dir
+PLANE = "plane"
+
 
 def union_all(frames: list[DataFrame]) -> DataFrame:
     """Left-fold ``unionByName`` over a non-empty frame list."""
     return functools.reduce(DataFrame.unionByName, frames)
+
+
+def foreach_batch(stream: DataFrame, checkpoint_dir: str, process, *args, **kwargs):
+    """The stream writer that calls ``process(batch, batch_id, *args,
+    **kwargs)`` on every micro-batch under ``checkpoint_dir``. Every
+    per-batch step here overwrites its own ``batch=<id>`` outputs, so
+    the checkpoint's replay of an uncommitted batch converges."""
+    return (
+        stream.writeStream.foreachBatch(
+            lambda batch, batch_id: process(batch, batch_id, *args, **kwargs)
+        )
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode("update")
+    )
+
+
+def tagged(sides: dict[str, DataFrame]) -> DataFrame:
+    """One frame of every side's rows, tagged ``plane=<side>``; a
+    column one side lacks reads NULL on the others. Write it
+    ``partitionBy(PLANE, ...)``."""
+    return functools.reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=True),
+        [f.withColumn(PLANE, F.lit(name)) for name, f in sides.items()],
+    )
+
+
+def side(frame: DataFrame, name: str, cols, primary: bool = False) -> DataFrame:
+    """The ``name`` rows of a combined dir's frame (read with a schema
+    that lists :data:`PLANE`), projected to ``cols``. The ``primary``
+    side also owns the rows of a dir with no ``plane=`` level."""
+    cond = F.col(PLANE) == name
+    if primary:
+        cond = cond | F.col(PLANE).isNull()
+    return frame.where(cond).select(*cols)
 
 
 class DeltaPlane:

@@ -30,7 +30,10 @@ from spark_streaming_sql_s3_connector_spark.operators.drift import (
     _NULL_TOKEN,
     drift_from_counts,
 )
-from spark_streaming_sql_s3_connector_spark.streaming.delta_plane import DeltaPlane
+from spark_streaming_sql_s3_connector_spark.streaming.delta_plane import (
+    DeltaPlane,
+    foreach_batch,
+)
 
 
 def count_batch(batch: DataFrame, batch_id: int, sink_dir: str, col: str) -> None:
@@ -57,18 +60,8 @@ def streaming_category_counts(
     everything admitted. Read with :func:`read_category_counts`; compare
     against a baseline with :func:`read_drift`. Returns the
     StreamingQuery."""
-
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        count_batch(batch, batch_id, sink_dir, col)
-
-    writer = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    writer = foreach_batch(stream, checkpoint_dir, count_batch, sink_dir, col)
+    return (writer.trigger(availableNow=True) if trigger_available_now else writer).start()
 
 
 def read_category_counts(spark: SparkSession, sink_dir: str) -> DataFrame:
@@ -146,18 +139,10 @@ def streaming_embedding_moments(
     do). Read with :func:`read_embedding_moments`; compare against a
     baseline with :func:`read_embedding_drift`. Returns the
     StreamingQuery."""
-
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        embedding_moment_batch(batch, batch_id, sink_dir, vec_col)
-
-    writer = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+    writer = foreach_batch(
+        stream, checkpoint_dir, embedding_moment_batch, sink_dir, vec_col
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return (writer.trigger(availableNow=True) if trigger_available_now else writer).start()
 
 
 def read_embedding_moments(spark: SparkSession, sink_dir: str) -> DataFrame:

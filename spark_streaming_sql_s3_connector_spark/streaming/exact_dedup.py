@@ -11,14 +11,21 @@ per-batch recipe:
 3. screen the keepers against the persisted key index with one exact
    join: the keepers' keys are broadcast against the history index,
    pruned to the shards the batch's keys hash into;
-4. append the new keys under ``_new/batch=<id>``, the duplicate verdicts
-   under ``_dups/batch=<id>``.
+4. write the batch's delta in one write: ``_new/batch=<id>`` holds the
+   new keys under ``plane=new`` (one dir per shard) and the duplicate
+   verdicts under ``plane=dups`` (one NULL-``_shard`` dir).
 
-The index is the only state: there is no probabilistic side file. An
-older index may still hold a ``_bloom/`` dir of shard bitmaps; nothing
-reads it.
+:func:`compact_index` folds both sides into the base, so a full fold
+leaves no delta dir behind and :func:`read_dup_ids` still serves every
+verdict. A delta or base with no ``plane=`` level is all index rows:
+the line and passage screens write their ``_new`` deltas that way, and
+so did exact indexes written before the sides were combined, whose
+verdicts sit in a ``_dups/batch=<id>`` root that is read while it
+exists. The index is the only state: there is no probabilistic side
+file. An older index may still hold a ``_bloom/`` dir of shard
+bitmaps; nothing reads it.
 
-Replay safety mirrors `dedup_index` / `rollup`: every write overwrites
+Replay safety mirrors `dedup_index` / `rollup`: the write overwrites
 its own ``batch=<id>`` directory and history reads exclude the
 in-flight batch id, so a replayed batch converges to identical state.
 
@@ -46,11 +53,12 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from spark_streaming_sql_s3_connector_spark.streaming.concurrency import (
-    run_concurrently,
-)
+from spark_streaming_sql_s3_connector_spark.streaming import state_io
 from spark_streaming_sql_s3_connector_spark.streaming.delta_plane import (
+    PLANE,
     DeltaPlane,
+    side,
+    tagged,
     union_all,
 )
 
@@ -65,7 +73,7 @@ def _plane(index_dir: str) -> DeltaPlane:
         index_dir,
         deltas="_new",
         markers=os.path.join(index_dir, "_deleted"),
-        schema=_INDEX_SCHEMA,
+        schema=_DELTA_SCHEMA,
         marker_schema=_MARKER_SCHEMA,
     )
 
@@ -75,14 +83,41 @@ def _new_dir(index_dir: str, batch_id: int) -> str:
 
 
 def _dups_dir(index_dir: str, batch_id: int) -> str:
+    """A verdict dir of the separate ``_dups`` root older indexes have."""
     return os.path.join(index_dir, "_dups", f"batch={batch_id}")
 
 
 # explicit schema: a batch with zero new keys writes a delta dir holding
 # only _SUCCESS, and schema INFERENCE on such a dir throws — a fixed
 # schema reads it as an empty frame instead
-_INDEX_SCHEMA = "_id bigint, key string, _shard int"
+_DELTA_SCHEMA = f"_id bigint, key string, _shard int, dup_kind string, {PLANE} string"
 _MARKER_SCHEMA = "_id bigint, t bigint"
+
+
+def _index_rows(frame: DataFrame) -> DataFrame:
+    return side(frame, "new", ("_id", "key", "_shard"), primary=True)
+
+
+def _dup_rows(frame: DataFrame) -> DataFrame:
+    return side(frame, "dups", ("_id", "key", "dup_kind"))
+
+
+def _write_sides(index: DataFrame, dups: DataFrame, path: str) -> None:
+    """One write of both sides. Clustered by (plane, shard) first:
+    without it every upstream task writes a sliver into every shard dir
+    (~tasks × shards tiny files per delta — measured ~1,100/delta at
+    sf0.1) and each later history scan pays that many footer reads;
+    clustered, a delta is one file per shard plus one verdict file. The
+    sort leads with the partition columns, so it is the only sort the
+    partitioned write runs."""
+    (
+        tagged({"new": index, "dups": dups})
+        .repartition(PLANE, "_shard")
+        .sortWithinPartitions(PLANE, "_shard", "key")
+        .write.mode("overwrite")
+        .partitionBy(PLANE, "_shard")
+        .parquet(path)
+    )
 
 
 def delete_docs_from_screen(
@@ -116,7 +151,7 @@ def delete_docs_from_screen(
 
 
 def _apply_screen_markers(
-    tagged: list[tuple[int, DataFrame]], marks: Optional[DataFrame]
+    ranked: list[tuple[int, DataFrame]], marks: Optional[DataFrame]
 ) -> list[DataFrame]:
     """Anti-join forget markers onto index frames with insert-order
     semantics at dir granularity: a frame inserted at batch b loses the
@@ -125,23 +160,27 @@ def _apply_screen_markers(
     horizon and every LIVE marker sits strictly above it. The marker
     set is the forget sliver — broadcast."""
     if marks is None:
-        return [f for _, f in tagged]
+        return [f for _, f in ranked]
     out = []
-    for b, f in tagged:
+    for b, f in ranked:
         m = marks.where(F.col("t") > F.lit(int(b))).select("_id")
         out.append(f.join(F.broadcast(m), "_id", "left_anti"))
     return out
 
 
 def _screen_frames(
-    spark: SparkSession, plane: DeltaPlane, before_batch: Optional[int] = None
+    spark: SparkSession,
+    plane: DeltaPlane,
+    before_batch: Optional[int] = None,
+    rows=lambda f: f,
 ) -> list[DataFrame]:
-    """A screening plane's live index frames with its forget markers
-    applied. ``before_batch`` excludes the in-flight batch's own
-    (possibly half-written) delta and the markers its original run
-    could not have seen, keeping replay deterministic."""
+    """A screening plane's live index frames (``rows`` of each dir)
+    with its forget markers applied. ``before_batch`` excludes the
+    in-flight batch's own (possibly half-written) delta and the markers
+    its original run could not have seen, keeping replay
+    deterministic."""
     return _apply_screen_markers(
-        plane.frames(spark, plane.live(before_batch)),
+        [(b, rows(f)) for b, f in plane.frames(spark, plane.live(before_batch))],
         plane.marker_frame(spark, plane.live_markers(before_batch)),
     )
 
@@ -149,7 +188,7 @@ def _screen_frames(
 def _index_frames(
     spark: SparkSession, index_dir: str, before_batch: Optional[int] = None
 ) -> list[DataFrame]:
-    return _screen_frames(spark, _plane(index_dir), before_batch)
+    return _screen_frames(spark, _plane(index_dir), before_batch, _index_rows)
 
 
 def _keyed(batch: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -174,7 +213,6 @@ def process_batch(
 
     from pyspark.sql import Window
 
-    cached_matched = None  # assigned in the history branch; finally unpersists
     keyed = _keyed(batch, text_col, id_col)
     null_rows = keyed.where(F.col("key").isNull())
     keyed = keyed.where(F.col("key").isNotNull())
@@ -185,9 +223,8 @@ def process_batch(
     # two row sets (r14, guide §2.4). A key's duplicate population here
     # is whole-document copies (bounded), so concentrating a key on one
     # partition carries none of the hot-LINE skew that keeps the line
-    # screen on its min-struct agg. `marked` is cached because keepers
-    # feeds the screen/delta and internal_dups feeds the dups write —
-    # both are cheap filters over the one shuffled frame.
+    # screen on its min-struct agg. `marked` is cached because the
+    # shard-list collect and the delta write both read it.
     marked = keyed.withColumn(
         "_keeper", F.min("_id").over(Window.partitionBy("key"))
     ).persist()
@@ -207,16 +244,11 @@ def process_batch(
                 r["_shard"] for r in keepers.select("_shard").distinct().collect()
             ]
             hist = union_all(frames).where(F.col("_shard").isin(shards))
-            # persisted: `matched` feeds BOTH the dups and the new-rows
-            # writes — without the cache each write re-runs the pruned
-            # HISTORY scan, doubling the trigger's dominant IO
             matched = (
                 hist.join(F.broadcast(keepers.select("key")), "key", "left_semi")
                 .select("key")
                 .distinct()
-                .persist()
             )
-            cached_matched = matched
             hist_dups = keepers.join(F.broadcast(matched), "key", "left_semi").select(
                 "_id", "key", F.lit("vs_history").alias("dup_kind")
             )
@@ -226,64 +258,18 @@ def process_batch(
             new_rows = keepers
             dups = internal_dups
 
+        # NULL-key rows stay in the index as passthrough outputs — a
+        # NULL key never equi-joins, so they can never produce a false
+        # duplicate verdict later
         new_rows = new_rows.unionByName(
             null_rows.select("_id", "key", "_shard")
         )
-        # NULL-key rows stay in _new as passthrough outputs — a NULL key
-        # never equi-joins, so they can never produce a false duplicate
-        # verdict later. The dups and _new writes are independent
-        # consumers of the cached marked/matched frames and replay
-        # rewrites both idempotently (write order was never observable:
-        # readers run between triggers, the checkpoint commit is the
-        # atomicity boundary), so submit them concurrently — their
-        # fixed per-job costs overlap (r14, streaming/concurrency).
-        # cluster by shard BEFORE the partitioned write: without it every
-        # upstream task writes a sliver into every shard dir (~tasks ×
-        # shards tiny files per delta — measured ~1,100/delta at sf0.1),
-        # and each later trigger's history scan pays that many footer
-        # reads; clustered, a delta is one file per shard (the same
-        # discipline the base fold already applies)
-        run_concurrently(
-            lambda: dups.write.mode("overwrite").parquet(
-                _dups_dir(index_dir, batch_id)
-            ),
-            lambda: new_rows.repartition("_shard")
-            .write.mode("overwrite")
-            .partitionBy("_shard")
-            .parquet(_new_dir(index_dir, batch_id)),
-        )
+        # a batch written by an older writer may have left verdicts in
+        # the separate _dups root; its replay's verdicts replace them
+        state_io.remove_tree(_dups_dir(index_dir, batch_id))
+        _write_sides(new_rows, dups, _new_dir(index_dir, batch_id))
     finally:
         marked.unpersist()
-        if cached_matched is not None:
-            cached_matched.unpersist()
-
-
-def streaming_exact_dedup(
-    stream: DataFrame,
-    index_dir: str,
-    checkpoint_dir: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-):
-    """Start the incremental exact-dedup stream; returns the
-    StreamingQuery. New (first-seen) keys accumulate under ``_new``;
-    duplicate verdicts land under ``_dups/batch=<id>``."""
-
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        process_batch(
-            batch,
-            batch_id,
-            index_dir,
-            text_col=text_col,
-            id_col=id_col,
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
-    )
 
 
 def read_unique_ids(spark: SparkSession, index_dir: str) -> DataFrame:
@@ -294,10 +280,25 @@ def read_unique_ids(spark: SparkSession, index_dir: str) -> DataFrame:
     return union_all(frames).select(F.col("_id").alias("doc_id"), "key")
 
 
+def read_new_keys(spark: SparkSession, index_dir: str, batch_id: int) -> DataFrame:
+    """The index rows batch ``batch_id`` added: its first-seen ids."""
+    return _index_rows(
+        _plane(index_dir).reader(spark).parquet(_new_dir(index_dir, batch_id))
+    )
+
+
 def read_dup_ids(spark: SparkSession, index_dir: str) -> DataFrame:
-    root = os.path.join(index_dir, "_dups")
-    return spark.read.parquet(os.path.join(root, "batch=*")).select(
-        F.col("_id").alias("doc_id"), "key", "dup_kind"
+    """Every duplicate verdict: the dups side of the live base and
+    deltas, plus an older index's ``_dups`` root while it exists."""
+    plane = _plane(index_dir)
+    frames = [_dup_rows(f) for _, f in plane.frames(spark, plane.live())]
+    legacy = os.path.join(index_dir, "_dups")
+    if state_io.list_batch_ids(legacy):
+        frames.append(spark.read.parquet(os.path.join(legacy, "batch=*")))
+    if not frames:
+        raise FileNotFoundError(f"no exact-dedup index under {index_dir}")
+    return union_all(
+        [f.select(F.col("_id").alias("doc_id"), "key", "dup_kind") for f in frames]
     )
 
 
@@ -312,23 +313,27 @@ def compact_index(
     batch id) when compacting while the stream may be down mid-batch:
     if a crashed batch N's delta were folded into the base, its replay
     could no longer exclude its own keys via ``before_batch=N`` and the
-    rewritten ``_dups/batch=N`` verdicts would mark N's first-seen rows
-    as ``vs_history`` (unique-id output stays correct either way — only
+    rewritten batch-N verdicts would mark N's first-seen rows as
+    ``vs_history`` (unique-id output stays correct either way — only
     the dup-verdict labels skew). With ``upto_batch=None`` every delta
     folds; that is safe only when no batch is awaiting replay.
 
-    Forget markers (:func:`delete_docs_from_screen`) in the fold window
-    are applied PHYSICALLY — ``_apply_screen_markers`` anti-joins them
-    with insert-order semantics, so the folded base simply lacks the
-    forgotten rows — and their dirs GC'd; the pointer advances over
-    marker-only windows too (marker liveness keys off it). Markers at
-    or above ``upto_batch`` stay live and keep filtering at read."""
+    The dup verdicts fold into the base verbatim, beside the index
+    rows. Forget markers (:func:`delete_docs_from_screen`) in the fold
+    window are applied PHYSICALLY to the index rows only —
+    ``_apply_screen_markers`` anti-joins them with insert-order
+    semantics, so the folded base simply lacks the forgotten rows — and
+    their dirs GC'd; the pointer advances over marker-only windows too
+    (marker liveness keys off it). Markers at or above ``upto_batch``
+    stay live and keep filtering at read."""
     plane = _plane(index_dir)
 
     def write(path, live, markers):
+        frames = plane.frames(spark, live)
         df = union_all(
             _apply_screen_markers(
-                plane.frames(spark, live), plane.marker_frame(spark, markers)
+                [(b, _index_rows(f)) for b, f in frames],
+                plane.marker_frame(spark, markers),
             )
         )
         # keys are unique across deltas by construction (a key admitted
@@ -341,14 +346,8 @@ def compact_index(
             .agg(F.min("_id").alias("_id"))
         )
         nulls = df.where(F.col("key").isNull()).select("key", "_shard", "_id").distinct()
-        (
-            nn.unionByName(nulls)
-            .repartition("_shard")
-            .sortWithinPartitions("key")
-            .write.mode("overwrite")
-            .partitionBy("_shard")
-            .parquet(path)
-        )
+        dups = union_all([_dup_rows(f) for _, f in frames])
+        _write_sides(nn.unionByName(nulls), dups, path)
 
     return plane.fold(write, upto_batch)
 

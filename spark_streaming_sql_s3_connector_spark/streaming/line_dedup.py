@@ -226,35 +226,9 @@ def process_batch(
 
 
 def read_deduped_docs(spark: SparkSession, index_dir: str) -> DataFrame:
-    """(doc_id, deduped_text, n_kept_lines) across all processed batches."""
-    root = os.path.join(index_dir, "_docs")
-    return spark.read.parquet(root)
-
-
-def streaming_line_dedup(
-    stream: DataFrame,
-    index_dir: str,
-    checkpoint_dir: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-):
-    """Start the incremental keep-first line dedup as a foreachBatch
-    stream; returns the StreamingQuery."""
-
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        process_batch(
-            batch,
-            batch_id,
-            index_dir,
-            text_col=text_col,
-            id_col=id_col,
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
+    """(doc_id, deduped_text, n_kept_lines) across all processed batches
+    (the ``batch`` column partition discovery adds is dropped)."""
+    return spark.read.parquet(os.path.join(index_dir, "_docs")).drop("batch")
 
 
 def compact_index(spark: SparkSession, index_dir: str, upto_batch=None):

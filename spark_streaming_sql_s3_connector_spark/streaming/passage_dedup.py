@@ -50,7 +50,10 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from spark_streaming_sql_s3_connector_spark.streaming.delta_plane import union_all
+from spark_streaming_sql_s3_connector_spark.streaming.delta_plane import (
+    foreach_batch,
+    union_all,
+)
 from spark_streaming_sql_s3_connector_spark.streaming.exact_dedup import (
     _N_SHARDS,
     _index_frames,
@@ -196,8 +199,9 @@ def process_batch(
 
 
 def read_deduped_docs(spark: SparkSession, index_dir: str) -> DataFrame:
-    """(doc_id, deduped_text, n_kept_tokens) across all processed batches."""
-    return spark.read.parquet(os.path.join(index_dir, "_docs"))
+    """(doc_id, deduped_text, n_kept_tokens) across all processed batches
+    (the ``batch`` column partition discovery adds is dropped)."""
+    return spark.read.parquet(os.path.join(index_dir, "_docs")).drop("batch")
 
 
 def streaming_passage_dedup(
@@ -210,22 +214,10 @@ def streaming_passage_dedup(
 ):
     """Start the incremental keep-first passage dedup as a foreachBatch
     stream; returns the StreamingQuery."""
-
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        process_batch(
-            batch,
-            batch_id,
-            index_dir,
-            text_col=text_col,
-            id_col=id_col,
-            k=k,
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
+    return foreach_batch(
+        stream, checkpoint_dir, process_batch, index_dir,
+        text_col=text_col, id_col=id_col, k=k,
+    ).start()
 
 
 def compact_index(spark: SparkSession, index_dir: str, upto_batch=None):

@@ -39,7 +39,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from spark_streaming_sql_s3_connector_spark.operators.profile import _render
-from spark_streaming_sql_s3_connector_spark.streaming.delta_plane import DeltaPlane
+from spark_streaming_sql_s3_connector_spark.streaming.delta_plane import (
+    DeltaPlane,
+    foreach_batch,
+)
 
 _SKETCHABLE = (
     T.ByteType, T.ShortType, T.IntegerType, T.LongType,
@@ -132,17 +135,8 @@ def streaming_profile(
     if not cols:
         raise ValueError("no columns to profile")
 
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        profile_batch(batch, batch_id, sink_dir, cols)
-
-    writer = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    writer = foreach_batch(stream, checkpoint_dir, profile_batch, sink_dir, cols)
+    return (writer.trigger(availableNow=True) if trigger_available_now else writer).start()
 
 
 def read_profile(spark: SparkSession, sink_dir: str) -> DataFrame:

@@ -35,7 +35,10 @@ from pyspark.sql import functions as F
 
 from spark_streaming_sql_s3_connector_spark.functions.text import tokenize
 from spark_streaming_sql_s3_connector_spark.streaming import state_io
-from spark_streaming_sql_s3_connector_spark.streaming.delta_plane import DeltaPlane
+from spark_streaming_sql_s3_connector_spark.streaming.delta_plane import (
+    DeltaPlane,
+    foreach_batch,
+)
 
 _TERMS = "terms"
 _CORPUS = "corpus"
@@ -199,21 +202,11 @@ def streaming_term_stats(
     s3-connector source). Returns the StreamingQuery. Law (tested):
     after any sequence of triggers and replays, the persisted stats
     equal the batch statistics over the union of admitted docs."""
-
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        term_stats_batch(
-            batch, batch_id, sink_dir, text_col, id_col,
-            with_postings=with_postings,
-        )
-
-    writer = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+    writer = foreach_batch(
+        stream, checkpoint_dir, term_stats_batch, sink_dir, text_col, id_col,
+        with_postings=with_postings,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return (writer.trigger(availableNow=True) if trigger_available_now else writer).start()
 
 
 def term_stats_exist(sink_dir: str) -> bool:

@@ -5,7 +5,7 @@ layout and one write → flip → GC fold (``streaming/delta_plane.py``),
 but they arrange it in seven signatures — rollup / profile /
 drift-count / embedding-moment sinks (``_deltas`` + pointer), BM25
 term stats (``terms``/``corpus``/``postings`` subdirs), the
-incremental packing manifest (``pack``/``cursors``), the dedup
+incremental packing manifest (``pack``), the dedup
 screening indexes (``_new`` key dirs), the MinHash band index
 (``_bands``) — beside the IVF-PQ ANN index (``quantizers.json``), and
 each merges its deltas its own way behind its own compactor and
@@ -28,7 +28,8 @@ subtrees are not descended into):
   the newest delta is the only batch a restart can replay, and folding
   it would corrupt a replay's ``_docs`` rewrite)
 - ``terms/`` + ``corpus/``       → ``streaming/term_stats.compact_term_stats``
-- ``pack/`` + ``cursors/``       → ``streaming/packing_state.compact_pack_state``
+- ``pack/_schema.json``, or ``pack/`` + an older state's ``cursors/``
+                                 → ``streaming/packing_state.compact_pack_state``
 - ``_deltas/`` with a delta schema of:
     - ``_n_rows`` + ``_nn_*``    → ``streaming/profile.compact_profile``
     - exactly ``bucket, n``      → ``streaming/drift.compact_drift_counts``
@@ -57,6 +58,7 @@ from typing import Optional
 from pyspark.sql import SparkSession
 
 from spark_streaming_sql_s3_connector_spark.streaming import state_io
+from spark_streaming_sql_s3_connector_spark.streaming.delta_plane import SIDECAR
 
 
 def _delta_schema_cols(spark: SparkSession, deltas_root: str) -> Optional[set]:
@@ -112,7 +114,9 @@ def classify_plane(spark: SparkSession, d: str) -> Optional[str]:
         return "key_screen"
     if "terms" in names and "corpus" in names:
         return "term_stats"
-    if "pack" in names and "cursors" in names:
+    if "pack" in names and (
+        "cursors" in names or state_io.exists(os.path.join(d, "pack", SIDECAR))
+    ):
         return "packing"
     if "_deltas" in names:
         return _classify_deltas(spark, d) or "unknown_deltas"

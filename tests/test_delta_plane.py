@@ -21,18 +21,22 @@ from spark_streaming_sql_s3_connector_spark.streaming import (
     rollup as R,
     state_io,
 )
+from spark_streaming_sql_s3_connector_spark.streaming.delta_plane import (
+    PLANE,
+    tagged,
+)
 
 
-def _forge(frame, plane_root, delta_root, older):
+def _forge(frame, plane_root, delta_root, older, *partition_by):
     """An orphan base and a straggler delta, both at ``older`` (at or
     below the current pointer), holding rows that would change any read
-    that saw them."""
-    frame.write.mode("overwrite").parquet(
-        os.path.join(plane_root, "base", f"v={older}")
-    )
-    frame.write.mode("overwrite").parquet(
-        os.path.join(delta_root, f"batch={older}")
-    )
+    that saw them — written ``partition_by`` the layout's columns."""
+    for path in (
+        os.path.join(plane_root, "base", f"v={older}"),
+        os.path.join(delta_root, f"batch={older}"),
+    ):
+        w = frame.write.mode("overwrite")
+        (w.partitionBy(*partition_by) if partition_by else w).parquet(path)
 
 
 def _assert_collected(plane_root, *batch_roots):
@@ -94,18 +98,25 @@ def test_key_screen_fold_collects_crash_leftovers(spark, tmp_path):
         idx,
     )
     want = _rows(ed.read_unique_ids(spark, idx))
-    # a straggler index delta and a straggler marker that would kill a
-    # live id if either were read
-    straggler = spark.createDataFrame(
-        [(99, "k", 0)], "_id bigint, key string, _shard int"
-    )
-    _forge(straggler, idx, os.path.join(idx, "_new"), 0)
+    want_dups = _rows(ed.read_dup_ids(spark, idx))
+    # a straggler delta carrying both sides and a straggler marker that
+    # would kill a live id if either were read
+    straggler = tagged({
+        "new": spark.createDataFrame(
+            [(99, "k", 0)], "_id bigint, key string, _shard int"
+        ),
+        "dups": spark.createDataFrame(
+            [(98, "k", "within_batch")], "_id bigint, key string, dup_kind string"
+        ),
+    })
+    _forge(straggler, idx, os.path.join(idx, "_new"), 0, PLANE, "_shard")
     spark.createDataFrame([(0, 9)], "_id bigint, t bigint").write.mode(
         "overwrite"
     ).parquet(os.path.join(idx, "_deleted", "batch=0"))
     assert ed.compact_index(spark, idx, upto_batch=3) == 2
     _assert_collected(idx, os.path.join(idx, "_new"), os.path.join(idx, "_deleted"))
     assert _rows(ed.read_unique_ids(spark, idx)) == want
+    assert _rows(ed.read_dup_ids(spark, idx)) == want_dups
 
 
 def test_packing_fold_collects_crash_leftovers(spark, tmp_path):
@@ -125,15 +136,20 @@ def test_packing_fold_collects_crash_leftovers(spark, tmp_path):
     ps.compact_pack_state(spark, pdir)
     pack(20, 30, 2)
     want = _rows(ps.read_packed_manifest(spark, pdir))
-    for sub in ("pack", "cursors"):
-        root = os.path.join(pdir, sub)
-        _forge(spark.read.parquet(ps._delta_dir(root, 2)), root,
-               os.path.join(root, "_deltas"), 0)
+    want_cursors = _cursors(spark, pdir)
+    # the straggler is batch 2's delta: both sides, plane= level included
+    root = os.path.join(pdir, "pack")
+    _forge(spark.read.parquet(ps._delta_dir(root, 2)), root,
+           os.path.join(root, "_deltas"), 0, PLANE)
     ps.compact_pack_state(spark, pdir, upto_batch=2)
-    for sub in ("pack", "cursors"):
-        root = os.path.join(pdir, sub)
-        assert _assert_collected(root, os.path.join(root, "_deltas")) == 2
+    assert _assert_collected(root, os.path.join(root, "_deltas")) == 2
     assert _rows(ps.read_packed_manifest(spark, pdir)) == want
+    assert _cursors(spark, pdir) == want_cursors
+
+
+def _cursors(spark, pdir):
+    """The per-shard token totals the next packed batch starts from."""
+    return _rows(ps._cursor_base(spark, pdir, None))
 
 
 def test_meta_plane_fold_collects_crash_leftovers(spark, tmp_path):

@@ -94,9 +94,9 @@ def test_compaction_preserves_and_continues(spark, tmp_path):
         bs[1], 1, pdir, "doc_id", CAP, text_col="text", num_shards=SHARDS
     )
     compact_pack_state(spark, pdir)
-    assert not os.path.isdir(os.path.join(pdir, "cursors", "_deltas", "batch=0"))
-    base = spark.read.parquet(os.path.join(pdir, "cursors", "base", "v=1"))
-    assert base.count() <= SHARDS
+    assert not os.path.isdir(os.path.join(pdir, "pack", "_deltas", "batch=0"))
+    cursors = os.path.join(pdir, "pack", "base", "v=1", "plane=cursors")
+    assert spark.read.parquet(cursors).count() <= SHARDS
     pack_batch_incremental(
         bs[2], 2, pdir, "doc_id", CAP, text_col="text", num_shards=SHARDS
     )

@@ -1,15 +1,15 @@
-"""r15 plane-fold laws: each dedup screen and the incremental packer
-write ONE partitioned batch dir where they used to write two.
+"""Combined-delta laws: the exact screen and the incremental packer
+each write ONE partitioned batch dir per trigger.
 
 - exact_dedup: ``_new/batch=<id>`` carries ``plane=new`` index rows and
   ``plane=dups`` verdicts; compaction folds verdicts into the versioned
-  base BEFORE GCing a delta, so verdicts survive folds while the
+  base before it GCs a delta, so verdicts survive folds while the
   screen's listing stays bounded (the vacuum law).
 - packing_state: ``pack/_deltas/batch=<id>`` carries ``plane=pack``
   manifest rows and ``plane=cursors`` totals; both fold on one horizon.
-- Both layouts must read PRE-r15 states unmigrated (flat dirs, legacy
-  ``_dups``/``cursors`` roots) and keep serving after a mixed-layout
-  fold.
+- Both read states written before the sides were combined (flat dirs,
+  separate ``_dups``/``cursors`` roots) unmigrated, and keep serving
+  after a mixed-layout fold.
 """
 
 import os
@@ -22,14 +22,6 @@ from spark_streaming_sql_s3_connector_spark.operators.packing import pack_concat
 from spark_streaming_sql_s3_connector_spark.streaming import (
     exact_dedup as ed,
     packing_state as ps,
-)
-
-# the packer's combined-delta layout is specified here but not built yet;
-# it lands with the shared state-plane abstraction (ROADMAP direction 3),
-# and strict xfail turns these red the moment it does
-_FOLD_NOT_BUILT = pytest.mark.xfail(
-    strict=True,
-    reason="combined-delta packing fold not implemented (ROADMAP direction 3)",
 )
 
 
@@ -60,6 +52,7 @@ def test_full_fold_preserves_verdicts_and_bounds_listing(spark, tmp_path):
     bs = _batches(spark)
     for i, b in enumerate(bs):
         ed.process_batch(b, i, idx)
+    assert not os.path.exists(os.path.join(idx, "_dups"))  # one root
     before = _dups(spark, idx)
     assert before == {
         11: "within_batch", 12: "within_batch",
@@ -130,7 +123,6 @@ def _pack_docs(spark, n=30):
     )
 
 
-@_FOLD_NOT_BUILT
 def test_pack_combined_delta_equals_batch_and_folds_whole_dirs(spark, tmp_path):
     pdir = str(tmp_path / "pack")
     docs = _pack_docs(spark)
@@ -225,7 +217,6 @@ def test_pack_legacy_split_delta_state_continues(spark, tmp_path):
     ) == want
 
 
-@_FOLD_NOT_BUILT
 def test_pack_schema_guard_fails_fast_on_mismatched_state(spark, tmp_path):
     """ADVICE r14 (medium): continuing a pack state whose persisted
     manifest schema names different columns must raise, not silently
@@ -242,7 +233,6 @@ def test_pack_schema_guard_fails_fast_on_mismatched_state(spark, tmp_path):
         )
 
 
-@_FOLD_NOT_BUILT
 def test_pack_keep_cols_validation(spark):
     """ADVICE r14 (low): keep_cols colliding with generated manifest
     columns (or the layout tags) are rejected up front."""
@@ -259,7 +249,6 @@ def test_pack_keep_cols_validation(spark):
         )
 
 
-@_FOLD_NOT_BUILT
 def test_zero_row_combined_delta_reads_empty(spark, tmp_path):
     pdir = str(tmp_path / "pack")
     docs = _pack_docs(spark, 5)

@@ -72,8 +72,9 @@ def test_exact_dedup_lifecycle_over_file_uri(spark, uri_root, tmp_path):
     assert uniq == {1, 2, 5} and dups == {3, 4}
     # the index planes landed on the URI's local path
     local = str(tmp_path / "state" / "screen")
-    assert os.path.isdir(os.path.join(local, "_new", "batch=1"))
-    assert os.path.isdir(os.path.join(local, "_dups", "batch=1"))
+    assert os.path.isdir(os.path.join(local, "_new", "batch=1", "plane=new"))
+    assert os.path.isdir(os.path.join(local, "_new", "batch=1", "plane=dups"))
+    assert not os.path.exists(os.path.join(local, "_dups"))
     v = exact_dedup.compact_index(spark, index)
     assert v == 1  # no stream running: every delta folds
     assert {r["doc_id"] for r in exact_dedup.read_unique_ids(spark, index).collect()} == uniq

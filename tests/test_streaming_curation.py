@@ -485,9 +485,9 @@ def test_streaming_curation_incremental_through_connector(spark, tmp_path):
             if e.startswith("batch=")
         ]
         assert len(deltas) <= 4  # vacuum_every=2 + the exclusive horizon
-    for sub in ("pack", "cursors"):
-        base_root = os.path.join(pipeline_dir, "pack_state", sub, "base")
-        assert len([e for e in os.listdir(base_root) if e.startswith("v=")]) == 1
+    base_root = os.path.join(pipeline_dir, "pack_state", "pack", "base")
+    assert len([e for e in os.listdir(base_root) if e.startswith("v=")]) == 1
+    assert not os.path.exists(os.path.join(pipeline_dir, "pack_state", "cursors"))
     for plane in ("profile", "lang_counts"):
         base_root = os.path.join(pipeline_dir, "monitor", plane, "base")
         assert len([e for e in os.listdir(base_root) if e.startswith("v=")]) == 1

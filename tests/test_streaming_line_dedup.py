@@ -52,10 +52,9 @@ def test_incremental_equals_batch_keep_first(spark, tmp_path):
     batches = _mk_batches(spark)
     for i, b in enumerate(batches):
         process_batch(b, i, idx)
-    got = {
-        r.doc_id: (r.deduped_text, r.n_kept_lines)
-        for r in read_deduped_docs(spark, idx).collect()
-    }
+    docs = read_deduped_docs(spark, idx)
+    assert docs.columns == ["doc_id", "deduped_text", "n_kept_lines"]
+    got = {r.doc_id: (r.deduped_text, r.n_kept_lines) for r in docs.collect()}
     want = {
         r.doc_id: (r.deduped_text, r.n_kept_lines)
         for r in dedup_lines_keep_first(

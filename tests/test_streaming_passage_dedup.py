@@ -84,6 +84,8 @@ def test_incremental_equals_batch(spark, tmp_path):
     batches = _mk_batches(spark)
     for i, b in enumerate(batches):
         process_batch(b, i, idx, k=K)
+    cols = read_deduped_docs(spark, idx).columns
+    assert cols == ["doc_id", "deduped_text", "n_kept_tokens"]
     assert _streamed(spark, idx) == _batch_expected(spark, batches)
 
 

@@ -123,9 +123,11 @@ def test_vacuum_compacts_every_plane_and_bounds_versions(spark, tmp_path):
     for plane, sub in (
         ("rollup", ""), ("profile", ""), ("drift_counts", ""), ("moments", ""),
         ("ts", "terms"), ("ts", "corpus"), ("ts", "postings"),
-        ("pack", "pack"), ("pack", "cursors"),
+        ("pack", "pack"),
     ):
         assert len(_base_versions(str(root / plane), sub)) == 1, (plane, sub)
+    # the packer's cursor totals ride its pack deltas: no second plane
+    assert not os.path.exists(str(root / "pack" / "cursors"))
     # screens keep at most the newest (replayable) delta live
     screen_deltas = os.listdir(str(root / "screen" / "_new"))
     assert len(screen_deltas) <= 1
