@@ -72,6 +72,10 @@ from spark_streaming_sql_s3_connector_spark.operators.similarity import (
     pq_topk,
 )
 from spark_streaming_sql_s3_connector_spark.state.log_fs import filesystem_for
+from spark_streaming_sql_s3_connector_spark.streaming.delta_plane import (
+    declare,
+    foreach_batch,
+)
 
 _META_NAME = "quantizers.json"
 _CORPUS_NAME = "corpus"
@@ -257,8 +261,9 @@ def build_ann_index(
     corpus is assigned + encoded DISTRIBUTED and written as
     ``(id, pq_code)`` parquet partitioned by ``ivf_bucket``. The meta
     JSON (centroids + codebooks + column names) is written last via
-    tmp+rename, so a crashed build never looks complete. Returns the
-    meta dict."""
+    tmp+rename, so a crashed build never looks complete, and the root is
+    declared an ``ann_index`` plane only after it. Returns the meta
+    dict."""
     # ONE shared sample scan for both quantizer fits (r14, guide §2.4):
     # the coarse centroids and the PQ codebooks train on the SAME
     # bounded head-quota sample, and each fit applies its own seeded
@@ -313,6 +318,7 @@ def build_ann_index(
     }
     fs.mkdirs(root)
     fs.write_atomic(fs.join(root, _META_NAME), json.dumps(meta), overwrite=True)
+    declare(index_dir, "ann_index")
     return meta
 
 
@@ -571,11 +577,7 @@ def streaming_ann_index(
         if compact_every and batch_id > 0 and batch_id % compact_every == 0:
             compact_ann_index(batch.sparkSession, index_dir, upto_batch=batch_id)
 
-    return (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
+    return foreach_batch(stream, checkpoint_dir, _process).start()
 
 
 def refresh_ann_index_if_drifted(
@@ -989,11 +991,7 @@ def streaming_semantic_dedup(
         finally:
             batch.unpersist()
 
-    return (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
+    return foreach_batch(stream, checkpoint_dir, _process).start()
 
 
 def read_semantic_dedup_output(spark: SparkSession, out_dir: str) -> DataFrame:

@@ -89,6 +89,7 @@ from spark_streaming_sql_s3_connector_spark.streaming import stage_timings, stat
 from spark_streaming_sql_s3_connector_spark.streaming.delta_plane import (
     SIDECAR,
     DeltaPlane,
+    declare,
     foreach_batch,
     union_all,
 )
@@ -431,7 +432,8 @@ def bootstrap_ann_lifecycle(
     """Stand up the lifecycle root: land the bootstrap corpus's raw
     vectors, build the index, and freeze the initial drift baseline =
     the bootstrap corpus's moments (what the quantizers were trained
-    on). Returns the index meta."""
+    on). The root is declared last, so a crashed bootstrap never
+    passes for a lifecycle. Returns the index meta."""
     from spark_streaming_sql_s3_connector_spark.operators.ann_index import (
         build_ann_index,
     )
@@ -449,6 +451,7 @@ def bootstrap_ann_lifecycle(
         pq_centroids=pq_centroids, seed=seed, sample_rows=sample_rows,
     )
     _write_drift_state(embedding_moments(corpus, vec_col), None, root, 0)
+    declare(root, "ann_lifecycle")
     return meta
 
 

@@ -879,7 +879,6 @@ def propagate_doc_deletes(
     id_col: str,
     ann_index_dir: str | None = None,
     term_stats_dir: str | None = None,
-    vec_col: str | None = None,
     emb_docs: DataFrame | None = None,
     exact_index_dir: str | None = None,
     line_index_dir: str | None = None,
@@ -925,38 +924,72 @@ def propagate_doc_deletes(
     over the survivors, forget→re-ingest admits, takedown→re-ingest
     still rejects, and each screening index equals a rebuild over the
     surviving unique docs."""
+    _check_policy(policy)
+    for kind, d in (
+        ("ann_index", ann_index_dir),
+        ("term_stats", term_stats_dir),
+        ("key_screen", exact_index_dir),
+        ("key_screen", line_index_dir),
+        ("key_screen", passage_index_dir),
+        ("minhash_bands", minhash_index_dir),
+    ):
+        if d is not None:
+            _delete_plane(
+                kind, d, docs, batch_id, text_col, id_col, emb_docs, policy
+            )
+
+
+def _check_policy(policy: str) -> None:
     if policy not in ("takedown", "forget"):
         raise ValueError(f"policy must be 'takedown' or 'forget', got {policy!r}")
-    if ann_index_dir is not None:
+
+
+def _delete_plane(
+    kind: str,
+    d: str,
+    docs: DataFrame,
+    batch_id: int,
+    text_col: str,
+    id_col: str,
+    emb_docs: DataFrame | None,
+    policy: str,
+) -> str:
+    """Route one delete to the ``kind`` plane at ``d``; returns the
+    action taken. Both delete entry points call it."""
+    if kind in ("ann_index", "ann_lifecycle"):
         from spark_streaming_sql_s3_connector_spark.operators.ann_index import (
             delete_from_ann_index,
         )
 
-        src = emb_docs if emb_docs is not None else docs
-        delete_from_ann_index(
-            src.select(F.col(id_col)), ann_index_dir, batch_id=batch_id
+        ids_df = (emb_docs if emb_docs is not None else docs).select(F.col(id_col))
+        if kind == "ann_index":
+            delete_from_ann_index(ids_df, d, batch_id=batch_id)
+            return "tombstoned"
+        # a self-refreshing lifecycle needs BOTH halves: tombstone the
+        # served codes AND mark the landed raw vectors — the index
+        # tombstone alone is not durable, because the next drift
+        # refresh retrains/re-encodes from the landed floats and would
+        # resurrect the deleted ids
+        from spark_streaming_sql_s3_connector_spark.streaming.ann_lifecycle import (
+            delete_vectors_from_lifecycle,
         )
-    if term_stats_dir is not None:
+
+        delete_from_ann_index(ids_df, os.path.join(d, "index"), batch_id=batch_id)
+        delete_vectors_from_lifecycle(ids_df, batch_id, d, id_col=id_col)
+        return "tombstoned + vectors-marked"
+    if kind == "term_stats":
         from spark_streaming_sql_s3_connector_spark.streaming.term_stats import (
             delete_docs_from_term_stats,
         )
 
-        delete_docs_from_term_stats(
-            docs, batch_id, term_stats_dir, text_col, id_col
-        )
-    if policy == "forget":
-        from spark_streaming_sql_s3_connector_spark.streaming.exact_dedup import (
-            delete_docs_from_screen,
-        )
-
-        for d in (
-            exact_index_dir,
-            line_index_dir,
-            passage_index_dir,
-            minhash_index_dir,
-        ):
-            if d is not None:
-                delete_docs_from_screen(docs, batch_id, d, id_col=id_col)
+        delete_docs_from_term_stats(docs, batch_id, d, text_col, id_col)
+        return "stats-negated"
+    if kind in ("key_screen", "minhash_bands"):
+        if policy != "forget":
+            return "kept (takedown suppresses re-crawls)"
+        exact_dedup.delete_docs_from_screen(docs, batch_id, d, id_col=id_col)
+        return "forgotten"
+    return "skipped (not id-addressable)"
 
 
 def propagate_doc_deletes_for_pipeline(
@@ -969,10 +1002,10 @@ def propagate_doc_deletes_for_pipeline(
     policy: str = "takedown",
 ) -> list[dict]:
     """:func:`propagate_doc_deletes` with state DISCOVERY: a curation
-    pipeline has ONE root, not six dir arguments — walk it with the
-    vacuum signature classifier (`streaming/vacuum.classify_plane`, the
-    same detection table maintenance compacts by) and route every
-    id-addressable plane found to its delete:
+    pipeline has ONE root, not six dir arguments — walk its declared
+    state roots (`streaming/vacuum.walk_planes`, the walk maintenance
+    compacts by) and route every id-addressable plane found to its
+    delete:
 
     - ``ann_index``       → `operators/ann_index.delete_from_ann_index`
       (needs ``emb_docs`` or ``docs`` carrying the ids; tombstones)
@@ -989,65 +1022,24 @@ def propagate_doc_deletes_for_pipeline(
       id-addressable — reported ``skipped`` (repacking after a delete
       is a finalize-level decision, not a marker write)
 
+    A root written before planes were declared is not found, so it is
+    left alone (see `streaming/vacuum`).
+
     Returns one dict per plane found: path, plane, action — the vacuum
     report shape. Same policy semantics, same monotonic batch-id
     contract as the explicit-args form (laws shared with
     `test_screen_deletes`)."""
     from spark_streaming_sql_s3_connector_spark.streaming.vacuum import walk_planes
 
-    if policy not in ("takedown", "forget"):
-        raise ValueError(f"policy must be 'takedown' or 'forget', got {policy!r}")
-    spark = docs.sparkSession
-    report: list[dict] = []
-    for d, kind in walk_planes(spark, pipeline_dir):
-        if kind == "ann_index":
-            from spark_streaming_sql_s3_connector_spark.operators.ann_index import (
-                delete_from_ann_index,
-            )
-
-            src = emb_docs if emb_docs is not None else docs
-            delete_from_ann_index(
-                src.select(F.col(id_col)), d, batch_id=batch_id
-            )
-            action = "tombstoned"
-        elif kind == "ann_lifecycle":
-            # a self-refreshing lifecycle needs BOTH halves: tombstone
-            # the served codes AND mark the landed raw vectors — the
-            # index tombstone alone is not durable, because the next
-            # drift refresh retrains/re-encodes from the landed floats
-            # and would resurrect the deleted ids
-            from spark_streaming_sql_s3_connector_spark.operators.ann_index import (
-                delete_from_ann_index,
-            )
-            from spark_streaming_sql_s3_connector_spark.streaming.ann_lifecycle import (
-                delete_vectors_from_lifecycle,
-            )
-
-            src = emb_docs if emb_docs is not None else docs
-            ids_df = src.select(F.col(id_col))
-            delete_from_ann_index(
-                ids_df, os.path.join(d, "index"), batch_id=batch_id
-            )
-            delete_vectors_from_lifecycle(ids_df, batch_id, d, id_col=id_col)
-            action = "tombstoned + vectors-marked"
-        elif kind == "term_stats":
-            from spark_streaming_sql_s3_connector_spark.streaming.term_stats import (
-                delete_docs_from_term_stats,
-            )
-
-            delete_docs_from_term_stats(docs, batch_id, d, text_col, id_col)
-            action = "stats-negated"
-        elif kind in ("key_screen", "minhash_bands"):
-            if policy == "forget":
-                from spark_streaming_sql_s3_connector_spark.streaming.exact_dedup import (
-                    delete_docs_from_screen,
-                )
-
-                delete_docs_from_screen(docs, batch_id, d, id_col=id_col)
-                action = "forgotten"
-            else:
-                action = "kept (takedown suppresses re-crawls)"
-        else:
-            action = "skipped (not id-addressable)"
-        report.append({"path": d, "plane": kind, "action": action})
+    _check_policy(policy)
+    report = [
+        {
+            "path": d,
+            "plane": kind,
+            "action": _delete_plane(
+                kind, d, docs, batch_id, text_col, id_col, emb_docs, policy
+            ),
+        }
+        for d, kind in walk_planes(pipeline_dir)
+    ]
     return sorted(report, key=lambda r: r["path"])

@@ -52,6 +52,7 @@ from spark_streaming_sql_s3_connector_spark.operators.dedup import (
 )
 from spark_streaming_sql_s3_connector_spark.streaming.delta_plane import (
     DeltaPlane,
+    declare,
     foreach_batch,
     union_all,
 )
@@ -117,6 +118,7 @@ def process_batch(
     then append this batch's bands. Every write overwrites a
     ``batch=<id>``-keyed directory — calling this twice with the same
     (batch, batch_id) converges to identical state (replay safety)."""
+    declare(index_dir, "minhash_bands")
     new_bands = _compute_bands(batch, text_col, id_col, num_perm, bands, shingle_k)
     new_bands = new_bands.persist()
     try:

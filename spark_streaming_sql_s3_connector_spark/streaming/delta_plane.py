@@ -15,6 +15,10 @@ vectors) persists the same four things under one plane root:
   zero-row delta (a ``_SUCCESS``-only dir) never hits parquet schema
   inference.
 
+Each state root a writer creates also names its kind once, in a
+write-once ``_plane.json`` (:func:`declare`), which is all that
+``streaming/vacuum`` and the pipeline delete router read to find it.
+
 A state with more than one row kind (the exact screen's index rows and
 dup verdicts, the packer's manifest and cursor totals) keeps them in the
 SAME batch dir, one ``plane=<side>`` partition each (:func:`tagged`),
@@ -61,6 +65,34 @@ Entry = tuple[int, str]
 
 # the partition column that names a row's side in a combined batch dir
 PLANE = "plane"
+
+# a state root's kind declaration (the ``_`` keeps Spark's readers off it)
+DECLARATION = "_plane.json"
+
+
+def declare(root: str, kind: str, **extra) -> None:
+    """Name ``root`` a state root of ``kind`` (plus ``extra`` fields,
+    e.g. a rollup's merge ``keys``). Write-once: an existing
+    declaration wins, so a replay or restart leaves it byte-identical,
+    and a warm trigger pays one stat, not a write."""
+    path = os.path.join(root, DECLARATION)
+    if not state_io.exists(path):
+        state_io.write_text_atomic(
+            path, json.dumps({"kind": kind, **extra}, sort_keys=True),
+            overwrite=False,
+        )
+
+
+def declaration(root: str) -> Optional[dict]:
+    """``root``'s declaration, or None when it declares nothing. One
+    that does not parse still marks a root, of kind ``unreadable``:
+    nothing maintains it, and nothing mistakes its subdirs for roots."""
+    try:
+        return json.loads(state_io.read_text(os.path.join(root, DECLARATION)))
+    except FileNotFoundError:
+        return None
+    except ValueError:
+        return {"kind": "unreadable"}
 
 
 def union_all(frames: list[DataFrame]) -> DataFrame:

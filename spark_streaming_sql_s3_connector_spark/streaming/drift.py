@@ -32,6 +32,7 @@ from spark_streaming_sql_s3_connector_spark.operators.drift import (
 )
 from spark_streaming_sql_s3_connector_spark.streaming.delta_plane import (
     DeltaPlane,
+    declare,
     foreach_batch,
 )
 
@@ -40,6 +41,7 @@ def count_batch(batch: DataFrame, batch_id: int, sink_dir: str, col: str) -> Non
     """One micro-batch's value counts, overwritten into this batch's own
     delta dir (idempotent on replay). NULLs bucket under the same
     reserved token as the batch operator."""
+    declare(sink_dir, "drift_counts")
     b = F.coalesce(F.col(col).cast("string"), F.lit(_NULL_TOKEN))
     (
         batch.groupBy(b.alias("bucket"))
@@ -120,6 +122,7 @@ def embedding_moment_batch(
         embedding_moments,
     )
 
+    declare(sink_dir, "embedding_moments")
     embedding_moments(batch, vec_col).coalesce(1).write.mode(
         "overwrite"
     ).parquet(DeltaPlane(sink_dir).delta_path(batch_id))

@@ -57,6 +57,7 @@ from spark_streaming_sql_s3_connector_spark.streaming import state_io
 from spark_streaming_sql_s3_connector_spark.streaming.delta_plane import (
     PLANE,
     DeltaPlane,
+    declare,
     side,
     tagged,
     union_all,
@@ -210,6 +211,7 @@ def process_batch(
     """One micro-batch of the incremental exact dedup (see module doc).
     Overwrites ``batch=<id>``-keyed outputs — replay converges."""
     spark = batch.sparkSession
+    declare(index_dir, "key_screen")
 
     from pyspark.sql import Window
 

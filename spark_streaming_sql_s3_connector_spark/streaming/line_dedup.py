@@ -50,7 +50,10 @@ from pyspark.sql import functions as F
 from spark_streaming_sql_s3_connector_spark.streaming.concurrency import (
     run_concurrently,
 )
-from spark_streaming_sql_s3_connector_spark.streaming.delta_plane import union_all
+from spark_streaming_sql_s3_connector_spark.streaming.delta_plane import (
+    declare,
+    union_all,
+)
 from spark_streaming_sql_s3_connector_spark.streaming.exact_dedup import (
     _N_SHARDS,
     _index_frames,
@@ -105,6 +108,7 @@ def process_batch(
     Replay semantics are unchanged: both writes still land inside the
     same trigger, before the checkpoint commit."""
     spark = batch.sparkSession
+    declare(index_dir, "key_screen")
 
     lines = _lines(batch, text_col, id_col).persist()
     cached_matched = None  # assigned in the history branch; finally unpersists

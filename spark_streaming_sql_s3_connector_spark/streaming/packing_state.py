@@ -66,6 +66,7 @@ from spark_streaming_sql_s3_connector_spark.streaming.delta_plane import (
     SIDECAR,
     DeltaPlane,
     Entry,
+    declare,
     foreach_batch,
     side,
     tagged,
@@ -239,6 +240,7 @@ def pack_batch_incremental(
                 f"persisted manifest columns {manifest.fieldNames()} differ "
                 f"from this batch's {shifted.columns}: pack into a fresh pack_dir"
             )
+        declare(pack_dir, "packing")
         # a batch an older writer wrote left its totals in the separate
         # cursors plane; this replay's totals replace them
         state_io.remove_tree(

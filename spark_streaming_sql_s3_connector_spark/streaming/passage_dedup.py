@@ -51,6 +51,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_streaming_sql_s3_connector_spark.streaming.delta_plane import (
+    declare,
     foreach_batch,
     union_all,
 )
@@ -105,6 +106,7 @@ def process_batch(
     if k < 2:
         raise ValueError("k must be >= 2")
     spark = batch.sparkSession
+    declare(index_dir, "key_screen")
 
     base = _tokenized(batch, text_col, id_col).persist()
     occ = _gram_occurrences(base, k).persist()

@@ -41,6 +41,7 @@ from pyspark.sql import types as T
 from spark_streaming_sql_s3_connector_spark.operators.profile import _render
 from spark_streaming_sql_s3_connector_spark.streaming.delta_plane import (
     DeltaPlane,
+    declare,
     foreach_batch,
 )
 
@@ -110,6 +111,7 @@ def profile_batch(
     cols = list(columns) if columns is not None else list(batch.columns)
     if not cols:
         raise ValueError("no columns to profile")
+    declare(sink_dir, "profile")
     _partials(batch, cols).write.mode("overwrite").parquet(
         DeltaPlane(sink_dir).delta_path(batch_id)
     )

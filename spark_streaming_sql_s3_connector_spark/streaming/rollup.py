@@ -43,6 +43,8 @@ from pyspark.sql import functions as F
 
 from spark_streaming_sql_s3_connector_spark.streaming.delta_plane import (
     DeltaPlane,
+    declare,
+    foreach_batch,
     union_all,
 )
 
@@ -103,8 +105,10 @@ def continuous_aggregate(
     periodically with ``compact_rollup`` (any schedule — correctness
     never depends on it). ``distinct_col`` adds an HLL sketch partial so
     the view exposes approx-distinct of that column per bucket (sketches
-    union losslessly through every delta fold)."""
+    union losslessly through every delta fold). The sink declares its
+    ``keys``, which ``streaming/vacuum`` folds by."""
     keys = list(keys)
+    declare(sink_dir, "rollup", keys=keys)
 
     def _process(batch: DataFrame, batch_id: int) -> None:
         aggs = [fn(F.col(value_col)).alias(name) for name, fn in _PARTIALS]
@@ -118,11 +122,7 @@ def continuous_aggregate(
         # overwrite of THIS batch's own directory = idempotent on replay
         delta.write.mode("overwrite").parquet(_delta_dir(sink_dir, batch_id))
 
-    writer = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
+    writer = foreach_batch(stream, checkpoint_dir, _process)
     if trigger_available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()

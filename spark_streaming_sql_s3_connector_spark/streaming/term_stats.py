@@ -37,6 +37,7 @@ from spark_streaming_sql_s3_connector_spark.functions.text import tokenize
 from spark_streaming_sql_s3_connector_spark.streaming import state_io
 from spark_streaming_sql_s3_connector_spark.streaming.delta_plane import (
     DeltaPlane,
+    declare,
     foreach_batch,
 )
 
@@ -85,6 +86,7 @@ def term_stats_batch(
         run_concurrently,
     )
 
+    declare(sink_dir, "term_stats")
     toks = tokenize(F.lower(F.col(text_col)))
     # tokenize ONCE per batch (r14): the terms delta, the corpus-totals
     # delta (and the postings delta when on) each re-ran the regexp

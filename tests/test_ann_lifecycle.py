@@ -376,8 +376,8 @@ def test_lifecycle_classifies_before_first_trigger(spark, tmp_path):
         _df(spark, _old_rows(n=60)), "embedding", "vec_id", root, **GEOM
     )
     assert "moments" not in os.listdir(root)
-    assert classify_plane(spark, root) == "ann_lifecycle"
-    assert dict(walk_planes(spark, str(tmp_path))) == {root: "ann_lifecycle"}
+    assert classify_plane(root) == "ann_lifecycle"
+    assert dict(walk_planes(str(tmp_path))) == {root: "ann_lifecycle"}
 
 
 def test_delete_survives_refresh(spark, tmp_path):

@@ -315,7 +315,7 @@ def test_assemble_context_preserves_string_ids(spark):
 
 def test_pipeline_root_delete_discovers_and_drives_all_states(spark, tmp_path):
     """r11: one call on a pipeline ROOT discovers every persisted state
-    by the vacuum signature classifier and routes each to its delete —
+    by its declared kind (the vacuum walk) and routes each to its delete —
     same policy split as the explicit-args form."""
     from spark_streaming_sql_s3_connector_spark.streaming.curation import (
         propagate_doc_deletes_for_pipeline,

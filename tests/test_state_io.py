@@ -174,16 +174,19 @@ def test_list_names_info_pairs(root):
     assert got["_deltas"] is True
 
 
-def test_vacuum_walk_discovers_planes_on_mock_store(spark):
+def test_vacuum_walk_discovers_planes_on_mock_store():
     """The maintenance walk's DISCOVERY runs against a registered mock
     object store with one listing per directory (the r12 listdir_info
-    path) — classification of layout-marker planes needs no Spark
-    reads, so this exercises the walk end-to-end off POSIX."""
+    path) — a plane is found by its ``_plane.json`` alone, with no
+    Spark reads, so this exercises the walk end-to-end off POSIX. A
+    declared root is not descended into: the lifecycle's own index
+    declaration stays inside it."""
     from pyarrow.fs import _MockFileSystem
 
     from spark_streaming_sql_s3_connector_spark.state.log_fs import (
         ArrowLogFileSystem,
     )
+    from spark_streaming_sql_s3_connector_spark.streaming.delta_plane import declare
     from spark_streaming_sql_s3_connector_spark.streaming.vacuum import walk_planes
 
     fs = ArrowLogFileSystem(_MockFileSystem())
@@ -191,16 +194,20 @@ def test_vacuum_walk_discovers_planes_on_mock_store(spark):
     try:
         for p in (
             "root/pipeline/bm25/terms",
-            "root/pipeline/bm25/corpus",
             "root/pipeline/screen/_new/batch=0",
-            "root/pipeline/bands/_bands/batch=0",
-            "root/life/index",
+            "root/pipeline/undeclared/_new/batch=0",
             "root/life/vectors",
-            "root/life/moments",
-            "root/life/drift_state",
         ):
             fs.mkdirs(p)
-        found = dict(walk_planes(spark, "mockwalk://root"))
+        for p, kind in (
+            ("pipeline/bm25", "term_stats"),
+            ("pipeline/screen", "key_screen"),
+            ("pipeline/bands", "minhash_bands"),
+            ("life", "ann_lifecycle"),
+            ("life/index", "ann_index"),
+        ):
+            declare(f"mockwalk://root/{p}", kind)
+        found = dict(walk_planes("mockwalk://root"))
         assert found == {
             "mockwalk://root/pipeline/bm25": "term_stats",
             "mockwalk://root/pipeline/screen": "key_screen",

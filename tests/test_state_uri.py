@@ -110,12 +110,14 @@ def test_term_stats_lifecycle_over_file_uri(spark, uri_root, tmp_path):
 
 
 def test_vacuum_walks_file_uri_root(spark, uri_root, tmp_path):
+    from spark_streaming_sql_s3_connector_spark.streaming.delta_plane import declare
     from spark_streaming_sql_s3_connector_spark.streaming.vacuum import vacuum
 
     sink = uri_root + "/planes/counts"
     df = spark.createDataFrame([("a", 3), ("b", 2)], "bucket string, n long")
     for bid in (0, 1):
         df.write.mode("overwrite").parquet(sink + f"/_deltas/batch={bid}")
+    declare(sink, "drift_counts")
     report = vacuum(spark, uri_root + "/planes")
     assert [r["plane"] for r in report] == ["drift_counts"]
     local = str(tmp_path / "state" / "planes" / "counts")

@@ -1,5 +1,5 @@
 """Unified state vacuum (streaming/vacuum.py): ONE call walks a state
-root, classifies every persisted plane by its on-disk signature, and
+root, finds every persisted plane by its declared kind, and
 runs the right compactor with its safe default — and after a 10-batch
 lifecycle with interleaved vacuums each plane holds ONE base version
 with bounded live deltas, while every reader still serves exactly what
@@ -32,6 +32,7 @@ def test_vacuum_compacts_every_plane_and_bounds_versions(spark, tmp_path):
         process_batch as band_batch,
         read_candidate_pairs,
     )
+    from spark_streaming_sql_s3_connector_spark.streaming.delta_plane import declare
     from spark_streaming_sql_s3_connector_spark.streaming.drift import (
         count_batch,
         embedding_moment_batch,
@@ -86,6 +87,7 @@ def test_vacuum_compacts_every_plane_and_bounds_versions(spark, tmp_path):
             .agg(*[fn(F.col("value")).alias(n) for n, fn in _PARTIALS])
         )
         delta.write.mode("overwrite").parquet(_delta_dir(str(root / "rollup"), b))
+        declare(str(root / "rollup"), "rollup", keys=["event_type"])
         profile_batch(batch.select("doc_id", "event_type"), b, str(root / "profile"))
         count_batch(batch, b, str(root / "drift_counts"), "event_type")
         emb = batch.select(
