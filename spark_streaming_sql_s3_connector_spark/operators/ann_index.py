@@ -261,9 +261,12 @@ def build_ann_index(
     corpus is assigned + encoded DISTRIBUTED and written as
     ``(id, pq_code)`` parquet partitioned by ``ivf_bucket``. The meta
     JSON (centroids + codebooks + column names) is written last via
-    tmp+rename, so a crashed build never looks complete, and the root is
-    declared an ``ann_index`` plane only after it. Returns the meta
-    dict."""
+    tmp+rename, so a crashed build never looks complete, and a first
+    build declares the root an ``ann_index`` plane only after it. A
+    rebuild removes the meta first while the declaration stays, so
+    until the new meta commits a vacuum reports the plane as an error
+    and a delete routed to it raises; neither drops state. Returns the
+    meta dict."""
     # ONE shared sample scan for both quantizer fits (r14, guide §2.4):
     # the coarse centroids and the PQ codebooks train on the SAME
     # bounded head-quota sample, and each fit applies its own seeded

@@ -620,6 +620,7 @@ def refresh_lifecycle_if_drifted(
     # already read both planes, so the check is a None test, not IO.
     no_window = live is None or baseline is None
     meta = load_index_meta(_index_dir(root))
+    declare(root, "ann_lifecycle")  # before the rebuild declares its index
     # fold the committed landings FIRST: the rebuild then reads one
     # base dir instead of a per-trigger dir population, and the plane's
     # listing stays bounded without a separate maintenance schedule. A
@@ -706,6 +707,9 @@ def process_ann_lifecycle_batch(
     spark = batch.sparkSession
     clock = StageClock()
     meta = load_index_meta(_index_dir(root))
+    # a root bootstrapped before planes were declared: name it before
+    # its index and moments declare themselves as standalone planes
+    declare(root, "ann_lifecycle")
     with _span(clock, "landing_write"):
         vectors = _vectors_plane(root)
         land_dir = vectors.delta_path(batch_id)

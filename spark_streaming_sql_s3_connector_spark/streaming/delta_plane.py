@@ -85,14 +85,18 @@ def declare(root: str, kind: str, **extra) -> None:
 
 def declaration(root: str) -> Optional[dict]:
     """``root``'s declaration, or None when it declares nothing. One
-    that does not parse still marks a root, of kind ``unreadable``:
-    nothing maintains it, and nothing mistakes its subdirs for roots."""
+    that does not parse, or is not an object with a string ``kind``,
+    still marks a root, of kind ``unreadable``: nothing maintains it,
+    and nothing mistakes its subdirs for roots."""
     try:
-        return json.loads(state_io.read_text(os.path.join(root, DECLARATION)))
+        decl = json.loads(state_io.read_text(os.path.join(root, DECLARATION)))
     except FileNotFoundError:
         return None
     except ValueError:
+        decl = None
+    if not isinstance(decl, dict) or not isinstance(decl.get("kind"), str):
         return {"kind": "unreadable"}
+    return decl
 
 
 def union_all(frames: list[DataFrame]) -> DataFrame:

@@ -19,8 +19,8 @@ kind                   declared by                                vacuum runs
 =====================  =========================================  ===========================
 ``ann_index``          ``ann_index.build_ann_index``, after its   ``compact_ann_index``
                        ``quantizers.json`` commits
-``ann_lifecycle``      ``bootstrap_ann_lifecycle``, last          the vectors fold, then the
-                                                                  index and moments folds
+``ann_lifecycle``      ``bootstrap_ann_lifecycle`` (last), each   the vectors fold, then the
+                       lifecycle trigger and each refresh         index and moments folds
 ``minhash_bands``      ``dedup_index.process_batch``              ``compact_index``
 ``key_screen``         ``process_batch`` of the exact, line and   ``exact_dedup.compact_index``
                        passage screens
@@ -50,7 +50,9 @@ bring one back under maintenance, re-bootstrap it or write its
 one-line ``_plane.json`` by hand (e.g. ``{"kind": "key_screen"}``; a
 rollup's also lists its merge ``keys``). A writer that declares per
 batch or per stream start also declares an old root the next time it
-writes to it; the ANN index and lifecycle declare only when built.
+writes to it: the lifecycle on its next trigger or refresh, before
+either writes its ``index`` or ``moments``; a standalone ANN index
+only when it is rebuilt.
 
 ``upto_batch`` (optional) passes through to every compactor that takes
 a fold horizon — hand it the last COMMITTED batch id when vacuuming
@@ -80,8 +82,8 @@ def classify_plane(d: str) -> Optional[str]:
     """The kind ``d`` declares in its ``_plane.json`` ('ann_index' |
     'ann_lifecycle' | 'minhash_bands' | 'key_screen' | 'term_stats' |
     'packing' | 'profile' | 'drift_counts' | 'embedding_moments' |
-    'rollup'; 'unreadable' when the file does not parse), or None when
-    ``d`` declares nothing (a container to descend into). Vacuum and
+    'rollup'; 'unreadable' when the file is not such a declaration), or
+    None when ``d`` declares nothing (a container to descend into). Vacuum and
     `curation.propagate_doc_deletes_for_pipeline` both route by it."""
     decl = declaration(d)
     return None if decl is None else decl["kind"]

@@ -380,6 +380,44 @@ def test_lifecycle_classifies_before_first_trigger(spark, tmp_path):
     assert dict(walk_planes(str(tmp_path))) == {root: "ann_lifecycle"}
 
 
+def test_undeclared_lifecycle_is_declared_before_its_children(spark, tmp_path):
+    """A lifecycle bootstrapped before planes were declared has no
+    ``_plane.json`` anywhere. Its next trigger, or its next refresh,
+    declares the root before the moments and index inside it declare
+    themselves, so the walk never finds them as standalone planes (a
+    standalone ``ann_index`` delete would skip the raw-vector marker
+    and a refresh would resurrect the deleted ids)."""
+    from spark_streaming_sql_s3_connector_spark.streaming.ann_lifecycle import (
+        refresh_lifecycle_if_drifted,
+    )
+    from spark_streaming_sql_s3_connector_spark.streaming.delta_plane import (
+        DECLARATION,
+    )
+    from spark_streaming_sql_s3_connector_spark.streaming.vacuum import (
+        walk_planes,
+    )
+
+    def undeclare():
+        for d, _, names in os.walk(root):
+            if DECLARATION in names:
+                os.remove(os.path.join(d, DECLARATION))
+        assert dict(walk_planes(str(tmp_path))) == {}
+
+    root = str(tmp_path / "life")
+    bootstrap_ann_lifecycle(
+        _df(spark, _old_rows(n=60)), "embedding", "vec_id", root, **GEOM
+    )
+    undeclare()
+    process_ann_lifecycle_batch(
+        _df(spark, _old_rows(n=20, start=5000, seed=9)), 1, root,
+        threshold=0.5, check_every=0,
+    )
+    assert dict(walk_planes(str(tmp_path))) == {root: "ann_lifecycle"}
+    undeclare()
+    assert refresh_lifecycle_if_drifted(spark, root, force=True) is not None
+    assert dict(walk_planes(str(tmp_path))) == {root: "ann_lifecycle"}
+
+
 def test_delete_survives_refresh(spark, tmp_path):
     """The durable-delete law: deleting docs from a lifecycle kills
     their raw vectors too, so a later drift REFRESH (which retrains and

@@ -156,3 +156,31 @@ def test_undeclared_roots_are_left_alone(spark, tmp_path):
     report = propagate_doc_deletes_for_pipeline(dead, 3, str(root), policy="forget")
     assert [r["path"] for r in report] == [declared]
     assert {name: _files(d) for name, d in legacy.items()} == before
+
+
+def test_malformed_declaration_is_unreadable_not_fatal(spark, tmp_path):
+    """A hand-written ``_plane.json`` that parses but is not an object
+    with a string ``kind`` marks an ``unreadable`` root: vacuum skips
+    it, and the declared sibling beside it is still folded."""
+    from spark_streaming_sql_s3_connector_spark.streaming.drift import count_batch
+
+    root = tmp_path / "pipeline"
+    good = str(root / "counts")
+    for b in range(3):
+        count_batch(_batch(spark, b * 10, b * 10 + 10), b, good, "event_type")
+    bad = {}
+    for name, text in [("empty", "{}"), ("list", "[]"), ("typo", '{"knid": "profile"}'),
+                       ("number", '{"kind": 3}')]:
+        bad[name] = str(root / name)
+        os.makedirs(bad[name])
+        with open(os.path.join(bad[name], DECLARATION), "w") as f:
+            f.write(text)
+
+    assert declaration(bad["empty"]) == {"kind": "unreadable"}
+    expected = {good: "drift_counts", **{d: "unreadable" for d in bad.values()}}
+    assert dict(walk_planes(str(root))) == expected
+    report = vacuum(spark, str(root))
+    assert {r["path"]: (r["plane"], r["result"]) for r in report} == {
+        good: ("drift_counts", 2),
+        **{d: ("unreadable", "skipped") for d in bad.values()},
+    }
