@@ -723,7 +723,7 @@ def main():
     )
     spark.sparkContext.setLogLevel("ERROR")
     # engine-owned state-plane confs (r15, verdict #7): the partition-
-    # discovery threshold for the 64-shard layouts now lives in
+    # discovery threshold for the state-plane layouts now lives in
     # spark_streaming_sql_s3_connector_spark/session.py — the bench uses
     # the same documented call a deployment makes, instead of being the
     # only place that sets it (rationale + env override in that module).

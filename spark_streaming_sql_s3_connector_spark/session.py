@@ -1,28 +1,28 @@
 """Engine-owned session configuration.
 
 The analytics state planes this package maintains have layout choices
-baked in — most visibly the 64-way shard partitioning of the dedup
-screening indexes and the pack/gated state dirs (``_N_SHARDS`` in
-``streaming/exact_dedup.py``). Those layouts interact with session
-confs that Spark defaults for a *generic* deployment:
+baked in — most visibly the ANN index's corpus, partitioned by
+``ivf_bucket`` under one ``batch=<label>`` dir per append
+(``operators/ann_index.py``), so a plane read can list hundreds of
+leaf dirs. Those layouts interact with session confs that Spark
+defaults for a *generic* deployment:
 
 - ``spark.sql.sources.parallelPartitionDiscovery.threshold`` defaults
-  to 32, so every read of a 64-shard plane launches a distributed
-  "listing leaf files" job. Event-log analysis (r14) measured FIVE such
-  jobs inside one curation trigger, each listing tiny directories — on
-  an object store that is a fleet of LIST round trips per trigger; on a
-  local/fast filesystem the driver-side listing is strictly cheaper.
-  The engine therefore raises the threshold above its own shard count
-  (default 1024, env-overridable via
+  to 32, so every read of a plane with more leaf dirs than that
+  launches a distributed "listing leaf files" job. Event-log analysis
+  once measured FIVE such jobs inside one curation trigger, each
+  listing tiny directories — on an object store that is a fleet of
+  LIST round trips per trigger; on a local/fast filesystem the
+  driver-side listing is strictly cheaper. The engine therefore raises
+  the threshold (default 1024, env-overridable via
   ``SPARK_GRAFT_PARALLEL_DISCOVERY_THRESHOLD`` for deployments whose
   WIDE user tables want the distributed listing back).
 
-Until r15 only the bench/microbench harnesses set this, so any other
-session silently reverted to 32 and re-paid the listing jobs (r14
-verdict item #7). :func:`apply_engine_defaults` is the one documented
-call a deployment makes on the session it hands to the streaming
-pipelines; the in-repo harnesses (bench.py, perfbench, tests/conftest.py
-and every session-building script under tools/) all route through it.
+:func:`apply_engine_defaults` is the one documented call a deployment
+makes on the session it hands to the streaming pipelines; without it a
+session reverts to 32 and re-pays the listing jobs. The in-repo
+harnesses (bench.py, perfbench, tests/conftest.py and every
+session-building script under tools/) all route through it.
 
 The same call installs the zip-free Python worker daemon when the
 workers can import it (see :mod:`~spark_streaming_sql_s3_connector_spark.worker_daemon`).

@@ -713,9 +713,9 @@ def process_ann_lifecycle_batch(
     with _span(clock, "landing_write"):
         vectors = _vectors_plane(root)
         land_dir = vectors.delta_path(batch_id)
-        landing = batch.select(F.col(meta["id_col"]), F.col(meta["vec_col"]))
-        vectors.write_schema_once(landing.schema)
-        landing.write.mode("overwrite").parquet(land_dir)
+        vectors.write_delta(
+            batch.select(F.col(meta["id_col"]), F.col(meta["vec_col"])), batch_id
+        )
         landed = spark.read.schema(
             batch.select(meta["id_col"], meta["vec_col"]).schema
         ).parquet(land_dir)

@@ -1,9 +1,10 @@
 """Concurrent submission of independent Spark actions from one driver.
 
-The incremental triggers' wall is JOB COUNT, not rows (r13 measured
-~0.25 s of analysis/codegen/dispatch per tiny-batch job; 30 jobs ≈ the
-whole sf0.01 trigger). Several of those jobs are pairwise independent —
-two overwrite-idempotent plane writes off the same cached parent — so
+The incremental triggers' wall is JOB COUNT, not rows (~0.25 s of
+analysis/codegen/dispatch per tiny-batch job was measured at sf0.01,
+where 30 jobs were about the whole trigger). Several of those jobs are
+pairwise independent — two overwrite-idempotent plane writes off the
+same cached parent, or the folds of disjoint state roots — so
 submitting them from worker threads overlaps their fixed costs. This is
 the standard Spark driver pattern (one SparkSession, many scheduler
 threads); it helps a real cluster the same way it helps local[N]: the
@@ -26,14 +27,16 @@ Safety argument, mirrored in each call site's comment:
 
 from __future__ import annotations
 
-from typing import Any, Callable
+import threading
+from typing import Any, Callable, Optional
 
 
-def run_concurrently(*thunks: Callable[[], Any]) -> list:
-    """Run the thunks in parallel threads; return results in thunk
-    order. Every thread is joined before returning; the FIRST raised
-    exception (in thunk order) propagates after all finish — no thread
-    is left running against half-rolled-back state."""
+def run_concurrently(*thunks: Callable[[], Any], limit: Optional[int] = None) -> list:
+    """Run the thunks in parallel threads, at most ``limit`` at a time
+    (None: all at once); return results in thunk order. Every thread is
+    joined before returning; the FIRST raised exception (in thunk
+    order) propagates after all finish — no thread is left running
+    against half-rolled-back state."""
     if len(thunks) == 1:
         return [thunks[0]()]
     try:
@@ -43,14 +46,22 @@ def run_concurrently(*thunks: Callable[[], Any]) -> list:
 
     results: list = [None] * len(thunks)
     errors: list = [None] * len(thunks)
+    todo = iter(range(len(thunks)))
+    lock = threading.Lock()
 
-    def _runner(i: int) -> None:
-        try:
-            results[i] = thunks[i]()
-        except BaseException as e:  # noqa: BLE001 - re-raised below
-            errors[i] = e
+    def _runner() -> None:
+        while True:
+            with lock:
+                i = next(todo, None)
+            if i is None:
+                return
+            try:
+                results[i] = thunks[i]()
+            except BaseException as e:  # noqa: BLE001 - re-raised below
+                errors[i] = e
 
-    threads = [_Thread(target=_runner, args=(i,)) for i in range(len(thunks))]
+    n = len(thunks) if limit is None else max(1, min(limit, len(thunks)))
+    threads = [_Thread(target=_runner) for _ in range(n)]
     for t in threads:
         t.start()
     for t in threads:

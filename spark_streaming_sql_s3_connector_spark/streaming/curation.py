@@ -29,7 +29,7 @@ id space in order, and the finalization stages are pure functions of
 the (identical) surviving set.
 
 Scale shape: the streaming stages inherit their components' stories
-(line-keyed partial aggs, shard-pruned exact history joins); the
+(line-keyed partial aggs, one exact history semi-join per screen); the
 finalization is one gate shuffle on ``lang`` plus the pack's one
 shard-window shuffle. Nothing in the composition adds a new scan of
 the raw corpus.
@@ -192,11 +192,9 @@ def process_curation_batch(
     def _meta_and_monitor() -> None:
         # (doc_id, lang) side table for the finalization gate
         with stage_timings.span(clock, "meta"):
-            meta = batch.select(F.col(id_col), F.col(lang_col))
-            _concat_plane(os.path.join(pipeline_dir, "_meta")).write_schema_once(
-                meta.schema
+            _concat_plane(os.path.join(pipeline_dir, "_meta")).write_delta(
+                batch.select(F.col(id_col), F.col(lang_col)), batch_id
             )
-            meta.write.mode("overwrite").parquet(_meta_dir(pipeline_dir, batch_id))
         if monitor:
             from spark_streaming_sql_s3_connector_spark.streaming.drift import (
                 count_batch,
@@ -834,14 +832,18 @@ def _process_curation_batch_incremental_inner(
     if vacuum_every and batch_id > 0 and batch_id % vacuum_every == 0:
         from spark_streaming_sql_s3_connector_spark.streaming.vacuum import vacuum
 
+        spark = batch.sparkSession
         with clock("vacuum"):
-            vacuum(batch.sparkSession, pipeline_dir, upto_batch=batch_id - 1)
-            # same cadence for the two append-only output planes this
-            # composition owns (vacuum doesn't know them — they live
-            # inside the packing plane / behind the _meta underscore):
-            # fold all COMMITTED deltas (< batch_id, strictly-below)
-            compact_curation_outputs(
-                batch.sparkSession, pipeline_dir, upto_batch=batch_id
+            # same cadence for the append-only ``_meta`` plane this
+            # composition owns (vacuum does not walk it — it sits behind
+            # an underscore, so the two folds share no files and run
+            # side by side): fold all COMMITTED deltas (< batch_id,
+            # strictly below)
+            run_concurrently(
+                lambda: vacuum(spark, pipeline_dir, upto_batch=batch_id - 1),
+                lambda: compact_curation_outputs(
+                    spark, pipeline_dir, upto_batch=batch_id
+                ),
             )
     # per-stage wall seconds under _timings/batch=<id> (bounded window)
     stage_timings.write_stage_timings(_timings_dir(pipeline_dir), batch_id, clock)

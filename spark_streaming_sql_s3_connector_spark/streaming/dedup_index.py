@@ -25,12 +25,14 @@ behind an atomically-flipped `_latest` pointer (folded deltas become dead
 garbage — GC is safe at any moment).
 
 Scale shape: index rows are (band_idx, band_hash, doc_id) — ~20 B × bands
-per document, orders of magnitude smaller than the corpus. The index is
-partitioned by a hash shard of the band hash; each trigger reads only the
-shards its batch hashes into (real partition pruning via an `isin` filter
-on the partition column — a small trickle batch touches few shards, a
-bulk batch touches all of a still-tiny table). The batch side broadcasts,
-so the per-trigger join never shuffles history.
+per document, orders of magnitude smaller than the corpus. Deltas and
+the base are flat, one parquet file per write task; each trigger scans
+the live index once. A batch of d documents hashes 16·d band keys, so
+hash-bucket pruning would skip nothing past a few dozen documents (see
+`exact_dedup`). An index written with ``_shard=<n>/`` dirs still reads:
+the extra partition column is projected away, and the next fold writes
+it flat. The batch side broadcasts, so the per-trigger join never
+shuffles history.
 
 Candidates, not verdicts: exact-Jaccard verification needs document text,
 which the index deliberately does not store (it would duplicate the
@@ -62,8 +64,6 @@ from spark_streaming_sql_s3_connector_spark.streaming.exact_dedup import (
     _screen_frames,
 )
 
-_N_SHARDS = 64
-
 
 def _plane(index_dir: str) -> DeltaPlane:
     """The band index: ``_bands`` deltas plus the forget markers it
@@ -88,20 +88,22 @@ def _band_delta_ids(index_dir: str) -> list[int]:
     return _plane(index_dir).delta_ids()
 
 
+def _band_rows(frame: DataFrame) -> DataFrame:
+    return frame.select("_id", "band_idx", "band_hash")
+
+
 def _index_frames(spark: SparkSession, index_dir: str, before_batch: Optional[int] = None) -> list[DataFrame]:
     """Base (if compacted) + band deltas below ``before_batch``, with
     the forget markers applied (dir-granular insert order — the key
     screens' rule, `exact_dedup._screen_frames`)."""
-    return _screen_frames(spark, _plane(index_dir), before_batch)
+    return _screen_frames(spark, _plane(index_dir), before_batch, _band_rows)
 
 
 def _compute_bands(batch: DataFrame, text_col: str, id_col: str, num_perm: int, bands: int, shingle_k: int) -> DataFrame:
     band_udf = _minhash_sig_udf(num_perm, shingle_k, bands=bands)
-    return (
-        batch.select(F.col(id_col).alias("_id"), band_udf(F.col(text_col)).alias("_bh"))
-        .select("_id", F.posexplode_outer("_bh").alias("band_idx", "band_hash"))
-        .withColumn("_shard", F.pmod(F.col("band_hash"), F.lit(_N_SHARDS)).cast("int"))
-    )
+    return batch.select(
+        F.col(id_col).alias("_id"), band_udf(F.col(text_col)).alias("_bh")
+    ).select("_id", F.posexplode_outer("_bh").alias("band_idx", "band_hash"))
 
 
 def process_batch(
@@ -127,12 +129,10 @@ def process_batch(
             bucket_pairs(new_bands, ["band_idx", "band_hash"], F.struct(F.col("_id")))
             .select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"))
         )
-        # batch × history: shard-pruned index scan, broadcast batch side
+        # batch × history: one index scan, broadcast batch side
         frames = _index_frames(batch.sparkSession, index_dir, before_batch=batch_id)
         if frames:
             hist = union_all(frames)
-            shards = [r["_shard"] for r in new_bands.select("_shard").distinct().collect()]
-            hist = hist.where(F.col("_shard").isin(shards))
             nb = new_bands.select(
                 F.col("band_idx").alias("n_band_idx"),
                 F.col("band_hash").alias("n_band_hash"),
@@ -158,11 +158,7 @@ def process_batch(
         )
         # append bands AFTER matches: a replay recomputes both dirs
         # idempotently; order only matters for GC-free reads
-        # clustered delta write — one file per shard, not tasks×shards
-        # slivers (see exact_dedup.process_batch)
-        new_bands.repartition("_shard").write.mode("overwrite").partitionBy(
-            "_shard"
-        ).parquet(_bands_dir(index_dir, batch_id))
+        new_bands.write.mode("overwrite").parquet(_bands_dir(index_dir, batch_id))
     finally:
         new_bands.unpersist()
 
@@ -195,11 +191,11 @@ def read_candidate_pairs(spark: SparkSession, index_dir: str) -> DataFrame:
 def compact_index(
     spark: SparkSession, index_dir: str, upto_batch: Optional[int] = None
 ) -> Optional[int]:
-    """Fold band deltas into a versioned, shard-partitioned base (sorted
-    within shards so row-group stats tighten) and flip the pointer —
-    the `delta_plane` write → flip → GC contract. Live forget markers
-    fold physically (``_apply_screen_markers``), their dirs GC, and the pointer advances over marker-only
-    windows — the `exact_dedup.compact_index` delete discipline.
+    """Fold band deltas into a versioned flat base and flip the pointer
+    — the `delta_plane` write → flip → GC contract. Live forget markers
+    fold physically (``_apply_screen_markers``), their dirs GC, and the
+    pointer advances over marker-only windows — the
+    `exact_dedup.compact_index` delete discipline.
 
     ``upto_batch``: fold only deltas/markers with id STRICTLY below it
     (the `exact_dedup.compact_index` horizon semantics). Pass the
@@ -218,7 +214,8 @@ def compact_index(
     def write(path, live, markers):
         df = union_all(
             _apply_screen_markers(
-                plane.frames(spark, live), plane.marker_frame(spark, markers)
+                [(b, _band_rows(f)) for b, f in plane.frames(spark, live)],
+                plane.marker_frame(spark, markers),
             )
         )
         if df.isEmpty():
@@ -228,13 +225,8 @@ def compact_index(
                 "forgotten), which schema inference cannot read back — drop "
                 "the state directory and rebuild instead"
             )
-        (
-            df.dropDuplicates(["band_idx", "band_hash", "_id"])
-            .repartition("_shard")
-            .sortWithinPartitions("band_idx", "band_hash")
-            .write.mode("overwrite")
-            .partitionBy("_shard")
-            .parquet(path)
-        )
+        df.dropDuplicates(["band_idx", "band_hash", "_id"]).write.mode(
+            "overwrite"
+        ).parquet(path)
 
     return plane.fold(write, upto_batch)

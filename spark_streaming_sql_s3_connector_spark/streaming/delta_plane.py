@@ -233,12 +233,21 @@ class DeltaPlane:
         return spark.read.schema(StructType.fromJson(json.loads(raw)))
 
     def write_schema_once(self, schema: StructType) -> None:
-        # exclusive create: an existing schema wins (replay/restart convergent)
-        state_io.write_text_atomic(
-            os.path.join(self.root, SIDECAR),
-            json.dumps(schema.jsonValue()),
-            overwrite=False,
-        )
+        # exclusive create: an existing schema wins (replay/restart
+        # convergent), and a warm trigger pays one stat, not a write
+        path = os.path.join(self.root, SIDECAR)
+        if not state_io.exists(path):
+            state_io.write_text_atomic(
+                path, json.dumps(schema.jsonValue()), overwrite=False
+            )
+
+    def write_delta(self, frame: DataFrame, batch_id: int) -> None:
+        """Overwrite batch ``batch_id``'s delta with ``frame`` (a replay
+        converges); a :data:`SIDECAR` plane persists the schema once
+        first."""
+        if self.schema == SIDECAR:
+            self.write_schema_once(frame.schema)
+        frame.write.mode("overwrite").parquet(self.delta_path(batch_id))
 
     def frames(
         self, spark: SparkSession, entries: list[Entry]

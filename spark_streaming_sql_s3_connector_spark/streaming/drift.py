@@ -31,10 +31,18 @@ from spark_streaming_sql_s3_connector_spark.operators.drift import (
     drift_from_counts,
 )
 from spark_streaming_sql_s3_connector_spark.streaming.delta_plane import (
+    SIDECAR,
     DeltaPlane,
     declare,
     foreach_batch,
 )
+
+
+def _plane(sink_dir: str) -> DeltaPlane:
+    """A counts or moments plane, read with the schema its first delta
+    persisted (a root written before the sidecar existed reads by
+    inference)."""
+    return DeltaPlane(sink_dir, schema=SIDECAR)
 
 
 def count_batch(batch: DataFrame, batch_id: int, sink_dir: str, col: str) -> None:
@@ -43,11 +51,9 @@ def count_batch(batch: DataFrame, batch_id: int, sink_dir: str, col: str) -> Non
     reserved token as the batch operator."""
     declare(sink_dir, "drift_counts")
     b = F.coalesce(F.col(col).cast("string"), F.lit(_NULL_TOKEN))
-    (
-        batch.groupBy(b.alias("bucket"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .write.mode("overwrite")
-        .parquet(DeltaPlane(sink_dir).delta_path(batch_id))
+    _plane(sink_dir).write_delta(
+        batch.groupBy(b.alias("bucket")).agg(F.count(F.lit(1)).alias("n")),
+        batch_id,
     )
 
 
@@ -68,7 +74,7 @@ def streaming_category_counts(
 
 def read_category_counts(spark: SparkSession, sink_dir: str) -> DataFrame:
     """The merged live counts: base (if compacted) + un-folded deltas."""
-    plane = DeltaPlane(sink_dir)
+    plane = _plane(sink_dir)
     live = plane.live()
     if not live:
         raise FileNotFoundError(f"no drift-count state under {sink_dir}")
@@ -99,7 +105,7 @@ def compact_drift_counts(spark: SparkSession, sink_dir: str) -> Optional[int]:
     """Fold base + committed deltas into one base version (the
     `delta_plane` write → flip → GC contract). Returns the new pointer,
     or None when nothing to fold."""
-    plane = DeltaPlane(sink_dir)
+    plane = _plane(sink_dir)
     return plane.fold(
         lambda path, live, _: _merge_counts(plane.read(spark, live))
         .coalesce(1)
@@ -123,9 +129,9 @@ def embedding_moment_batch(
     )
 
     declare(sink_dir, "embedding_moments")
-    embedding_moments(batch, vec_col).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(DeltaPlane(sink_dir).delta_path(batch_id))
+    _plane(sink_dir).write_delta(
+        embedding_moments(batch, vec_col).coalesce(1), batch_id
+    )
 
 
 def streaming_embedding_moments(
@@ -153,7 +159,7 @@ def read_embedding_moments(spark: SparkSession, sink_dir: str) -> DataFrame:
     deltas, summed — decimal addition is exact and order-free, so this
     equals the batch moments over the union of admitted rows (the law
     the tests pin)."""
-    plane = DeltaPlane(sink_dir)
+    plane = _plane(sink_dir)
     live = plane.live()
     if not live:
         raise FileNotFoundError(f"no embedding-moment state under {sink_dir}")
@@ -202,7 +208,7 @@ def compact_embedding_moments(
     """Fold base + committed deltas into one d-row base version (the
     `delta_plane` write → flip → GC contract). Returns the new pointer,
     or None when nothing to fold."""
-    plane = DeltaPlane(sink_dir)
+    plane = _plane(sink_dir)
     return plane.fold(
         lambda path, live, _: _merge_moments(plane.read(spark, live))
         .coalesce(1)

@@ -6,14 +6,14 @@ this module answers the exact one: as documents stream in, which have
 per-batch recipe:
 
 1. key every row: ``md5(normalized_text)`` (128-bit — collision-free at
-   any realistic corpus size), plus a hash shard for index pruning;
+   any realistic corpus size);
 2. within-batch dedup: keep the min-id row per key;
 3. screen the keepers against the persisted key index with one exact
-   join: the keepers' keys are broadcast against the history index,
-   pruned to the shards the batch's keys hash into;
+   join: the keepers' keys are broadcast into a semi-join over the
+   live history frames;
 4. write the batch's delta in one write: ``_new/batch=<id>`` holds the
-   new keys under ``plane=new`` (one dir per shard) and the duplicate
-   verdicts under ``plane=dups`` (one NULL-``_shard`` dir).
+   new keys under ``plane=new`` and the duplicate verdicts under
+   ``plane=dups``, at most one parquet file per write task and side.
 
 :func:`compact_index` folds both sides into the base, so a full fold
 leaves no delta dir behind and :func:`read_dup_ids` still serves every
@@ -21,9 +21,11 @@ verdict. A delta or base with no ``plane=`` level is all index rows:
 the line and passage screens write their ``_new`` deltas that way, and
 so did exact indexes written before the sides were combined, whose
 verdicts sit in a ``_dups/batch=<id>`` root that is read while it
-exists. The index is the only state: there is no probabilistic side
-file. An older index may still hold a ``_bloom/`` dir of shard
-bitmaps; nothing reads it.
+exists. A delta or base written with ``_shard=<n>/`` hash-bucket dirs
+reads the same: the readers project the extra partition column away,
+and the next fold writes the flat layout. The index is the only state:
+there is no probabilistic side file. An older index may still hold a
+``_bloom/`` dir of shard bitmaps; nothing reads it.
 
 Replay safety mirrors `dedup_index` / `rollup`: the write overwrites
 its own ``batch=<id>`` directory and history reads exclude the
@@ -37,9 +39,14 @@ Compact with ``upto_batch=<last committed batch id + 1>`` when a stream
 may be down mid-batch (see :func:`compact_index`).
 
 Scale shape: index rows are (id, key) — 40 B/doc, not the corpus. The
-per-trigger join broadcasts the batch's keepers and prunes history
-shards by the batch's shard set, so a steady-state trigger touches a
-few shards of a small table and shuffles nothing.
+per-trigger join broadcasts the batch's keepers and scans the live
+history once, shuffling nothing of it. There is no history pruning: a
+hash-bucket layout would let a trigger skip the buckets none of its
+keys hash into, but a batch of k keys leaves only 64·(63/64)^k of 64
+buckets untouched, so past a few hundred keys it skipped nothing and
+cost one listing job and ~64 files per delta. The trade-off: a trigger
+of fewer than about 300 keys now scans all of a large base instead of
+part of it.
 
 NULL text rows pass through as new and are never indexed (a NULL equals
 nothing — the same convention as the batch anti-join operators).
@@ -65,8 +72,6 @@ from spark_streaming_sql_s3_connector_spark.streaming.delta_plane import (
 
 from spark_streaming_sql_s3_connector_spark.operators.dedup import normalized_text
 
-_N_SHARDS = 64
-
 
 def _plane(index_dir: str) -> DeltaPlane:
     """The key index: ``_new`` deltas, ``_deleted`` forget markers."""
@@ -91,34 +96,22 @@ def _dups_dir(index_dir: str, batch_id: int) -> str:
 # explicit schema: a batch with zero new keys writes a delta dir holding
 # only _SUCCESS, and schema INFERENCE on such a dir throws — a fixed
 # schema reads it as an empty frame instead
-_DELTA_SCHEMA = f"_id bigint, key string, _shard int, dup_kind string, {PLANE} string"
+_DELTA_SCHEMA = f"_id bigint, key string, dup_kind string, {PLANE} string"
 _MARKER_SCHEMA = "_id bigint, t bigint"
 
 
 def _index_rows(frame: DataFrame) -> DataFrame:
-    return side(frame, "new", ("_id", "key", "_shard"), primary=True)
+    return side(frame, "new", ("_id", "key"), primary=True)
 
 
 def _dup_rows(frame: DataFrame) -> DataFrame:
     return side(frame, "dups", ("_id", "key", "dup_kind"))
 
 
-def _write_sides(index: DataFrame, dups: DataFrame, path: str) -> None:
-    """One write of both sides. Clustered by (plane, shard) first:
-    without it every upstream task writes a sliver into every shard dir
-    (~tasks × shards tiny files per delta — measured ~1,100/delta at
-    sf0.1) and each later history scan pays that many footer reads;
-    clustered, a delta is one file per shard plus one verdict file. The
-    sort leads with the partition columns, so it is the only sort the
-    partitioned write runs."""
-    (
-        tagged({"new": index, "dups": dups})
-        .repartition(PLANE, "_shard")
-        .sortWithinPartitions(PLANE, "_shard", "key")
-        .write.mode("overwrite")
-        .partitionBy(PLANE, "_shard")
-        .parquet(path)
-    )
+def _write_sides(sides: DataFrame, path: str) -> None:
+    """One write of a delta or base whose rows carry their :data:`PLANE`
+    side: each write task leaves at most one parquet file per side."""
+    sides.write.mode("overwrite").partitionBy(PLANE).parquet(path)
 
 
 def delete_docs_from_screen(
@@ -194,11 +187,7 @@ def _index_frames(
 
 def _keyed(batch: DataFrame, text_col: str, id_col: str) -> DataFrame:
     key = F.md5(F.encode(normalized_text(F.col(text_col)), "UTF-8"))
-    return batch.select(
-        F.col(id_col).alias("_id"),
-        key.alias("key"),
-        F.pmod(F.xxhash64(key), F.lit(_N_SHARDS)).cast("int").alias("_shard"),
-    )
+    return batch.select(F.col(id_col).alias("_id"), key.alias("key"))
 
 
 def process_batch(
@@ -216,60 +205,47 @@ def process_batch(
     from pyspark.sql import Window
 
     keyed = _keyed(batch, text_col, id_col)
-    null_rows = keyed.where(F.col("key").isNull())
-    keyed = keyed.where(F.col("key").isNotNull())
-
     # within-batch keeper per key (min id) in ONE window shuffle of the
-    # narrow (_id, key, _shard) frame — the agg+join form shuffled keyed
-    # twice (group agg, then the keyed×agg equi-join) to derive the same
-    # two row sets (r14, guide §2.4). A key's duplicate population here
-    # is whole-document copies (bounded), so concentrating a key on one
-    # partition carries none of the hot-LINE skew that keeps the line
-    # screen on its min-struct agg. `marked` is cached because the
-    # shard-list collect and the delta write both read it.
-    marked = keyed.withColumn(
-        "_keeper", F.min("_id").over(Window.partitionBy("key"))
-    ).persist()
-    keepers = marked.where(F.col("_id") == F.col("_keeper")).select(
-        "_id", "key", "_shard"
+    # narrow (_id, key) frame — the agg+join form shuffled keyed twice
+    # (group agg, then the keyed×agg equi-join) to derive the same two
+    # row sets. A key's duplicate population here is whole-document
+    # copies (bounded), so concentrating a key on one partition carries
+    # none of the hot-LINE skew that keeps the line screen on its
+    # min-struct agg. A NULL key is its own keeper: it never equi-joins,
+    # so it passes through as new and can never produce a false verdict
+    # later. `marked` is cached because the history join's broadcast
+    # side and the delta write both read it.
+    keeper = F.when(F.col("key").isNull(), F.col("_id")).otherwise(
+        F.min("_id").over(Window.partitionBy("key"))
     )
-    internal_dups = marked.where(F.col("_id") != F.col("_keeper")).select(
-        "_id", "key", F.lit("within_batch").alias("dup_kind")
-    )
-
+    marked = keyed.withColumn("_keeper", keeper).persist()
+    kind = F.when(F.col("_id") != F.col("_keeper"), F.lit("within_batch"))
+    verdicts = marked
     try:
         frames = _index_frames(spark, index_dir, before_batch=batch_id)
         if frames:
-            # ONE shard-list collect per screen: a history row whose
-            # shard no batch key hashes into can never match a keeper
-            shards = [
-                r["_shard"] for r in keepers.select("_shard").distinct().collect()
-            ]
-            hist = union_all(frames).where(F.col("_shard").isin(shards))
+            keepers = marked.where(F.col("_id") == F.col("_keeper")).select("key")
             matched = (
-                hist.join(F.broadcast(keepers.select("key")), "key", "left_semi")
-                .select("key")
+                union_all(frames)
+                .join(F.broadcast(keepers), "key", "left_semi")
+                .select("key", F.lit(True).alias("_hist"))
                 .distinct()
             )
-            hist_dups = keepers.join(F.broadcast(matched), "key", "left_semi").select(
-                "_id", "key", F.lit("vs_history").alias("dup_kind")
-            )
-            new_rows = keepers.join(F.broadcast(matched), "key", "left_anti")
-            dups = internal_dups.unionByName(hist_dups)
-        else:
-            new_rows = keepers
-            dups = internal_dups
-
-        # NULL-key rows stay in the index as passthrough outputs — a
-        # NULL key never equi-joins, so they can never produce a false
-        # duplicate verdict later
-        new_rows = new_rows.unionByName(
-            null_rows.select("_id", "key", "_shard")
-        )
+            verdicts = marked.join(F.broadcast(matched), "key", "left")
+            kind = kind.when(F.col("_hist"), F.lit("vs_history"))
+        verdicts = verdicts.select("_id", "key", kind.alias("dup_kind"))
         # a batch written by an older writer may have left verdicts in
         # the separate _dups root; its replay's verdicts replace them
         state_io.remove_tree(_dups_dir(index_dir, batch_id))
-        _write_sides(new_rows, dups, _new_dir(index_dir, batch_id))
+        _write_sides(
+            verdicts.withColumn(
+                PLANE,
+                F.when(F.col("dup_kind").isNull(), F.lit("new")).otherwise(
+                    F.lit("dups")
+                ),
+            ),
+            _new_dir(index_dir, batch_id),
+        )
     finally:
         marked.unpersist()
 
@@ -307,8 +283,9 @@ def read_dup_ids(spark: SparkSession, index_dir: str) -> DataFrame:
 def compact_index(
     spark: SparkSession, index_dir: str, upto_batch: Optional[int] = None
 ) -> Optional[int]:
-    """Fold _new deltas into a versioned shard-partitioned base (the
-    `delta_plane` write → flip → GC contract).
+    """Fold _new deltas into a versioned base (the `delta_plane` write
+    → flip → GC contract), written flat whatever layout the folded
+    dirs had.
 
     ``upto_batch``: fold only deltas with id STRICTLY below it. Pass the
     stream's last committed batch id + 1 (or the checkpoint's pending
@@ -344,12 +321,12 @@ def compact_index(
         # — a groupBy would wrongly collapse them into one row.
         nn = (
             df.where(F.col("key").isNotNull())
-            .groupBy("key", "_shard")
+            .groupBy("key")
             .agg(F.min("_id").alias("_id"))
         )
-        nulls = df.where(F.col("key").isNull()).select("key", "_shard", "_id").distinct()
+        nulls = df.where(F.col("key").isNull()).select("key", "_id").distinct()
         dups = union_all([_dup_rows(f) for _, f in frames])
-        _write_sides(nn.unionByName(nulls), dups, path)
+        _write_sides(tagged({"new": nn.unionByName(nulls), "dups": dups}), path)
 
     return plane.fold(write, upto_batch)
 

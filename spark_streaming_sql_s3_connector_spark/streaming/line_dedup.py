@@ -7,8 +7,8 @@ line whose (md5) key was already kept — by an earlier batch, or by an
 earlier (doc, position) within this batch — and emit each document
 rebuilt from its surviving lines. The line-key index persists between
 triggers with the same layout and crash story as
-`streaming/exact_dedup.py` (whose helpers this module reuses): delta
-parquet under ``_new/batch=<id>``, shard-pruned exact history joins,
+`streaming/exact_dedup.py` (whose helpers this module reuses): flat
+delta parquet under ``_new/batch=<id>``, one exact history join,
 overwrite-by-batch-dir replay convergence.
 
 Per-batch recipe:
@@ -17,8 +17,8 @@ Per-batch recipe:
    blanks dropped — the same line convention as the batch operator);
 2. within-batch first per key: ``min(struct(id, pos))`` — partial agg,
    no window over a skewed hot-line partition;
-3. screen the firsts against the persisted key index: one exact join
-   of their keys against the shard-pruned history (exactly
+3. screen the firsts against the persisted key index: their keys are
+   broadcast into one semi-join over the live history (exactly
    `exact_dedup`'s screen);
 4. a batch row survives iff it IS the within-batch first of its key
    AND the key is not historical;
@@ -31,10 +31,11 @@ batch operator on the union — because "first in (batch, doc, pos)
 order" and "first in (doc, pos) order" coincide when batches partition
 the id space in order.
 
-Scale shape: index rows are (key, keeper id, shard) — ~40 B per DISTINCT
+Scale shape: index rows are (key, keeper id) — ~40 B per DISTINCT
 line ever kept, not the corpus; each trigger shuffles only the batch's
-lines once (the min-struct agg) and joins the firsts' keys against
-pruned history shards. Text travels twice within the batch
+lines once (the min-struct agg) and joins the firsts' keys against the
+whole live history (no hash-bucket pruning — see `exact_dedup` for
+why it skipped nothing). Text travels twice within the batch
 (explode + rebuild) — the same irreducible 2× any line-level rewrite
 pays.
 """
@@ -55,7 +56,6 @@ from spark_streaming_sql_s3_connector_spark.streaming.delta_plane import (
     union_all,
 )
 from spark_streaming_sql_s3_connector_spark.streaming.exact_dedup import (
-    _N_SHARDS,
     _index_frames,
     _new_dir,
 )
@@ -66,7 +66,7 @@ def _docs_dir(index_dir: str, batch_id: int) -> str:
 
 
 def _lines(batch: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """(_id, pos, line, key, _shard) — trimmed non-blank lines with
+    """(_id, pos, line, key) — trimmed non-blank lines with
     positions. NULL text explodes to nothing (the doc row itself is
     re-added at rebuild)."""
     arr = F.filter(
@@ -74,13 +74,11 @@ def _lines(batch: DataFrame, text_col: str, id_col: str) -> DataFrame:
         lambda x: x != "",
     )
     pos = batch.select(F.col(id_col).alias("_id"), F.posexplode(arr))
-    key = F.md5(F.encode(F.col("col"), "UTF-8"))
     return pos.select(
         "_id",
         "pos",
         F.col("col").alias("line"),
-        key.alias("key"),
-        F.pmod(F.xxhash64(key), F.lit(_N_SHARDS)).cast("int").alias("_shard"),
+        F.md5(F.encode(F.col("col"), "UTF-8")).alias("key"),
     )
 
 
@@ -95,7 +93,7 @@ def process_batch(
     """One micro-batch of the incremental keep-first line dedup.
     Overwrites its ``batch=<id>`` outputs — replay converges.
 
-    ``defer_writes`` (r14): when a list is passed, the two batch-dir
+    ``defer_writes``: when a list is passed, the two batch-dir
     writes (rebuilt docs, index delta) are NOT run here — zero-arg
     thunks are appended for the CALLER to execute, typically overlapped
     with the next stage's jobs (the curation trigger runs them beside
@@ -116,11 +114,10 @@ def process_batch(
     try:
         # within-batch first occurrence per key (partial agg, windowless)
         firsts = (
-            lines.groupBy("key", "_shard")
+            lines.groupBy("key")
             .agg(F.min(F.struct("_id", "pos")).alias("_f"))
             .select(
                 "key",
-                "_shard",
                 F.col("_f._id").alias("_id"),
                 F.col("_f.pos").alias("pos"),
             )
@@ -128,18 +125,12 @@ def process_batch(
         )
         frames = _index_frames(spark, index_dir, before_batch=batch_id)
         if frames:
-            # one shard-list collect per screen (see exact_dedup): keys
-            # outside the batch's shards cannot match any first
-            shards = [
-                r["_shard"] for r in firsts.select("_shard").distinct().collect()
-            ]
-            hist = union_all(frames).where(F.col("_shard").isin(shards))
             # persisted: `matched` sits under BOTH the rebuilt-docs and
             # the index-delta writes — without the cache each write
-            # re-runs the pruned HISTORY scan, doubling the trigger's
-            # dominant IO
+            # re-runs the HISTORY scan, doubling the trigger's dominant IO
             matched = (
-                hist.join(F.broadcast(firsts.select("key")), "key", "left_semi")
+                union_all(frames)
+                .join(F.broadcast(firsts.select("key")), "key", "left_semi")
                 .select("key")
                 .distinct()
                 .persist()
@@ -186,21 +177,15 @@ def process_batch(
         # with no ordering contract (both overwrite batch=<id>,
         # replay-convergent; readers run between triggers), so submit
         # them concurrently — the trigger wall is job dispatch, and the
-        # two jobs' fixed costs overlap (r14; see streaming/concurrency)
-        # index delta: keep (key, keeper id, shard) — _index_frames reads
-        # the same (_id, key, _shard) schema exact_dedup uses;
-        # clustered delta write — one file per shard, not tasks×shards
-        # slivers (see exact_dedup.process_batch)
+        # two jobs' fixed costs overlap (see streaming/concurrency).
+        # The index delta keeps (keeper id, key) — the index-row schema
+        # exact_dedup's readers use — one file per write task.
         write_docs = lambda: out.write.mode("overwrite").parquet(  # noqa: E731
             _docs_dir(index_dir, batch_id)
         )
-        write_delta = (  # noqa: E731
-            lambda: new_firsts.select("_id", "key", "_shard")
-            .repartition("_shard")
-            .write.mode("overwrite")
-            .partitionBy("_shard")
-            .parquet(_new_dir(index_dir, batch_id))
-        )
+        write_delta = lambda: new_firsts.select("_id", "key").write.mode(  # noqa: E731
+            "overwrite"
+        ).parquet(_new_dir(index_dir, batch_id))
         if defer_writes is None:
             run_concurrently(write_docs, write_delta)
         else:
@@ -237,7 +222,7 @@ def read_deduped_docs(spark: SparkSession, index_dir: str) -> DataFrame:
 
 def compact_index(spark: SparkSession, index_dir: str, upto_batch=None):
     """Fold the line-key deltas into a versioned base. The index layout
-    is exactly exact_dedup's (same (_id, key, _shard) schema, same
+    is exactly exact_dedup's (same (_id, key) index rows, same
     ``_new``/``base``/pointer discipline), so its compactor applies
     verbatim — but the replay-guard stakes are HIGHER here than there:
     for exact_dedup, folding a not-yet-committed batch only skews

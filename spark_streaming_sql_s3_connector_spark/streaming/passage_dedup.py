@@ -9,18 +9,18 @@ earlier (doc, start) within this batch — and each document is emitted
 rebuilt with every duplicated occurrence's k token positions masked.
 The gram-key index persists between triggers with the same layout and
 crash story as `streaming/exact_dedup.py` (whose helpers this module
-reuses verbatim): delta parquet under ``_new/batch=<id>``, shard-pruned
-exact history joins, overwrite-by-batch-dir replay convergence.
+reuses verbatim): flat delta parquet under ``_new/batch=<id>``, one
+exact history join, overwrite-by-batch-dir replay convergence.
 
 Per-batch recipe:
 
 1. explode the batch's docs into k-gram occurrences
-   ``(_id, start, key=md5(gram), shard)`` (same tokenization and
+   ``(_id, start, key=md5(gram))`` (same tokenization and
    16-byte gram rekey as the batch operator);
 2. within-batch first per key: ``min(struct(id, start))`` — partial
    agg, no window over a hot gram;
-3. screen the firsts against the persisted key index (one exact join
-   of their keys against the shard-pruned history);
+3. screen the firsts against the persisted key index (their keys
+   broadcast into one semi-join over the live history);
 4. an occurrence is a DUP iff it is not a surviving first; dups explode
    to their k covered token positions;
 5. rebuild each doc from uncovered tokens → ``_docs/batch=<id>``
@@ -33,14 +33,15 @@ equals the batch operator on the union — "first in (batch, doc, start)
 order" and "first in (doc, start) order" coincide when batches
 partition the id space in order.
 
-Scale shape: index rows are (key, keeper id, shard) — ~40 B per
-DISTINCT k-gram ever kept. That is token-scale state (the honest cost
-any substring-dedup index pays — a suffix array is larger), which is
-exactly why the index inherits exact_dedup's sharded layout, screen
-and compactor instead of a driver-side structure. Each trigger shuffles
+Scale shape: index rows are (key, keeper id) — ~40 B per DISTINCT
+k-gram ever kept. That is token-scale state (the honest cost any
+substring-dedup index pays — a suffix array is larger), which is
+exactly why the index inherits exact_dedup's layout, screen and
+compactor instead of a driver-side structure. Each trigger shuffles
 the batch's grams once (min-struct partial agg) and joins the firsts'
-keys against pruned history shards; the covered-position explode is
-bounded by k × dup occurrences.
+keys against the whole live history: a batch has thousands of grams,
+so hash-bucket pruning would skip nothing (see `exact_dedup`). The
+covered-position explode is bounded by k × dup occurrences.
 """
 
 from __future__ import annotations
@@ -56,7 +57,6 @@ from spark_streaming_sql_s3_connector_spark.streaming.delta_plane import (
     union_all,
 )
 from spark_streaming_sql_s3_connector_spark.streaming.exact_dedup import (
-    _N_SHARDS,
     _index_frames,
     _new_dir,
 )
@@ -75,21 +75,18 @@ def _tokenized(batch: DataFrame, text_col: str, id_col: str) -> DataFrame:
 
 
 def _gram_occurrences(base: DataFrame, k: int) -> DataFrame:
-    """(_id, start, key, _shard) — 0-based start positions, md5 gram
+    """(_id, start, key) — 0-based start positions, md5 gram
     keys (the same rekey as the batch operator, so history joins ship
     16-byte keys, never gram text)."""
     gram_expr = (
         f"transform(sequence(0, size(_toks) - {k}), "
         f"i -> md5(encode(concat_ws(' ', slice(_toks, i + 1, {k})), 'UTF-8')))"
     )
-    occ = (
+    return (
         base.where(F.size("_toks") >= k)
         .select("_id", F.posexplode(F.expr(gram_expr)))
         .withColumnRenamed("pos", "start")
         .withColumnRenamed("col", "key")
-    )
-    return occ.withColumn(
-        "_shard", F.pmod(F.xxhash64(F.col("key")), F.lit(_N_SHARDS)).cast("int")
     )
 
 
@@ -111,11 +108,10 @@ def process_batch(
     base = _tokenized(batch, text_col, id_col).persist()
     occ = _gram_occurrences(base, k).persist()
     firsts = (
-        occ.groupBy("key", "_shard")
+        occ.groupBy("key")
         .agg(F.min(F.struct("_id", "start")).alias("_f"))
         .select(
             "key",
-            "_shard",
             F.col("_f._id").alias("_id"),
             F.col("_f.start").alias("start"),
         )
@@ -125,17 +121,12 @@ def process_batch(
     try:
         frames = _index_frames(spark, index_dir, before_batch=batch_id)
         if frames:
-            # one shard-list collect per screen (see exact_dedup): keys
-            # outside the batch's shards cannot match any first
-            shards = [
-                r["_shard"] for r in firsts.select("_shard").distinct().collect()
-            ]
-            hist = union_all(frames).where(F.col("_shard").isin(shards))
             # persisted: `matched` sits under BOTH the rebuilt-docs and
             # the index-delta writes — without the cache each write
-            # re-runs the pruned HISTORY scan (the r12 line/exact fix)
+            # re-runs the HISTORY scan
             matched = (
-                hist.join(F.broadcast(firsts.select("key")), "key", "left_semi")
+                union_all(frames)
+                .join(F.broadcast(firsts.select("key")), "key", "left_semi")
                 .select("key")
                 .distinct()
                 .persist()
@@ -187,11 +178,9 @@ def process_batch(
             )
         )
         out.write.mode("overwrite").parquet(_docs_dir(index_dir, batch_id))
-        # clustered delta write — one file per shard, not tasks×shards
-        # slivers (see exact_dedup.process_batch)
-        new_firsts.select("_id", "key", "_shard").repartition("_shard").write.mode(
-            "overwrite"
-        ).partitionBy("_shard").parquet(_new_dir(index_dir, batch_id))
+        new_firsts.select("_id", "key").write.mode("overwrite").parquet(
+            _new_dir(index_dir, batch_id)
+        )
     finally:
         base.unpersist()
         occ.unpersist()

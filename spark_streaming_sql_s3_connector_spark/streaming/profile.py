@@ -40,6 +40,7 @@ from pyspark.sql import types as T
 
 from spark_streaming_sql_s3_connector_spark.operators.profile import _render
 from spark_streaming_sql_s3_connector_spark.streaming.delta_plane import (
+    SIDECAR,
     DeltaPlane,
     declare,
     foreach_batch,
@@ -50,6 +51,12 @@ _SKETCHABLE = (
     T.FloatType, T.DoubleType, T.DecimalType,
     T.StringType, T.BinaryType, T.BooleanType, T.DateType,
 )
+
+
+def _plane(sink_dir: str) -> DeltaPlane:
+    """The profile plane, read with the schema its first delta persisted
+    (a root written before the sidecar existed reads by inference)."""
+    return DeltaPlane(sink_dir, schema=SIDECAR)
 
 
 def _partials(df: DataFrame, cols: Sequence[str]) -> DataFrame:
@@ -112,9 +119,7 @@ def profile_batch(
     if not cols:
         raise ValueError("no columns to profile")
     declare(sink_dir, "profile")
-    _partials(batch, cols).write.mode("overwrite").parquet(
-        DeltaPlane(sink_dir).delta_path(batch_id)
-    )
+    _plane(sink_dir).write_delta(_partials(batch, cols), batch_id)
 
 
 def streaming_profile(
@@ -146,7 +151,7 @@ def read_profile(spark: SparkSession, sink_dir: str) -> DataFrame:
     ``operators/profile.profile_table``: one row per column —
     ``col_name | n_rows | n_null | n_distinct | min_value | max_value``
     with portable-string min/max and HLL-estimated distincts."""
-    plane = DeltaPlane(sink_dir)
+    plane = _plane(sink_dir)
     live = plane.live()
     if not live:
         raise FileNotFoundError(f"no profile state under {sink_dir}")
@@ -192,7 +197,7 @@ def compact_profile(spark: SparkSession, sink_dir: str) -> Optional[int]:
     """Fold base + committed deltas into one base row (the
     `delta_plane` write → flip → GC contract). Returns the new pointer,
     or None if nothing to fold."""
-    plane = DeltaPlane(sink_dir)
+    plane = _plane(sink_dir)
     return plane.fold(
         lambda path, live, _: _merge_all(plane.read(spark, live))
         .coalesce(1)

@@ -38,7 +38,7 @@ def spark():
         .config("spark.sql.session.timeZone", "UTC")
         .getOrCreate()
     )
-    # the engine-owned confs (discovery threshold for the 64-shard
+    # the engine-owned confs (discovery threshold for the state-plane
     # layouts, the zip-free worker daemon) — the same call a deployment
     # makes, before the first Python task
     apply_engine_defaults(spark)

@@ -162,3 +162,58 @@ def test_compact_refuses_empty_band_fold(spark, tmp_path):
     DI.process_batch(b2, 2, index)
     pairs = {(r.id_a, r.id_b) for r in DI.read_candidate_pairs(spark, index).collect()}
     assert (1, 10) not in pairs
+
+
+def _to_shard_layout(spark, path):
+    """Rewrite a band dir as older writers laid it out: one
+    ``_shard=<n>/`` dir per hash bucket of the band hash."""
+    tmp = path + ".sharded"
+    (
+        spark.read.parquet(path)
+        .withColumn("_shard", F.pmod(F.col("band_hash"), F.lit(64)).cast("int"))
+        .repartition("_shard")
+        .write.partitionBy("_shard")
+        .parquet(tmp)
+    )
+    shutil.rmtree(path)
+    os.rename(tmp, path)
+
+
+def _shard_dirs(root):
+    return glob.glob(os.path.join(root, "**", "_shard=*"), recursive=True)
+
+
+def test_shard_layout_screens_identically_then_folds_flat(spark, tmp_path):
+    """A band index whose base and delta carry the ``_shard=<n>/`` dirs
+    older writers made finds the same candidates as the same index
+    written flat — for a trigger screened against it and after a fold
+    — and that fold writes the flat layout."""
+    text = "the quick brown fox jumps over the lazy dog again and again {}"
+    batches = [
+        spark.createDataFrame(
+            [(b * 10 + i, text.format(i)) for i in range(3)],
+            "doc_id bigint, text string",
+        )
+        for b in range(3)
+    ]
+    flat, sharded = str(tmp_path / "flat"), str(tmp_path / "sharded")
+    DI.process_batch(batches[0], 0, flat)
+    assert DI.compact_index(spark, flat) == 0
+    DI.process_batch(batches[1], 1, flat)
+    shutil.copytree(flat, sharded)
+    _to_shard_layout(spark, os.path.join(sharded, "base", "v=0"))
+    _to_shard_layout(spark, DI._bands_dir(sharded, 1))
+    assert len(_shard_dirs(sharded)) > 2
+    for index in (flat, sharded):
+        for _ in range(2):  # the second run is a replay: it converges
+            DI.process_batch(batches[2], 2, index)
+    want = _pairs(DI.read_candidate_pairs(spark, flat))
+    assert (0, 20) in want and (10, 20) in want
+    assert _pairs(DI.read_candidate_pairs(spark, sharded)) == want
+    assert DI.compact_index(spark, sharded) == 2
+    assert _shard_dirs(sharded) == []
+    for index in (flat, sharded):
+        DI.process_batch(batches[0].withColumn("doc_id", F.col("doc_id") + 100), 3, index)
+    assert _pairs(DI.read_candidate_pairs(spark, sharded)) == _pairs(
+        DI.read_candidate_pairs(spark, flat)
+    )

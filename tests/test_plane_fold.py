@@ -9,10 +9,14 @@ each write ONE partitioned batch dir per trigger.
   manifest rows and ``plane=cursors`` totals; both fold on one horizon.
 - Both read states written before the sides were combined (flat dirs,
   separate ``_dups``/``cursors`` roots) unmigrated, and keep serving
-  after a mixed-layout fold.
+  after a mixed-layout fold. The exact screen also reads deltas and
+  bases written with 64 ``_shard=<n>/`` hash-bucket dirs, and its next
+  fold writes them flat.
 """
 
+import glob
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -23,6 +27,7 @@ from spark_streaming_sql_s3_connector_spark.streaming import (
     exact_dedup as ed,
     packing_state as ps,
 )
+from spark_streaming_sql_s3_connector_spark.streaming.delta_plane import PLANE
 
 
 def _batches(spark):
@@ -41,6 +46,32 @@ def _batches(spark):
 
 def _dups(spark, idx):
     return {r.doc_id: r.dup_kind for r in ed.read_dup_ids(spark, idx).collect()}
+
+
+def _shard(key):
+    """The hash bucket older writers partitioned key-index rows by."""
+    return F.pmod(F.xxhash64(key), F.lit(64)).cast("int")
+
+
+def _shard_dirs(root):
+    return glob.glob(os.path.join(root, "**", "_shard=*"), recursive=True)
+
+
+def _to_shard_layout(spark, path):
+    """Rewrite a combined exact-screen dir as older writers laid it out:
+    ``plane=new/_shard=<n>/`` index rows and ``plane=dups/_shard=<null>/``
+    verdicts."""
+    tmp = path + ".sharded"
+    (
+        spark.read.schema(ed._DELTA_SCHEMA)
+        .parquet(path)
+        .withColumn("_shard", F.when(F.col(PLANE) == "new", _shard(F.col("key"))))
+        .repartition(PLANE, "_shard")
+        .write.partitionBy(PLANE, "_shard")
+        .parquet(tmp)
+    )
+    shutil.rmtree(path)
+    os.rename(tmp, path)
 
 
 def test_full_fold_preserves_verdicts_and_bounds_listing(spark, tmp_path):
@@ -85,9 +116,9 @@ def test_legacy_flat_state_reads_and_folds_unmigrated(spark, tmp_path):
     bs = _batches(spark)
     # forge the pre-r15 batch-0 layout by hand
     keyed = ed._keyed(bs[0], "text", "doc_id").where(F.col("key").isNotNull())
-    keepers = keyed.groupBy("key", "_shard").agg(F.min("_id").alias("_id"))
+    keepers = keyed.groupBy("key").agg(F.min("_id").alias("_id"))
     (
-        keepers.select("_id", "key", "_shard")
+        keepers.select("_id", "key", _shard(F.col("key")).alias("_shard"))
         .repartition("_shard")
         .write.mode("overwrite")
         .partitionBy("_shard")
@@ -106,11 +137,94 @@ def test_legacy_flat_state_reads_and_folds_unmigrated(spark, tmp_path):
         25: "vs_history", 26: "vs_history",
     }
     assert _dups(spark, idx) == want_dups
-    # mixed-layout fold: legacy _dups root untouched, everything serves
+    # mixed-layout fold: legacy _dups root untouched, everything serves,
+    # and the base is written flat
     assert ed.compact_index(spark, idx, upto_batch=2) == 1
     assert _dups(spark, idx) == want_dups
     assert sorted(r.doc_id for r in ed.read_unique_ids(spark, idx).collect()) == uniq
     assert os.path.isdir(os.path.join(idx, "_dups", "batch=0"))
+    assert _shard_dirs(idx) == []
+
+
+def test_shard_layout_screens_identically_then_folds_flat(spark, tmp_path):
+    """An exact index whose base and delta carry the ``_shard=<n>/``
+    dirs older writers made gives the same verdicts and unique ids as
+    the same index written flat — for a trigger screened against it and
+    after a fold — and that fold writes the flat layout."""
+    bs = _batches(spark)
+    b2 = spark.createDataFrame(
+        [(40, "post fold"), (41, "fresh text 0"), (42, "text number 5")],
+        "doc_id bigint, text string",
+    )
+    flat, sharded = str(tmp_path / "flat"), str(tmp_path / "sharded")
+    ed.process_batch(bs[0], 0, flat)
+    assert ed.compact_index(spark, flat, upto_batch=1) == 0
+    ed.process_batch(bs[1], 1, flat)
+    shutil.copytree(flat, sharded)
+    _to_shard_layout(spark, os.path.join(sharded, "base", "v=0"))
+    _to_shard_layout(spark, ed._new_dir(sharded, 1))
+    assert len(_shard_dirs(sharded)) > 2
+    for idx in (flat, sharded):
+        for _ in range(2):  # the second run is a replay: it converges
+            ed.process_batch(b2, 2, idx)
+        # forget a doc that sits in the base
+        ed.delete_docs_from_screen(bs[0].where("doc_id = 3"), 3, idx)
+
+    def screened(idx):
+        return (
+            _dups(spark, idx),
+            sorted(r.doc_id for r in ed.read_unique_ids(spark, idx).collect()),
+        )
+
+    want = screened(flat)
+    assert want[0] == {
+        11: "within_batch", 12: "within_batch",
+        25: "vs_history", 26: "vs_history",
+        41: "vs_history", 42: "vs_history",
+    }
+    assert 3 not in want[1] and 40 in want[1]
+    assert screened(sharded) == want
+    assert ed.compact_index(spark, sharded, upto_batch=4) == 3
+    assert _shard_dirs(sharded) == []
+    assert screened(sharded) == want
+    # the forgotten text is admitted again, by both layouts
+    again = spark.createDataFrame([(50, "text number 3")], "doc_id bigint, text string")
+    for idx in (flat, sharded):
+        ed.process_batch(again, 4, idx)
+    assert 50 in screened(flat)[1]
+    assert screened(sharded) == screened(flat)
+
+
+def test_key_screen_delta_is_one_file_per_task_and_side(spark, tmp_path):
+    """A screen delta is at most one parquet file per write task and
+    ``plane=`` side, so no more than ``spark.sql.shuffle.partitions``
+    files per side, however many partitions the batch arrived in."""
+    from spark_streaming_sql_s3_connector_spark.streaming import line_dedup
+
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+
+    def files(path):
+        return len(glob.glob(os.path.join(path, "*.parquet")))
+
+    # the second trigger screens against history: its even docs repeat
+    # the first trigger's texts, its odd ones are new
+    for b in range(2):
+        rows = spark.createDataFrame(
+            [
+                (1000 * b + i, f"line {i % 40}\nshared\ntext {i % 25 + 100 * b * (i % 2)}")
+                for i in range(400)
+            ],
+            "doc_id bigint, text string",
+        ).repartition(3 * cap)
+        ed.process_batch(rows, b, str(tmp_path / "exact"))
+        delta = ed._new_dir(str(tmp_path / "exact"), b)
+        assert sorted(glob.glob(os.path.join(delta, "plane=*"))) == [
+            os.path.join(delta, "plane=dups"), os.path.join(delta, "plane=new"),
+        ]
+        for side in ("plane=dups", "plane=new"):
+            assert 1 <= files(os.path.join(delta, side)) <= cap
+        line_dedup.process_batch(rows, b, str(tmp_path / "line"))
+        assert 1 <= files(ed._new_dir(str(tmp_path / "line"), b)) <= cap
 
 
 def _pack_docs(spark, n=30):

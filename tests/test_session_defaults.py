@@ -1,7 +1,7 @@
 """The engine-owned session confs (session.apply_engine_defaults).
 
 r14 verdict #7: the partition-discovery threshold that makes the
-64-shard state planes listable without distributed listing jobs lived
+state planes listable without distributed listing jobs lived
 only in the bench harness, so any other session silently reverted to
 Spark's default (32) and re-paid ~5 listing jobs per curation trigger.
 The engine now owns the setting; these tests pin that (a) the shared

@@ -178,3 +178,105 @@ def test_vacuum_compacts_every_plane_and_bounds_versions(spark, tmp_path):
     # idempotent: a second sweep finds nothing to fold and no errors
     again = vacuum(spark, str(root))
     assert all(r["plane"] != "error" for r in again)
+
+
+def _tiny_planes(spark, root, batches):
+    """A profile, a drift-counts and an embedding-moments root fed
+    ``batches`` triggers of ten rows each."""
+    from spark_streaming_sql_s3_connector_spark.streaming.drift import (
+        count_batch,
+        embedding_moment_batch,
+    )
+    from spark_streaming_sql_s3_connector_spark.streaming.profile import (
+        profile_batch,
+    )
+
+    for b in batches:
+        batch = spark.createDataFrame(
+            [(b * 10 + i, ["click", "view"][i % 2], float(i)) for i in range(10)],
+            "doc_id bigint, event_type string, value double",
+        )
+        profile_batch(batch.select("doc_id", "event_type"), b, str(root / "profile"))
+        count_batch(batch, b, str(root / "drift_counts"), "event_type")
+        embedding_moment_batch(
+            batch.select(F.array("value", "value").alias("v")), b,
+            str(root / "moments"), "v",
+        )
+
+
+def _tiny_reads(spark, root):
+    from spark_streaming_sql_s3_connector_spark.streaming.drift import (
+        read_category_counts,
+        read_embedding_moments,
+    )
+    from spark_streaming_sql_s3_connector_spark.streaming.profile import (
+        read_profile,
+    )
+
+    return (
+        sorted(tuple(r) for r in read_profile(spark, str(root / "profile")).collect()),
+        sorted(tuple(r) for r in read_category_counts(spark, str(root / "drift_counts")).collect()),
+        sorted(tuple(r) for r in read_embedding_moments(spark, str(root / "moments")).collect()),
+    )
+
+
+def test_tiny_plane_sidecar_is_written_once_and_replay_keeps_it(spark, tmp_path):
+    from spark_streaming_sql_s3_connector_spark.streaming.delta_plane import SIDECAR
+
+    root = tmp_path / "state"
+    _tiny_planes(spark, root, [0])
+    sidecars = {}
+    for plane in ("profile", "drift_counts", "moments"):
+        with open(root / plane / SIDECAR, "rb") as f:
+            sidecars[plane] = f.read()
+    _tiny_planes(spark, root, [1, 0])  # a new trigger, then a replay
+    for plane, raw in sidecars.items():
+        with open(root / plane / SIDECAR, "rb") as f:
+            assert f.read() == raw, plane
+    assert _tiny_reads(spark, root)[1] == [("click", 10), ("view", 10)]
+
+
+def test_tiny_planes_without_sidecar_read_and_fold(spark, tmp_path):
+    """Roots written before the schema sidecar existed have none: they
+    still read, and fold, by schema inference."""
+    from spark_streaming_sql_s3_connector_spark.streaming.delta_plane import SIDECAR
+
+    with_sidecar, without = tmp_path / "with", tmp_path / "without"
+    for root in (with_sidecar, without):
+        _tiny_planes(spark, root, [0, 1, 2])
+    for plane in ("profile", "drift_counts", "moments"):
+        os.remove(without / plane / SIDECAR)
+    want = _tiny_reads(spark, with_sidecar)
+    assert _tiny_reads(spark, without) == want
+    report = vacuum(spark, str(without))
+    assert [(r["plane"], r["result"]) for r in report] == [
+        ("drift_counts", 2), ("embedding_moments", 2), ("profile", 2),
+    ]
+    assert _tiny_reads(spark, without) == want
+
+
+def test_concurrent_vacuum_isolates_a_failing_plane(spark, tmp_path, monkeypatch):
+    """The folds run concurrently; one plane's compactor raising still
+    leaves every other plane folded and reported, in path order, each
+    with its fold's seconds."""
+    from spark_streaming_sql_s3_connector_spark.streaming import profile
+
+    root = tmp_path / "state"
+    _tiny_planes(spark, root, [0, 1])
+    want = _tiny_reads(spark, root)
+
+    def broken(spark, sink_dir):
+        raise RuntimeError("disk on fire")
+
+    monkeypatch.setattr(profile, "compact_profile", broken)
+    report = vacuum(spark, str(root))
+    assert [(os.path.basename(r["path"]), r["plane"], r["result"]) for r in report] == [
+        ("drift_counts", "drift_counts", 1),
+        ("moments", "embedding_moments", 1),
+        ("profile", "error", "RuntimeError: disk on fire"),
+    ]
+    assert all(r["seconds"] >= 0 for r in report)
+    assert len(_base_versions(str(root / "drift_counts"))) == 1
+    assert len(_base_versions(str(root / "moments"))) == 1
+    assert _base_versions(str(root / "profile")) == []
+    assert _tiny_reads(spark, root) == want

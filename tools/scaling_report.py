@@ -392,7 +392,7 @@ def main():
     )
     spark.sparkContext.setLogLevel("ERROR")
     # engine-owned state-plane confs (discovery threshold for the
-    # 64-shard layouts) — see spark_streaming_sql_s3_connector_spark/session.py
+    # state-plane layouts) — see spark_streaming_sql_s3_connector_spark/session.py
     from spark_streaming_sql_s3_connector_spark.session import (
         apply_engine_defaults,
     )
